@@ -22,6 +22,12 @@ Scale shapes:
   (:func:`pagerank_oracle_sql` — deterministic, rounded to 6 decimals);
   pytest additionally pins closed-form graphs (star, cycle) and the
   Σranks = N invariant.
+- **Clique-factored PageRank iterates on classes, not nodes.** On the
+  SAME_COLLEGE ∪ SAME_BOARD graph every node of an (a, b) attribute pair
+  has the same degree and rank, so :func:`pagerank_clique_factored` and
+  :func:`pagerank_ppr_clique_factored` loop over the (a, b) class table
+  (PPR seeds are classes of their own): O(|A|·|B|) per round, all rounds
+  in one small plan, one broadcast join back to the N nodes at the end.
 """
 
 from __future__ import annotations
@@ -227,7 +233,7 @@ def pagerank(
 def _clique_attrs_nullsafe(nodes: DataFrame, attrs: tuple[str, str]) -> DataFrame:
     """NULL/'' attribute values form NO clique edges — the contract of
     ``derive_attribute_edges`` and every DuckDB oracle here
-    (``IS NOT NULL AND <> ''``). The factored forms compute over group
+    (``IS NOT NULL AND <> ''``). The factored LPA computes over group
     equi-joins, where a NULL key silently DROPS the node and '' is a
     real group; map both to a per-node unique sentinel so the node
     survives as a singleton clique: n_attr = 1 → zero degree
@@ -245,6 +251,102 @@ def _clique_attrs_nullsafe(nodes: DataFrame, attrs: tuple[str, str]) -> DataFram
             ).otherwise(col),
         )
     return out
+
+
+def _pagerank_classes(
+    nodes: DataFrame, attrs: tuple[str, str], seed_ids: list[int] | None = None
+) -> tuple[DataFrame, list[str], DataFrame]:
+    """(keyed nodes, class key columns, class table) for
+    :func:`_lumped_pagerank`. The key is (a, b), plus the node id for PPR
+    seeds (each seed is its own class); NULL and '' fold into one "no
+    clique" key per attribute, so there are at most (|A|+1)(|B|+1) +
+    |seeds| classes. A class row carries its member count ``k``, teleport
+    ``e`` and shared degree deg = n_A + n_B − n_AB − 1."""
+    a, b = attrs
+    keyed = nodes.select(
+        "id",
+        # NULL != '' is NULL, so both fold into the NULL "no clique" key
+        *[F.when(F.col(x) != "", F.col(x)).alias(x) for x in attrs],
+    )
+    keys = [a, b]
+    if seed_ids is None:
+        e = F.lit(1.0)
+    else:
+        keyed = keyed.withColumn("s", F.when(F.col("id").isin(seed_ids), F.col("id")))
+        keys.append("s")
+        e = F.when(F.col("s").isNotNull(), F.lit(1.0 / len(seed_ids))).otherwise(
+            F.lit(0.0)
+        )
+    n_a, n_b, n_ab = _group_sums(attrs, F.lit(1))
+    cls = (
+        keyed.groupBy(*keys)
+        .agg(F.count("*").alias("k"))
+        .coalesce(1)
+        .select(*keys, "k", e.alias("e"), (n_a + n_b - n_ab - 1).alias("deg"))
+    )
+    return keyed, keys, cls
+
+
+def _group_sums(attrs: tuple[str, str], x):
+    """(S_A, S_B, S_AB) of the per-member value ``x``: window sums of
+    k·x over the classes sharing the key; the "no clique" key is no
+    group, so there the sum is the member's own ``x``."""
+    from pyspark.sql.window import Window
+
+    a, b = attrs
+    no_a, no_b = F.col(a).isNull(), F.col(b).isNull()
+    return [
+        F.when(no_group, x).otherwise(F.sum(F.col("k") * x).over(w))
+        for w, no_group in (
+            (Window.partitionBy(a), no_a),
+            (Window.partitionBy(b), no_b),
+            (Window.partitionBy(a, b), no_a | no_b),
+        )
+    ]
+
+
+# rounds per plan before the class table is checkpointed: ~60 chained
+# rounds (three windows each) overflow the task's stack
+LUMP_ROUNDS_PER_PLAN = 10
+
+
+def _lumped_pagerank(
+    nodes: DataFrame,
+    attrs: tuple[str, str],
+    iterations: int,
+    damping: float,
+    seed_ids: list[int] | None = None,
+) -> DataFrame:
+    """(id, rank) of the factored recurrence iterated on the class table:
+    nodes of one class share degree and starting rank, so they share the
+    rank of every round. With c = r/deg and S_X the group sums of c,
+
+        r' = (1−d)·e + d·(S_A + S_B − S_AB − c)
+
+    (e ≡ 1 for PageRank, 1/|S| on the seeds for PPR). The table is tiny,
+    so rounds chain in one plan on one partition, checkpointed only every
+    :data:`LUMP_ROUNDS_PER_PLAN` rounds; one broadcast join maps the
+    class ranks back to the nodes."""
+    keyed, keys, cls = _pagerank_classes(nodes, attrs, seed_ids)
+    cls = cls.withColumn("r", F.col("e"))
+    # deg 0 = isolated (no clique on either attribute): pushes nothing,
+    # and guards the ANSI divide-by-zero
+    c = F.when(F.col("deg") > 0, F.col("r") / F.col("deg")).otherwise(F.lit(0.0))
+    s_a, s_b, s_ab = _group_sums(attrs, c)
+    r_next = F.lit(1.0 - damping) * F.col("e") + F.lit(damping) * (
+        s_a + s_b - s_ab - c
+    )
+    for i in range(1, iterations + 1):
+        cls = cls.select(*keys, "k", "e", "deg", r_next.alias("r"))
+        if i % LUMP_ROUNDS_PER_PLAN == 0 and i < iterations:
+            # the checkpoint forgets its single partition; without the
+            # coalesce every window below it would plan an exchange
+            cls = cls.transform(materialize, eager=True).coalesce(1)
+    ranks = cls.select(*[F.col(x).alias("_" + x) for x in keys], "r")
+    on = [keyed[x].eqNullSafe(ranks["_" + x]) for x in keys]
+    return keyed.join(F.broadcast(ranks), on).select(
+        "id", F.col("r").alias("rank")
+    )
 
 
 def pagerank_clique_factored(
@@ -265,68 +367,13 @@ def pagerank_clique_factored(
     because [a_j=a_i] + [b_j=b_i] − [both] = 1 at j = i), and the degree
     is pure group arithmetic: d_i = n_A + n_B − n_AB − 1.
 
-    Each iteration is therefore THREE tiny groupBy aggregations (|A|,
-    |B|, |A×B| keys) joined back map-side — O(N) work instead of O(E),
-    where the clique union's E is Θ(N²/k). At 100 TB this is the
-    difference between a runnable and an unrunnable query; pytest pins
-    exact agreement with the edge-materializing :func:`pagerank`.
+    Nodes sharing (a_i, b_i) keep equal ranks, so the loop runs on the
+    (a, b) class table (:func:`_lumped_pagerank`): O(|A|·|B|) per
+    iteration instead of O(N), let alone the edge walk's O(E) = Θ(N²/k);
+    N enters only in the class count and the final join-back. pytest
+    pins exact agreement with the edge-materializing :func:`pagerank`.
     """
-    a, b = attrs
-    base = (
-        _clique_attrs_nullsafe(nodes, attrs)
-        .select("id", a, b)
-        .transform(materialize)
-    )
-    na = base.groupBy(a).agg(F.count("*").alias("n_a"))
-    nb = base.groupBy(b).agg(F.count("*").alias("n_b"))
-    nab = base.groupBy(a, b).agg(F.count("*").alias("n_ab"))
-    deg = (
-        base.join(na, a)
-        .join(nb, b)
-        .join(nab, [a, b])
-        .select(
-            "id", a, b,
-            (F.col("n_a") + F.col("n_b") - F.col("n_ab") - 1).alias("deg"),
-        )
-        .transform(materialize)
-    )
-    ranks = deg.select("id", F.lit(1.0).alias("rank"))
-    for _ in range(iterations):
-        contrib = deg.join(ranks, "id").withColumn(
-            # deg 0 = isolated node (singleton in BOTH groups): pushes
-            # nothing — and guards the ANSI divide-by-zero
-            "c",
-            F.when(F.col("deg") > 0, F.col("rank") / F.col("deg")).otherwise(
-                F.lit(0.0)
-            ),
-        )
-        # r14: ONE node-sized aggregation per round instead of three —
-        # S_A(a) = Σ_b S_AB(a, b) and S_B(b) = Σ_a S_AB(a, b), so the per-
-        # group sums roll up from the (a, b) pair table (|A×B| + sentinel
-        # rows), and the three join-backs collapse to one join against the
-        # pair-level enrichment (guide §2.3 "aggregate before you shuffle",
-        # §2.4 "remove shuffles outright": 3 exchanges + 3 joins over N
-        # rows → 1 exchange over N + tiny pair-table work per round).
-        # No broadcast hint on the join-back: on null-heavy corpora the
-        # sentinel pairs make `enr` O(N) — AQE broadcasts it when small
-        # (the label_propagation discipline).
-        sab = contrib.groupBy(a, b).agg(F.sum("c").alias("s_ab"))
-        sa = sab.groupBy(a).agg(F.sum("s_ab").alias("s_a"))
-        sb = sab.groupBy(b).agg(F.sum("s_ab").alias("s_b"))
-        enr = sab.join(sa, a).join(sb, b)
-        ranks = (
-            contrib.join(enr, [a, b])
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (F.col("s_a") + F.col("s_b") - F.col("s_ab") - F.col("c"))
-                ).alias("rank"),
-            )
-            .transform(materialize)
-        )
-    return ranks
+    return _lumped_pagerank(nodes, attrs, iterations, damping)
 
 
 def pagerank_oracle_sql(iterations: int = 5, damping: float = DAMPING) -> str:
@@ -381,8 +428,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str, iterations: int = 5) -> DataFra
     clique edges the DuckDB oracle mirrors, so its cost is quadratic in
     attribute-group size by construction — the r7 full-registry 10×
     sweep measured it accordingly. The scale path is
-    :func:`q_pagerank_factored` (O(N·|attrs|)/iteration, identical
-    ranks, pytest-pinned + its own driver row); at 100 TB run THAT."""
+    :func:`q_pagerank_factored` (O(|A|·|B|)/iteration on the attribute
+    class table, identical ranks, pytest-pinned + its own registry row);
+    at 100 TB run THAT."""
     from graphdb_neo4j_spark.operators.edges import derive_attribute_edges
 
     nodes = customer_nodes(spark, sf_dir)
@@ -398,7 +446,8 @@ def q_pagerank_factored(
     spark: SparkSession, sf_dir: str, iterations: int = 5
 ) -> DataFrame:
     """Clique-factored PageRank over the same SAME_COLLEGE ∪ SAME_BOARD
-    graph as :func:`q_pagerank` — identical answers, O(N) per iteration."""
+    graph as :func:`q_pagerank` — identical answers, O(|A|·|B|) per
+    iteration (college × board classes) plus one O(N) join-back."""
     return pagerank_clique_factored(
         customer_nodes(spark, sf_dir), iterations=iterations
     ).select("id", F.round("rank", 6).alias("rank"))
@@ -476,70 +525,11 @@ def pagerank_ppr_clique_factored(
     WITHOUT materializing an edge — :func:`pagerank_clique_factored`'s
     inclusion–exclusion (recv = S_A + S_B − S_AB − own term, degree from
     group sizes) with the teleport mass pinned to ``seed_ids``:
-    r' = (1−d)·e + d·recv, e = 1/|S| on seeds. Three tiny groupBy
-    aggregations per iteration — O(N) instead of the edge walk's O(E)
-    where E is Θ(N²/k); pytest pins exact agreement with
-    :func:`pagerank_personalized` on the same graph."""
-    a, b = attrs
-    share = 1.0 / len(seed_ids)
-    base = (
-        _clique_attrs_nullsafe(nodes, attrs)
-        .select(
-            "id",
-            a,
-            b,
-            F.when(F.col("id").isin(seed_ids), F.lit(share))
-            .otherwise(F.lit(0.0))
-            .alias("e"),
-        )
-        .transform(materialize)
-    )
-    na = base.groupBy(a).agg(F.count("*").alias("n_a"))
-    nb = base.groupBy(b).agg(F.count("*").alias("n_b"))
-    nab = base.groupBy(a, b).agg(F.count("*").alias("n_ab"))
-    deg = (
-        base.join(na, a)
-        .join(nb, b)
-        .join(nab, [a, b])
-        .select(
-            "id", a, b, "e",
-            (F.col("n_a") + F.col("n_b") - F.col("n_ab") - 1).alias("deg"),
-        )
-        .transform(materialize)
-    )
-    ranks = deg.select("id", F.col("e").alias("rank"))
-    for _ in range(iterations):
-        contrib = deg.join(ranks, "id").withColumn(
-            # isolated nodes (deg 0) push nothing — the edge walk's
-            # dangling behavior; their teleport share still lands via e
-            "c",
-            F.when(F.col("deg") > 0, F.col("rank") / F.col("deg")).otherwise(
-                F.lit(0.0)
-            ),
-        )
-        # r14: same one-aggregation round as pagerank_clique_factored —
-        # S_A/S_B roll up from the (a, b) pair sums (S_A(a) = Σ_b S_AB),
-        # one node-sized exchange per round instead of three, one pair-
-        # level join-back instead of three (guide §2.3/§2.4). No broadcast
-        # hint: sentinel pairs make `enr` O(N) on null-heavy corpora — AQE
-        # broadcasts it when it measures small.
-        sab = contrib.groupBy(a, b).agg(F.sum("c").alias("s_ab"))
-        sa = sab.groupBy(a).agg(F.sum("s_ab").alias("s_a"))
-        sb = sab.groupBy(b).agg(F.sum("s_ab").alias("s_b"))
-        enr = sab.join(sa, a).join(sb, b)
-        ranks = (
-            contrib.join(enr, [a, b])
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - damping) * F.col("e")
-                    + F.lit(damping)
-                    * (F.col("s_a") + F.col("s_b") - F.col("s_ab") - F.col("c"))
-                ).alias("rank"),
-            )
-            .transform(materialize)
-        )
-    return ranks
+    r' = (1−d)·e + d·recv, e = 1/|S| on seeds. Each seed is its own
+    class: O(|A|·|B| + |S|) per iteration instead of O(N); pytest pins
+    exact agreement with :func:`pagerank_personalized` on the same
+    graph."""
+    return _lumped_pagerank(nodes, attrs, iterations, damping, seed_ids)
 
 
 PPR_SEED_ID = 1  # same anchor as the recommend_people flagship
@@ -552,7 +542,8 @@ def q_pagerank_ppr(
     SAME_COLLEGE ∪ SAME_BOARD graph as :func:`q_pagerank` — "who is close
     to this person by random walk", the graph-native recommendation
     ranking. Rounded to 9 decimals (values live in [0, 1], drift ≪ 1e-12).
-    Runs the clique-factored form (O(N)/iteration — the 100 TB path; the
+    Runs the clique-factored form (O(|A|·|B|)/iteration on the college ×
+    board classes plus the seed's own class — the 100 TB path; the
     edge-walk twin :func:`pagerank_personalized` is the pytest
     cross-check, and the driver oracle walks the edges in DuckDB)."""
     return pagerank_ppr_clique_factored(

@@ -63,6 +63,12 @@ DEMO_SCHEMA = (
 )
 
 
+# Largest interest-token universe pushed into the lineitem scan as an
+# In() literal list: Catalyst In() planning and parquet filter pushdown
+# degrade on ~10^5-element lists, so bigger batches read unpruned.
+PART_KEY_PUSHDOWN_MAX = 1000
+
+
 def normalize_batch(new_raw: DataFrame) -> DataFrame:
     """Route-level ingest normalization (student_routes.py:28-32): every
     string lowercased/trimmed, every interests element too."""
@@ -220,10 +226,14 @@ def ingest_students(
         # semi join on the derived string column filters after the fact
         # join; this prunes before it). Tokens that are not integer part
         # keys can never equal cast(l_partkey as string), so dropping
-        # them reads nothing the semi join would have kept.
+        # them reads nothing the semi join would have kept. Past
+        # PART_KEY_PUSHDOWN_MAX keys the literal list costs more than it
+        # prunes, and the scan stays unpruned.
         toks = sorted({t for r in head for t in (r["interests"] or [])})
         pk = [int(t) for t in toks if t.isdigit()]
-        existing_pairs = customer_interest_pairs_raw(spark, sf_dir, part_keys=pk)
+        existing_pairs = customer_interest_pairs_raw(
+            spark, sf_dir, part_keys=pk if len(pk) <= PART_KEY_PUSHDOWN_MAX else None
+        )
     else:
         batch = allocated.transform(materialize, eager=True)
         existing_pairs = customer_interest_pairs_raw(spark, sf_dir)

@@ -15,6 +15,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def materialize_mode() -> str:
+    """``SPARK_GRAFT_MATERIALIZE`` (default ``local``), validated: an
+    unknown value raises here instead of deep inside an operator."""
+    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
+    if mode not in ("local", "reliable"):
+        raise ValueError(
+            f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected 'local' or 'reliable'"
+        )
+    return mode
+
+
 def get_spark(
     app_name: str = "graphdb_neo4j_spark",
     master: str | None = None,
@@ -24,8 +35,10 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine's defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we default
-    to ``local[$SPARK_GRAFT_CPUS]``.
+    to ``local[$SPARK_GRAFT_CPUS]``. A bad ``SPARK_GRAFT_MATERIALIZE``
+    fails here, before any session or query work.
     """
+    materialize_mode()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -157,24 +170,19 @@ def materialize(df, eager: bool = False):
     behavior to the former inline ``localCheckpoint`` calls. Use as
     ``df.transform(materialize)`` / ``df.transform(materialize, eager=True)``.
     """
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
-    if mode == "local":
+    if materialize_mode() == "local":
         return df.localCheckpoint(eager=eager)
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-            if not ckdir:
-                raise ValueError(
-                    "SPARK_GRAFT_MATERIALIZE=reliable requires "
-                    "SPARK_GRAFT_CHECKPOINT_DIR (an HDFS/object-store path "
-                    "every executor can reach)"
-                )
-            sc.setCheckpointDir(ckdir)
-        return df.checkpoint(eager=eager)
-    raise ValueError(
-        f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected 'local' or 'reliable'"
-    )
+    sc = df.sparkSession.sparkContext
+    if sc._jsc.sc().getCheckpointDir().isEmpty():
+        ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+        if not ckdir:
+            raise ValueError(
+                "SPARK_GRAFT_MATERIALIZE=reliable requires "
+                "SPARK_GRAFT_CHECKPOINT_DIR (an HDFS/object-store path "
+                "every executor can reach)"
+            )
+        sc.setCheckpointDir(ckdir)
+    return df.checkpoint(eager=eager)
 
 
 def adaptive_stream_shuffle_partitions(df) -> int:

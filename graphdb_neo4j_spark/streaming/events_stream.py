@@ -462,7 +462,14 @@ def run_available_now(
     keeps one state-store instance per shuffle partition per micro-batch,
     so bounded runs over narrow sources pass the source-derived width
     (:func:`~graphdb_neo4j_spark.session.adaptive_stream_shuffle_partitions`);
-    the session conf is restored after the drain."""
+    the session conf is restored after the drain.
+
+    Serial only: the width is the SESSION-GLOBAL shuffle conf, set here
+    and restored after the drain. Two overlapping runs on one session
+    race — the second can start under the first one's width, and the
+    restores can leave the narrowed value behind. Run one at a time per
+    session (the rollup maintainer's ``_stream_width`` has the same
+    contract)."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     if shuffle_partitions:

@@ -36,7 +36,11 @@ class _stream_width:
     ``run_available_now`` discipline: streaming shuffles get no AQE
     coalescing, and the foreachBatch merge work inherits the same conf;
     the width is source-derived, so production backlogs keep full
-    parallelism)."""
+    parallelism).
+
+    Serial only: ``spark.sql.shuffle.partitions`` is session-global, so
+    overlapping runs on one session (this or ``run_available_now``) race
+    on the set/restore and can leave the narrowed width behind."""
 
     KEY = "spark.sql.shuffle.partitions"
 

@@ -43,17 +43,23 @@ def test_committed_reference_recordings_are_stamped():
     # r11 was re-stamped (known-checksum per PLANS.md round-11). Pre-r11
     # recordings are count-era and legitimately unstamped (the guard
     # treats them as unknown, which is the honest answer).
-    import glob
-
-    refs = sorted(glob.glob(os.path.join(REPO, "BENCH_r*_reference.json")))
-    assert refs, "no committed reference recordings found"
-    newest = refs[-1]
+    newest = bench.newest_reference()
+    assert newest, "no committed reference recordings found"
     with open(newest) as f:
         d = json.load(f)
     assert d.get("consumer") in ("checksum", "count"), (
         f"{os.path.basename(newest)} lacks a consumer stamp — the regime "
         "guard will report unknown on every run"
     )
+
+
+def test_newest_reference_compares_rounds_numerically():
+    # lexicographic order puts r100 before r99; the round number decides
+    paths = [os.path.join(REPO, f"BENCH_r{n}_reference.json")
+             for n in ("09", "99", "100", "13")]
+    assert bench.newest_reference(paths) == paths[2]
+    assert bench.newest_reference([]) is None
+    assert bench.newest_reference(["BENCH_rX_reference.json"]) is None
 
 
 def test_min_regressions_advisory_when_reference_unstamped():

@@ -424,6 +424,8 @@ def test_factored_forms_handle_null_and_empty_attrs(spark):
         (5, "mit", "icse"),
         (6, None, ""),  # isolated: no edges at all
         (7, "", ""),  # isolated: '' is not a clique
+        (8, None, "cbse"),  # NULL-college class of two sharing a board with 3
+        (9, "mit", "cbse"),  # seed 1 sits inside the (mit, cbse) class
     ]
     nodes = spark.createDataFrame(rows, "id long, college string, board string")
     edges = derive_attribute_edges(nodes, "college", "SAME_COLLEGE").unionByName(
@@ -442,21 +444,11 @@ def test_factored_forms_handle_null_and_empty_attrs(spark):
     for i in walk_pr:
         assert fac_pr[i] == pytest.approx(walk_pr[i], abs=1e-12), i
 
-    walk_ppr = {
-        r["id"]: r["rank"]
-        for r in graphalgo.pagerank_personalized(
-            nodes, edges, [1], iterations=5
-        ).collect()
-    }
-    fac_ppr = {
-        r["id"]: r["rank"]
-        for r in graphalgo.pagerank_ppr_clique_factored(
-            nodes, [1], iterations=5
-        ).collect()
-    }
-    assert set(walk_ppr) == set(fac_ppr)
-    for i in walk_ppr:
-        assert fac_ppr[i] == pytest.approx(walk_ppr[i], abs=1e-12), i
+    for seeds in ([1], [1, 3]):
+        _assert_same_ranks(
+            graphalgo.pagerank_ppr_clique_factored(nodes, seeds, iterations=5),
+            graphalgo.pagerank_personalized(nodes, edges, seeds, iterations=5),
+        )
 
     walk_lpa = {
         r["id"]: r["label"]
@@ -470,6 +462,60 @@ def test_factored_forms_handle_null_and_empty_attrs(spark):
     }
     assert walk_lpa == fac_lpa
     assert fac_lpa[6] == 6 and fac_lpa[7] == 7  # isolated keep their own label
+
+
+def _clique_edges(nodes):
+    from graphdb_neo4j_spark.operators.edges import derive_attribute_edges
+
+    return derive_attribute_edges(nodes, "college", "SAME_COLLEGE").unionByName(
+        derive_attribute_edges(nodes, "board", "SAME_BOARD")
+    ).select("src", "dst")
+
+
+def _assert_same_ranks(got_df, want_df):
+    got = {r["id"]: r["rank"] for r in got_df.collect()}
+    want = {r["id"]: r["rank"] for r in want_df.collect()}
+    assert set(got) == set(want)
+    for i in want:
+        assert got[i] == pytest.approx(want[i], abs=1e-12), i
+
+
+def test_lumped_class_table_is_bounded_on_null_heavy_nodes(spark):
+    """1,000 nodes, every college NULL: the class table stays within
+    (|A|+1)(|B|+1) + |seeds| rows (a per-node "no clique" key would make
+    it O(N)) and the lumped ranks still equal the edge walk."""
+    boards = ["cbse", "icse", "ib", "state", None, ""]
+    rows = [(i, None, boards[i % len(boards)]) for i in range(1000)]
+    nodes = spark.createDataFrame(rows, "id long, college string, board string")
+    edges = _clique_edges(nodes)
+    n_a, n_b = 0, 4  # distinct real colleges / boards
+    seeds = [0, 5, 500]  # two in board cliques, one (board '') in no clique
+    for seed_ids in (None, seeds):
+        _, _, cls = graphalgo._pagerank_classes(nodes, ("college", "board"), seed_ids)
+        assert cls.count() <= (n_a + 1) * (n_b + 1) + len(seed_ids or [])
+    _assert_same_ranks(
+        graphalgo.pagerank_clique_factored(nodes, iterations=5),
+        graphalgo.pagerank(nodes, edges, iterations=5),
+    )
+    _assert_same_ranks(
+        graphalgo.pagerank_ppr_clique_factored(nodes, seeds, iterations=5),
+        graphalgo.pagerank_personalized(nodes, edges, seeds, iterations=5),
+    )
+
+
+def test_lumped_pagerank_across_checkpoint_cut(spark):
+    """More rounds than one chained plan holds: the checkpointed class
+    table continues the same recurrence as the edge walk."""
+    rows = [(1, "mit", "cbse"), (2, "mit", "icse"), (3, "iit", "cbse"),
+            (4, "iit", "cbse"), (5, None, "icse"), (6, "mit", "")]
+    nodes = spark.createDataFrame(rows, "id long, college string, board string")
+    iters = 2 * graphalgo.LUMP_ROUNDS_PER_PLAN + 1
+    _assert_same_ranks(
+        graphalgo.pagerank_ppr_clique_factored(nodes, [3], iterations=iters),
+        graphalgo.pagerank_personalized(
+            nodes, _clique_edges(nodes), [3], iterations=iters
+        ),
+    )
 
 
 # --- min_label_components degenerate incidences (r9 fused-round-1 pins) -------

@@ -46,6 +46,32 @@ def test_new_new_edges_derived(spark, sf_dir):
     assert common == ["42"]
 
 
+def test_part_key_pushdown_is_bounded(spark, sf_dir, monkeypatch):
+    """Small token universes (a one-form onboard) push their part keys
+    into the scan; past PART_KEY_PUSHDOWN_MAX keys the scan is unpruned."""
+    calls = []
+    real = ingest.customer_interest_pairs_raw
+
+    def spy(spark, sf_dir, part_keys=None):
+        calls.append(None if part_keys is None else sorted(part_keys))
+        return real(spark, sf_dir, part_keys=part_keys)
+
+    monkeypatch.setattr(ingest, "customer_interest_pairs_raw", spy)
+    one_form = spark.createDataFrame(ingest.DEMO_STUDENTS[:1], ingest.DEMO_SCHEMA)
+    ingest.ingest_students(spark, sf_dir, one_form)
+    assert calls == [[42, 100]]
+
+    wide = [str(i) for i in range(ingest.PART_KEY_PUSHDOWN_MAX + 1)]
+    at_cap = ("Dan Example", "addr_1", "india", "asia", "machinery", wide[:-1])
+    over_cap = ("Eve Example", "addr_1", "india", "asia", "machinery", wide)
+    for row, want in ((at_cap, list(range(ingest.PART_KEY_PUSHDOWN_MAX))),
+                      (over_cap, None)):
+        calls.clear()
+        raw = spark.createDataFrame([row], ingest.DEMO_SCHEMA)
+        ingest.ingest_students(spark, sf_dir, raw)
+        assert calls == [want]
+
+
 def test_ingest_then_merge_is_idempotent(spark, sf_dir):
     new_raw = spark.createDataFrame(ingest.DEMO_STUDENTS, ingest.DEMO_SCHEMA)
     _, new_edges = ingest.ingest_students(spark, sf_dir, new_raw)

@@ -99,3 +99,14 @@ def test_materialize_rejects_unknown_mode(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
     with _pytest.raises(ValueError, match="bogus"):
         spark.range(1).transform(materialize)
+
+
+def test_get_spark_rejects_typoed_materialize_mode(spark, monkeypatch):
+    """A typo'd mode fails at session start, before any query work."""
+    import pytest as _pytest
+
+    from graphdb_neo4j_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "lcoal")
+    with _pytest.raises(ValueError, match="'lcoal': expected 'local' or 'reliable'"):
+        get_spark()
