@@ -28,6 +28,11 @@ Scale shapes:
   :func:`pagerank_ppr_clique_factored` loop over the (a, b) class table
   (PPR seeds are classes of their own): O(|A|·|B|) per round, all rounds
   in one small plan, one broadcast join back to the N nodes at the end.
+- **Connected components never move the incidence.** Min-label
+  propagation runs on the node↔group incidence, built once with long
+  group keys; each round joins it in place against broadcast label and
+  group tables and shuffles only the combined messages, O(|groups| +
+  |nodes|) per partition (:func:`min_label_components`).
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     CUST_PARTS_CTE,
     NODES_CTE,
     customer_interest_pairs,
+    customer_interest_pairs_raw,
     customer_nodes,
 )
 from graphdb_neo4j_spark.session import materialize
@@ -1020,42 +1026,66 @@ def q_graph_components(
 
     Scale shape — the clique factoring carried to its logical end: an
     attribute edge type connects every pair inside a value group, so
-    connectivity is IDENTICAL on the bipartite node↔group-key incidence
-    (one row per node per non-null attribute value / interest token —
-    O(N·attrs), vs Σ C(n,2) materialized clique edges). Min-label
-    propagation alternates two tiny aggregations per round: group label =
-    min member label, node label = min over its groups — each round is 2
-    groupBys + 2 joins on the incidence table, converges in O(bipartite
-    diameter) rounds, frontier localCheckpoint'd, early-stops when a
-    round changes nothing (same discipline as dedup's
-    connected_components / BFS). Nodes whose every group is a singleton
-    stay their own component.
-    """
+    connectivity is IDENTICAL on the bipartite node↔group incidence
+    (:func:`component_incidence`, one row per node per non-null attribute
+    value / ordered part — O(N·attrs + |lineitem|), vs Σ C(n,2)
+    materialized clique edges). Group keys are longs: the part key for
+    interests, an exact negative index for attribute values. The
+    incidence is built once and never shuffled inside the loop
+    (:func:`min_label_components`)."""
     nodes = customer_nodes(spark, sf_dir)
-    # r14: all four attribute incidences from ONE pass over the node
-    # table via an in-row explode instead of four union branches that
-    # each re-rendered the customer⋈nation⋈region normalize pipeline
-    # (4 source scans → 1 in the materialized incidence; guide §2.4 —
-    # the ingest derive_edges_for_batch kv() discipline). Same rows:
-    # gk = '<attr>:<value>' for every non-NULL/'' attribute value.
+    inc = component_incidence(nodes, customer_interest_pairs_raw(spark, sf_dir))
+    return min_label_components(nodes.select("id"), inc, max_iterations)
+
+
+def component_incidence(nodes: DataFrame, interest_pairs: DataFrame) -> DataFrame:
+    """(id, gk: long) node↔group incidence: one row per node per non-NULL,
+    non-'' attribute value, plus one per (id, interest) pair.
+
+    All four attributes come from ONE pass over the node table (an in-row
+    inline of (attr, value) cells). Each distinct (attr, value) gets an
+    exact key −1, −2, … from a dense index over that tiny table, broadcast
+    back; a college and a board with the same value stay two groups.
+    Interests keep their (positive) part key, cast back to a long, and are
+    NOT deduplicated: the min-label update is idempotent, so duplicate
+    rows change no label and the ``distinct`` shuffle is saved."""
+    from pyspark.sql.window import Window
+
     cells = F.array(
         *[
-            F.struct(
-                F.lit(f"{attr}:").alias("p"), F.col(attr).alias("v")
-            )
+            F.struct(F.lit(attr).alias("a"), F.col(attr).alias("v"))
             for attr in ATTRIBUTE_EDGE_TYPES.values()
         ]
     )
-    attr_inc = (
-        nodes.select("id", F.explode(cells).alias("s"))
-        .filter(F.col("s.v").isNotNull() & (F.col("s.v") != ""))
-        .select("id", F.concat(F.col("s.p"), F.col("s.v")).alias("gk"))
+    # NULL != '' is NULL, so the filter drops both
+    attr_cells = nodes.select("id", F.inline(cells)).filter(F.col("v") != "")
+    keys = (
+        attr_cells.select("a", "v")
+        .distinct()
+        .select(
+            "a",
+            "v",
+            (-F.row_number().over(Window.orderBy("a", "v"))).cast("long").alias("gk"),
+        )
     )
-    interest_inc = customer_interest_pairs(spark, sf_dir).select(
-        "id", F.concat(F.lit("i:"), F.col("interest")).alias("gk")
+    attr_inc = attr_cells.join(F.broadcast(keys), ["a", "v"]).select("id", "gk")
+    interest_inc = interest_pairs.select(
+        "id", F.col("interest").cast("long").alias("gk")
     )
-    inc = attr_inc.unionByName(interest_inc)
-    return min_label_components(nodes.select("id"), inc, max_iterations)
+    return attr_inc.unionByName(interest_inc)
+
+
+def _broadcast_fits(spark: SparkSession, rows: int, width: int) -> bool:
+    """Whether ``rows`` rows of ``width`` bytes fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` (a negative threshold
+    disables broadcasting) — the choice Catalyst makes from a plan's size
+    estimate, taken here from an exact row count."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= rows * width <= limit
+
+
+def _broadcast_if(df: DataFrame, small: bool) -> DataFrame:
+    return F.broadcast(df) if small else df
 
 
 def min_label_components(
@@ -1063,65 +1093,80 @@ def min_label_components(
 ) -> DataFrame:
     """Bipartite min-label propagation: ``node_ids`` = (id), ``inc`` =
     (id, gk) node↔group incidence → (id, component, component_size).
-    Extracted from :func:`q_graph_components` (r9) so degenerate
-    incidences — all-singleton groups, empty incidence, multiple
-    components — are directly pytest-pinnable."""
-    inc = inc.transform(materialize)
 
-    # Round 1 fused (r9 construct-time work, VERDICT r8 #3): the initial
-    # label IS the id, so the first group-min needs no labels join
-    # (min member label = min member id) and the first changed-count is
-    # skipped — if round 1 were already a fixpoint, round 2 is a no-op
-    # and the loop stops there, so correctness is unchanged while the
-    # common case saves one join and one count job. Algebraically this is
-    # relax(labels0) exactly, so the unrolled SQL oracle still mirrors
-    # every application.
-    glabel1 = inc.groupBy("gk").agg(F.min("id").alias("glabel"))
-    node_min1 = (
-        inc.join(glabel1, "gk").groupBy("id").agg(F.min("glabel").alias("gmin"))
-    )
-    labels = (
-        node_ids.join(node_min1, "id", "left")
-        .select("id", F.least("id", F.coalesce("gmin", F.col("id"))).alias("label"))
-        .transform(materialize)
-    )
-    for _ in range(max_iterations - 1):
-        glabel = (
-            inc.join(labels, "id")
-            .groupBy("gk")
-            .agg(F.min("label").alias("glabel"))
-        )
-        node_min = (
-            inc.join(glabel, "gk")
-            .groupBy("id")
-            .agg(F.min("glabel").alias("gmin"))
-        )
-        # changed-flag folded into the checkpointed frame (one lineage-
-        # truncating count job per round, not checkpoint-job + join +
-        # count-job — measured 5.4 → 3.6 s construct at sf0.1). Lazy
-        # checkpoint: the count materializes it.
-        tmp = (
-            labels.join(node_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    "label", F.coalesce("gmin", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("gmin", F.col("label")) < F.col("label")).alias(
-                    "chg"
-                ),
-            )
+    The update is f(L)(v) = least(L(v), min over g∋v of glabel(g)) with
+    glabel(g) = min member label, starting from L = id and applied at
+    most ``max_iterations`` times — the recurrence
+    :func:`graph_components_sql` unrolls. Loop shape:
+
+    - **No incumbent join.** A node sits in each of its groups, so the
+      min of its group labels already includes its own label: f(L)(v) =
+      min over g∋v of glabel(g) for every node with a group. Labels are
+      kept only for those nodes; nodes without a group keep their id via
+      one left join at the end.
+    - **Homogeneity stop.** Each group aggregate takes min AND max of the
+      member labels. If every group has min = max then f(L) = L (and
+      conversely), so one count of the mixed groups per round is an
+      exact fixpoint test; the confirming round costs half a round.
+      Round 1 needs no join at all (the labels are the ids).
+    - **Broadcast what Catalyst would broadcast.** The incidence, the
+      per-round group table and the label table are lineage-cut with
+      :func:`materialize`, and a checkpoint keeps the size estimate of
+      the plan it replaced (15.6 GB for the 15,000-row sf0.1 label
+      table), so Catalyst alone plans every join of every round as a
+      sort-merge join and re-shuffles the whole incidence twice a
+      round. The decision is made once from exact row counts instead:
+      the label and group tables (two longs a row) are broadcast when
+      rows × width fits under ``spark.sql.autoBroadcastJoinThreshold``,
+      else the joins stay shuffle joins. Broadcast, the incidence is
+      joined in place and each round shuffles only partial aggregates —
+      O(|groups| + |nodes|) per partition, never O(|incidence|).
+
+    Incidence rows whose id is not in ``node_ids`` are dropped once,
+    before the loop (a semi join under the same broadcast decision)."""
+    from pyspark.sql.window import Window
+
+    spark = node_ids.sparkSession
+    node_ids = node_ids.select("id").transform(materialize)
+    small_labels = _broadcast_fits(spark, node_ids.count(), 16)
+    inc = inc.join(
+        _broadcast_if(node_ids, small_labels), "id", "left_semi"
+    ).transform(materialize)
+
+    def group_labels(members: DataFrame, label: str) -> DataFrame:
+        return (
+            members.groupBy("gk")
+            .agg(F.min(label).alias("lo"), F.max(label).alias("hi"))
             .transform(materialize)
         )
-        changed = tmp.filter("chg").count()
-        labels = tmp.select("id", "label")
-        if changed == 0:
-            break
-    sizes = labels.groupBy("label").agg(F.count("*").alias("component_size"))
-    return labels.join(sizes, "label").select(
+
+    is_mixed = F.col("lo") < F.col("hi")
+    groups = group_labels(inc, "id")
+    n_groups, n_mixed = groups.agg(F.count("*"), F.count(F.when(is_mixed, 1))).first()
+    small_groups = _broadcast_fits(spark, n_groups, 16)
+    labels, applied = None, 0
+    while n_mixed and applied < max_iterations:
+        labels = (
+            inc.join(_broadcast_if(groups.select("gk", "lo"), small_groups), "gk")
+            .groupBy("id")
+            .agg(F.min("lo").alias("label"))
+            .transform(materialize)
+        )
+        applied += 1
+        if applied < max_iterations:
+            groups = group_labels(
+                inc.join(_broadcast_if(labels, small_labels), "id"), "label"
+            )
+            n_mixed = groups.filter(is_mixed).count()
+
+    component = F.col("id")
+    if labels is not None:
+        node_ids = node_ids.join(_broadcast_if(labels, small_labels), "id", "left")
+        component = F.coalesce("label", "id")
+    return node_ids.select(
         "id",
-        F.col("label").alias("component"),
-        "component_size",
+        component.alias("component"),
+        F.count("*").over(Window.partitionBy(component)).alias("component_size"),
     )
 
 
@@ -1132,20 +1177,51 @@ def graph_components_sql(max_iterations: int = COMPONENTS_MAX_ITERS) -> str:
     people graph is one dense giant component: Θ(N²)-row closure, timed
     out at sf0.01 — the pre-r8 reason this query was rows-only). The
     mirror instead unrolls the SAME bipartite min-label propagation the
-    Spark side runs: one CTE level per round, each level = group label
-    (min member label per group key) → node min over its groups →
-    least(incumbent, group-min). Every level is ≤|nodes| rows and two
-    joins over the O(N·attrs) incidence — the factored form's own cost
-    shape, so the oracle finishes in milliseconds where the closure
-    blew up.
+    Spark side runs (:func:`min_label_components_sql`) over the same
+    incidence, keyed by readable strings where Spark uses long keys —
+    the key only names a group, so the components are the same.
 
     Equality is by CONSTRUCTION, not by a diameter bound: the update
     f(labels) is a deterministic function, Spark applies it k ≤
-    ``max_iterations`` times stopping at the first fixpoint application
-    (further applications are then no-ops), and the SQL applies it
-    exactly ``max_iterations`` times — identical labels whether or not
-    the loop early-stopped. The union-find parity test
-    (tests/test_graphalgo.py) stays as the independent cross-check."""
+    ``max_iterations`` times and stops early only when every group's
+    member labels are equal — exactly when f(labels) = labels, so every
+    further application is a no-op — and the SQL applies it exactly
+    ``max_iterations`` times: identical labels whether or not the loop
+    early-stopped. The union-find parity test (tests/test_graphalgo.py)
+    stays as the independent cross-check."""
+    return min_label_components_sql(
+        max_iterations,
+        inputs=f"""{NODES_CTE.strip()},
+{CUST_PARTS_CTE.strip()},
+inc AS MATERIALIZED (
+    SELECT id, 'college:' || college AS gk FROM nodes
+      WHERE college IS NOT NULL AND college <> ''
+    UNION ALL
+    SELECT id, 'board:' || board FROM nodes
+      WHERE board IS NOT NULL AND board <> ''
+    UNION ALL
+    SELECT id, 'stream:' || stream FROM nodes
+      WHERE stream IS NOT NULL AND stream <> ''
+    UNION ALL
+    SELECT id, 'address:' || address FROM nodes
+      WHERE address IS NOT NULL AND address <> ''
+    UNION ALL
+    SELECT id, 'i:' || interest FROM cust_parts
+),
+""",
+    )
+
+
+def min_label_components_sql(max_iterations: int, inputs: str = "") -> str:
+    """DuckDB mirror of :func:`min_label_components` over relations
+    ``nodes`` (id) and ``inc`` (id, gk) — tables, or CTEs defined by
+    ``inputs`` (each ending in a comma).
+
+    One CTE level per application of f, each level = group label (min
+    member label per group key) → node min over its groups →
+    least(incumbent, group-min). Every level is ≤|nodes| rows and two
+    joins over the incidence — the factored form's own cost shape, so
+    the oracle finishes in milliseconds where a closure blows up."""
     levels = []
     for r in range(1, max_iterations + 1):
         # AS MATERIALIZED: each level references the previous one TWICE
@@ -1168,27 +1244,9 @@ def graph_components_sql(max_iterations: int = COMPONENTS_MAX_ITERS) -> str:
     ) nm ON l.id = nm.id
 )"""
         )
-    level_sql = ",\n".join(levels)
+    level_sql = "".join(f",\n{level}" for level in levels)
     return f"""
-WITH {NODES_CTE.strip()},
-{CUST_PARTS_CTE.strip()},
-inc AS MATERIALIZED (
-    SELECT id, 'college:' || college AS gk FROM nodes
-      WHERE college IS NOT NULL AND college <> ''
-    UNION ALL
-    SELECT id, 'board:' || board FROM nodes
-      WHERE board IS NOT NULL AND board <> ''
-    UNION ALL
-    SELECT id, 'stream:' || stream FROM nodes
-      WHERE stream IS NOT NULL AND stream <> ''
-    UNION ALL
-    SELECT id, 'address:' || address FROM nodes
-      WHERE address IS NOT NULL AND address <> ''
-    UNION ALL
-    SELECT id, 'i:' || interest FROM cust_parts
-),
-l0 AS MATERIALIZED (SELECT id, id AS label FROM nodes),
-{level_sql},
+WITH {inputs}l0 AS MATERIALIZED (SELECT id, id AS label FROM nodes){level_sql},
 sizes AS (
     SELECT label, COUNT(*) AS component_size FROM l{max_iterations} GROUP BY label
 )

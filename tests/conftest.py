@@ -17,6 +17,13 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_SF_SMOKE", "/root/testdata/sf0.001")
 SF_CORRECT = os.environ.get("SPARK_GRAFT_SF_CORRECT", "/root/testdata/sf0.01")
 
 
+def pytest_configure(config):
+    """List the 10 slowest tests next to the wall-time summary unless the
+    caller chose a ``--durations`` of their own."""
+    if config.option.durations is None:
+        config.option.durations = 10
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="graphdb_neo4j_spark_tests", shuffle_partitions=8)

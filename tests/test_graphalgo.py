@@ -590,3 +590,127 @@ def test_components_long_chain_converges(spark):
         inc += [(i, f"e{i}"), (i + 1, f"e{i}")]
     got = _components(spark, ids, inc)
     assert got == {i: (1, n) for i in ids}
+
+
+def _components_sql(ids, inc_rows, max_iterations):
+    """The DuckDB mirror's unroll run on the same (node_ids, inc) input."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE nodes (id BIGINT)")
+    con.execute("CREATE TABLE inc (id BIGINT, gk VARCHAR)")
+    con.executemany("INSERT INTO nodes VALUES (?)", [(i,) for i in ids])
+    if inc_rows:
+        con.executemany("INSERT INTO inc VALUES (?, ?)", inc_rows)
+    rows = con.execute(graphalgo.min_label_components_sql(max_iterations))
+    return {i: (c, n) for i, c, n in rows.fetchall()}
+
+
+def _min_label_reference(ids, inc_rows, applications):
+    """Pure-Python f (group label = min member label, node label = least
+    of its own and its groups' labels) applied exactly ``applications``
+    times from label = id, then component sizes."""
+    labels = {i: i for i in ids}
+    for _ in range(applications):
+        glabel: dict = {}
+        for i, g in inc_rows:
+            if i in labels:
+                glabel[g] = min(glabel.get(g, labels[i]), labels[i])
+        nxt = dict(labels)
+        for i, g in inc_rows:
+            if i in nxt and g in glabel:
+                nxt[i] = min(nxt[i], glabel[g])
+        labels = nxt
+    sizes: dict = {}
+    for c in labels.values():
+        sizes[c] = sizes.get(c, 0) + 1
+    return {i: (c, sizes[c]) for i, c in labels.items()}
+
+
+def test_components_incidence_ids_outside_node_set(spark):
+    """An incidence id that is not a node (1 here) must not seed a group
+    label: the SQL mirror only ever labels ``nodes``, so component 1 is
+    impossible and {2, 3} is component 2."""
+    ids, inc = [2, 3], [(1, "g"), (2, "g"), (3, "g")]
+    want = {2: (2, 2), 3: (2, 2)}
+    assert _components_sql(ids, inc, 3) == want
+    assert _components(spark, ids, inc, max_iterations=3) == want
+
+
+def test_components_iteration_cap_is_not_a_fixpoint(spark):
+    """12-node chain capped at 3 applications: the labels are f applied
+    exactly 3 times (not the fixpoint — the homogeneity stop must not
+    fire early), the same count the unrolled SQL applies."""
+    n, cap = 12, 3
+    ids = list(range(1, n + 1))
+    inc = []
+    for i in range(1, n):
+        inc += [(i, f"e{i}"), (i + 1, f"e{i}")]
+    want = _min_label_reference(ids, inc, cap)
+    assert want != _min_label_reference(ids, inc, n)
+    assert _components(spark, ids, inc, max_iterations=cap) == want
+    assert _components_sql(ids, inc, cap) == want
+
+
+def test_graph_components_shuffle_join_branch(spark, sf_dir):
+    """With broadcasting disabled the loop keeps shuffle joins and still
+    returns the union-find components."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert not graphalgo._broadcast_fits(spark, 1, 1)
+        test_graph_components_matches_union_find(spark, sf_dir)
+    finally:
+        spark.conf.set(key, old)
+    assert graphalgo._broadcast_fits(spark, 1, 1)
+
+
+def test_component_incidence_keys_attribute_and_value(spark):
+    """A college and a board sharing the value 'x' are two groups, and the
+    interest with part key 1 is not the attribute group keyed −1: the
+    long keys are exact, so nothing merges that shares no group."""
+    nodes = spark.createDataFrame(
+        [
+            (1, "a1", "x", "y", "s1"),
+            (2, "a2", "z", "x", "s2"),
+            (3, "a3", "x", "w", "s3"),
+            (4, "a4", None, "", "s4"),
+            (5, "a5", "q", "r", "s5"),
+        ],
+        "id long, address string, college string, board string, stream string",
+    )
+    interests = spark.createDataFrame(
+        [(4, "1"), (5, "1"), (4, "1")], "id long, interest string"
+    )
+    inc = graphalgo.component_incidence(nodes, interests)
+    assert inc.filter("gk < 0").select("gk").distinct().count() == 17
+    got = {
+        r["id"]: (r["component"], r["component_size"])
+        for r in graphalgo.min_label_components(nodes.select("id"), inc, 20).collect()
+    }
+    assert got == {1: (1, 2), 3: (1, 2), 2: (2, 1), 4: (4, 2), 5: (4, 2)}
+
+
+def test_factored_pagerank_non_nested_pair_equals_edge_walk(spark, sf_dir):
+    """(college, stream) is not nested (a college spans several streams),
+    so classes differ in size and rank: unlike (college, board) on these
+    fixtures, the edge-walk equality sees the class count k and the PPR
+    seed share."""
+    from graphdb_neo4j_spark.operators.edges import derive_attribute_edges
+    from graphdb_neo4j_spark.sources.tpch import customer_nodes
+
+    attrs = ("college", "stream")
+    nodes = customer_nodes(spark, sf_dir)
+    edges = derive_attribute_edges(nodes, "college", "SAME_COLLEGE").unionByName(
+        derive_attribute_edges(nodes, "stream", "SAME_STREAM")
+    ).select("src", "dst")
+    _assert_same_ranks(
+        graphalgo.pagerank_clique_factored(nodes, attrs),
+        graphalgo.pagerank(nodes, edges),
+    )
+    seeds = [graphalgo.PPR_SEED_ID, 42]
+    _assert_same_ranks(
+        graphalgo.pagerank_ppr_clique_factored(nodes, seeds, attrs=attrs),
+        graphalgo.pagerank_personalized(nodes, edges, seeds),
+    )
