@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.llmdata import genstore
 from graphdb_neo4j_spark.llmdata import repcompress as rc
 from graphdb_neo4j_spark.session import materialize, widen_scan
 
@@ -1129,70 +1130,20 @@ WHERE CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter) >= {threshold}
 
 
 MINHASH_STORE_META = "_minhash_store_meta.json"
-_MINHASH_TABLES = ("sigs", "buckets")
+_MINHASH_STORE = genstore.GenStore(
+    "minhash", MINHASH_STORE_META, ("sigs", "buckets")
+)
 
 
-def _minhash_store_meta(path: str) -> dict | None:
-    import json
-    import os
-
-    p = os.path.join(path, MINHASH_STORE_META)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_minhash_store_meta(path: str, meta: dict) -> None:
-    """Atomic sidecar replace — the meta write IS the append's commit
-    point (same mini-commit-log protocol as the gram store)."""
-    import json
-    import os
-
-    tmp = os.path.join(path, MINHASH_STORE_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(path, MINHASH_STORE_META))
-
-
-def _validate_minhash_store(path: str, meta: dict | None) -> None:
-    """Crash-consistency gate before every probe/append: a half-committed
-    append (sigs landed, buckets did not — or either without its
-    ``_COMMITTED`` marker) would make the probe silently MISS the batch
-    (bucket join finds no rows) or emit duplicate pairs after a blind
-    retry; detection + ``repair_minhash_store`` replaces both failure
-    modes. Stores with no sidecar (pre-meta flat layout) probe as-is."""
-    import os
-
-    if meta is None:
-        return
-    # Legacy (pre-commit-log) meta has a generations ledger but no
-    # `active` set and its dirs carry no _COMMITTED markers — grandfather
-    # it (dir-vs-ledger check still runs; marker check skipped), same as
-    # the gram store (ADVICE r11); repair_minhash_store() upgrades.
-    legacy = "active" not in meta
-    active = set(meta.get("active", meta.get("generations", [])))
-    for table in _MINHASH_TABLES:
-        dirs = _gram_store_generation_dirs(os.path.join(path, table))
-        if set(dirs) != active:
-            raise ValueError(
-                f"minhash store at {path} is data/meta inconsistent: "
-                f"{table}/ holds generations {sorted(dirs)} != active "
-                f"{sorted(active)} (crashed append) — run "
-                f"repair_minhash_store()"
-            )
-        missing = [
-            g
-            for g, d in dirs.items()
-            if not os.path.exists(os.path.join(d, _GEN_COMMITTED))
-        ]
-        if missing and not legacy:
-            raise ValueError(
-                f"minhash store at {path} has active {table} generations "
-                f"without a {_GEN_COMMITTED} marker (partial write): "
-                f"{sorted(missing)} — rebuild or re-append them after "
-                f"repair_minhash_store()"
-            )
+def _minhash_params(width: int, max_df: int) -> dict:
+    """Build parameters a MinHash store probe or append must match."""
+    return {
+        "width": width,
+        "max_df": max_df,
+        "n_hashes": N_HASHES,
+        "band_size": BAND_SIZE,
+        "hash": "xxhash64",
+    }
 
 
 def repair_minhash_store(path: str) -> list[str]:
@@ -1200,82 +1151,9 @@ def repair_minhash_store(path: str) -> list[str]:
     at the meta write, so any generation dir (in EITHER table) whose id
     is not in ``active`` is an uncommitted orphan — delete it; the batch
     id never entered the replay ledger, so the caller's retry is
-    accepted. Returns the actions taken (empty = already consistent)."""
-    import os
-    import shutil
-
-    meta = _minhash_store_meta(path)
-    if meta is None:
-        raise ValueError(
-            f"no {MINHASH_STORE_META} sidecar at {path} — pre-meta stores "
-            f"carry no ledger to repair against; rebuild with "
-            f"write_minhash_store()"
-        )
-    actions: list[str] = []
-    active = set(meta.get("active", meta.get("generations", [])))
-    for table in _MINHASH_TABLES:
-        for gen, d in _gram_store_generation_dirs(
-            os.path.join(path, table)
-        ).items():
-            if gen not in active:
-                shutil.rmtree(d)
-                actions.append(f"removed uncommitted {table}/generation={gen}")
-    if "active" not in meta:
-        # Legacy upgrade (ADVICE r11), mirroring repair_gram_store():
-        # stamp markers on every ledgered dir, then backfill `active`
-        # via the atomic meta replace (idempotent if re-run).
-        #
-        # Diverged-tables guard (ADVICE r12): a legacy store that crashed
-        # mid-append has the generation dir in ONE table only (sigs
-        # landed, buckets did not). Backfilling `active` from sigs alone
-        # would then stamp an active set buckets can never satisfy —
-        # _validate_minhash_store fails forever while a repair rerun
-        # (meta now has `active`, orphan sweep finds nothing) returns no
-        # actions: an unrecoverable loop. A one-table generation is a
-        # half-written append, so treat it exactly like an uncommitted
-        # orphan: sweep the odd dir, backfill from the INTERSECTION, and
-        # drop the swept id from the replay ledger so the caller's
-        # re-append is accepted (its data no longer exists).
-        dir_sets = {
-            table: set(
-                _gram_store_generation_dirs(os.path.join(path, table))
-            )
-            for table in _MINHASH_TABLES
-        }
-        common = set.intersection(*dir_sets.values())
-        for table in _MINHASH_TABLES:
-            for gen in sorted(dir_sets[table] - common):
-                shutil.rmtree(
-                    _gram_store_generation_dirs(os.path.join(path, table))[gen]
-                )
-                actions.append(
-                    f"removed half-written legacy {table}/generation={gen} "
-                    f"(absent from the other table)"
-                )
-        for table in _MINHASH_TABLES:
-            for gen, d in _gram_store_generation_dirs(
-                os.path.join(path, table)
-            ).items():
-                marker = os.path.join(d, _GEN_COMMITTED)
-                if not os.path.exists(marker):
-                    with open(marker, "w"):
-                        pass
-                    actions.append(
-                        f"stamped {_GEN_COMMITTED} in {table}/generation={gen}"
-                    )
-        meta["active"] = sorted(common)
-        dropped = [g for g in meta.get("generations", []) if g not in common]
-        if dropped:
-            meta["generations"] = [
-                g for g in meta["generations"] if g in common
-            ]
-            actions.append(
-                f"dropped half-written generations from the replay ledger "
-                f"(retry accepted): {sorted(dropped)}"
-            )
-        _write_minhash_store_meta(path, meta)
-        actions.append("upgraded legacy meta (backfilled active)")
-    return actions
+    accepted. Returns the actions taken (empty = already consistent).
+    See :mod:`graphdb_neo4j_spark.llmdata.genstore` for the protocol."""
+    return _MINHASH_STORE.sweep_orphans(path, _MINHASH_STORE.load(path))
 
 
 def _band_sig_expr() -> "F.Column":
@@ -1314,66 +1192,23 @@ def write_minhash_store(
     as a NEW generation without rewriting history (signatures never
     change once computed; generations hold disjoint doc_ids).
 
-    Crash consistency (the gram store's mini commit log, VERDICT r10
-    #5, applied to the second persisted store): both tables' generation
-    data commits first, then a ``_COMMITTED`` marker in each dir, and
-    the ATOMIC ``_minhash_store_meta.json`` replace (replay ledger +
-    ``active`` set + the signature parameters) is the commit point. The
-    half-committed-append hazard this closes is SILENT: sigs landed but
-    buckets didn't → the probe simply never finds the batch's bucket
-    rows; a blind retry of the old both-tables append → duplicate sig
-    rows → duplicate candidate pairs. Probes/appends validate layout
+    Crash consistency is the generation-store commit log
+    (:mod:`graphdb_neo4j_spark.llmdata.genstore`): both tables'
+    generation data commits first, then a ``_COMMITTED`` marker in each
+    dir, and the ATOMIC ``_minhash_store_meta.json`` replace (replay
+    ledger + ``active`` set + the signature parameters) is the commit
+    point. The half-committed-append hazard this closes is SILENT: sigs
+    landed but buckets didn't → the probe simply never finds the batch's
+    bucket rows; a blind retry of the old both-tables append → duplicate
+    sig rows → duplicate candidate pairs. Probes/appends validate layout
     and parameters (a probe at a different shingle width / band shape
     would miss every bucket); ``repair_minhash_store`` deletes orphan
-    generations so the caller's retry is accepted. Appending to a store
-    with no sidecar raises (a pre-meta flat layout would mix root-level
-    parquet with partition dirs and forget the replay ledger)."""
-    import os
-    import shutil
-
-    meta = _minhash_store_meta(path)
-    if mode == "append":
-        if meta is None:
-            sigs_dir = os.path.join(path, "sigs")
-            root_parquet = [
-                p
-                for p in (os.listdir(sigs_dir) if os.path.isdir(sigs_dir) else [])
-                if p.endswith(".parquet")
-            ]
-            if root_parquet:
-                raise ValueError(
-                    f"minhash store at {path} is a pre-meta flat layout "
-                    f"(root-level parquet in sigs/, no {MINHASH_STORE_META}); "
-                    f"appending generation dirs beside it would produce a "
-                    f"mixed layout Spark rejects — rebuild with "
-                    f"mode='overwrite'"
-                )
-            raise ValueError(
-                f"no minhash store sidecar at {path} — cold-start with "
-                f"write_minhash_store(mode='overwrite') before appending"
-            )
-        for param, val in (
-            ("width", width),
-            ("max_df", max_df),
-            ("n_hashes", N_HASHES),
-            ("band_size", BAND_SIZE),
-        ):
-            if meta[param] != val:
-                raise ValueError(
-                    f"minhash store at {path} was built with "
-                    f"{param}={meta[param]}, append requested {param}={val}"
-                )
-        if generation in meta["generations"]:
-            raise ValueError(
-                f"generation {generation!r} already folded into the minhash "
-                f"store at {path} (replayed/retried append would duplicate "
-                f"signature and bucket rows)"
-            )
-        _validate_minhash_store(path, meta)
-    if mode == "overwrite":
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        meta = None
+    generations so the caller's retry is accepted. ``mode`` must be
+    ``"overwrite"`` or ``"append"``, and appending to a path with no
+    sidecar raises (cold-start it with ``mode="overwrite"``)."""
+    meta = _MINHASH_STORE.begin_write(
+        path, mode, generation, _minhash_params(width, max_df)
+    )
     th = prune_hot_tokens(doc_shingles(docs, width), max_df).select(
         "doc_id", F.xxhash64("tok").alias("h")
     )
@@ -1387,25 +1222,7 @@ def write_minhash_store(
         .partitionBy("band_idx")
         .parquet(f"{path}/buckets/generation={generation}")
     )
-    for table in _MINHASH_TABLES:
-        with open(
-            os.path.join(path, table, f"generation={generation}", _GEN_COMMITTED),
-            "w",
-        ):
-            pass
-    if meta is None:
-        meta = {
-            "width": width,
-            "max_df": max_df,
-            "n_hashes": N_HASHES,
-            "band_size": BAND_SIZE,
-            "hash": "xxhash64",
-            "generations": [],
-            "active": [],
-        }
-    meta["generations"] = meta["generations"] + [generation]
-    meta["active"] = meta["active"] + [generation]
-    _write_minhash_store_meta(path, meta)
+    _MINHASH_STORE.commit(path, meta, generation)
 
 
 def probe_minhash_store(
@@ -1426,27 +1243,14 @@ def probe_minhash_store(
     signature rows. est_jaccard quantizes to k/N_HASHES; the pytest
     contract pins recall against the exact cross-split pairs.
 
-    Probes validate the store's ``_minhash_store_meta.json``: a
-    width/max_df/banding mismatch raises (the probe's buckets would
-    silently miss every stored bucket otherwise), as does crash residue
-    (``repair_minhash_store`` is the named remedy); a store with no
-    sidecar (pre-meta flat layout) is probed as-is.
+    Probes validate the store's ``_minhash_store_meta.json``
+    (:mod:`graphdb_neo4j_spark.llmdata.genstore`): a width/max_df/banding
+    mismatch raises (the probe's buckets would silently miss every
+    stored bucket otherwise), as does crash residue
+    (``repair_minhash_store`` is the named remedy) and a path with no
+    sidecar (cold-start it with ``write_minhash_store``).
     """
-    meta = _minhash_store_meta(path)
-    _validate_minhash_store(path, meta)
-    if meta is not None:
-        for param, val in (
-            ("width", width),
-            ("max_df", max_df),
-            ("n_hashes", N_HASHES),
-            ("band_size", BAND_SIZE),
-        ):
-            if meta[param] != val:
-                raise ValueError(
-                    f"minhash store at {path} was built with "
-                    f"{param}={meta[param]}, probe requested {param}={val} — "
-                    f"a cross-parameter probe silently misses every bucket"
-                )
+    _MINHASH_STORE.check_probe(path, _minhash_params(width, max_df))
     th = prune_hot_tokens(doc_shingles(new_docs, width), max_df).select(
         "doc_id", F.xxhash64("tok").alias("h")
     )
@@ -2155,97 +1959,21 @@ def dedup_span_removal_incremental_sql(
 # --- persisted gram store (at-rest incremental span removal) -----------------
 
 GRAM_STORE_META = "_gram_store_meta.json"
-_COMPACT_GENERATION = "__compact__"  # reserved; appends may not use it
-_GEN_COMMITTED = "_COMMITTED"  # per-generation data-commit marker
+_GRAM_STORE = genstore.GenStore("gram", GRAM_STORE_META, ("",))
 _COMPACT_TMP = "_compact_tmp"  # compaction staging dir (invisible to Spark)
 
 
-def _gram_store_meta(path: str) -> dict | None:
-    import json
-    import os
-
-    p = os.path.join(path, GRAM_STORE_META)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_gram_store_meta(path: str, meta: dict) -> None:
-    """Atomically replace the sidecar (write-tmp + os.replace): the meta
-    write IS the store's commit point, so it must never be observable
-    half-written."""
-    import json
-    import os
-
-    tmp = os.path.join(path, GRAM_STORE_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(path, GRAM_STORE_META))
-
-
-def _gram_store_generation_dirs(path: str) -> dict[str, str]:
-    """Visible ``generation=<id>/`` partition dirs → {id: abspath}."""
-    import glob
-    import os
-
-    return {
-        os.path.basename(g).split("=", 1)[1]: g
-        for g in glob.glob(f"{path}/generation=*")
-        if os.path.isdir(g)
-    }
-
-
-def _validate_gram_store(path: str, meta: dict | None) -> None:
-    """Crash-consistency gate, run before every probe/append/compact:
-    a crashed write or compaction must be DETECTED, never silently
-    probed (an orphan generation dir double-counts dfs; a half-deleted
-    compaction under-counts them). Pre-meta flat-layout stores (no
-    sidecar) are probed as-is — the documented legacy read path."""
-    import os
-
-    if meta is None:
-        return
-    if meta.get("pending_compact"):
-        raise ValueError(
-            f"gram store at {path} has an interrupted compaction "
-            f"(pending_compact in {GRAM_STORE_META}) — run "
-            f"repair_gram_store() to roll it forward"
-        )
-    dirs = _gram_store_generation_dirs(path)
-    active = meta.get("active", meta["generations"])
-    if set(dirs) != set(active):
-        raise ValueError(
-            f"gram store at {path} is data/meta inconsistent: on-disk "
-            f"generations {sorted(dirs)} != active {sorted(active)} "
-            f"(crashed write or compaction) — run repair_gram_store()"
-        )
-    if "active" not in meta:
-        # Legacy (pre-commit-log) meta: its appends never wrote
-        # _COMMITTED markers, so demanding them here misdiagnoses every
-        # healthy pre-r11 store as "partial data write" — and repair
-        # could not heal it (all dirs are in the ledger, so it took no
-        # action), bricking the store until a full rebuild (ADVICE r11).
-        # Grandfather: the dir-vs-ledger check above still ran; probe
-        # as-is. repair_gram_store() performs the explicit upgrade
-        # (stamp markers + backfill `active`).
-        return
-    missing = [g for g, d in dirs.items() if not os.path.exists(os.path.join(d, _GEN_COMMITTED))]
-    if missing:
-        raise ValueError(
-            f"gram store at {path} has active generations without a "
-            f"{_GEN_COMMITTED} marker (partial data write): {sorted(missing)} "
-            f"— the store is unrecoverable for those batches; rebuild or "
-            f"re-append them after repair_gram_store()"
-        )
+def _gram_params(width: int) -> dict:
+    """Build parameters a gram store probe or append must match."""
+    return {"width": width, "hash": "xxhash64"}
 
 
 def repair_gram_store(path: str) -> list[str]:
     """Mechanical recovery for a crashed write/compaction — the remedy
-    every ``_validate_gram_store`` error names. Returns the actions taken
+    every gram-store validation error names. Returns the actions taken
     (empty = store was already consistent). Safe to run on a healthy
-    store; requires a meta sidecar (pre-meta stores have no ledger to
-    repair against).
+    store; requires a meta sidecar. See
+    :mod:`graphdb_neo4j_spark.llmdata.genstore` for the protocol.
 
     - Interrupted COMPACTION (``pending_compact`` set): roll FORWARD.
       The staged ``_compact_tmp`` was fully committed before the flag was
@@ -2264,60 +1992,32 @@ def repair_gram_store(path: str) -> list[str]:
     import os
     import shutil
 
-    meta = _gram_store_meta(path)
-    if meta is None:
-        raise ValueError(
-            f"no {GRAM_STORE_META} sidecar at {path} — pre-meta stores "
-            f"carry no ledger to repair against; rebuild with "
-            f"write_gram_store()"
-        )
+    meta = _GRAM_STORE.load(path)
     actions: list[str] = []
     tmp = os.path.join(path, _COMPACT_TMP)
     if meta.get("pending_compact"):
         if os.path.exists(tmp):
-            if not os.path.exists(os.path.join(tmp, _GEN_COMMITTED)):
+            if not os.path.exists(os.path.join(tmp, genstore.COMMITTED)):
                 # flag is set strictly AFTER the staging commit, so an
                 # uncommitted tmp under the flag means external tampering
                 raise ValueError(
                     f"pending compaction at {path} but {_COMPACT_TMP} has no "
-                    f"{_GEN_COMMITTED} marker — refusing to guess; rebuild"
+                    f"{genstore.COMMITTED} marker — refusing to guess; rebuild"
                 )
-            for g in _gram_store_generation_dirs(path).values():
+            for g in genstore.generation_dirs(path).values():
                 shutil.rmtree(g)
                 actions.append(f"removed pre-compaction {os.path.basename(g)}")
-            os.rename(tmp, f"{path}/generation={_COMPACT_GENERATION}")
-            actions.append(f"installed generation={_COMPACT_GENERATION}")
-        meta["active"] = [_COMPACT_GENERATION]
+            os.rename(tmp, f"{path}/generation={genstore.COMPACT_GENERATION}")
+            actions.append(f"installed generation={genstore.COMPACT_GENERATION}")
+        meta["active"] = [genstore.COMPACT_GENERATION]
         meta.pop("pending_compact", None)
-        _write_gram_store_meta(path, meta)
+        _GRAM_STORE.write_meta(path, meta)
         actions.append("finalized compaction meta")
         return actions
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
         actions.append(f"removed stale {_COMPACT_TMP}")
-    active = set(meta.get("active", meta["generations"]))
-    for gen, d in _gram_store_generation_dirs(path).items():
-        if gen not in active:
-            shutil.rmtree(d)
-            actions.append(f"removed uncommitted generation={gen}")
-    if "active" not in meta:
-        # Explicit LEGACY UPGRADE (ADVICE r11): a pre-commit-log meta has
-        # the generations ledger but no `active` set and no _COMMITTED
-        # markers. After the orphan sweep above, every remaining dir is
-        # ledgered — stamp the markers first, then backfill `active`
-        # (the atomic meta replace is the upgrade's commit point; a crash
-        # in between leaves a still-legacy store with some markers, which
-        # re-running this upgrade completes idempotently).
-        for gen, d in _gram_store_generation_dirs(path).items():
-            marker = os.path.join(d, _GEN_COMMITTED)
-            if not os.path.exists(marker):
-                with open(marker, "w"):
-                    pass
-                actions.append(f"stamped {_GEN_COMMITTED} in generation={gen}")
-        meta["active"] = sorted(_gram_store_generation_dirs(path))
-        _write_gram_store_meta(path, meta)
-        actions.append("upgraded legacy meta (backfilled active)")
-    return actions
+    return actions + _GRAM_STORE.sweep_orphans(path, meta)
 
 
 def write_gram_store(
@@ -2349,53 +2049,18 @@ def write_gram_store(
     failure, which would silently double-count dfs and over-remove
     batch text) raises instead of corrupting the store.
 
-    Crash consistency (mini commit log, SURVEY.md §7.4-H1's sandbox
-    stand-in for a table format): the generation's parquet data is
-    written first, then a ``_COMMITTED`` marker inside the dir, and the
-    ATOMIC sidecar replace (ledger += id, active += id) is the commit
-    point. A crash anywhere before the meta write leaves an orphan dir
-    that every probe/append DETECTS (``_validate_gram_store``) and
+    Crash consistency is the generation-store commit log
+    (:mod:`graphdb_neo4j_spark.llmdata.genstore`): the generation's
+    parquet data is written first, then a ``_COMMITTED`` marker inside
+    the dir, and the ATOMIC sidecar replace (ledger += id, active += id)
+    is the commit point. A crash anywhere before the meta write leaves
+    an orphan dir that every probe/append DETECTS and
     ``repair_gram_store`` deletes mechanically — the batch id never
-    entered the ledger, so the caller's retry is accepted. Appending to
-    a store with no sidecar raises: a pre-meta flat layout would end up
-    mixing root-level parquet with partition dirs (Spark rejects the
-    read) and a fresh one-entry ledger would silently drop replay
+    entered the ledger, so the caller's retry is accepted. ``mode`` must
+    be ``"overwrite"`` or ``"append"``, and appending to a path with no
+    sidecar raises: a fresh one-entry ledger would silently drop replay
     protection for everything folded in before."""
-    import os
-
-    meta = _gram_store_meta(path)
-    if mode == "append":
-        if meta is None:
-            root_parquet = [
-                p
-                for p in (os.listdir(path) if os.path.isdir(path) else [])
-                if p.endswith(".parquet")
-            ]
-            if root_parquet:
-                raise ValueError(
-                    f"gram store at {path} is a pre-meta flat layout "
-                    f"(root-level parquet, no {GRAM_STORE_META}); appending "
-                    f"generation dirs beside it would produce a mixed "
-                    f"layout Spark rejects and a ledger that forgot the "
-                    f"folded-in history — rebuild with mode='overwrite'"
-                )
-            raise ValueError(
-                f"no gram store sidecar at {path} — cold-start with "
-                f"write_gram_store(mode='overwrite') before appending"
-            )
-        if meta["width"] != width:
-            raise ValueError(
-                f"gram store at {path} was built with width={meta['width']}, "
-                f"append requested width={width}"
-            )
-        if generation in meta["generations"]:
-            raise ValueError(
-                f"generation {generation!r} already folded into the gram store "
-                f"at {path} (replayed/retried append would double-count dfs)"
-            )
-        _validate_gram_store(path, meta)
-    if generation == _COMPACT_GENERATION:
-        raise ValueError(f"generation id {_COMPACT_GENERATION!r} is reserved")
+    meta = _GRAM_STORE.begin_write(path, mode, generation, _gram_params(width))
     arrs = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("arr")
     ).filter(F.size("arr") >= width)
@@ -2408,27 +2073,13 @@ def write_gram_store(
             )
         ).alias("gram"),
     ).withColumn("gram", F.xxhash64("gram"))
-    if mode == "overwrite":
-        import shutil
-
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        meta = None
-    gen_dir = f"{path}/generation={generation}"
     (
         grams.groupBy("gram")
         .agg(F.count_distinct("doc_id").alias("df"))
         .write.mode("overwrite")
-        .parquet(gen_dir)
+        .parquet(f"{path}/generation={generation}")
     )
-    # data commit marker, then the atomic meta replace = the commit point
-    with open(os.path.join(gen_dir, _GEN_COMMITTED), "w"):
-        pass
-    if meta is None:
-        meta = {"width": width, "hash": "xxhash64", "generations": [], "active": []}
-    meta["generations"] = meta["generations"] + [generation]
-    meta["active"] = meta.get("active", meta["generations"][:-1]) + [generation]
-    _write_gram_store_meta(path, meta)
+    _GRAM_STORE.commit(path, meta, generation)
 
 
 def append_gram_store(
@@ -2438,7 +2089,8 @@ def append_gram_store(
     partial dfs per gram — exact because generations hold disjoint ids).
     ``generation`` is the caller's batch id, required so a retried append
     of an already-folded batch is DETECTED (ValueError) rather than
-    silently double-counted — see :func:`write_gram_store`."""
+    silently double-counted — see :func:`write_gram_store` and
+    :mod:`graphdb_neo4j_spark.llmdata.genstore`."""
     write_gram_store(new_docs, path, width, mode="append", generation=generation)
 
 
@@ -2470,18 +2122,14 @@ def compact_gram_store(spark: SparkSession, path: str) -> int:
     stale staging dir); a crash after it is rolled FORWARD by
     ``repair_gram_store`` (the staged data is already durable), and
     every probe/append in between refuses the store instead of reading
-    a half-swapped layout."""
+    a half-swapped layout (validation:
+    :mod:`graphdb_neo4j_spark.llmdata.genstore`)."""
     import os
     import shutil
 
-    meta = _gram_store_meta(path)
-    if meta is None:
-        raise ValueError(
-            f"no {GRAM_STORE_META} sidecar at {path} — compaction needs the "
-            f"active-generation ledger; rebuild with write_gram_store()"
-        )
-    _validate_gram_store(path, meta)
-    gens = sorted(_gram_store_generation_dirs(path).values())
+    meta = _GRAM_STORE.load(path)
+    _GRAM_STORE.validate(path, meta)
+    gens = sorted(genstore.generation_dirs(path).values())
     tmp = f"{path}/{_COMPACT_TMP}"
     (
         spark.read.parquet(path)
@@ -2490,16 +2138,16 @@ def compact_gram_store(spark: SparkSession, path: str) -> int:
         .write.mode("overwrite")
         .parquet(tmp)
     )
-    with open(os.path.join(tmp, _GEN_COMMITTED), "w"):
+    with open(os.path.join(tmp, genstore.COMMITTED), "w"):
         pass
     meta["pending_compact"] = True
-    _write_gram_store_meta(path, meta)
+    _GRAM_STORE.write_meta(path, meta)
     for g in gens:
         shutil.rmtree(g)
-    os.rename(tmp, f"{path}/generation={_COMPACT_GENERATION}")
-    meta["active"] = [_COMPACT_GENERATION]
+    os.rename(tmp, f"{path}/generation={genstore.COMPACT_GENERATION}")
+    meta["active"] = [genstore.COMPACT_GENERATION]
     meta.pop("pending_compact", None)
-    _write_gram_store_meta(path, meta)
+    _GRAM_STORE.write_meta(path, meta)
     return len(gens)
 
 
@@ -2534,21 +2182,15 @@ def clean_batch_with_gram_store(
     touch batch docs only — every shuffle batch- or store-sized, joins
     broadcast at small sf and AQE-skew-handled at scale.
 
-    Probes validate the store's ``_gram_store_meta.json``: a width
-    mismatch raises (a store built at a different width would silently
-    yield a mostly-miss clean otherwise), as does any crash residue —
-    an uncommitted generation dir or an interrupted compaction would
+    Probes validate the store's ``_gram_store_meta.json``
+    (:mod:`graphdb_neo4j_spark.llmdata.genstore`): a width mismatch
+    raises (a store built at a different width would silently yield a
+    mostly-miss clean otherwise), as does any crash residue — an
+    uncommitted generation dir or an interrupted compaction would
     double- or under-count dfs (``repair_gram_store`` is the named
-    remedy); a store with no sidecar (pre-meta layout) is probed
-    as-is."""
-    meta = _gram_store_meta(store)
-    _validate_gram_store(store, meta)
-    if meta is not None and meta["width"] != width:
-        raise ValueError(
-            f"gram store at {store} was built with width={meta['width']}, "
-            f"probe requested width={width} — a cross-width probe silently "
-            f"misses every gram"
-        )
+    remedy) — and a path with no sidecar (cold-start it with
+    ``write_gram_store``)."""
+    _GRAM_STORE.check_probe(store, _gram_params(width))
     hist_df = (
         spark.read.parquet(store)
         .groupBy("gram")
@@ -2662,19 +2304,13 @@ def gram_novelty_with_store(
     without re-reading any history text (``hist_df >= 1`` ≡ seen), so a
     per-batch novelty profile costs one batch gram pass + a
     store-keyed join. Same store validation as
-    :func:`clean_batch_with_gram_store` (width / crash-residue guards).
+    :func:`clean_batch_with_gram_store` (width / crash-residue /
+    no-sidecar guards of :mod:`graphdb_neo4j_spark.llmdata.genstore`).
     Keys are hashed, so this is the registered query's ``hashed`` twin —
     pytest pins the two identical on the parity split (xxhash64
     collisions across a corpus' gram set are the same accepted risk the
     span family documents)."""
-    meta = _gram_store_meta(store)
-    _validate_gram_store(store, meta)
-    if meta is not None and meta["width"] != width:
-        raise ValueError(
-            f"gram store at {store} was built with width={meta['width']}, "
-            f"novelty probe requested width={width} — a cross-width probe "
-            f"silently misses every gram"
-        )
+    _GRAM_STORE.check_probe(store, _gram_params(width))
     hist_grams = spark.read.parquet(store).select("gram").distinct()
     arrs = batch.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("arr")

@@ -36,6 +36,11 @@ from graphdb_neo4j_spark.llmdata.dedup import (
     q_dedup_span_removal,
 )
 from graphdb_neo4j_spark.llmdata.filterset import q_training_filter
+from graphdb_neo4j_spark.llmdata.genstore import (
+    check_generation_id,
+    read_meta,
+    write_json_atomic,
+)
 from graphdb_neo4j_spark.llmdata.scrub import q_pii_scrub
 from graphdb_neo4j_spark.llmdata.textstats import q_doc_chunks, q_token_stats
 from graphdb_neo4j_spark.sources.jsonl import jsonl_to_parquet
@@ -178,17 +183,14 @@ def run_corpus_pipeline(
         ingested, corrupt = jsonl_to_parquet(
             spark, jsonl_path, f"{raw_dir}/documents.parquet"
         )
-        _tmp = meta_path + ".tmp"
-        with open(_tmp, "w") as f:
-            json.dump(
-                {
-                    "ingested_rows": ingested,
-                    "corrupt_lines": corrupt,
-                    "params": run_params,
-                },
-                f,
-            )
-        os.replace(_tmp, meta_path)
+        write_json_atomic(
+            meta_path,
+            {
+                "ingested_rows": ingested,
+                "corrupt_lines": corrupt,
+                "params": run_params,
+            },
+        )
 
     # stage: components — materialize-then-consume: the pair-graph stage
     # (shingle join + iterative label propagation) runs ONCE and lands as
@@ -490,9 +492,14 @@ def run_curation_pipeline(
             "batch_id 'history' is reserved for the stores' cold-start "
             "generation — pick a distinct batch id"
         )
+    # an id the stores would reject must fail before any stage runs, not
+    # between the two store appends (one ledger folded, the other not)
+    check_generation_id(batch_id)
 
     from graphdb_neo4j_spark.llmdata.classifier import q_quality_gate
     from graphdb_neo4j_spark.llmdata.dedup import (
+        GRAM_STORE_META,
+        MINHASH_STORE_META,
         append_gram_store,
         clean_batch_with_gram_store,
         q_dedup_incremental,
@@ -597,10 +604,8 @@ def run_curation_pipeline(
     # when the store is absent — so repeated per-batch invocations
     # accumulate generations instead of rebuilding; the per-batch cost
     # is the probe + the appended generation below.
-    from graphdb_neo4j_spark.llmdata.dedup import _gram_store_meta
-
     gram_store = f"{out_base}/gram_store"
-    if _gram_store_meta(gram_store) is None:
+    if read_meta(gram_store, GRAM_STORE_META) is None:
         write_gram_store(hist, gram_store, generation="history")
     # novelty profile of the kept batch vs the store AS-OF history —
     # before the batch's own generation lands (which would read as
@@ -746,10 +751,8 @@ def run_curation_pipeline(
     # minhash store: same cold-start-once / append-per-batch contract as
     # the gram store below (r11 — both persisted stores now share the
     # commit-log protocol and replay ledger)
-    from graphdb_neo4j_spark.llmdata.dedup import _minhash_store_meta
-
     store = f"{out_base}/minhash_store"
-    if _minhash_store_meta(store) is None:
+    if read_meta(store, MINHASH_STORE_META) is None:
         write_minhash_store(hist, store, generation="history")
     # The two per-store appends cannot commit atomically together (each
     # store has its own commit log), so a crash between them leaves
@@ -760,11 +763,11 @@ def run_curation_pipeline(
     # store whose generations already contain batch_id (that store's
     # append committed on the previous attempt; the store-level replay
     # guard still protects non-pipeline callers).
-    def _already_folded(meta: dict | None) -> bool:
-        return meta is not None and batch_id in meta.get("generations", [])
+    def _already_folded(meta: dict) -> bool:
+        return batch_id in meta["generations"]
 
-    minhash_folded = _already_folded(_minhash_store_meta(store))
-    gram_folded = _already_folded(_gram_store_meta(gram_store))
+    minhash_folded = _already_folded(read_meta(store, MINHASH_STORE_META))
+    gram_folded = _already_folded(read_meta(gram_store, GRAM_STORE_META))
     if minhash_folded and gram_folded:
         # full replay of a completed batch: still an error (the ledger
         # contract — a double-curated batch would be silently

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.llmdata import pipeline
+from graphdb_neo4j_spark.llmdata.genstore import read_meta
 
 
 @pytest.fixture(scope="module")
@@ -78,7 +79,7 @@ def test_span_stage_state_and_text_integrity(spark, sf_correct, report):
     from graphdb_neo4j_spark.llmdata import dedup
 
     rep, out = report
-    meta = dedup._gram_store_meta(f"{out}/gram_store")
+    meta = read_meta(f"{out}/gram_store", dedup.GRAM_STORE_META)
     assert meta["width"] == dedup.SPAN_WIDTH
     assert meta["generations"] == ["history", "batch-0"]
     assert len(glob.glob(f"{out}/gram_store/generation=*")) == 2
@@ -145,8 +146,20 @@ def test_gram_store_accumulates_across_batches(spark, sf_correct, report):
     with pytest.raises(ValueError, match="already folded"):
         pipeline.run_curation_pipeline(spark, sf_correct, out)  # batch-0 again
     pipeline.run_curation_pipeline(spark, sf_correct, out, batch_id="batch-1")
-    meta = dedup._gram_store_meta(f"{out}/gram_store")
+    meta = read_meta(f"{out}/gram_store", dedup.GRAM_STORE_META)
     assert meta["generations"] == ["history", "batch-0", "batch-1"]
+
+
+@pytest.mark.parametrize("batch_id", ["2026/10", "__compact__"], ids=["slash", "reserved"])
+def test_unusable_batch_id_raises_before_any_write(spark, sf_correct, tmp_path, batch_id):
+    """A batch id either store would reject must fail before the first
+    stage: '__compact__' used to fold into the MinHash ledger and then
+    raise at the gram store, so every retry skipped one store and died
+    at the other."""
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="generation id"):
+        pipeline.run_curation_pipeline(spark, sf_correct, str(out), batch_id=batch_id)
+    assert not out.exists()
 
 
 def test_drift_gate_rejects_poisoned_batch(spark, tmp_path):
@@ -275,15 +288,15 @@ def test_crash_between_store_appends_is_resumable(spark, tmp_path, monkeypatch):
     with _pytest.raises(RuntimeError, match="injected crash"):
         pipeline.run_curation_pipeline(spark, str(tmp_path), out, keep_frac=1.0, max_drift_kl=1e9)
     # half-committed: minhash ledger advanced, gram ledger did not
-    assert "batch-0" in dedup._minhash_store_meta(f"{out}/minhash_store")["generations"]
-    gmeta = dedup._gram_store_meta(f"{out}/gram_store")
+    assert "batch-0" in read_meta(f"{out}/minhash_store", dedup.MINHASH_STORE_META)["generations"]
+    gmeta = read_meta(f"{out}/gram_store", dedup.GRAM_STORE_META)
     assert "batch-0" not in gmeta["generations"]
 
     monkeypatch.setattr(dedup, "append_gram_store", real_append)
     rep = pipeline.run_curation_pipeline(spark, str(tmp_path), out, keep_frac=1.0, max_drift_kl=1e9)
     assert rep.batch_docs == rep.kept_docs + rep.dropped_docs
-    assert "batch-0" in dedup._minhash_store_meta(f"{out}/minhash_store")["generations"]
-    assert "batch-0" in dedup._gram_store_meta(f"{out}/gram_store")["generations"]
+    assert "batch-0" in read_meta(f"{out}/minhash_store", dedup.MINHASH_STORE_META)["generations"]
+    assert "batch-0" in read_meta(f"{out}/gram_store", dedup.GRAM_STORE_META)["generations"]
 
     with _pytest.raises(ValueError, match="already folded"):
         pipeline.run_curation_pipeline(spark, str(tmp_path), out, keep_frac=1.0, max_drift_kl=1e9)

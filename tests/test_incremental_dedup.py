@@ -1,9 +1,10 @@
 """Incremental (new-batch-vs-history) dedup: exact cross-split operator and
 the persisted MinHash store probe path."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from graphdb_neo4j_spark.llmdata import dedup
+from graphdb_neo4j_spark.llmdata import dedup, genstore
 
 
 def test_incremental_pairs_are_cross_split_subset_of_full(spark, sf_correct):
@@ -204,7 +205,7 @@ def test_gram_store_replay_and_width_guards(spark, sf_correct, tmp_path):
         dedup.append_gram_store(gen2, store, generation="g2")
     with pytest.raises(ValueError, match="width"):
         dedup.clean_batch_with_gram_store(spark, store, batch, width=7)
-    meta = dedup._gram_store_meta(store)
+    meta = genstore.read_meta(store, dedup.GRAM_STORE_META)
     assert meta == {
         "width": dedup.SPAN_WIDTH,
         "hash": "xxhash64",
@@ -213,17 +214,16 @@ def test_gram_store_replay_and_width_guards(spark, sf_correct, tmp_path):
     }
 
     dedup.compact_gram_store(spark, store)
-    assert dedup._gram_store_meta(store)["active"] == ["__compact__"]
+    assert genstore.read_meta(store, dedup.GRAM_STORE_META)["active"] == ["__compact__"]
     with pytest.raises(ValueError, match="already folded"):
         dedup.append_gram_store(gen1, store, generation="g1")
     with pytest.raises(ValueError, match="reserved"):
         dedup.append_gram_store(gen1, store, generation="__compact__")
-    # appending to a store with no sidecar must raise, both flavors:
-    # a pre-meta flat layout (mixed-layout corruption + dropped ledger)
-    # and a cold path (build first)
+    # appending to a path with no sidecar must raise the cold-start
+    # error, whether it holds plain parquet or nothing at all
     flat = str(tmp_path / "flat_store")
     gen1.limit(5).selectExpr("doc_id", "text").write.parquet(flat)
-    with pytest.raises(ValueError, match="pre-meta flat layout"):
+    with pytest.raises(ValueError, match="cold-start"):
         dedup.append_gram_store(gen2, flat, generation="g9")
     with pytest.raises(ValueError, match="cold-start"):
         dedup.append_gram_store(gen2, str(tmp_path / "absent"), generation="g9")
@@ -295,7 +295,7 @@ def test_gram_store_crash_detection_and_repair(spark, sf_correct, tmp_path):
         .agg(F.sum("df").alias("df"))
         .write.parquet(f"{store}/{dedup._COMPACT_TMP}")
     )
-    open(f"{store}/{dedup._COMPACT_TMP}/{dedup._GEN_COMMITTED}", "w").close()
+    open(f"{store}/{dedup._COMPACT_TMP}/{genstore.COMMITTED}", "w").close()
     meta["pending_compact"] = True
     with open(meta_p, "w") as f:
         json.dump(meta, f)
@@ -304,7 +304,7 @@ def test_gram_store_crash_detection_and_repair(spark, sf_correct, tmp_path):
     with pytest.raises(ValueError, match="interrupted compaction"):
         dedup.compact_gram_store(spark, store)
     dedup.repair_gram_store(store)
-    meta = dedup._gram_store_meta(store)
+    meta = genstore.read_meta(store, dedup.GRAM_STORE_META)
     assert meta["active"] == ["__compact__"]
     assert meta["generations"] == ["g1", "g2"]  # replay ledger preserved
     assert "pending_compact" not in meta
@@ -318,7 +318,7 @@ def test_gram_store_crash_detection_and_repair(spark, sf_correct, tmp_path):
     with open(meta_p, "w") as f:
         json.dump(meta, f)
     dedup.repair_gram_store(store)
-    assert "pending_compact" not in dedup._gram_store_meta(store)
+    assert "pending_compact" not in genstore.read_meta(store, dedup.GRAM_STORE_META)
 
     # repair on a healthy store is a no-op
     assert dedup.repair_gram_store(store) == []
@@ -468,109 +468,116 @@ def test_minhash_store_crash_detection_and_repair(spark, sf_correct, tmp_path):
     }
     assert again == pairs
     assert dedup.repair_minhash_store(store) == []
-    meta = dedup._minhash_store_meta(store)
+    meta = genstore.read_meta(store, dedup.MINHASH_STORE_META)
     assert meta["generations"] == ["g1", "g2"]
     assert meta["active"] == ["g1", "g2"]
 
 
-def _make_legacy(meta_path: str, store: str) -> None:
-    """Rewrite a store's sidecar to the pre-r11 (pre-commit-log) shape:
-    generations ledger only, no `active`, no _COMMITTED markers."""
-    import glob
-    import json
+def _tiny_docs(spark, ids):
+    """Docs long enough for MinHash shingles and width-15 span grams."""
+    return spark.createDataFrame(
+        [(i, " ".join(f"w{i}x{j}" for j in range(40))) for i in ids],
+        "doc_id long, text string",
+    )
+
+
+def _snapshot(path):
+    """{relative path: bytes} of every file under ``path``."""
     import os
 
-    with open(meta_path) as f:
-        meta = json.load(f)
-    meta.pop("active", None)
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    for m in glob.glob(f"{store}/**/_COMMITTED", recursive=True):
-        os.remove(m)
+    out = {}
+    for root, _, files in os.walk(path):
+        for name in files:
+            with open(os.path.join(root, name), "rb") as f:
+                out[os.path.relpath(os.path.join(root, name), path)] = f.read()
+    return out
 
 
-def test_legacy_gram_store_probes_and_upgrades(spark, sf_correct, tmp_path):
-    """A pre-r11 gram store (meta sidecar with a generations ledger but no
-    `active` set and no _COMMITTED markers) must (a) probe as-is — the
-    grandfathering intent — instead of raising 'partial data write' on
-    every use, and (b) be explicitly upgradable by repair_gram_store()
-    (stamp markers + backfill `active`), after which appends work
-    (ADVICE r11)."""
-    import os
+# kind -> (write, probe, repair, table whose marker the marker test drops)
+_STORES = {
+    "minhash": (
+        dedup.write_minhash_store,
+        dedup.probe_minhash_store,
+        dedup.repair_minhash_store,
+        "buckets",
+    ),
+    "gram": (
+        dedup.write_gram_store,
+        dedup.clean_batch_with_gram_store,
+        dedup.repair_gram_store,
+        "",
+    ),
+}
 
-    docs = spark.read.parquet(f"{sf_correct}/documents.parquet")
-    hist, batch = dedup.split_history_batch(docs)
-    gen1 = hist.filter(F.col("doc_id") % 4 == 0)
-    gen2 = hist.filter(F.col("doc_id") % 4 == 2)
+
+@pytest.mark.parametrize("kind", sorted(_STORES))
+def test_store_rejects_unusable_generation_ids(spark, tmp_path, kind):
+    """'2026/10' would nest generation dirs (the on-disk id never matches
+    the ledgered one, bricking the store) and '__compact__' is the gram
+    store's compaction output: both stores reject both ids, in either
+    mode, before writing anything."""
+    write = _STORES[kind][0]
     store = str(tmp_path / "store")
-    dedup.write_gram_store(gen1, store, generation="g1")
-    expect = {
-        (r.doc_id, r.clean_text)
-        for r in dedup.clean_batch_with_gram_store(spark, store, batch).collect()
-    }
-
-    _make_legacy(os.path.join(store, dedup.GRAM_STORE_META), store)
-
-    # (a) grandfathered probe: no raise, identical answer
-    got = {
-        (r.doc_id, r.clean_text)
-        for r in dedup.clean_batch_with_gram_store(spark, store, batch).collect()
-    }
-    assert got == expect
-
-    # (b) explicit upgrade: markers stamped, `active` backfilled, idempotent
-    actions = dedup.repair_gram_store(store)
-    assert any("upgraded legacy meta" in a for a in actions)
-    assert os.path.exists(f"{store}/generation=g1/{dedup._GEN_COMMITTED}")
-    meta = dedup._gram_store_meta(store)
-    assert meta["active"] == ["g1"]
-    assert dedup.repair_gram_store(store) == []
-
-    # post-upgrade the store is a full commit-log citizen: append works
-    # and the strict marker validation path now runs
-    dedup.append_gram_store(gen2, store, generation="g2")
-    meta = dedup._gram_store_meta(store)
-    assert meta["active"] == ["g1", "g2"]
-    dedup.clean_batch_with_gram_store(spark, store, batch).count()
+    write(_tiny_docs(spark, [0, 2]), store, generation="g1")
+    before = _snapshot(store)
+    for mode in ("append", "overwrite"):
+        for gen in ("2026/10", "__compact__"):
+            with pytest.raises(ValueError, match="generation id"):
+                write(_tiny_docs(spark, [4]), store, mode=mode, generation=gen)
+    assert _snapshot(store) == before
 
 
-def test_legacy_minhash_store_probes_and_upgrades(spark, sf_correct, tmp_path):
-    """Same grandfathering + upgrade contract for the MinHash store."""
+@pytest.mark.parametrize("kind", sorted(_STORES))
+def test_store_rejects_unknown_mode(spark, tmp_path, kind):
+    """An unknown mode used to skip every append guard and overwrite a
+    committed generation's data under a duplicated ledger entry."""
+    write = _STORES[kind][0]
+    store = str(tmp_path / "store")
+    write(_tiny_docs(spark, [0, 2]), store, generation="g1")
+    before = _snapshot(store)
+    with pytest.raises(ValueError, match="mode"):
+        write(_tiny_docs(spark, [4]), store, mode="Append", generation="g1")
+    assert _snapshot(store) == before
+
+
+@pytest.mark.parametrize("kind", sorted(_STORES))
+def test_active_generation_without_marker_names_rebuild(spark, tmp_path, kind):
+    """An active generation without its _COMMITTED marker is a partial
+    write the ledger already counts: probe and append raise, repair has
+    nothing it can do (and a re-append of the ledgered id is refused), so
+    the error names the mode='overwrite' rebuild."""
     import os
 
-    docs = spark.read.parquet(f"{sf_correct}/documents.parquet")
-    hist, batch = dedup.split_history_batch(docs)
-    gen1 = hist.filter(F.col("doc_id") % 4 == 0)
-    gen2 = hist.filter(F.col("doc_id") % 4 == 2)
+    write, probe, repair, table = _STORES[kind]
     store = str(tmp_path / "store")
-    dedup.write_minhash_store(gen1, store, generation="g1")
-    expect = {
-        (r.hist_id, r.new_id)
-        for r in dedup.probe_minhash_store(spark, store, batch).collect()
-    }
+    docs = _tiny_docs(spark, [0, 2])
+    write(docs, store, generation="g1")
+    os.remove(os.path.join(store, table, "generation=g1", genstore.COMMITTED))
+    rebuild = "_COMMITTED marker.*mode='overwrite'"
+    with pytest.raises(ValueError, match=rebuild):
+        probe(spark, store, docs)
+    with pytest.raises(ValueError, match=rebuild):
+        write(_tiny_docs(spark, [4]), store, mode="append", generation="g2")
+    assert repair(store) == []
 
-    _make_legacy(os.path.join(store, dedup.MINHASH_STORE_META), store)
 
-    got = {
-        (r.hist_id, r.new_id)
-        for r in dedup.probe_minhash_store(spark, store, batch).collect()
-    }
-    assert got == expect
-
-    actions = dedup.repair_minhash_store(store)
-    assert any("upgraded legacy meta" in a for a in actions)
-    for table in ("sigs", "buckets"):
-        assert os.path.exists(
-            f"{store}/{table}/generation=g1/{dedup._GEN_COMMITTED}"
-        )
-    meta = dedup._minhash_store_meta(store)
-    assert meta["active"] == ["g1"]
-    assert dedup.repair_minhash_store(store) == []
-
-    dedup.write_minhash_store(gen2, store, mode="append", generation="g2")
-    meta = dedup._minhash_store_meta(store)
-    assert meta["active"] == ["g1", "g2"]
-    dedup.probe_minhash_store(spark, store, batch).count()
+def test_path_without_sidecar_is_not_a_store(spark, tmp_path):
+    """With no meta sidecar there is no store to read: every probe and
+    repair raises the cold-start error instead of probing the parquet
+    that happens to be there."""
+    flat = str(tmp_path / "flat")
+    docs = _tiny_docs(spark, [1])
+    docs.write.parquet(flat)
+    for probe in (
+        dedup.probe_minhash_store,
+        dedup.clean_batch_with_gram_store,
+        dedup.gram_novelty_with_store,
+    ):
+        with pytest.raises(ValueError, match="cold-start"):
+            probe(spark, flat, docs)
+    for repair in (dedup.repair_minhash_store, dedup.repair_gram_store):
+        with pytest.raises(ValueError, match="cold-start"):
+            repair(flat)
 
 
 def test_split_leakage_is_cross_split_restriction(spark, sf_correct):
@@ -636,46 +643,6 @@ def test_holdout_split_repaired_is_leakage_fixpoint(spark, sf_correct):
         else:
             assert split == base[doc_id]  # untouched docs keep the LCG split
         assert not (base[doc_id] == "eval" and split == "train")  # eval only grows
-
-
-def test_legacy_minhash_store_diverged_tables_repairs(spark, sf_correct, tmp_path):
-    """ADVICE r12: a LEGACY minhash store whose sigs/ and buckets/
-    generation-dir sets diverged (pre-commit-log append crashed between
-    the two table writes: sigs for g2 landed, buckets did not) used to
-    upgrade into an unrecoverable loop — `active` was backfilled from
-    sigs alone, so validation failed forever on buckets while a repair
-    rerun returned no actions. The upgrade must instead treat the
-    one-table generation as a half-written append: sweep it, backfill
-    `active` from the intersection, drop it from the replay ledger, and
-    leave a store that validates and accepts the re-append."""
-    import os
-    import shutil
-
-    docs = spark.read.parquet(f"{sf_correct}/documents.parquet")
-    hist, batch = dedup.split_history_batch(docs)
-    gen1 = hist.filter(F.col("doc_id") % 4 == 0)
-    gen2 = hist.filter(F.col("doc_id") % 4 == 2)
-    store = str(tmp_path / "store")
-    dedup.write_minhash_store(gen1, store, generation="g1")
-    dedup.write_minhash_store(gen2, store, mode="append", generation="g2")
-    _make_legacy(os.path.join(store, dedup.MINHASH_STORE_META), store)
-    # the diverged crash: buckets/ never got g2
-    shutil.rmtree(f"{store}/buckets/generation=g2")
-
-    actions = dedup.repair_minhash_store(store)
-    assert any("half-written" in a for a in actions)
-    assert any("upgraded legacy meta" in a for a in actions)
-    meta = dedup._minhash_store_meta(store)
-    assert meta["active"] == ["g1"]
-    assert meta["generations"] == ["g1"]  # retry of g2 is accepted
-    # idempotent — no repair loop
-    assert dedup.repair_minhash_store(store) == []
-    # the upgraded store validates on the probe path
-    dedup.probe_minhash_store(spark, store, batch).count()
-    # and the re-append of the swept generation is accepted
-    dedup.write_minhash_store(gen2, store, mode="append", generation="g2")
-    assert dedup._minhash_store_meta(store)["active"] == ["g1", "g2"]
-    dedup.probe_minhash_store(spark, store, batch).count()
 
 
 def test_holdout_repair_absorption_guard_and_stats(spark, tmp_path):
