@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.nl.names import NameDictionary
 from graphdb_neo4j_spark.operators import ingest
 from graphdb_neo4j_spark.operators.fuzzy import fuzzy_search
 from graphdb_neo4j_spark.operators.recommend import recommend
@@ -95,6 +96,7 @@ class GraphService:
     spark: SparkSession
     sf_dir: str
     _overlay: list[tuple] = field(default_factory=list, repr=False)
+    _names: NameDictionary | None = field(default=None, repr=False)
 
     # -- reads ---------------------------------------------------------------
 
@@ -256,13 +258,19 @@ class GraphService:
     # -- NL ------------------------------------------------------------------
 
     def chat(self, question: str, llm=None) -> str:
-        """Entry point A — NL question → answer text (SURVEY.md §3.1)."""
+        """Entry point A — NL question → answer text (SURVEY.md §3.1).
+
+        The name dictionary (base customers, without the overlay) is
+        collected on the first chat and reused by every later one. Each chat
+        runs on a new ``NLEngine``, which registers the nodes/edges SQL views
+        only when the question reaches the LLM-SQL path (``run_sql``): the
+        template path answers through native operators and never reads them.
+        Temp views are session-wide and another service may have pointed
+        them at its own graph dir, so every such question registers them.
+        """
         from graphdb_neo4j_spark.nl.pipeline import NLEngine
 
-        eng = NLEngine(self.spark, self.sf_dir, llm=llm)
-        # the codegen path targets the nodes/edges SQL views; without this
-        # any SELECT the LLM produces fails analysis (latent until the
-        # REPL test drove chat() through the query path)
-        eng.register_views()
+        eng = NLEngine(self.spark, self.sf_dir, llm=llm, _names=self._names)
+        self._names = eng.names
         ans = eng.answer(question, explain=True)
         return ans.reply or ""

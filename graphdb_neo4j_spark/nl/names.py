@@ -8,10 +8,13 @@ remaining token against ALL student names with fuzz.ratio ≥ threshold.
 The reference refetches every name from the store for EVERY token
 (llm_cypher.py:15-22 called from :26 — an N+1 full scan we must not
 copy). Here the dictionary is collected ONCE from the nodes DataFrame and
-cached driver-side; correction is then pure Python. A name dictionary is
-a driver-side asset by nature (it seeds prompt/string rewriting, not a
-data-plane join) — collecting it is the correct boundary, and it is one
-column, deduplicated.
+kept driver-side for the life of the service: ``GraphService`` builds one
+:class:`NameDictionary` and reuses it for every ``chat()`` (an ``NLEngine``
+keeps its own). Correction is then pure Python over precomputed lowercased
+names: exact hits are a dict lookup and a length bound skips names that
+cannot win. A name dictionary is a driver-side asset by nature (it seeds
+prompt/string rewriting, not a data-plane join) — collecting it is the
+correct boundary, and it is one column, deduplicated.
 """
 
 from __future__ import annotations
@@ -40,45 +43,32 @@ def fuzzy_best_name(
 ) -> str | None:
     """Best Indel-ratio match for one token, or None below threshold
     (reference: fuzzy_match_student_name, llm_cypher.py:25-38;
-    process.extractOne = argmax over the dictionary)."""
-    if not names:
-        return None
-    tok = token.lower()
-    best, best_score = None, -1.0
-    for name in names:
-        score = indel_ratio(tok, name.lower())
-        if score > best_score:
-            best, best_score = name, score
-    return best if best_score >= threshold else None
+    process.extractOne = argmax over the dictionary, first wins on ties)."""
+    return NameDictionary(names).best(token, threshold)
 
 
 def correct_names(
     question: str, names: list[str], threshold: float = 75.0
 ) -> str:
     """Per-token fuzzy name correction (reference
-    preprocess_question_with_fuzzy_matching, llm_cypher.py:41-57).
-
-    Tokens shorter than 3 chars or in the stopword list pass through.
-    A corrected token replaces the WHOLE original token (the reference's
-    ``word.replace(clean_word, matched)`` silently no-ops when punctuation
-    splits the cleaned token — e.g. names containing ``#``)."""
-    out: list[str] = []
-    for word in question.split():
-        clean = _CLEAN_RE.sub("", word)
-        if len(clean) >= 3 and clean.lower() not in STOPWORDS:
-            matched = fuzzy_best_name(clean, names, threshold)
-            if matched is not None and matched.lower() != clean.lower():
-                out.append(matched)
-                continue
-        out.append(word)
-    return " ".join(out)
+    preprocess_question_with_fuzzy_matching, llm_cypher.py:41-57); see
+    :meth:`NameDictionary.correct`."""
+    return NameDictionary(names).correct(question, threshold)
 
 
 @dataclass
 class NameDictionary:
-    """Cached node-name dictionary + the tokens they'd be matched by."""
+    """Node-name dictionary with the lowercased names and a lowercase →
+    first-name index precomputed once; correction and template matching
+    then never lowercase the dictionary again."""
 
     names: list[str] = field(default_factory=list)
+
+    def __post_init__(self) -> None:
+        self._lower = [n.lower() for n in self.names]
+        self._first: dict[str, str] = {}
+        for name, low in zip(self.names, self._lower):
+            self._first.setdefault(low, name)
 
     @classmethod
     def from_nodes(cls, nodes: DataFrame) -> "NameDictionary":
@@ -87,12 +77,62 @@ class NameDictionary:
         rows = nodes.select("name").where("name IS NOT NULL").distinct().collect()
         return cls(names=[r["name"] for r in rows])
 
+    def best(self, token: str, threshold: float = 75.0) -> str | None:
+        """:func:`fuzzy_best_name` over this dictionary.
+
+        Score 100 means the lowercased strings are identical, so an exact
+        hit returns its first name at once. Otherwise a name is scored only
+        if its length bound ``100·2·min(m, L)/(m + L)`` (the ratio with
+        LCS = the shorter length, in ``indel_ratio``'s own float expression,
+        so no score exceeds it) reaches the threshold and beats the current
+        best; a skipped name can be neither the winner nor a tie that wins.
+        """
+        tok = token.lower()
+        hit = self._first.get(tok)
+        if hit is not None:
+            return hit if threshold <= 100.0 else None
+        m = len(tok)
+        best, best_score = None, -1.0
+        for name, low in zip(self.names, self._lower):
+            n = len(low)
+            bound = 100.0 * (2.0 * min(m, n)) / (m + n)
+            if bound < threshold or bound <= best_score:
+                continue
+            score = indel_ratio(tok, low)
+            if score > best_score:
+                best, best_score = name, score
+        return best if best_score >= threshold else None
+
     def correct(self, question: str, threshold: float = 75.0) -> str:
-        return correct_names(question, self.names, threshold)
+        """Tokens shorter than 3 chars or in the stopword list pass through.
+        A corrected token replaces the WHOLE original token (the reference's
+        ``word.replace(clean_word, matched)`` silently no-ops when
+        punctuation splits the cleaned token — e.g. names containing ``#``)."""
+        out: list[str] = []
+        for word in question.split():
+            clean = _CLEAN_RE.sub("", word)
+            if len(clean) >= 3 and clean.lower() not in STOPWORDS:
+                matched = self.best(clean, threshold)
+                if matched is not None and matched.lower() != clean.lower():
+                    out.append(matched)
+                    continue
+            out.append(word)
+        return " ".join(out)
 
     def find_in(self, question: str) -> list[str]:
-        """Names present verbatim in the (corrected) question, in order of
-        appearance — feeds the template dispatch."""
+        """Names present as whole words in the (corrected) question, in order
+        of appearance — feeds the template dispatch. A name matches only
+        where no word character or ``#`` touches it on either side; of two
+        overlapping matches the longer one is kept."""
         q = question.lower()
-        found = [(q.index(n.lower()), n) for n in self.names if n.lower() in q]
-        return [n for _, n in sorted(found)]
+        spans = []
+        for name, low in zip(self.names, self._lower):
+            if low and low in q:
+                m = re.search(rf"(?<![\w#]){re.escape(low)}(?![\w#])", q)
+                if m:
+                    spans.append((m.start(), m.end(), name))
+        kept: list[tuple[int, int, str]] = []
+        for s, e, name in sorted(spans, key=lambda t: (t[0] - t[1], t[0])):
+            if all(e <= ks or s >= ke for ks, ke, _ in kept):
+                kept.append((s, e, name))
+        return [name for _, _, name in sorted(kept)]

@@ -232,12 +232,15 @@ class NLEngine:
     llm: LLMClient | None = None
     max_repair_attempts: int = 2
     _names: NameDictionary | None = field(default=None, repr=False)
+    _views_registered: bool = field(default=False, repr=False)
 
     # -- setup ---------------------------------------------------------------
 
     def register_views(self) -> None:
         """Create the lazy temp views the SQL surface queries (nodes with
-        interests, canonical edges, undirected edge view §7.4-H5)."""
+        interests, canonical edges, undirected edge view §7.4-H5).
+        :meth:`run_sql` calls it on the first question that reaches it, so
+        the template path never pays for the views."""
         from graphdb_neo4j_spark.graph import PropertyGraph
         from graphdb_neo4j_spark.operators.edges import derive_all_edges
         from graphdb_neo4j_spark.sources.tpch import full_nodes
@@ -249,6 +252,7 @@ class NLEngine:
         PropertyGraph(nodes=nodes, edges=edges).edges_undirected().createOrReplaceTempView(
             "edges_undirected"
         )
+        self._views_registered = True
 
     @property
     def names(self) -> NameDictionary:
@@ -296,6 +300,8 @@ class NLEngine:
         """N4 validate/repair loop: ``spark.sql`` parses AND analyzes
         eagerly, so Catalyst is the syntax+semantic validator; on failure
         the error is round-tripped to the LLM."""
+        if not self._views_registered:
+            self.register_views()
         attempts = 0
         while True:
             attempts += 1

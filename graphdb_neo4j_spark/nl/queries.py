@@ -88,7 +88,6 @@ def q_nl_codegen_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     prompt build → (canned) LLM → fence strip → sanitize → Catalyst
     validate → execute against the registered views."""
     eng = NLEngine(spark, sf_dir, llm=_canned_llm)
-    eng.register_views()
     ans = eng.answer("how many students are there in total", explain=False)
     assert ans.kind == "query" and ans.df is not None
     return ans.df

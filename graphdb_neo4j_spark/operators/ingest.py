@@ -46,6 +46,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     NODES_CTE,
     customer_interest_pairs_raw,
     customer_nodes,
+    load_table,
 )
 from graphdb_neo4j_spark.session import materialize
 
@@ -324,7 +325,7 @@ def q_normalized_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 — bulk lowercase/trim over RAW store values (the testdata's
     unprojected customer strings stand in for a store whose invariant
     drifted, the exact situation sync_lowercase_students repairs)."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = load_table(spark, sf_dir, "customer")
     raw = customer.select(
         F.col("c_custkey").cast("long").alias("id"),
         F.col("c_name").alias("name"),

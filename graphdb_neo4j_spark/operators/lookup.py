@@ -24,6 +24,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     NODES_CTE,
     customer_nodes,
     full_nodes,
+    load_table,
 )
 
 
@@ -170,7 +171,7 @@ SELECT COUNT(*) AS n FROM nodes
 def q_top_acctbal(spark: SparkSession, sf_dir: str, k: int = 25) -> DataFrame:
     """O1+O2 — deterministic top-k (score DESC, id tiebreak); Catalyst plans
     TakeOrderedAndProject, not a full sort."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = load_table(spark, sf_dir, "customer")
     return (
         customer.select(
             F.col("c_custkey").cast("long").alias("id"),

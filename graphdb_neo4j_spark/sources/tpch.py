@@ -24,8 +24,12 @@ join orders⋈lineitem, which co-partitions on o_orderkey/l_orderkey.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from graphdb_neo4j_spark.graph import PropertyGraph, empty_edges
 
@@ -43,10 +47,59 @@ TABLES = (
 )
 
 
+# path -> (file stamp and inference confs, parquet schema) of the last read;
+# see load_table
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# session confs that change the schema Spark infers from a parquet footer
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(mtime_ns, size, inode) of ``path`` and, for a directory layout, of
+    every entry in it; None when the driver cannot ``stat`` the path (a
+    remote scheme, or a missing table)."""
+    try:
+        st = os.stat(path)
+        stamp = [("", st.st_mtime_ns, st.st_size, st.st_ino)]
+        if stat.S_ISDIR(st.st_mode):
+            for e in os.scandir(path):
+                es = e.stat()
+                stamp.append((e.name, es.st_mtime_ns, es.st_size, es.st_ino))
+    except OSError:
+        return None
+    return tuple(sorted(stamp))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh relation over ``<sf_dir>/<name>.parquet``.
+
+    Parquet schema inference costs one Spark job per read (it opens a
+    footer), so each table's schema is resolved once and later reads pass it
+    to the reader. The memo holds the ``StructType`` only, keyed by the path,
+    a file stamp (``os.stat`` mtime_ns, size and inode) and the session
+    confs that steer inference: a table rewritten at the same path is
+    inferred again. Paths the driver cannot ``stat`` are inferred on every
+    read. Every call returns a new relation, with a current file listing and
+    its own attribute ids.
+    """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _file_stamp(path)
+    if stamp is not None:
+        stamp += tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    memo = _SCHEMAS.get(path)
+    known = stamp is not None and memo is not None and memo[0] == stamp
+    df = (spark.read.schema(memo[1]) if known else spark.read).parquet(path)
+    if stamp is not None and not known:
+        _SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 def customer_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:

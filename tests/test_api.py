@@ -3,6 +3,9 @@
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.api import GraphService, StudentCreate
+from graphdb_neo4j_spark.nl.names import NameDictionary
+from graphdb_neo4j_spark.sources.tpch import NODES_CTE
+from tests.oracle_utils import run_oracle
 
 
 def _svc(spark, sf_dir):
@@ -94,3 +97,53 @@ def test_chat_template_paths(spark, sf_dir):
     reply = svc.chat("who is Customer#000000042?")
     assert "customer#000000042" in reply
     assert svc.chat("hi")  # chat path without an LLM returns the canned line
+
+
+def test_chat_collects_the_name_dictionary_once(spark, sf_dir, monkeypatch):
+    collected = []
+    from_nodes = NameDictionary.from_nodes
+
+    def counting(nodes):
+        collected.append(1)
+        return from_nodes(nodes)
+
+    monkeypatch.setattr(NameDictionary, "from_nodes", staticmethod(counting))
+    svc = _svc(spark, sf_dir)
+    assert "customer#000000042" in svc.chat("who is Customer#000000042?")
+    assert "customer#000000043" in svc.chat("who is custmer#000000043?")
+    assert len(collected) == 1
+
+
+def _drop_sql_views(spark):
+    for view in ("nodes", "edges", "edges_undirected"):
+        spark.catalog.dropTempView(view)
+
+
+def _llm_count_case(sf_dir):
+    """A stub LLM that answers with a college count, and the DuckDB count."""
+    college, n = run_oracle(
+        f"WITH {NODES_CTE} SELECT college, count(*) FROM nodes"
+        " GROUP BY college ORDER BY 2 DESC, 1 LIMIT 1",
+        sf_dir,
+    ).fetchone()
+    sql = f"SELECT count(*) FROM nodes WHERE college = '{college}'"
+
+    def llm(prompt):
+        return sql if "Spark SQL developer" in prompt else "ok"
+
+    return llm, f"There are {n} students matching your query in the database."
+
+
+def test_llm_chat_after_template_chat_registers_views(spark, sf_dir):
+    _drop_sql_views(spark)
+    svc = _svc(spark, sf_dir)
+    assert "customer#000000042" in svc.chat("who is Customer#000000042?")
+    assert not spark.catalog.tableExists("nodes")  # the template path needs no views
+    llm, want = _llm_count_case(sf_dir)
+    assert svc.chat("how many students are in the biggest college?", llm=llm) == want
+
+
+def test_fresh_service_answers_llm_chat(spark, sf_dir):
+    _drop_sql_views(spark)
+    llm, want = _llm_count_case(sf_dir)
+    assert _svc(spark, sf_dir).chat("how many students are in the biggest college?", llm=llm) == want

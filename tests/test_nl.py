@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from graphdb_neo4j_spark.nl import (
+    NameDictionary,
     NLEngine,
     correct_names,
     explain_result,
@@ -112,6 +113,13 @@ def test_correct_names_preserves_stopwords():
     q = correct_names("who is the custmer#000000042", names)
     assert q.startswith("who is the ")
     assert "customer#000000042" in q
+
+
+def test_find_in_matches_whole_names_only():
+    names = NameDictionary(names=["bob", "bobby", "ann"])
+    assert names.find_in("who is bobby?") == ["bobby"]
+    assert names.find_in("tell me about anna") == []
+    assert names.find_in("bob and bobby") == ["bob", "bobby"]
 
 
 # --- N3/N5: fence stripping + sanitize rewrites -----------------------------

@@ -1,11 +1,12 @@
 """Property-based tests (hypothesis) for the pure kernels: the Indel-ratio
-scorer and connected-components labeling."""
+scorer, the fuzzy name argmax and connected-components labeling."""
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.functions.fuzz import indel_ratio
+from graphdb_neo4j_spark.nl.names import fuzzy_best_name
 
 TEXT = st.text(alphabet="abcde #", max_size=12)
 
@@ -628,3 +629,39 @@ def test_cross_split_jaccard_matches_set_algebra(spark, a_pred, b_pred, texts):
         ).collect()
     }
     assert got == _cross_pairs_ref(texts, a_pred, b_pred, width, threshold, max_df)
+
+
+# --- fuzzy_best_name: the bounded scan equals the brute-force argmax ---------
+
+# 'İ'.lower() is two characters long, so lowercasing changes the length
+NAME_TEXT = st.text(alphabet="abAB#İ", max_size=6)
+
+
+def _best_name_ref(token, names, threshold):
+    """The unbounded scan: score every name, first wins on ties."""
+    if not names:
+        return None
+    tok = token.lower()
+    best, best_score = None, -1.0
+    for name in names:
+        score = indel_ratio(tok, name.lower())
+        if score > best_score:
+            best, best_score = name, score
+    return best if best_score >= threshold else None
+
+
+@example(token="", names=["ab", "b"], threshold=0.0)  # empty token
+@example(token="ab", names=["ba", "ab#", "ab #"], threshold=0.0)  # ties
+@example(token="ab", names=["Ab", "aB"], threshold=100.0)  # exact-hit tie
+@example(token="aaaa", names=["b", "bb"], threshold=75.0)  # all below
+@example(token="İİa", names=["İİ"], threshold=75.0)  # lower() grows 2 → 4
+@given(
+    token=NAME_TEXT,
+    names=st.lists(NAME_TEXT, max_size=8),
+    threshold=st.sampled_from([0.0, 75.0, 100.0]),
+)
+@settings(max_examples=400, deadline=None)
+def test_fuzzy_best_name_equals_bruteforce_argmax(token, names, threshold):
+    assert fuzzy_best_name(token, names, threshold) == _best_name_ref(
+        token, names, threshold
+    )
