@@ -27,8 +27,9 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (people recommendation, SURVEY.md §3.3) at sf0.001."""
     from graphdb_neo4j_spark.operators.recommend import recommend
+    from graphdb_neo4j_spark.sources.tpch import node_snapshot
 
-    return recommend(spark, SF_SMOKE, anchor_id=1, limit=100)
+    return recommend(node_snapshot(spark, SF_SMOKE), anchor_id=1, limit=100)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

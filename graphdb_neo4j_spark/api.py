@@ -3,30 +3,45 @@
 Mirrors the reference's FastAPI service surface
 (/root/reference/fastapi/services/student_service.py and
 /root/reference/fastapi/routes/student_routes.py): every public method
-returns plain dataclasses, and ``collect()`` happens ONLY here — the data
+returns plain dataclasses, and results are collected only here — the data
 plane below stays distributed DataFrames end-to-end (SURVEY.md §2.9 U3:
-"df.collect() → dataclass at API boundary only").
+"df.collect() → dataclass at API boundary only"). The one exception is
+``recommend``'s point read of its anchor, which it binds as literals.
 
-The write path keeps an in-session overlay instead of mutating the
-read-only testdata: ``save_student`` allocates the id and unions the new
-rows into every subsequent read, which is the reference's post-write
-visibility contract without a transactional store. Production deployments
-point ``flush_overlay`` at a writable parquet/Delta location.
+Every read goes through one view of the node table, snapshot ∪ overlay:
+
+- The snapshot is :func:`~graphdb_neo4j_spark.sources.tpch.node_snapshot`:
+  the nodes with their interests arrays, persisted once per source version
+  under ``<spark.sql.warehouse.dir>/node_snapshot/``. Its version key is the
+  source path plus the file stamps of customer, nation, region, orders and
+  lineitem, so the first read after any of them is rewritten builds a new
+  generation (and sweeps the old one); every other read is one pruned scan.
+  Constructing a service builds and probes nothing.
+- The overlay holds the students written by ``save_student`` in this
+  service (the testdata is read-only). Its DataFrame is rebuilt when a
+  write lands, and the new name joins the service's name dictionary, so an
+  onboarded student reaches point reads, recommend (as anchor and as
+  candidate), search, relationship and the template chat.
+
+The LLM-SQL ``nodes`` view (``NLEngine.register_views``) reads the base
+snapshot without the overlay.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.graph import NODE_COLUMNS
 from graphdb_neo4j_spark.nl.names import NameDictionary
-from graphdb_neo4j_spark.operators import ingest
+from graphdb_neo4j_spark.operators import ingest, lookup
 from graphdb_neo4j_spark.operators.fuzzy import fuzzy_search
 from graphdb_neo4j_spark.operators.recommend import recommend
 from graphdb_neo4j_spark.operators.relationship import two_name_relationship
-from graphdb_neo4j_spark.sources.tpch import customer_nodes, full_nodes
+from graphdb_neo4j_spark.sources.tpch import NODE_SCHEMA, customer_nodes, node_snapshot
 
 # --- boundary types (the reference's Pydantic models, student_service.py
 # :124-132,165-190 — plain dataclasses here; Pydantic is an app concern) ----
@@ -88,6 +103,12 @@ class StudentCreate:
 
 # --- the service ------------------------------------------------------------
 
+_ARROW_NODES = pa.schema(
+    [("id", pa.int64())]
+    + [(c, pa.string()) for c in NODE_COLUMNS[1:-1]]
+    + [("interests", pa.list_(pa.string()))]
+)
+
 
 @dataclass
 class GraphService:
@@ -96,20 +117,15 @@ class GraphService:
     spark: SparkSession
     sf_dir: str
     _overlay: list[tuple] = field(default_factory=list, repr=False)
+    _overlay_df: DataFrame | None = field(default=None, repr=False)
     _names: NameDictionary | None = field(default=None, repr=False)
 
     # -- reads ---------------------------------------------------------------
 
-    def _nodes(self) -> DataFrame:
-        base = customer_nodes(self.spark, self.sf_dir)
-        if not self._overlay:
-            return base
-        extra = self.spark.createDataFrame(
-            [(i, n, a, c, b, s) for (i, n, a, c, b, s, _) in self._overlay],
-            "id long, name string, address string, college string,"
-            " board string, stream string",
-        )
-        return base.unionByName(extra)
+    def _view(self) -> DataFrame:
+        """The node table every read goes through: snapshot ∪ overlay."""
+        base = node_snapshot(self.spark, self.sf_dir)
+        return base if self._overlay_df is None else base.unionByName(self._overlay_df)
 
     def ping(self) -> bool:
         """S8 health check (student_service.py:192-199)."""
@@ -117,15 +133,7 @@ class GraphService:
 
     def get_student_by_id(self, node_id: int) -> StudentDetail | None:
         """P2 — 7-property detail row (student_service.py:110-132)."""
-        for i, n, a, c, b, s, toks in self._overlay:
-            if i == node_id:
-                return StudentDetail(i, n, a, c, b, s, tuple(sorted(toks)))
-        rows = (
-            full_nodes(self.spark, self.sf_dir)
-            .filter(F.col("id") == node_id)
-            .limit(1)
-            .collect()
-        )
+        rows = lookup.point_lookup(self._view(), node_id).collect()
         if not rows:
             return None
         r = rows[0]
@@ -141,25 +149,18 @@ class GraphService:
 
     def student_exists(self, node_id: int) -> bool:
         """P3 existence probe (student_service.py:139-144)."""
-        if any(i == node_id for i, *_ in self._overlay):
-            return True
-        return not (
-            customer_nodes(self.spark, self.sf_dir)
-            .filter(F.col("id") == node_id)
-            .limit(1)
-            .isEmpty()
-        )
+        return lookup.exists(self._view(), node_id).first()["found"]
 
     def get_all_student_names(self) -> list[str]:
         """P1 projection scan (llm_cypher.py:15-22)."""
         return [
             r["name"]
-            for r in self._nodes().select("name").where("name IS NOT NULL").collect()
+            for r in self._view().select("name").where("name IS NOT NULL").collect()
         ]
 
     def recommend_people(self, node_id: int, limit: int = 10) -> list[Recommendation]:
         """J3+A4+O1 — scored peers (student_service.py:146-190)."""
-        rows = recommend(self.spark, self.sf_dir, anchor_id=node_id, limit=limit).collect()
+        rows = recommend(self._view(), anchor_id=node_id, limit=limit).collect()
         return [
             Recommendation(
                 id=r["id"],
@@ -179,13 +180,13 @@ class GraphService:
     ) -> list[FuzzyMatch]:
         """U1+O3 — distributed fuzzy search (student_service.py:236-266)."""
         rows = fuzzy_search(
-            self.spark, self.sf_dir, query=query, threshold=threshold, k=limit
+            self._view(), query=query, threshold=threshold, k=limit
         ).collect()
         return [FuzzyMatch(id=r["id"], name=r["name"], score=r["score"]) for r in rows]
 
     def relationship(self, name_a: str, name_b: str) -> RelationshipSummary | None:
         """J4+J5+F7 — the two-name template (llm_cypher.py:86-96)."""
-        rows = two_name_relationship(self.spark, self.sf_dir, name_a, name_b).collect()
+        rows = two_name_relationship(self._view(), name_a, name_b).collect()
         if not rows:
             return None
         r = rows[0]
@@ -206,21 +207,30 @@ class GraphService:
         """S4 — allocate id = MAX(id)+1 and make the node visible to every
         subsequent read (student_service.py:21-60). Normalization matches
         the route contract (student_routes.py:28-32)."""
-        base = self._nodes().groupBy().agg(
+        base = self._view().groupBy().agg(
             F.coalesce(F.max("id"), F.lit(0)).alias("m")
         ).collect()[0]["m"]
         new_id = int(base) + 1
+        name = student.name.strip().lower()
         self._overlay.append(
             (
                 new_id,
-                student.name.strip().lower(),
+                name,
                 student.address.strip().lower(),
                 student.college.strip().lower(),
                 student.board.strip().lower(),
                 student.stream.strip().lower(),
-                tuple(t.strip().lower() for t in student.interests),
+                [t.strip().lower() for t in student.interests],
             )
         )
+        # an Arrow table becomes a LocalRelation: reads of the view then
+        # start no Python worker and split into no extra partitions
+        records = [dict(zip(NODE_COLUMNS, row)) for row in self._overlay]
+        self._overlay_df = self.spark.createDataFrame(
+            pa.Table.from_pylist(records, schema=_ARROW_NODES), NODE_SCHEMA
+        )
+        if self._names is not None:
+            self._names.add(name)
         return new_id
 
     def new_edges_for_overlay(self) -> DataFrame:
@@ -228,11 +238,9 @@ class GraphService:
         student_service.py:62-106), via the broadcast incremental plan."""
         from graphdb_neo4j_spark.sources.tpch import customer_interest_pairs
 
-        batch = self.spark.createDataFrame(
-            [(i, n, a, c, b, s, list(t)) for (i, n, a, c, b, s, t) in self._overlay],
-            "id long, name string, address string, college string,"
-            " board string, stream string, interests array<string>",
-        )
+        batch = self._overlay_df
+        if batch is None:
+            batch = self.spark.createDataFrame([], NODE_SCHEMA)
         return ingest.derive_edges_for_batch(
             customer_nodes(self.spark, self.sf_dir),
             customer_interest_pairs(self.spark, self.sf_dir),
@@ -253,24 +261,28 @@ class GraphService:
         """S6 bulk normalize — returns rows processed (student_service.py
         :201-220). The projection is already normalized at read; count is
         the contract."""
-        return self._nodes().count()
+        return self._view().count()
 
     # -- NL ------------------------------------------------------------------
 
     def chat(self, question: str, llm=None) -> str:
         """Entry point A — NL question → answer text (SURVEY.md §3.1).
 
-        The name dictionary (base customers, without the overlay) is
-        collected on the first chat and reused by every later one. Each chat
-        runs on a new ``NLEngine``, which registers the nodes/edges SQL views
-        only when the question reaches the LLM-SQL path (``run_sql``): the
-        template path answers through native operators and never reads them.
-        Temp views are session-wide and another service may have pointed
-        them at its own graph dir, so every such question registers them.
+        The name dictionary is collected from the service's view on the
+        first chat, reused by every later one, and extended by
+        ``save_student``. Each chat runs on a new ``NLEngine`` over the
+        view, so the template path (one name, two names) reaches onboarded
+        students. The engine registers the nodes/edges SQL views only when
+        the question reaches the LLM-SQL path (``run_sql``), over the base
+        snapshot without the overlay. Temp views are session-wide and
+        another service may have pointed them at its own graph dir, so
+        every such question registers them.
         """
         from graphdb_neo4j_spark.nl.pipeline import NLEngine
 
-        eng = NLEngine(self.spark, self.sf_dir, llm=llm, _names=self._names)
+        eng = NLEngine(
+            self.spark, self.sf_dir, llm=llm, nodes=self._view(), _names=self._names
+        )
         self._names = eng.names
         ans = eng.answer(question, explain=True)
         return ans.reply or ""

@@ -195,10 +195,11 @@ register(
 
 # --- heavyweight analytics greens (stay inside the window) -------------------
 from graphdb_neo4j_spark.operators.recommend import recommend, recommend_oracle_sql
+from graphdb_neo4j_spark.sources.tpch import node_snapshot
 
 register(
     "recommend_people",
-    lambda spark, sf: recommend(spark, sf, anchor_id=1, limit=100),
+    lambda spark, sf: recommend(node_snapshot(spark, sf), anchor_id=1, limit=100),
     recommend_oracle_sql(1, 100),
     bench=True,
 )
@@ -347,22 +348,22 @@ register(
 
 # --- §2.3 J4/J5 two-name relationship ----------------------------------------
 from graphdb_neo4j_spark.operators.relationship import (
+    common_interests_pair,
     common_interests_pair_sql,
-    q_common_interests_pair,
     two_name_relationship,
     two_name_relationship_sql,
 )
 
 register(
     "two_name_relationship",
-    lambda spark, sf: two_name_relationship(spark, sf),
+    lambda spark, sf: two_name_relationship(node_snapshot(spark, sf)),
     two_name_relationship_sql(),
 )
 
 # --- §2.7 F7 array intersection ----------------------------------------------
 register(
     "common_interests_pair",
-    lambda spark, sf: q_common_interests_pair(spark, sf),
+    lambda spark, sf: common_interests_pair(node_snapshot(spark, sf)),
     common_interests_pair_sql(),
 )
 

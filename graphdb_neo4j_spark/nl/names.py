@@ -9,8 +9,8 @@ The reference refetches every name from the store for EVERY token
 (llm_cypher.py:15-22 called from :26 — an N+1 full scan we must not
 copy). Here the dictionary is collected ONCE from the nodes DataFrame and
 kept driver-side for the life of the service: ``GraphService`` builds one
-:class:`NameDictionary` and reuses it for every ``chat()`` (an ``NLEngine``
-keeps its own). Correction is then pure Python over precomputed lowercased
+:class:`NameDictionary`, reuses it for every ``chat()`` and adds each name
+``save_student`` writes (an ``NLEngine`` keeps its own). Correction is then pure Python over precomputed lowercased
 names: exact hits are a dict lookup and a length bound skips names that
 cannot win. A name dictionary is a driver-side asset by nature (it seeds
 prompt/string rewriting, not a data-plane join) — collecting it is the
@@ -65,10 +65,20 @@ class NameDictionary:
     names: list[str] = field(default_factory=list)
 
     def __post_init__(self) -> None:
+        self._known = set(self.names)
         self._lower = [n.lower() for n in self.names]
         self._first: dict[str, str] = {}
         for name, low in zip(self.names, self._lower):
             self._first.setdefault(low, name)
+
+    def add(self, name: str) -> None:
+        """Add one name (a new node's) unless the dictionary holds it."""
+        if name is None or name in self._known:
+            return
+        self.names.append(name)
+        self._known.add(name)
+        self._lower.append(name.lower())
+        self._first.setdefault(name.lower(), name)
 
     @classmethod
     def from_nodes(cls, nodes: DataFrame) -> "NameDictionary":

@@ -29,6 +29,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from graphdb_neo4j_spark.nl.names import NameDictionary
+from graphdb_neo4j_spark.sources.tpch import node_snapshot
 
 LLMClient = Callable[[str], str]
 
@@ -231,6 +232,9 @@ class NLEngine:
     sf_dir: str
     llm: LLMClient | None = None
     max_repair_attempts: int = 2
+    # the node table the name dictionary and the templates read; None =
+    # the persisted snapshot of ``sf_dir``
+    nodes: DataFrame | None = field(default=None, repr=False)
     _names: NameDictionary | None = field(default=None, repr=False)
     _views_registered: bool = field(default=False, repr=False)
 
@@ -240,12 +244,12 @@ class NLEngine:
         """Create the lazy temp views the SQL surface queries (nodes with
         interests, canonical edges, undirected edge view §7.4-H5).
         :meth:`run_sql` calls it on the first question that reaches it, so
-        the template path never pays for the views."""
+        the template path never pays for the views. The ``nodes`` view is
+        the base snapshot of ``sf_dir``, without a service's overlay."""
         from graphdb_neo4j_spark.graph import PropertyGraph
         from graphdb_neo4j_spark.operators.edges import derive_all_edges
-        from graphdb_neo4j_spark.sources.tpch import full_nodes
 
-        nodes = full_nodes(self.spark, self.sf_dir)
+        nodes = node_snapshot(self.spark, self.sf_dir)
         edges = derive_all_edges(self.spark, self.sf_dir)
         nodes.createOrReplaceTempView("nodes")
         edges.createOrReplaceTempView("edges")
@@ -254,14 +258,15 @@ class NLEngine:
         )
         self._views_registered = True
 
+    def node_table(self) -> DataFrame:
+        if self.nodes is not None:
+            return self.nodes
+        return node_snapshot(self.spark, self.sf_dir)
+
     @property
     def names(self) -> NameDictionary:
         if self._names is None:
-            from graphdb_neo4j_spark.sources.tpch import customer_nodes
-
-            self._names = NameDictionary.from_nodes(
-                customer_nodes(self.spark, self.sf_dir)
-            )
+            self._names = NameDictionary.from_nodes(self.node_table())
         return self._names
 
     # -- stages --------------------------------------------------------------
@@ -277,12 +282,12 @@ class NLEngine:
         found = self.names.find_in(question)
         if len(found) == 1:
             return (
-                single_student_detail(self.spark, self.sf_dir, found[0]),
+                single_student_detail(self.node_table(), found[0]),
                 SINGLE_STUDENT_SQL.format(name=found[0].replace("'", "''")),
             )
         if len(found) == 2:
             return (
-                two_name_relationship(self.spark, self.sf_dir, found[0], found[1]),
+                two_name_relationship(self.node_table(), found[0], found[1]),
                 TWO_NAME_SQL.format(
                     name_a=found[0].replace("'", "''"),
                     name_b=found[1].replace("'", "''"),

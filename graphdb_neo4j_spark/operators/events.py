@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from graphdb_neo4j_spark.session import materialize
+from graphdb_neo4j_spark.sources.tpch import load_table
 
 SESSION_GAP_MIN = 30
 
@@ -56,7 +57,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # naive-UTC. Pin it here so parity holds on ANY caller-supplied session
     # (same reasoning as the nanos conf above — both are runtime SQLConfs).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return normalize_ts(load_table(spark, sf_dir, "events"))
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:

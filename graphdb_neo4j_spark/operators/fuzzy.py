@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.functions.fuzz import indel_ratio_col, levenshtein_ratio_col
-from graphdb_neo4j_spark.sources.tpch import NODES_CTE, customer_nodes
+from graphdb_neo4j_spark.sources.tpch import NODES_CTE, node_snapshot
 
 DEFAULT_QUERY = "custoner#000000420"  # deliberate typo of customer#000000420
 DEFAULT_THRESHOLD = 60.0
@@ -26,15 +26,14 @@ DEFAULT_K = 10
 
 
 def fuzzy_search(
-    spark: SparkSession,
-    sf_dir: str,
+    nodes: DataFrame,
     query: str = DEFAULT_QUERY,
     threshold: float = DEFAULT_THRESHOLD,
     k: int = DEFAULT_K,
     exact: bool = False,
 ) -> DataFrame:
-    """Top-k nodes whose name fuzzy-matches ``query`` at ≥ threshold."""
-    nodes = customer_nodes(spark, sf_dir)
+    """Top-k nodes of the node table whose name fuzzy-matches ``query`` at
+    ≥ threshold."""
     q = F.lit(query.strip().lower())
     scorer = indel_ratio_col if exact else levenshtein_ratio_col
     return (
@@ -73,18 +72,18 @@ LIMIT {k}
 
 
 def q_fuzzy_search_lev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fuzzy_search(spark, sf_dir, exact=False)
+    return fuzzy_search(node_snapshot(spark, sf_dir), exact=False)
 
 
 def q_fuzzy_search_indel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Indel-ratio variant (Pandas UDF) — rows-only driver check."""
-    return fuzzy_search(spark, sf_dir, exact=True)
+    return fuzzy_search(node_snapshot(spark, sf_dir), exact=True)
 
 
 def q_fuzzy_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4 argmax — the NL layer's single best name correction
     (llm_cypher.py:30-38: best match if score ≥ 75, else nothing)."""
-    return fuzzy_search(spark, sf_dir, threshold=75.0, k=1)
+    return fuzzy_search(node_snapshot(spark, sf_dir), threshold=75.0, k=1)
 
 
 def fuzzy_best_match_sql() -> str:

@@ -11,7 +11,11 @@ Reference counterparts:
 
 All are single-scan Catalyst plans: the predicate and projection reach the
 parquet reader (PushedFilters / ReadSchema), so at 100 TB each of these
-touches only the row groups and columns it needs.
+touches only the row groups and columns it needs. The point, existence and
+name lookups take the node table as input (the persisted
+:func:`~graphdb_neo4j_spark.sources.tpch.node_snapshot`, or a service's
+snapshot ∪ overlay view); their ``q_*`` registry wrappers pass the
+snapshot.
 """
 
 from __future__ import annotations
@@ -19,12 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.graph import NODE_COLUMNS
 from graphdb_neo4j_spark.sources.tpch import (
     CUST_PARTS_CTE,
     NODES_CTE,
     customer_nodes,
     full_nodes,
     load_table,
+    node_snapshot,
 )
 
 
@@ -44,22 +50,18 @@ SELECT name FROM nodes WHERE name IS NOT NULL
 """
 
 
-def q_point_lookup(spark: SparkSession, sf_dir: str, node_id: int = 42) -> DataFrame:
+def point_lookup(nodes: DataFrame, node_id: int) -> DataFrame:
     """P2 — one node, ALL 7 properties (the reference's detail row returns
-    interests too, student_service.py:110-132). The array is emitted as a
+    interests too, student_service.py:110-132)."""
+    return nodes.filter(F.col("id") == node_id)
+
+
+def q_point_lookup(spark: SparkSession, sf_dir: str, node_id: int = 42) -> DataFrame:
+    """:func:`point_lookup` on the snapshot; the array is emitted as a
     sorted comma-join so the oracle hash is representation-stable."""
-    return (
-        full_nodes(spark, sf_dir)
-        .filter(F.col("id") == node_id)
-        .select(
-            "id",
-            "name",
-            "address",
-            "college",
-            "board",
-            "stream",
-            F.concat_ws(",", F.array_sort("interests")).alias("interests"),
-        )
+    return point_lookup(node_snapshot(spark, sf_dir), node_id).select(
+        *NODE_COLUMNS[:-1],
+        F.concat_ws(",", F.array_sort("interests")).alias("interests"),
     )
 
 
@@ -74,44 +76,27 @@ FROM nodes WHERE id = {node_id}
 """
 
 
-def single_student_detail(
-    spark: SparkSession, sf_dir: str, name: str
-) -> DataFrame:
-    """The NL layer's single-student template (llm_cypher.py:98-102):
-    point filter on the pre-normalized name; interests gathered by the
-    scan-only broadcast probe (dynamic id — see interest_pairs_for)
-    instead of the full-corpus interests aggregation."""
-    from graphdb_neo4j_spark.sources.tpch import interest_pairs_for
+def _named(nodes: DataFrame, name: str) -> DataFrame:
+    return nodes.filter(F.col("name") == F.lower(F.trim(F.lit(name))))
 
-    node = (
-        customer_nodes(spark, sf_dir)
-        .filter(F.col("name") == F.lower(F.trim(F.lit(name))))
-        .limit(1)
-    )
-    interests = (
-        interest_pairs_for(spark, sf_dir, node.select("id"))
-        .groupBy("id")
-        .agg(F.collect_set("interest").alias("interests"))
-    )
-    return node.join(interests, "id", "left").select(
-        "id",
-        "name",
-        "address",
-        "college",
-        "board",
-        "stream",
-        F.coalesce("interests", F.array().cast("array<string>")).alias("interests"),
+
+def single_student_detail(nodes: DataFrame, name: str) -> DataFrame:
+    """The NL layer's single-student template (llm_cypher.py:98-102): one
+    node by its pre-normalized name, all 7 properties."""
+    return _named(nodes, name).limit(1).select(*NODE_COLUMNS)
+
+
+def exists(nodes: DataFrame, node_id: int) -> DataFrame:
+    """P3 — existence probe as a 1-row boolean (semantically a semi-join)."""
+    return (
+        nodes.filter(F.col("id") == node_id)
+        .groupBy()
+        .agg((F.count("*") > 0).alias("found"))
     )
 
 
 def q_exists(spark: SparkSession, sf_dir: str, node_id: int = 42) -> DataFrame:
-    """P3 — existence probe as a 1-row boolean (semantically a semi-join)."""
-    return (
-        customer_nodes(spark, sf_dir)
-        .filter(F.col("id") == node_id)
-        .groupBy()
-        .agg((F.count("*") > 0).alias("found"))
-    )
+    return exists(node_snapshot(spark, sf_dir), node_id)
 
 
 def exists_sql(node_id: int = 42) -> str:
@@ -121,16 +106,16 @@ SELECT COUNT(*) > 0 AS found FROM nodes WHERE id = {node_id}
 """
 
 
+def name_ci_lookup(nodes: DataFrame, name: str) -> DataFrame:
+    """P4 — case-insensitive single-name lookup (the LLM single-student
+    template forces toLower on both sides)."""
+    return _named(nodes, name).select("id", "name", "college", "board", "stream")
+
+
 def q_name_ci_lookup(
     spark: SparkSession, sf_dir: str, name: str = "Customer#000000042"
 ) -> DataFrame:
-    """P4 — case-insensitive single-name lookup (the LLM single-student
-    template forces toLower on both sides)."""
-    return (
-        customer_nodes(spark, sf_dir)
-        .filter(F.col("name") == F.lower(F.trim(F.lit(name))))
-        .select("id", "name", "college", "board", "stream")
-    )
+    return name_ci_lookup(node_snapshot(spark, sf_dir), name)
 
 
 def name_ci_lookup_sql(name: str = "Customer#000000042") -> str:

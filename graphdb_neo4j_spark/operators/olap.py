@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graphdb_neo4j_spark.session import materialize
+from graphdb_neo4j_spark.sources.tpch import load_table
 
 
 def _dec(col: str, prec: int = 15, scale: int = 2) -> F.Column:
@@ -26,7 +27,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary: groupBy 2 low-cardinality keys,
     8 aggregates. Scan-dominated; partial aggregation makes the shuffle a
     few dozen rows regardless of input size."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     qty = _dec("l_quantity")
     price = _dec("l_extendedprice")
     disc = _dec("l_discount", 4, 2)
@@ -71,8 +72,8 @@ GROUP BY l_returnflag, l_linestatus
 def q_top_parts_by_revenue(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     """Join + agg + deterministic top-k: revenue per part across the fact
     table; exact decimal revenue, TakeOrderedAndProject at the end."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4, 2)
     )
@@ -117,9 +118,9 @@ def q_top_parts_per_nation(spark: SparkSession, sf_dir: str, k: int = 3) -> Data
     lineitem to supplier and the (nation, partkey) aggregation. Rank ties
     break on partkey so the result is deterministic.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4, 2)
     )
@@ -182,9 +183,9 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFr
     (orderkey) aggregation, which partial-aggregates map-side. Top-k is
     TakeOrderedAndProject — no global sort materialization.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4, 2)
     )
@@ -242,12 +243,12 @@ def q_nation_revenue(spark: SparkSession, sf_dir: str, region: str = "ASIA") -> 
     with the ``c_nationkey = s_nationkey`` residual — no fact-fact
     shuffle beyond the orderkey join. Output is ≤ #nations rows.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    reg = spark.read.parquet(f"{sf_dir}/region.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    reg = load_table(spark, sf_dir, "region")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4, 2)
     )
@@ -310,8 +311,8 @@ def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     5 rows after map-side partial agg. The orders-side date filter is
     pushed to the scan.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     o = (
         orders.filter(
             (F.col("o_orderdate") >= F.lit("1997-01-01"))
@@ -360,8 +361,8 @@ def q_promo_revenue_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives it by constant-folding the disjunction, so the fact scan
     skips row groups even though the precise predicate needs the join.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4, 2)
     )
@@ -416,10 +417,10 @@ def q_top_return_customers(spark: SparkSession, sf_dir: str, k: int = 20) -> Dat
     Aggregating before the dimension joins keeps the join build sides
     payload-free — the classic "join late, join small" reporting shape.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4, 2)
     )
@@ -482,7 +483,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale the plan is a single pass with every predicate in
     ``PushedFilters`` (row-group skipping does the heavy lifting on a
     date-sorted layout — see ``sources/layout.py``)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     revenue = _dec("l_extendedprice") * _dec("l_discount", 4, 2)
     return (
         li.filter(
@@ -523,13 +524,13 @@ def q_integrity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     union into one 7-row result. On a healthy warehouse every count is
     0, which also makes the oracle row trivial to eyeball.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    reg = spark.read.parquet(f"{sf_dir}/region.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    part = load_table(spark, sf_dir, "part")
+    nation = load_table(spark, sf_dir, "nation")
+    reg = load_table(spark, sf_dir, "region")
 
     def orphans(name, fact, fk, dim, pk, broadcast_dim=True):
         keys = dim.select(F.col(pk).alias("k"))
@@ -590,8 +591,8 @@ def q_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical "EXISTS against the fact table" plan with no
     de-duplication step.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         orders.filter(
             (F.col("o_orderdate") >= F.lit("1997-01-01"))
@@ -633,8 +634,8 @@ def q_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is ≤|segments| rows. No step is proportional to anything
     but one pass over each table.
     """
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     # "> average" via exact cross-multiplication (bal * n_pos > sum_pos):
     # decimal division would be exact decimal in Spark but DOUBLE in
     # DuckDB, so a balance landing exactly on the average could classify
@@ -692,8 +693,8 @@ def q_small_lot_revenue(spark: SparkSession, sf_dir: str, brand: str = "Brand#1"
     predicate is exact decimal cross-multiplication
     (``2·qty·n < sum_qty``) — no engine-dependent double division on
     the boundary."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     brand_parts = F.broadcast(
         part.filter(F.col("p_brand") == brand).select("p_partkey")
     )
@@ -749,9 +750,9 @@ def q_big_orders(spark: SparkSession, sf_dir: str, min_qty: int = 300, k: int = 
     selective semi join and the customer dim broadcasts on last.
     Partial aggregation absorbs the fact scan; nothing downstream is
     proportional to lineitem."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(_dec("l_quantity")).alias("sum_qty"))
@@ -805,9 +806,9 @@ def q_brand_supplier_counts(spark: SparkSession, sf_dir: str, k: int = 20) -> Da
     happens map-side, so the shuffle carries unique triples, not fact
     rows. Part is the only dimension and broadcasts onto the fact
     scan."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    supp = load_table(spark, sf_dir, "supplier")
     bad = F.broadcast(
         supp.filter(F.col("s_acctbal") < 0).select(F.col("s_suppkey").alias("bad_key"))
     )
@@ -850,10 +851,10 @@ def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders scan largest-last; NULL subtotal cells are labeled '(all)' so
     the hash is engine-stable.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     joined = (
         orders.select("o_custkey", "o_totalprice")
         .join(
@@ -913,7 +914,7 @@ def q_balance_ntiles(spark: SparkSession, sf_dir: str, n: int = 4) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.desc("bal"), F.asc("c_custkey")
     )
@@ -965,8 +966,8 @@ def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-of-counts over ≤|distinct k| rows. Nothing re-scans the fact
     table.
     """
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     filtered = orders.filter(F.col("o_orderpriority") != "1-URGENT").select(
         "o_custkey", "o_orderkey"
     )
@@ -1018,8 +1019,8 @@ def q_lone_late_supplier(
     ``n_supp ≥ 2 AND n_late_supp = 1``, and the per-supplier tally runs
     over ≤|qualifying orders| rows.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     lines = li.select("l_orderkey", "l_suppkey", "l_shipdate").join(
         orders.select("o_orderkey", "o_orderdate"),
         F.col("l_orderkey") == F.col("o_orderkey"),
@@ -1076,7 +1077,7 @@ def q_cumulative_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -1120,9 +1121,9 @@ def q_cheapest_supplier_per_part(
     semantics — deterministic without an arbitrary pick); the supplier
     dim broadcasts on last.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    supp = load_table(spark, sf_dir, "supplier")
     brand_parts = F.broadcast(
         part.filter(F.col("p_brand") == brand).select("p_partkey", "p_name")
     )
@@ -1197,7 +1198,7 @@ def q_basket_affinity(
     DIRECTED (a→b and b→a) because confidence is asymmetric; ranking
     ties break on the pair.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     # four consumers (two join sides, marginals, order count) — materialize
     # the distinct baskets once instead of re-scanning the fact table
     baskets = (
@@ -1287,7 +1288,7 @@ def q_pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(_dec("o_totalprice")).alias("rev")
     )
@@ -1388,8 +1389,8 @@ def q_top_supplier(
     """
     from pyspark.sql.window import Window
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    sup = load_table(spark, sf_dir, "supplier")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4, 2)
     )
@@ -1446,10 +1447,10 @@ def q_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline; the unbounded-cardinality form is sketch_profile's GK).
     Rounded to 6: interpolation arithmetic is float-order sensitive.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate"
     )
     lat = (
@@ -1513,11 +1514,11 @@ def q_volume_shipping(
     Output ≤ 2 pair-directions × years rows. Exact decimal until the
     final double cast.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     pair = F.broadcast(
         nation.filter(F.col("n_name").isin(nation_a, nation_b)).select(
             "n_nationkey", "n_name"
@@ -1593,13 +1594,13 @@ def q_market_share(
     decimal; the share divides as double (identical IEEE inputs in both
     engines), rounded 6.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    reg = spark.read.parquet(f"{sf_dir}/region.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    reg = load_table(spark, sf_dir, "region")
+    part = load_table(spark, sf_dir, "part")
     region_nations = F.broadcast(
         nation.join(
             F.broadcast(reg.filter(F.col("r_name") == region)),
@@ -1697,10 +1698,10 @@ def q_product_profit(
     so the plan has zero fact-fact shuffles; the aggregate is
     ≤ nations × years rows. Exact decimal throughout.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    part = load_table(spark, sf_dir, "part")
     profit = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4, 2)
     ) - _dec("p_retailprice", 12, 2) * _dec("l_quantity", 12, 2)
@@ -1757,7 +1758,7 @@ def q_user_erasure(spark: SparkSession, sf_dir: str, user_id: int = 42) -> DataF
     lineitem-via-orders, which semi-joins the user's ≤|orders| broadcast
     order keys — no shuffle anywhere, output is exactly 4 rows.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     user_orders = orders.filter(F.col("o_custkey") == user_id).select("o_orderkey")
 
     def cnt(name: str, df) -> DataFrame:
@@ -1765,9 +1766,9 @@ def q_user_erasure(spark: SparkSession, sf_dir: str, user_id: int = 42) -> DataF
             F.lit(name).alias("table_name"), "n_rows"
         )
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    cust = load_table(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    ev = load_table(spark, sf_dir, "events")
     return (
         cnt("customer", cust.filter(F.col("c_custkey") == user_id))
         .unionByName(cnt("orders", user_orders))

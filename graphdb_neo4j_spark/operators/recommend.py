@@ -8,88 +8,68 @@ all other nodes; four attribute-equality flags computed with
 same_stream + same_college + nearby + n_common`` (:156); keep ``score > 0``
 (:157); ``ORDER BY score DESC`` (:161).
 
-Spark plan (SURVEY.md §3.3 / §7.2):
-- the anchor is a 1-row DataFrame → ``crossJoin(broadcast(anchor))`` — a
-  BroadcastNestedLoopJoin over one row, i.e. a map-side operation; no
-  shuffle regardless of node-table size.
-- interest overlap uses the exploded (id, interest) pairs: anchor's
-  interests (a handful of tokens) broadcast into an equi-join, then a
-  partial+final count aggregation. This replaces the reference's O(N²)
-  nested list comprehension with an O(N·|anchor interests|) hash join —
-  the 100 TB-safe shape.
-- the reference returns ALL matches (no LIMIT — a scalability cliff noted
-  in BASELINE.md); we add a deterministic top-k (score DESC, id ASC) which
-  Catalyst plans as TakeOrderedAndProject (no full sort).
+Spark plan: one pruned point read of the anchor (the id filter reaches the
+scan of the node table, which holds each node's interests as an array),
+then the anchor's attributes and its distinct interest tokens are bound as
+literals, so scoring is scan → project → top-k with
+``n_common = size(array_intersect(interests, <anchor tokens>))`` — no join
+and no shuffle, O(N·|anchor interests|) work against the reference's O(N²)
+nested list comprehension. The reference returns ALL matches (no LIMIT — a
+scalability cliff noted in BASELINE.md); we add a deterministic top-k
+(score DESC, id ASC) which Catalyst plans as TakeOrderedAndProject (no full
+sort).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphdb_neo4j_spark.sources.tpch import (
-    CUST_PARTS_CTE,
-    NODES_CTE,
-    customer_interest_pairs_raw,
-    customer_nodes,
-)
+from graphdb_neo4j_spark.sources.tpch import CUST_PARTS_CTE, NODES_CTE
 
 DEFAULT_ANCHOR = 1
 DEFAULT_LIMIT = 100
+_FLAGS = (
+    ("same_college", "college"),
+    ("same_board", "board"),
+    ("same_stream", "stream"),
+    ("nearby", "address"),
+)
 
 
 def recommend(
-    spark: SparkSession,
-    sf_dir: str,
+    nodes: DataFrame,
     anchor_id: int = DEFAULT_ANCHOR,
     limit: int | None = DEFAULT_LIMIT,
 ) -> DataFrame:
-    """Top-k recommended peers for ``anchor_id`` with per-attribute flags."""
-    nodes = customer_nodes(spark, sf_dir)
-    # Raw (not deduped) pairs: the broadcast join against the anchor's few
-    # interest tokens filters the fact table map-side FIRST; the distinct is
-    # then a countDistinct over the surviving sliver. This avoids a global
-    # dedup shuffle of the full fact join — the plan that survives 100 TB.
-    pairs = customer_interest_pairs_raw(spark, sf_dir)
-
-    anchor = nodes.filter(F.col("id") == anchor_id).select(
-        F.col("college").alias("a_college"),
-        F.col("board").alias("a_board"),
-        F.col("stream").alias("a_stream"),
-        F.col("address").alias("a_address"),
-    )
-    anchor_interests = (
-        pairs.filter(F.col("id") == anchor_id).select("interest").distinct()
-    )
-
-    n_common = (
-        pairs.filter(F.col("id") != anchor_id)
-        .join(F.broadcast(anchor_interests), "interest")
-        .groupBy("id")
-        .agg(F.countDistinct("interest").alias("n_common"))
-    )
-
-    flag = lambda c, a: F.when(F.col(c) == F.col(a), 1).otherwise(0)  # noqa: E731
+    """Top-k recommended peers for ``anchor_id`` with per-attribute flags,
+    over a node table with an ``interests`` array
+    (:func:`~graphdb_neo4j_spark.sources.tpch.node_snapshot`, or a service's
+    snapshot ∪ overlay view). An unknown anchor scores every node 0, so the
+    result is empty."""
+    rows = nodes.filter(F.col("id") == anchor_id).collect()
+    anchor = rows[0].asDict() if rows else {}
+    tokens = sorted(set(anchor.get("interests") or ()))
+    anchor_tokens = F.array(*map(F.lit, tokens)).cast("array<string>")
+    flags = [
+        F.when(F.col(attr) == F.lit(anchor.get(attr)).cast("string"), 1)
+        .otherwise(0)
+        .alias(flag)
+        for flag, attr in _FLAGS
+    ]
     scored = (
         nodes.filter(F.col("id") != anchor_id)
-        .crossJoin(F.broadcast(anchor))
-        .join(n_common, "id", "left")
         .select(
             "id",
             "name",
-            flag("college", "a_college").alias("same_college"),
-            flag("board", "a_board").alias("same_board"),
-            flag("stream", "a_stream").alias("same_stream"),
-            flag("address", "a_address").alias("nearby"),
-            F.coalesce(F.col("n_common"), F.lit(0).cast("long")).alias("n_common"),
+            *flags,
+            F.size(F.array_intersect("interests", anchor_tokens))
+            .cast("long")
+            .alias("n_common"),
         )
         .withColumn(
             "score",
-            F.col("same_college")
-            + F.col("same_board")
-            + F.col("same_stream")
-            + F.col("nearby")
-            + F.col("n_common"),
+            sum((F.col(flag) for flag, _ in _FLAGS), F.col("n_common")),
         )
         .filter(F.col("score") > 0)
         .orderBy(F.desc("score"), F.asc("id"))

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.session import widen_scan
+from graphdb_neo4j_spark.sources.tpch import load_table
 
 DIM_START = "2020-01-01 00:00:00"
 BATCH_TS = "2024-01-01 00:00:00"
@@ -81,7 +82,7 @@ def q_scd2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     'SEG_' || nationkey (a real change except where it accidentally
     restates); output is the post-batch dimension with an is_current
     flag. Keys with custkey % 3 != 0 must pass through byte-identical."""
-    cust = widen_scan(spark.read.parquet(f"{sf_dir}/customer.parquet"))
+    cust = widen_scan(load_table(spark, sf_dir, "customer"))
     dim = cust.select(
         F.col("c_custkey").alias("custkey"),
         F.col("c_mktsegment").alias("segment"),
@@ -261,7 +262,7 @@ def q_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts 2020 — the shift spans both sides of the 2024 restatement, so
     every version is exercised). Output: per segment-version, order count
     and revenue — the "metrics by the attribute AS IT WAS" report."""
-    cust = widen_scan(spark.read.parquet(f"{sf_dir}/customer.parquet"))
+    cust = widen_scan(load_table(spark, sf_dir, "customer"))
     dim = cust.select(
         F.col("c_custkey").alias("custkey"),
         F.col("c_mktsegment").alias("segment"),
@@ -273,7 +274,7 @@ def q_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("SEG_"), F.col("c_nationkey")).alias("segment"),
     )
     scd = scd2_apply(dim, updates, "custkey", ["segment"], BATCH_TS)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     facts = orders.select(
         F.col("o_custkey").alias("custkey"),
         (F.col("o_orderdate") + F.expr("INTERVAL 27 YEARS")).alias("as_of"),

@@ -7,6 +7,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     customer_nodes,
     load_graph,
     load_table,
+    node_snapshot,
 )
 
 __all__ = [
@@ -16,4 +17,5 @@ __all__ = [
     "customer_nodes",
     "load_graph",
     "load_table",
+    "node_snapshot",
 ]

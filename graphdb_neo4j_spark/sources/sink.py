@@ -29,10 +29,14 @@ from graphdb_neo4j_spark.graph import PropertyGraph
 def write_nodes(
     nodes: DataFrame, path: str, mode: str = "overwrite", files: int | None = None
 ) -> None:
-    """Persist the node table. ``files`` caps output file count (sorted by
-    id so each file covers a contiguous id range → row-group pruning for
-    point lookups)."""
-    df = nodes.repartitionByRange(files, "id") if files else nodes
+    """Persist the node table. ``files`` caps output file count (range-
+    partitioned and sorted by id, so each file covers a contiguous id range
+    → file and row-group pruning for point lookups)."""
+    df = (
+        nodes.repartitionByRange(files, "id").sortWithinPartitions("id")
+        if files
+        else nodes
+    )
     df.write.mode(mode).parquet(path)
 
 

@@ -20,18 +20,28 @@ the DuckDB correctness oracle, so Spark results hash-match SQL results.
 Scale notes: the nodes projection is two broadcast joins (nation and region
 are tiny dims); interests is one shuffle (groupBy custkey) over the fact
 join orders⋈lineitem, which co-partitions on o_orderkey/l_orderkey.
+
+:func:`node_snapshot` persists that derivation once per source version, so
+the service's reads (``api.GraphService``) and the node-table operators
+(recommend, relationship, fuzzy search, point/name lookups) scan one
+table instead of re-deriving it per request. ``customer_nodes`` and
+``full_nodes`` stay the raw derivations for everything else.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import stat
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from graphdb_neo4j_spark.graph import PropertyGraph, empty_edges
+from graphdb_neo4j_spark.graph import NODE_COLUMNS, PropertyGraph, empty_edges
+from graphdb_neo4j_spark.llmdata.genstore import COMMITTED, GenStore, read_meta
+from graphdb_neo4j_spark.sources.sink import write_nodes
 
 TABLES = (
     "region",
@@ -183,38 +193,6 @@ def customer_interest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return customer_interest_pairs_raw(spark, sf_dir).distinct()
 
 
-def interest_pairs_for(
-    spark: SparkSession, sf_dir: str, ids: DataFrame
-) -> DataFrame:
-    """(id, interest) distinct pairs for a SMALL node-id set, scan-only.
-
-    For name-resolved point queries the id is dynamic, so Catalyst cannot
-    constant-fold it into the fact scans the way it does for literal-id
-    lookups (point_lookup's plan shows ``EqualTo(o_custkey, 42)`` pushed
-    into the orders scan). This helper restores the point-query shape at
-    plan level: broadcast the id set into orders (hash semi-probe, no
-    orders shuffle), broadcast the surviving order keys into lineitem —
-    the fact tables are scanned but never shuffled, and the distinct runs
-    on the ~tens of surviving rows. ``ids`` must be a DataFrame with one
-    column ``id`` and a handful of rows (it is broadcast twice).
-    """
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    my_orders = orders.join(
-        F.broadcast(ids), orders.o_custkey == ids.id
-    ).select("o_orderkey", "o_custkey")
-    return (
-        lineitem.join(
-            F.broadcast(my_orders), lineitem.l_orderkey == F.col("o_orderkey")
-        )
-        .select(
-            F.col("o_custkey").cast("long").alias("id"),
-            F.col("l_partkey").cast("string").alias("interest"),
-        )
-        .distinct()
-    )
-
-
 def customer_interests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, interests: array<string>) — the reference's array representation."""
     return (
@@ -243,6 +221,85 @@ def full_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "interests",
         F.coalesce(F.col("interests"), F.array().cast("array<string>")),
     )
+
+
+# --- the persisted node snapshot ---------------------------------------------
+
+SNAPSHOT_SOURCES = ("customer", "nation", "region", "orders", "lineitem")
+NODE_SCHEMA = (
+    "id BIGINT, name STRING, address STRING, college STRING, board STRING,"
+    " stream STRING, interests ARRAY<STRING>"
+)
+SNAPSHOT_STORE = GenStore("node_snapshot", "_snapshot_meta.json", ("",))
+# customer-table bytes per snapshot file (the file count scales with the
+# source; small sources get one file)
+SNAPSHOT_FILE_BYTES = 8 << 20
+
+
+def _digest(obj: object) -> str:
+    return hashlib.sha256(repr(obj).encode()).hexdigest()[:16]
+
+
+def _snapshot_root(spark: SparkSession) -> str | None:
+    """``<spark.sql.warehouse.dir>/node_snapshot`` as a local path, or None
+    when the warehouse is not on the driver's file system."""
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
+    if wh.scheme not in ("", "file"):
+        return None
+    return os.path.join(unquote(wh.path), "node_snapshot")
+
+
+def snapshot_location(spark: SparkSession, sf_dir: str) -> tuple[str, str] | None:
+    """(store dir, generation id) of ``sf_dir``'s node snapshot for the
+    source files as they are now; None when there is no local warehouse or
+    a source table cannot be stamped (a remote scheme, a missing table)."""
+    root = _snapshot_root(spark)
+    stamps = tuple(_file_stamp(f"{sf_dir}/{t}.parquet") for t in SNAPSHOT_SOURCES)
+    if root is None or None in stamps:
+        return None
+    source = os.path.abspath(sf_dir)
+    return os.path.join(root, _digest(source)), _digest((source, stamps, NODE_SCHEMA))
+
+
+def _snapshot_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`full_nodes` in the snapshot's column order, interests sorted."""
+    return full_nodes(spark, sf_dir).select(
+        *NODE_COLUMNS[:-1], F.array_sort("interests").alias("interests")
+    )
+
+
+def node_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The node table — :func:`full_nodes`' rows ``(id, name, address,
+    college, board, stream, interests)`` — read from its persisted snapshot.
+
+    The snapshot is one generation store (``llmdata/genstore``) per source
+    dir under ``<spark.sql.warehouse.dir>/node_snapshot/``. A generation is
+    keyed by the source path and the file stamps (:func:`_file_stamp`) of
+    the five tables the nodes derive from, so a rewritten source table
+    starts a new generation. The first read of a generation builds it: the
+    rows are written range-partitioned by id (``sources.sink.write_nodes``),
+    then the ``_COMMITTED`` marker and the atomic sidecar commit it, then
+    the superseded generations of that source are swept. Only a committed
+    active generation is read, with a fixed schema, so a read submits no
+    Spark job. Builds are single-writer, like the other generation stores.
+    Without a local warehouse or a stampable source this returns the raw
+    derivation.
+    """
+    loc = snapshot_location(spark, sf_dir)
+    if loc is None:
+        return _snapshot_rows(spark, sf_dir)
+    store, gen = loc
+    gen_dir = os.path.join(store, f"generation={gen}")
+    meta = read_meta(store, SNAPSHOT_STORE.meta_name)
+    committed = os.path.exists(os.path.join(gen_dir, COMMITTED))
+    if not (meta and gen in meta["active"] and committed):
+        size = sum(e[2] for e in _file_stamp(f"{sf_dir}/customer.parquet"))
+        rows = _snapshot_rows(spark, sf_dir)
+        write_nodes(rows, gen_dir, files=1 + size // SNAPSHOT_FILE_BYTES)
+        fresh = {"source": os.path.abspath(sf_dir), "generations": [], "active": []}
+        SNAPSHOT_STORE.commit(store, fresh, gen)
+        SNAPSHOT_STORE.sweep_orphans(store, {"active": [gen]})
+    return spark.read.schema(NODE_SCHEMA).parquet(gen_dir)
 
 
 def load_graph(spark: SparkSession, sf_dir: str, edges: DataFrame | None = None) -> PropertyGraph:

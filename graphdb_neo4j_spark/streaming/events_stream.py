@@ -43,6 +43,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from graphdb_neo4j_spark.operators.events import normalize_ts
 from graphdb_neo4j_spark.session import adaptive_stream_shuffle_partitions
+from graphdb_neo4j_spark.sources.tpch import load_table
 
 SESSION_GAP = "30 minutes"
 
@@ -53,7 +54,7 @@ def events_stream_partitions(spark: SparkSession, sf_dir: str) -> int:
     batch frame is the same one the schema read uses). See
     :func:`~graphdb_neo4j_spark.session.adaptive_stream_shuffle_partitions`."""
     return adaptive_stream_shuffle_partitions(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load_table(spark, sf_dir, "events")
     )
 
 
@@ -65,7 +66,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")  # see load_events
     # The file source needs a schema up front; read it from the footer so
     # nanos-as-bigint / timestamp_ntz / timestamp fixtures all work.
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = load_table(spark, sf_dir, "events").schema
     ev = (
         spark.readStream.schema(schema)
         # file source requires a DIRECTORY; glob-filter to the events table
@@ -126,7 +127,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow run of the stream-static enrichment — must equal the
     plain batch join + aggregate (the DuckDB oracle)."""
     ev = stream_events(spark, sf_dir)
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    dim = load_table(spark, sf_dir, "customer")
     return run_available_now(
         spark, enrich_stream(ev, dim), "stream_enrich_sink",
         shuffle_partitions=events_stream_partitions(spark, sf_dir),

@@ -1,5 +1,6 @@
 """U3 — GraphService boundary marshalling + write-path visibility."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.api import GraphService, StudentCreate
@@ -147,3 +148,101 @@ def test_fresh_service_answers_llm_chat(spark, sf_dir):
     _drop_sql_views(spark)
     llm, want = _llm_count_case(sf_dir)
     assert _svc(spark, sf_dir).chat("how many students are in the biggest college?", llm=llm) == want
+
+
+# --- writes reach every read (snapshot ∪ overlay) -----------------------------
+
+ALL_TYPES = {"SAME_COLLEGE", "SAME_BOARD", "SAME_STREAM", "NEARBY", "SHARES_INTEREST"}
+
+
+def _twin_of(detail, name):
+    """A new student with ``detail``'s attributes and interests, the first
+    interest token given twice."""
+    return StudentCreate(
+        name=name,
+        address=detail.address,
+        college=detail.college.upper(),
+        board=detail.board,
+        stream=detail.stream,
+        interests=detail.interests + detail.interests[:1],
+    )
+
+
+@pytest.fixture(scope="module")
+def onboarded(spark, sf_dir):
+    """A service whose name dictionary exists before it saves the twin of
+    base student 1; returns (service, anchor detail, new id, n tokens)."""
+    svc = _svc(spark, sf_dir)
+    assert svc.chat("hi")
+    anchor = svc.get_student_by_id(1)
+    assert anchor.interests
+    new_id = svc.save_student(_twin_of(anchor, "  Zelda Quill "))
+    return svc, anchor, new_id, len(set(anchor.interests))
+
+
+def _recommends(svc, anchor_id):
+    return [(r.id, r.score, r.n_common_interests) for r in svc.recommend_people(anchor_id)]
+
+
+def _relationship(svc, anchor):
+    rel = svc.relationship("Zelda Quill", anchor.name)
+    return rel and (rel.a_name, set(rel.rel_types), rel.n_common_interests)
+
+
+# case -> (what the read returns, what it must contain or equal); the twin
+# shares all four attributes with student 1 and each token counts once
+_VISIBILITY = {
+    "recommend_as_anchor": lambda svc, a, new, n: (
+        _recommends(svc, new), (1, 4 + n, n)),
+    "recommend_as_candidate": lambda svc, a, new, n: (
+        _recommends(svc, 1), (new, 4 + n, n)),
+    "search": lambda svc, a, new, n: (
+        [m.id for m in svc.search_students("zelda quil", limit=3)][:1], new),
+    "relationship": lambda svc, a, new, n: (
+        [_relationship(svc, a)], ("zelda quill", ALL_TYPES, n)),
+    "chat": lambda svc, a, new, n: (
+        svc.chat("who is Zelda Quill?"), "name: zelda quill"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_VISIBILITY))
+def test_onboarded_student_reaches_every_read(onboarded, case):
+    got, want = _VISIBILITY[case](*onboarded)
+    assert want in got
+
+
+def test_llm_sql_nodes_view_reads_the_base_snapshot(spark, sf_dir):
+    """Known gap, pinned: the LLM-SQL ``nodes`` view does not see the
+    overlay, so a count there excludes onboarded students."""
+    _drop_sql_views(spark)
+    (college,) = run_oracle(
+        f"WITH {NODES_CTE} SELECT college FROM nodes"
+        " GROUP BY college ORDER BY count(*) DESC, 1 LIMIT 1",
+        sf_dir,
+    ).fetchone()
+    svc = _svc(spark, sf_dir)
+    new_id = svc.save_student(StudentCreate(name="Overlay Only", college=college))
+    assert svc.student_exists(new_id)
+    llm, want = _llm_count_case(sf_dir)
+    assert svc.chat("how many students are in the biggest college?", llm=llm) == want
+
+
+def test_warm_reads_stay_inside_their_job_budgets(spark, sf_dir):
+    from tests.test_load_table import _jobs_of
+
+    svc = _svc(spark, sf_dir)
+    calls = {
+        "get_student_by_id": (lambda: svc.get_student_by_id(42), 2),
+        "recommend_people": (lambda: svc.recommend_people(42), 4),
+        "relationship": (
+            lambda: svc.relationship("Customer#000000042", "Customer#000000043"),
+            4,
+        ),
+    }
+    for overlay in (False, True):
+        if overlay:
+            svc.save_student(StudentCreate(name="Budget Probe", college="x"))
+        for name, (read, budget) in calls.items():
+            read()  # warm: the first read of a source version builds the snapshot
+            jobs = _jobs_of(spark, read, f"budget_{name}_{overlay}")
+            assert 0 < len(jobs) <= budget, (name, overlay, len(jobs))

@@ -5,6 +5,7 @@ import random
 
 from graphdb_neo4j_spark.functions.fuzz import _lcs_len, indel_ratio
 from graphdb_neo4j_spark.operators.fuzzy import fuzzy_search
+from graphdb_neo4j_spark.sources.tpch import node_snapshot
 
 
 def brute_indel(a: str, b: str) -> float:
@@ -49,7 +50,7 @@ def test_indel_known_values():
 
 
 def test_fuzzy_search_exact_udf(spark, sf_dir):
-    df = fuzzy_search(spark, sf_dir, query="custoner#000000042", exact=True, k=5)
+    df = fuzzy_search(node_snapshot(spark, sf_dir), query="custoner#000000042", exact=True, k=5)
     rows = df.collect()
     assert rows
     # the typo'd name should best-match the intended customer
@@ -59,5 +60,5 @@ def test_fuzzy_search_exact_udf(spark, sf_dir):
 
 
 def test_fuzzy_search_lev_top1(spark, sf_dir):
-    df = fuzzy_search(spark, sf_dir, query="custoner#000000042", exact=False, k=1)
+    df = fuzzy_search(node_snapshot(spark, sf_dir), query="custoner#000000042", exact=False, k=1)
     assert df.first().name == "customer#000000042"

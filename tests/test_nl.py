@@ -20,6 +20,7 @@ from graphdb_neo4j_spark.nl import (
     strip_markdown_fences,
 )
 from graphdb_neo4j_spark.operators.relationship import two_name_relationship
+from graphdb_neo4j_spark.sources.tpch import node_snapshot
 
 NAME_A = "customer#000000042"
 NAME_B = "customer#000000043"
@@ -72,7 +73,7 @@ def test_golden_bare_name(engine):
 def test_golden_connection_between(engine, spark, sf_dir):
     ans = engine.answer(f"what is the connection between {NAME_A} and {NAME_B}")
     assert ans.kind == "query"
-    expected = two_name_relationship(spark, sf_dir, NAME_A, NAME_B).collect()
+    expected = two_name_relationship(node_snapshot(spark, sf_dir), NAME_A, NAME_B).collect()
     assert ans.df.collect() == expected
     row = ans.df.collect()[0]
     assert row["a_name"] == NAME_A and row["b_name"] == NAME_B

@@ -22,7 +22,7 @@ def plan(spark, sf_dir):
 def test_point_lookup_pushes_id_to_scan(plan):
     p = plan("point_lookup")
     assert "PushedFilters: [" in p
-    assert "EqualTo(c_custkey" in p, "literal id must reach the customer scan"
+    assert "EqualTo(id,42)" in p, "literal id must reach the node-snapshot scan"
 
 
 def test_projection_prunes_columns(plan):
@@ -38,10 +38,13 @@ def test_topk_queries_plan_take_ordered(plan):
         assert "TakeOrderedAndProject" in plan(name), name
 
 
-def test_recommend_broadcasts_anchor(plan):
+def test_recommend_scores_without_join_or_shuffle(plan):
+    # the anchor is bound as literals after its point read: scoring is
+    # scan → project → top-k
     p = plan("recommend_people")
-    assert "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
+    assert "TakeOrderedAndProject" in p
+    for op in ("Join", "CartesianProduct", "Exchange"):
+        assert op not in p, op
 
 
 def test_edge_derivation_has_no_cartesian_product(plan):

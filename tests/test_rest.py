@@ -112,3 +112,58 @@ def test_message_grammar():
         _recommendation_message(["a", "b", "c"])
         == "a, b, and c are also in this platform."
     )
+
+
+@pytest.fixture(scope="module")
+def onboarded(app):
+    """POST /onboard a twin of student 1 (same attributes and interests, one
+    token repeated); returns (anchor body, new id, n distinct tokens)."""
+    status, anchor = call(app, "GET", "/api/v1/students/1")
+    assert status == 200 and anchor["interests"]
+    toks = anchor["interests"]
+    status, body = call(
+        app,
+        "POST",
+        "/api/v1/onboard",
+        form={
+            "name": "Rhea Onboard",
+            "address": anchor["address"],
+            "college": anchor["college"].upper(),
+            "board": anchor["board"],
+            "stream": anchor["stream"],
+            "interests": toks + toks[:1],  # a repeated token counts once
+        },
+    )
+    assert status == 200
+    return anchor, body["student_id"], len(set(toks))
+
+
+def _recommended(app, anchor_id):
+    status, rec = call(app, "GET", f"/api/v1/recommend/people/{anchor_id}")
+    assert status == 200
+    return [(s["id"], s["name"], s["score"], s["n_common_interests"]) for s in rec["students"]]
+
+
+def _relationship(app, anchor):
+    rel = app.service.relationship("Rhea Onboard", anchor["name"])
+    return rel and (rel.a_name, "SHARES_INTEREST" in rel.rel_types, rel.n_common_interests)
+
+
+_VISIBILITY = {
+    "recommend_as_anchor": lambda app, a, sid, n: (
+        _recommended(app, sid), (1, a["name"], 4 + n, n)),
+    "recommend_as_candidate": lambda app, a, sid, n: (
+        _recommended(app, 1), (sid, "rhea onboard", 4 + n, n)),
+    "search": lambda app, a, sid, n: (
+        [m.id for m in app.service.search_students("rhea onbord", limit=3)][:1], sid),
+    "relationship": lambda app, a, sid, n: (
+        [_relationship(app, a)], ("rhea onboard", True, n)),
+    "chat": lambda app, a, sid, n: (
+        app.service.chat("who is Rhea Onboard?"), "name: rhea onboard"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_VISIBILITY))
+def test_onboarded_student_reaches_every_read(app, onboarded, case):
+    got, want = _VISIBILITY[case](app, *onboarded)
+    assert want in got
