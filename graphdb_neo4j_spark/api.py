@@ -116,7 +116,7 @@ class GraphService:
 
     spark: SparkSession
     sf_dir: str
-    _overlay: list[tuple] = field(default_factory=list, repr=False)
+    _overlay: list[dict] = field(default_factory=list, repr=False)
     _overlay_df: DataFrame | None = field(default=None, repr=False)
     _names: NameDictionary | None = field(default=None, repr=False)
 
@@ -212,22 +212,20 @@ class GraphService:
         ).collect()[0]["m"]
         new_id = int(base) + 1
         name = student.name.strip().lower()
-        self._overlay.append(
-            (
-                new_id,
-                name,
-                student.address.strip().lower(),
-                student.college.strip().lower(),
-                student.board.strip().lower(),
-                student.stream.strip().lower(),
-                [t.strip().lower() for t in student.interests],
-            )
+        row = (
+            new_id,
+            name,
+            student.address.strip().lower(),
+            student.college.strip().lower(),
+            student.board.strip().lower(),
+            student.stream.strip().lower(),
+            [t.strip().lower() for t in student.interests],
         )
+        self._overlay.append(dict(zip(NODE_COLUMNS, row)))
         # an Arrow table becomes a LocalRelation: reads of the view then
         # start no Python worker and split into no extra partitions
-        records = [dict(zip(NODE_COLUMNS, row)) for row in self._overlay]
         self._overlay_df = self.spark.createDataFrame(
-            pa.Table.from_pylist(records, schema=_ARROW_NODES), NODE_SCHEMA
+            pa.Table.from_pylist(self._overlay, schema=_ARROW_NODES), NODE_SCHEMA
         )
         if self._names is not None:
             self._names.add(name)
