@@ -784,9 +784,11 @@ register(
     # r8: oracle-promoted — NOT via the transitive closure (infeasible at
     # this density, the pre-r8 rows-only reason) but by unrolling the
     # bipartite min-label propagation itself, one materialized CTE level
-    # per round; equal by construction whether or not the Spark loop
-    # early-stops (see graph_components_sql). Union-find parity pytest
-    # kept as the independent cross-check.
+    # per round; equal by construction on both of min_label_components'
+    # plans (one Arrow collect + numpy when node ids and incidence fit
+    # spark.driver.maxResultSize at 16 B a row, else the broadcast loop),
+    # whether or not they early-stop (see graph_components_sql).
+    # Union-find parity pytest kept as the independent cross-check.
     graphalgo.graph_components_sql(),
     bench=True,  # heavyweight: iterative min-label propagation
 )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.llmdata import genstore
 from graphdb_neo4j_spark.llmdata import repcompress as rc
+from graphdb_neo4j_spark.operators.graphalgo import min_label_components
 from graphdb_neo4j_spark.session import materialize, widen_scan
 
 # --- exact dedup ------------------------------------------------------------
@@ -716,59 +717,23 @@ def connected_components(
     component = min node id reachable (canonical-doc assignment over the
     near-dup pair graph; the batch analog of union-find).
 
-    Iterative min-label propagation: each round every node adopts the
-    smallest label among itself and its neighbours; converges in
-    O(diameter) rounds (near-dup clusters are shallow — chains longer than
-    a handful of hops are rare because near-duplication is ~transitive).
-    Each round is ONE groupBy over the edge list plus a join; the label
-    frontier is ``localCheckpoint``ed per round to truncate lineage
-    (same discipline as BFS, operators/paths.py). The loop stops early as
-    soon as a round changes no label — a driver-side count of a tiny
-    changed-set, not a collect of data rows.
+    Min-label propagation through
+    :func:`~graphdb_neo4j_spark.operators.graphalgo.min_label_components`:
+    the nodes are the distinct endpoints and each pair is a two-member
+    group keyed exactly by struct(a, b). A group's min label is the min
+    over the pair, so f(L)(v) = least(L(v), min over v's neighbours) —
+    each application moves every label one hop — and the homogeneity stop
+    fires exactly when an application would change no label, so at most
+    ``max_iterations`` applications run, as before. Near-dup pair graphs
+    are small next to one collect, so this takes the operator's
+    driver path; the broadcast loop serves larger ones.
     """
-    edges = (
-        pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .unionByName(pairs.select(F.col("b").alias("x"), F.col("a").alias("y")))
-        .transform(materialize)
+    ends = F.explode(F.array("a", "b")).alias("id")
+    node_ids = pairs.select(ends).distinct()
+    inc = pairs.select(ends, F.struct("a", "b").alias("gk"))
+    return min_label_components(node_ids, inc, max_iterations).select(
+        F.col("id").alias("node"), "component"
     )
-    labels = (
-        edges.select(F.col("x").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .transform(materialize)
-    )
-    for _ in range(max_iterations):
-        # join on distinct column names so the lineage-sharing frames can't
-        # trip the ambiguous-self-join analyzer
-        neighbour_min = (
-            edges.select(F.col("x").alias("node"), F.col("y").alias("nbr"))
-            .join(
-                labels.select(
-                    F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
-                ),
-                "nbr",
-            )
-            .groupBy("node")
-            .agg(F.min("nbr_label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(neighbour_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("nbr_label", F.col("label")) < F.col("label")).alias(
-                    "_changed"
-                ),
-            )
-            .transform(materialize)
-        )
-        changed = new_labels.filter(F.col("_changed")).limit(1).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    return labels.select("node", F.col("label").alias("component"))
 
 
 def q_dedup_components(

@@ -28,17 +28,23 @@ Scale shapes:
   :func:`pagerank_ppr_clique_factored` loop over the (a, b) class table
   (PPR seeds are classes of their own): O(|A|·|B|) per round, all rounds
   in one small plan, one broadcast join back to the N nodes at the end.
-- **Connected components never move the incidence.** Min-label
-  propagation runs on the node↔group incidence, built once with long
-  group keys; each round joins it in place against broadcast label and
-  group tables and shuffles only the combined messages, O(|groups| +
-  |nodes|) per partition (:func:`min_label_components`).
+- **Connected components pick their plan from the input's size.**
+  Min-label propagation runs on the node↔group incidence, built once
+  with long group keys. When node ids and incidence fit one collect
+  (rows × 16 B ≤ ``spark.driver.maxResultSize``) the same update runs
+  in numpy on the driver after one Arrow collect; above that, each
+  round joins the incidence in place against broadcast label and group
+  tables and shuffles only the combined messages, O(|groups| + |nodes|)
+  per partition (:func:`min_label_components`).
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from functools import reduce
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,7 +56,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     customer_interest_pairs_raw,
     customer_nodes,
 )
-from graphdb_neo4j_spark.session import materialize
+from graphdb_neo4j_spark.session import _parse_bytes_conf, materialize
 
 
 def _attr_degrees(nodes: DataFrame, attr: str, out: str) -> DataFrame:
@@ -1030,9 +1036,12 @@ def q_graph_components(
     (:func:`component_incidence`, one row per node per non-null attribute
     value / ordered part — O(N·attrs + |lineitem|), vs Σ C(n,2)
     materialized clique edges). Group keys are longs: the part key for
-    interests, an exact negative index for attribute values. The
-    incidence is built once and never shuffled inside the loop
-    (:func:`min_label_components`)."""
+    interests, an exact negative key from each attribute group's least
+    member for attribute values. At sf0.1 the node ids and the 660,000-row
+    incidence fit one collect, so :func:`min_label_components` solves
+    them in one Arrow collect and numpy on the driver (7 Spark jobs, no
+    checkpoint); a larger incidence takes the broadcast-in-place loop,
+    built once and never shuffled inside the loop."""
     nodes = customer_nodes(spark, sf_dir)
     inc = component_incidence(nodes, customer_interest_pairs_raw(spark, sf_dir))
     return min_label_components(nodes.select("id"), inc, max_iterations)
@@ -1043,32 +1052,32 @@ def component_incidence(nodes: DataFrame, interest_pairs: DataFrame) -> DataFram
     non-'' attribute value, plus one per (id, interest) pair.
 
     All four attributes come from ONE pass over the node table (an in-row
-    inline of (attr, value) cells). Each distinct (attr, value) gets an
-    exact key −1, −2, … from a dense index over that tiny table, broadcast
-    back; a college and a board with the same value stay two groups.
-    Interests keep their (positive) part key, cast back to a long, and are
-    NOT deduplicated: the min-label update is idempotent, so duplicate
-    rows change no label and the ``distinct`` shuffle is saved."""
+    inline of (ordinal, value) cells). Each (attribute, value) group is
+    named by its least member and the attribute's ordinal: gk = −(min id
+    × 4 + ordinal) − 1, from one window over the cells. Two groups of one
+    attribute have disjoint members, hence different least members, and
+    two attributes differ in the ordinal, so the keys are exact — a
+    college and a board with the same value stay two groups — and, for
+    the non-negative customer keys, negative: disjoint from the
+    (positive) part keys the interests keep, cast back to a long.
+    Interests are NOT deduplicated: the min-label update is idempotent,
+    so duplicate rows change no label and the ``distinct`` shuffle is
+    saved."""
     from pyspark.sql.window import Window
 
+    attrs = list(ATTRIBUTE_EDGE_TYPES.values())
     cells = F.array(
         *[
-            F.struct(F.lit(attr).alias("a"), F.col(attr).alias("v"))
-            for attr in ATTRIBUTE_EDGE_TYPES.values()
+            F.struct(F.lit(k).alias("a"), F.col(attr).alias("v"))
+            for k, attr in enumerate(attrs)
         ]
     )
     # NULL != '' is NULL, so the filter drops both
     attr_cells = nodes.select("id", F.inline(cells)).filter(F.col("v") != "")
-    keys = (
-        attr_cells.select("a", "v")
-        .distinct()
-        .select(
-            "a",
-            "v",
-            (-F.row_number().over(Window.orderBy("a", "v"))).cast("long").alias("gk"),
-        )
+    least = F.min("id").over(Window.partitionBy("a", "v"))
+    attr_inc = attr_cells.select(
+        "id", (-(least * len(attrs) + F.col("a")) - 1).cast("long").alias("gk")
     )
-    attr_inc = attr_cells.join(F.broadcast(keys), ["a", "v"]).select("id", "gk")
     interest_inc = interest_pairs.select(
         "id", F.col("interest").cast("long").alias("gk")
     )
@@ -1084,8 +1093,32 @@ def _broadcast_fits(spark: SparkSession, rows: int, width: int) -> bool:
     return 0 <= rows * width <= limit
 
 
+def _collect_row_cap(spark: SparkSession, width: int) -> int | None:
+    """How many rows of ``width`` bytes one collect may bring to the
+    driver: ``spark.driver.maxResultSize`` // width, or None when that
+    setting is 0, which Spark reads as unlimited. rows fit in one collect
+    iff rows × width ≤ ``spark.driver.maxResultSize``."""
+    limit = _parse_bytes_conf(
+        spark.sparkContext.getConf().get("spark.driver.maxResultSize", "1g")
+    )
+    return None if limit == 0 else limit // width
+
+
 def _broadcast_if(df: DataFrame, small: bool) -> DataFrame:
     return F.broadcast(df) if small else df
+
+
+@contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Label the jobs submitted inside the block (event log, Spark UI),
+    then restore the caller's description."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prior)
 
 
 def min_label_components(
@@ -1097,20 +1130,47 @@ def min_label_components(
     The update is f(L)(v) = least(L(v), min over g∋v of glabel(g)) with
     glabel(g) = min member label, starting from L = id and applied at
     most ``max_iterations`` times — the recurrence
-    :func:`graph_components_sql` unrolls. Loop shape:
+    :func:`min_label_components_sql` unrolls. Incidence rows whose id is
+    not in ``node_ids`` are dropped, and so are rows with a NULL group key
+    (they join no group). Group keys may be of any type.
+
+    Two physical plans compute the same f^k; the size of the input picks
+    one, and no option does:
+
+    - **Driver path**, when (node rows + incidence rows) × 16 B ≤
+      ``spark.driver.maxResultSize`` — the most one collect may bring to
+      the driver, 0 meaning unlimited as in Spark
+      (:func:`_collect_row_cap`). Node ids and incidence are collected
+      in ONE Arrow collect of their union (node rows carry a NULL group
+      key), f runs in numpy over dense node and group indices (group
+      min, then node min) under the homogeneity stop below, and the
+      result is an Arrow-built local DataFrame. Jobs: the collect's
+      stages only, labelled ``min_label_components/collect``.
+    - **Loop**, above that size: the broadcast-in-place loop, jobs
+      labelled ``min_label_components/round=k`` (round 0 = the input
+      and the initial homogeneity test).
+
+    The size is known only once the collect has run, so the decision
+    adds no pass over the inputs: no count, and no ``limit(cap + 1)``
+    (a row is at least 16 B of Arrow, so cap + 1 rows always exceed
+    ``spark.driver.maxResultSize`` and Spark aborts that collect). An
+    oversized input shows up either as more than cap rows or as Spark's
+    own abort of the collect; both take the loop, which then reads the
+    inputs again.
+
+    Both paths share the loop's reasoning:
 
     - **No incumbent join.** A node sits in each of its groups, so the
       min of its group labels already includes its own label: f(L)(v) =
       min over g∋v of glabel(g) for every node with a group. Labels are
-      kept only for those nodes; nodes without a group keep their id via
-      one left join at the end.
+      kept only for those nodes; nodes without a group keep their id.
     - **Homogeneity stop.** Each group aggregate takes min AND max of the
       member labels. If every group has min = max then f(L) = L (and
-      conversely), so one count of the mixed groups per round is an
-      exact fixpoint test; the confirming round costs half a round.
-      Round 1 needs no join at all (the labels are the ids).
-    - **Broadcast what Catalyst would broadcast.** The incidence, the
-      per-round group table and the label table are lineage-cut with
+      conversely), so a test for mixed groups per round is an exact
+      fixpoint test; the confirming round costs half a round. Round 1
+      needs no join at all (the labels are the ids).
+    - **Broadcast what Catalyst would broadcast** (loop). The incidence,
+      the per-round group table and the label table are lineage-cut with
       :func:`materialize`, and a checkpoint keeps the size estimate of
       the plan it replaced (15.6 GB for the 15,000-row sf0.1 label
       table), so Catalyst alone plans every join of every round as a
@@ -1120,18 +1180,99 @@ def min_label_components(
       rows × width fits under ``spark.sql.autoBroadcastJoinThreshold``,
       else the joins stay shuffle joins. Broadcast, the incidence is
       joined in place and each round shuffles only partial aggregates —
-      O(|groups| + |nodes|) per partition, never O(|incidence|).
+      O(|groups| + |nodes|) per partition, never O(|incidence|). The
+      incidence is semi-joined to ``node_ids`` once, before the loop,
+      under the same broadcast decision."""
+    spark = node_ids.sparkSession
+    cap = _collect_row_cap(spark, 16)
+    inc = inc.select("id", "gk")
+    both = node_ids.select(
+        "id", F.lit(None).cast(inc.schema["gk"].dataType).alias("gk")
+    ).unionByName(inc.filter(F.col("gk").isNotNull()))
+    with _job_description(spark, "min_label_components/collect"):
+        try:
+            table = both.toArrow()
+        except Exception as e:  # Spark's own abort of an oversized collect
+            if "spark.driver.maxResultSize" not in str(e):
+                raise
+            table = None
+    if table is not None and (cap is None or table.num_rows <= cap):
+        return spark.createDataFrame(_components_on_driver(table, max_iterations))
+    del table
+    return _components_loop(node_ids, inc, max_iterations)
 
-    Incidence rows whose id is not in ``node_ids`` are dropped once,
-    before the loop (a semi join under the same broadcast decision)."""
+
+def _dense_codes(values: pa.ChunkedArray) -> np.ndarray:
+    """Codes 0..k−1 of ``values``: equal values, equal codes (a struct
+    compares field by field)."""
+    if pa.types.is_struct(values.type):
+        codes = np.zeros(len(values), dtype=np.int64)
+        for field in values.flatten():
+            c = _dense_codes(field)
+            codes = _dense_codes(pa.chunked_array([codes * (c.max(initial=0) + 1) + c]))
+        return codes
+    encoded = values.dictionary_encode(null_encoding="encode").combine_chunks()
+    return encoded.indices.to_numpy()
+
+
+def _components_on_driver(table: pa.Table, max_iterations: int) -> pa.Table:
+    """f applied in numpy to a collected (id, gk) union whose NULL-gk rows
+    are the node ids — the driver path of :func:`min_label_components`.
+    Labels are indices into the sorted distinct node ids, so the least
+    index is the least id."""
+    id_type, gk = table.schema.field("id").type, table.column("gk")
+    node_rows = gk.is_null().to_numpy(zero_copy_only=False)
+    all_ids = table.column("id").to_numpy()
+    del table
+    ids = np.unique(all_ids[node_rows])
+    pos = np.searchsorted(ids, all_ids)
+    # semi join: incidence rows whose id is a node
+    keep = pos < len(ids)
+    keep[keep] = ids[pos[keep]] == all_ids[keep]
+    node_pos = pos[node_rows]
+    keep &= ~node_rows
+    index = np.int32 if len(pos) < 2**31 else np.int64
+    member = pos[keep].astype(index)
+    group = _dense_codes(gk.filter(pa.array(keep))).astype(index)
+    del gk, all_ids, pos, keep
+
+    label = np.arange(len(ids), dtype=index)
+
+    def group_min_max():
+        member_label = label[member]
+        lo = np.full(group.max(initial=-1) + 1, len(ids), dtype=index)
+        hi = np.full(len(lo), -1, dtype=index)
+        np.minimum.at(lo, group, member_label)
+        np.maximum.at(hi, group, member_label)
+        return lo, hi
+
+    lo, hi = group_min_max()
+    applied = 0
+    while (lo < hi).any() and applied < max_iterations:
+        # a member's label is ≥ its groups' minima: least() is the group min
+        np.minimum.at(label, member, lo[group])
+        applied += 1
+        if applied < max_iterations:
+            lo, hi = group_min_max()
+
+    node_label = label[node_pos]
+    sizes = np.bincount(node_label, minlength=len(ids))
+    return pa.table(
+        {
+            "id": pa.array(ids[node_pos], type=id_type),
+            "component": pa.array(ids[node_label], type=id_type),
+            "component_size": sizes[node_label].astype(np.int64),
+        }
+    )
+
+
+def _components_loop(
+    node_ids: DataFrame, inc: DataFrame, max_iterations: int
+) -> DataFrame:
+    """The above-cap path of :func:`min_label_components`."""
     from pyspark.sql.window import Window
 
     spark = node_ids.sparkSession
-    node_ids = node_ids.select("id").transform(materialize)
-    small_labels = _broadcast_fits(spark, node_ids.count(), 16)
-    inc = inc.join(
-        _broadcast_if(node_ids, small_labels), "id", "left_semi"
-    ).transform(materialize)
 
     def group_labels(members: DataFrame, label: str) -> DataFrame:
         return (
@@ -1141,23 +1282,32 @@ def min_label_components(
         )
 
     is_mixed = F.col("lo") < F.col("hi")
-    groups = group_labels(inc, "id")
-    n_groups, n_mixed = groups.agg(F.count("*"), F.count(F.when(is_mixed, 1))).first()
+    with _job_description(spark, "min_label_components/round=0"):
+        node_ids = node_ids.select("id").transform(materialize)
+        small_labels = _broadcast_fits(spark, node_ids.count(), 16)
+        inc = inc.join(
+            _broadcast_if(node_ids, small_labels), "id", "left_semi"
+        ).transform(materialize)
+        groups = group_labels(inc, "id")
+        n_groups, n_mixed = groups.agg(
+            F.count("*"), F.count(F.when(is_mixed, 1))
+        ).first()
     small_groups = _broadcast_fits(spark, n_groups, 16)
     labels, applied = None, 0
     while n_mixed and applied < max_iterations:
-        labels = (
-            inc.join(_broadcast_if(groups.select("gk", "lo"), small_groups), "gk")
-            .groupBy("id")
-            .agg(F.min("lo").alias("label"))
-            .transform(materialize)
-        )
-        applied += 1
-        if applied < max_iterations:
-            groups = group_labels(
-                inc.join(_broadcast_if(labels, small_labels), "id"), "label"
+        with _job_description(spark, f"min_label_components/round={applied + 1}"):
+            labels = (
+                inc.join(_broadcast_if(groups.select("gk", "lo"), small_groups), "gk")
+                .groupBy("id")
+                .agg(F.min("lo").alias("label"))
+                .transform(materialize)
             )
-            n_mixed = groups.filter(is_mixed).count()
+            applied += 1
+            if applied < max_iterations:
+                groups = group_labels(
+                    inc.join(_broadcast_if(labels, small_labels), "id"), "label"
+                )
+                n_mixed = groups.filter(is_mixed).count()
 
     component = F.col("id")
     if labels is not None:

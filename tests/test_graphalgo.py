@@ -521,7 +521,30 @@ def test_lumped_pagerank_across_checkpoint_cut(spark):
 # --- min_label_components degenerate incidences (r9 fused-round-1 pins) -------
 
 
-def _components(spark, ids, inc_rows, max_iterations=20):
+_COLLECT_ROW_CAP = graphalgo._collect_row_cap
+
+
+def _refuse(path):
+    def run(*args):
+        pytest.fail(f"{path} ran, but the other path was forced")
+
+    return run
+
+
+def _force_loop(monkeypatch):
+    """A zero row cap: every input is above one collect."""
+    monkeypatch.setattr(graphalgo, "_collect_row_cap", lambda spark, width: 0)
+    monkeypatch.setattr(
+        graphalgo, "_components_on_driver", _refuse("_components_on_driver")
+    )
+
+
+def _force_driver(monkeypatch):
+    """The session's maxResultSize fits every hand-built input here."""
+    monkeypatch.setattr(graphalgo, "_components_loop", _refuse("_components_loop"))
+
+
+def _components_once(spark, ids, inc_rows, max_iterations=20):
     node_ids = spark.createDataFrame([(i,) for i in ids], "id long")
     inc = spark.createDataFrame(
         inc_rows or [], "id long, gk string"
@@ -532,6 +555,18 @@ def _components(spark, ids, inc_rows, max_iterations=20):
             node_ids, inc, max_iterations
         ).collect()
     }
+
+
+def _components(spark, ids, inc_rows, max_iterations=20):
+    """min_label_components on both of its plans — the driver path and
+    the forced loop — which must agree; returns that one result."""
+    got = []
+    for force in (_force_driver, _force_loop):
+        with pytest.MonkeyPatch.context() as mp:
+            force(mp)
+            got.append(_components_once(spark, ids, inc_rows, max_iterations))
+    assert got[0] == got[1]
+    return got[0]
 
 
 def test_components_all_singleton_groups(spark):
@@ -652,9 +687,11 @@ def test_components_iteration_cap_is_not_a_fixpoint(spark):
     assert _components_sql(ids, inc, cap) == want
 
 
-def test_graph_components_shuffle_join_branch(spark, sf_dir):
+def test_graph_components_shuffle_join_branch(spark, sf_dir, monkeypatch):
     """With broadcasting disabled the loop keeps shuffle joins and still
-    returns the union-find components."""
+    returns the union-find components (the loop is forced: this input
+    fits one collect)."""
+    _force_loop(monkeypatch)
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -690,6 +727,128 @@ def test_component_incidence_keys_attribute_and_value(spark):
         for r in graphalgo.min_label_components(nodes.select("id"), inc, 20).collect()
     }
     assert got == {1: (1, 2), 3: (1, 2), 2: (2, 1), 4: (4, 2), 5: (4, 2)}
+
+
+def _max_result_size(monkeypatch, value):
+    """Make ``_collect_row_cap`` read ``spark.driver.maxResultSize`` =
+    ``value`` (a core setting, fixed once the session starts)."""
+    from types import SimpleNamespace
+
+    conf = SimpleNamespace(get=lambda key, default: value)
+    session = SimpleNamespace(sparkContext=SimpleNamespace(getConf=lambda: conf))
+    monkeypatch.setattr(
+        graphalgo,
+        "_collect_row_cap",
+        lambda spark, width: _COLLECT_ROW_CAP(session, width),
+    )
+
+
+def _path_spy(monkeypatch):
+    """Records which of the two plans each min_label_components call ran."""
+    ran = []
+    for path in ("_components_on_driver", "_components_loop"):
+        def spy(*args, _real=getattr(graphalgo, path), _path=path):
+            ran.append(_path)
+            return _real(*args)
+
+        monkeypatch.setattr(graphalgo, path, spy)
+    return ran
+
+
+def test_components_fits_rule_boundary(spark, monkeypatch):
+    """(node rows + incidence rows) × 16 B = maxResultSize takes the driver
+    path; one row more (a duplicate incidence row, which changes no label)
+    takes the loop, with the same output; 0 means unlimited."""
+    ids = [1, 2, 3, 4, 5]
+    inc = [(1, "a"), (2, "a"), (2, "b"), (3, "b"), (5, "c"), (9, "c")]
+    rows = len(ids) + len(inc)
+    want = _min_label_reference(ids, inc, 20)
+    ran = _path_spy(monkeypatch)
+    _max_result_size(monkeypatch, str(rows * 16))
+    assert _components_once(spark, ids, inc) == want
+    assert _components_once(spark, ids, inc + inc[:1]) == want
+    _max_result_size(monkeypatch, "0")
+    assert _components_once(spark, ids, inc + inc[:1]) == want
+    assert ran == ["_components_on_driver", "_components_loop", "_components_on_driver"]
+
+
+def test_collect_row_cap_reads_max_result_size(spark, monkeypatch):
+    assert graphalgo._collect_row_cap(spark, 16) == (1 << 30) // 16  # Spark's 1g
+    _max_result_size(monkeypatch, "2m")
+    assert graphalgo._collect_row_cap(spark, 16) == (2 << 20) // 16
+    _max_result_size(monkeypatch, "0")
+    assert graphalgo._collect_row_cap(spark, 16) is None
+
+
+def test_components_oversized_collect_takes_the_loop(spark, monkeypatch):
+    """Spark's own abort of a collect over maxResultSize (the input fits by
+    row count but its keys are wide) sends the input to the loop; any
+    other collect failure propagates."""
+    ids, inc = [1, 2, 3], [(1, "a"), (2, "a"), (3, "b")]
+    want = _min_label_reference(ids, inc, 20)
+    frame = type(spark.range(1))
+    ran = _path_spy(monkeypatch)
+
+    def aborted(self):
+        raise RuntimeError(
+            "Total size of serialized results of 1 tasks (1049.2 KiB) is "
+            "bigger than spark.driver.maxResultSize (1024.0 KiB)"
+        )
+
+    monkeypatch.setattr(frame, "toArrow", aborted)
+    assert _components_once(spark, ids, inc) == want
+    assert ran == ["_components_loop"]
+
+    def broken(self):
+        raise RuntimeError("disk on fire")
+
+    monkeypatch.setattr(frame, "toArrow", broken)
+    with pytest.raises(RuntimeError, match="disk on fire"):
+        _components_once(spark, ids, inc)
+
+
+def test_components_label_their_jobs_and_restore_the_description(
+    spark, monkeypatch
+):
+    """The driver path's jobs are labelled ``collect``, the loop's
+    ``round=k`` (the collect that found the input too big comes first);
+    the caller's description is back afterwards."""
+    sc = spark.sparkContext
+    seen = []
+    real = sc.setJobDescription
+
+    def record(value):
+        seen.append(value)
+        real(value)
+
+    monkeypatch.setattr(sc, "setJobDescription", record)
+    sc.setLocalProperty("spark.job.description", "caller")
+    try:
+        # a 3-chain: two applications, then the stop
+        _components(spark, [1, 2, 3], [(1, "a"), (2, "a"), (2, "b"), (3, "b")])
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert [v for v in seen if v != "caller"] == [
+        "min_label_components/collect",
+        "min_label_components/collect",
+        "min_label_components/round=0",
+        "min_label_components/round=1",
+        "min_label_components/round=2",
+    ]
+
+
+def test_graph_components_warm_job_budget(spark, sf_dir):
+    """The whole call, collect included, stays a handful of jobs: the
+    per-round loop cannot quietly return for an input of this size."""
+    from tests.test_load_table import _jobs_of
+
+    def run():
+        graphalgo.q_graph_components(spark, sf_dir).collect()
+
+    run()  # warm
+    jobs = _jobs_of(spark, run, "budget_graph_components")
+    assert 0 < len(jobs) <= 10, len(jobs)
 
 
 def test_factored_pagerank_non_nested_pair_equals_edge_walk(spark, sf_dir):

@@ -266,6 +266,20 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+def test_connected_components_iteration_cap_moves_labels_one_hop_a_round(spark):
+    """``max_iterations`` bounds the applications of the update: on a
+    path each one moves every label one hop, so two leave the far end
+    short of the component's min id."""
+    from graphdb_neo4j_spark.llmdata.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (4, 5)], "a long, b long")
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(pairs, max_iterations=2).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 2, 5: 3}
+
+
 def test_sequence_pack_contiguous_and_boundary_flags(spark, sf_dir):
     """Packing is a contiguous token stream: per-doc start offsets chain
     exactly (start_{i+1} = start_i + n_tokens_i), and spans_boundary
