@@ -724,7 +724,7 @@ def connected_components(
     over the pair, so f(L)(v) = least(L(v), min over v's neighbours) —
     each application moves every label one hop — and the homogeneity stop
     fires exactly when an application would change no label, so at most
-    ``max_iterations`` applications run, as before. Near-dup pair graphs
+    ``max_iterations`` applications run. Near-dup pair graphs
     are small next to one collect, so this takes the operator's
     driver path; the broadcast loop serves larger ones.
     """

@@ -45,6 +45,7 @@ from functools import reduce
 
 import numpy as np
 import pyarrow as pa
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1192,7 +1193,7 @@ def min_label_components(
     with _job_description(spark, "min_label_components/collect"):
         try:
             table = both.toArrow()
-        except Exception as e:  # Spark's own abort of an oversized collect
+        except Py4JJavaError as e:  # Spark's own abort of an oversized collect
             if "spark.driver.maxResultSize" not in str(e):
                 raise
             table = None

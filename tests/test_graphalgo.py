@@ -784,26 +784,29 @@ def test_components_oversized_collect_takes_the_loop(spark, monkeypatch):
     """Spark's own abort of a collect over maxResultSize (the input fits by
     row count but its keys are wide) sends the input to the loop; any
     other collect failure propagates."""
+    from py4j.protocol import Py4JJavaError
+
     ids, inc = [1, 2, 3], [(1, "a"), (2, "a"), (3, "b")]
     want = _min_label_reference(ids, inc, 20)
     frame = type(spark.range(1))
     ran = _path_spy(monkeypatch)
 
-    def aborted(self):
-        raise RuntimeError(
-            "Total size of serialized results of 1 tasks (1049.2 KiB) is "
-            "bigger than spark.driver.maxResultSize (1024.0 KiB)"
-        )
+    def failing(message):
+        def to_arrow(self):
+            cause = spark.sparkContext._jvm.org.apache.spark.SparkException(message)
+            raise Py4JJavaError("An error occurred while calling getResult.\n", cause)
 
-    monkeypatch.setattr(frame, "toArrow", aborted)
+        return to_arrow
+
+    monkeypatch.setattr(frame, "toArrow", failing(
+        "Total size of serialized results of 1 tasks (1049.2 KiB) is "
+        "bigger than spark.driver.maxResultSize (1024.0 KiB)"
+    ))
     assert _components_once(spark, ids, inc) == want
     assert ran == ["_components_loop"]
 
-    def broken(self):
-        raise RuntimeError("disk on fire")
-
-    monkeypatch.setattr(frame, "toArrow", broken)
-    with pytest.raises(RuntimeError, match="disk on fire"):
+    monkeypatch.setattr(frame, "toArrow", failing("disk on fire"))
+    with pytest.raises(Py4JJavaError, match="disk on fire"):
         _components_once(spark, ids, inc)
 
 
