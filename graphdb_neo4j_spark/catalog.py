@@ -163,7 +163,7 @@ register(
     "pagerank_factored",
     graphalgo.q_pagerank_factored,
     graphalgo.pagerank_oracle_sql(),  # same fixpoint — identical unrolled CTE
-    bench=True,  # O(N)/iter clique-factored form — the scale path
+    bench=True,  # clique-factored: O(|A|·|B|) a round, on the driver
 )
 
 # --- rows-only queries with pytest invariants (keep a driver rows row) -------

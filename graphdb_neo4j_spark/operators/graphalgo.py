@@ -25,9 +25,10 @@ Scale shapes:
 - **Clique-factored PageRank iterates on classes, not nodes.** On the
   SAME_COLLEGE ∪ SAME_BOARD graph every node of an (a, b) attribute pair
   has the same degree and rank, so :func:`pagerank_clique_factored` and
-  :func:`pagerank_ppr_clique_factored` loop over the (a, b) class table
-  (PPR seeds are classes of their own): O(|A|·|B|) per round, all rounds
-  in one small plan, one broadcast join back to the N nodes at the end.
+  :func:`pagerank_ppr_clique_factored` iterate on the (a, b) class table
+  (PPR seeds are classes of their own): one Arrow collect of that table,
+  every round in numpy on the driver at O(|A|·|B|) a round, one broadcast
+  join back to the N nodes at the end.
 - **Connected components pick their plan from the input's size.**
   Min-label propagation runs on the node↔group incidence, built once
   with long group keys. When node ids and incidence fit one collect
@@ -53,8 +54,8 @@ from graphdb_neo4j_spark.graph import ATTRIBUTE_EDGE_TYPES
 from graphdb_neo4j_spark.sources.tpch import (
     CUST_PARTS_CTE,
     NODES_CTE,
+    _customer_part_pairs,
     customer_interest_pairs,
-    customer_interest_pairs_raw,
     customer_nodes,
 )
 from graphdb_neo4j_spark.session import _parse_bytes_conf, materialize
@@ -273,54 +274,17 @@ def _pagerank_classes(
     :func:`_lumped_pagerank`. The key is (a, b), plus the node id for PPR
     seeds (each seed is its own class); NULL and '' fold into one "no
     clique" key per attribute, so there are at most (|A|+1)(|B|+1) +
-    |seeds| classes. A class row carries its member count ``k``, teleport
-    ``e`` and shared degree deg = n_A + n_B − n_AB − 1."""
-    a, b = attrs
+    |seeds| classes. A class row is its key and member count ``k``."""
     keyed = nodes.select(
         "id",
         # NULL != '' is NULL, so both fold into the NULL "no clique" key
         *[F.when(F.col(x) != "", F.col(x)).alias(x) for x in attrs],
     )
-    keys = [a, b]
-    if seed_ids is None:
-        e = F.lit(1.0)
-    else:
+    keys = list(attrs)
+    if seed_ids is not None:
         keyed = keyed.withColumn("s", F.when(F.col("id").isin(seed_ids), F.col("id")))
         keys.append("s")
-        e = F.when(F.col("s").isNotNull(), F.lit(1.0 / len(seed_ids))).otherwise(
-            F.lit(0.0)
-        )
-    n_a, n_b, n_ab = _group_sums(attrs, F.lit(1))
-    cls = (
-        keyed.groupBy(*keys)
-        .agg(F.count("*").alias("k"))
-        .coalesce(1)
-        .select(*keys, "k", e.alias("e"), (n_a + n_b - n_ab - 1).alias("deg"))
-    )
-    return keyed, keys, cls
-
-
-def _group_sums(attrs: tuple[str, str], x):
-    """(S_A, S_B, S_AB) of the per-member value ``x``: window sums of
-    k·x over the classes sharing the key; the "no clique" key is no
-    group, so there the sum is the member's own ``x``."""
-    from pyspark.sql.window import Window
-
-    a, b = attrs
-    no_a, no_b = F.col(a).isNull(), F.col(b).isNull()
-    return [
-        F.when(no_group, x).otherwise(F.sum(F.col("k") * x).over(w))
-        for w, no_group in (
-            (Window.partitionBy(a), no_a),
-            (Window.partitionBy(b), no_b),
-            (Window.partitionBy(a, b), no_a | no_b),
-        )
-    ]
-
-
-# rounds per plan before the class table is checkpointed: ~60 chained
-# rounds (three windows each) overflow the task's stack
-LUMP_ROUNDS_PER_PLAN = 10
+    return keyed, keys, keyed.groupBy(*keys).agg(F.count("*").alias("k"))
 
 
 def _lumped_pagerank(
@@ -332,30 +296,58 @@ def _lumped_pagerank(
 ) -> DataFrame:
     """(id, rank) of the factored recurrence iterated on the class table:
     nodes of one class share degree and starting rank, so they share the
-    rank of every round. With c = r/deg and S_X the group sums of c,
+    rank of every round. With c = r/deg and S_X the group sums of k·c
+    over the classes sharing the attribute key X,
 
         r' = (1−d)·e + d·(S_A + S_B − S_AB − c)
 
-    (e ≡ 1 for PageRank, 1/|S| on the seeds for PPR). The table is tiny,
-    so rounds chain in one plan on one partition, checkpointed only every
-    :data:`LUMP_ROUNDS_PER_PLAN` rounds; one broadcast join maps the
-    class ranks back to the nodes."""
+    (e ≡ 1 for PageRank, 1/|S| on the seeds for PPR), and the shared
+    degree is the same sums of 1: deg = n_A + n_B − n_AB − 1. The "no
+    clique" key is no group, so there a sum is the member's own value.
+
+    The class table is tiny by construction, so it is collected once as
+    Arrow (jobs labelled ``lumped_pagerank/classes``) and every round runs
+    in numpy on the driver — O(|A|·|B|) a round, no Spark job; one
+    broadcast join maps the class ranks back to the nodes. A class table
+    above ``spark.driver.maxResultSize`` surfaces as Spark's own abort of
+    that collect: such a table means the attributes barely factor, and
+    the edge-walk :func:`pagerank` is the operator to run there."""
+    spark = nodes.sparkSession
     keyed, keys, cls = _pagerank_classes(nodes, attrs, seed_ids)
-    cls = cls.withColumn("r", F.col("e"))
-    # deg 0 = isolated (no clique on either attribute): pushes nothing,
-    # and guards the ANSI divide-by-zero
-    c = F.when(F.col("deg") > 0, F.col("r") / F.col("deg")).otherwise(F.lit(0.0))
-    s_a, s_b, s_ab = _group_sums(attrs, c)
-    r_next = F.lit(1.0 - damping) * F.col("e") + F.lit(damping) * (
-        s_a + s_b - s_ab - c
+    with _job_description(spark, "lumped_pagerank/classes"):
+        table = cls.toArrow()
+    k = table.column("k").to_numpy().astype(np.float64)
+    code_a, code_b = (_dense_codes(table.column(x)).astype(np.int64) for x in attrs)
+    _, code_ab = np.unique(
+        code_a * (code_b.max(initial=0) + 1) + code_b, return_inverse=True
     )
-    for i in range(1, iterations + 1):
-        cls = cls.select(*keys, "k", "e", "deg", r_next.alias("r"))
-        if i % LUMP_ROUNDS_PER_PLAN == 0 and i < iterations:
-            # the checkpoint forgets its single partition; without the
-            # coalesce every window below it would plan an exchange
-            cls = cls.transform(materialize, eager=True).coalesce(1)
-    ranks = cls.select(*[F.col(x).alias("_" + x) for x in keys], "r")
+    no_a, no_b = (
+        table.column(x).is_null().to_numpy(zero_copy_only=False) for x in attrs
+    )
+    groups = ((code_a, no_a), (code_b, no_b), (code_ab, no_a | no_b))
+
+    def group_sums(x):
+        return [
+            np.where(no_group, x, np.bincount(codes, k * x)[codes])
+            for codes, no_group in groups
+        ]
+
+    n_a, n_b, n_ab = group_sums(np.ones(len(k)))
+    deg = n_a + n_b - n_ab - 1
+    if seed_ids is None:
+        e = np.ones(len(k))
+    else:
+        seeded = table.column("s").is_valid().to_numpy(zero_copy_only=False)
+        e = np.where(seeded, 1.0 / len(seed_ids), 0.0)
+    r = e
+    for _ in range(iterations):
+        # deg 0 = isolated (no clique on either attribute): pushes nothing
+        c = np.divide(r, deg, out=np.zeros(len(k)), where=deg > 0)
+        s_a, s_b, s_ab = group_sums(c)
+        r = (1.0 - damping) * e + damping * (s_a + s_b - s_ab - c)
+    ranks = spark.createDataFrame(
+        pa.table({**{"_" + x: table.column(x) for x in keys}, "r": r})
+    )
     on = [keyed[x].eqNullSafe(ranks["_" + x]) for x in keys]
     return keyed.join(F.broadcast(ranks), on).select(
         "id", F.col("r").alias("rank")
@@ -381,10 +373,12 @@ def pagerank_clique_factored(
     is pure group arithmetic: d_i = n_A + n_B − n_AB − 1.
 
     Nodes sharing (a_i, b_i) keep equal ranks, so the loop runs on the
-    (a, b) class table (:func:`_lumped_pagerank`): O(|A|·|B|) per
-    iteration instead of O(N), let alone the edge walk's O(E) = Θ(N²/k);
-    N enters only in the class count and the final join-back. pytest
-    pins exact agreement with the edge-materializing :func:`pagerank`.
+    (a, b) class table (:func:`_lumped_pagerank`), collected once and
+    iterated in numpy on the driver: O(|A|·|B|) per iteration and no
+    Spark job, instead of O(N), let alone the edge walk's O(E) = Θ(N²/k);
+    N enters only in the class-table aggregation and the final join-back.
+    pytest pins exact agreement with the edge-materializing
+    :func:`pagerank`.
     """
     return _lumped_pagerank(nodes, attrs, iterations, damping)
 
@@ -459,8 +453,9 @@ def q_pagerank_factored(
     spark: SparkSession, sf_dir: str, iterations: int = 5
 ) -> DataFrame:
     """Clique-factored PageRank over the same SAME_COLLEGE ∪ SAME_BOARD
-    graph as :func:`q_pagerank` — identical answers, O(|A|·|B|) per
-    iteration (college × board classes) plus one O(N) join-back."""
+    graph as :func:`q_pagerank` — identical answers: one O(N) aggregation
+    to the college × board class table, its rounds on the driver at
+    O(|A|·|B|) each, and one O(N) join-back."""
     return pagerank_clique_factored(
         customer_nodes(spark, sf_dir), iterations=iterations
     ).select("id", F.round("rank", 6).alias("rank"))
@@ -539,7 +534,8 @@ def pagerank_ppr_clique_factored(
     inclusion–exclusion (recv = S_A + S_B − S_AB − own term, degree from
     group sizes) with the teleport mass pinned to ``seed_ids``:
     r' = (1−d)·e + d·recv, e = 1/|S| on seeds. Each seed is its own
-    class: O(|A|·|B| + |S|) per iteration instead of O(N); pytest pins
+    class: O(|A|·|B| + |S|) per iteration on the driver instead of O(N)
+    (:func:`_lumped_pagerank`); pytest pins
     exact agreement with :func:`pagerank_personalized` on the same
     graph."""
     return _lumped_pagerank(nodes, attrs, iterations, damping, seed_ids)
@@ -1044,7 +1040,7 @@ def q_graph_components(
     checkpoint); a larger incidence takes the broadcast-in-place loop,
     built once and never shuffled inside the loop."""
     nodes = customer_nodes(spark, sf_dir)
-    inc = component_incidence(nodes, customer_interest_pairs_raw(spark, sf_dir))
+    inc = component_incidence(nodes, _customer_part_pairs(spark, sf_dir))
     return min_label_components(nodes.select("id"), inc, max_iterations)
 
 
@@ -1060,7 +1056,8 @@ def component_incidence(nodes: DataFrame, interest_pairs: DataFrame) -> DataFram
     two attributes differ in the ordinal, so the keys are exact — a
     college and a board with the same value stay two groups — and, for
     the non-negative customer keys, negative: disjoint from the
-    (positive) part keys the interests keep, cast back to a long.
+    (positive) part keys the interests keep as longs (string interests
+    are cast; long ones, as :func:`q_graph_components` passes, are not).
     Interests are NOT deduplicated: the min-label update is idempotent,
     so duplicate rows change no label and the ``distinct`` shuffle is
     saved."""

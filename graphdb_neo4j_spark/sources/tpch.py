@@ -156,6 +156,23 @@ nodes AS (
 """
 
 
+def _customer_part_pairs(
+    spark: SparkSession, sf_dir: str, part_keys: list[int] | None = None
+) -> DataFrame:
+    """(id, interest: long) pairs straight off the fact join, the interest
+    being the part key itself — NOT deduplicated. Callers that key on the
+    part key (connected components) take these and skip a string round
+    trip; see :func:`customer_interest_pairs_raw` for ``part_keys``."""
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    if part_keys is not None:
+        lineitem = lineitem.filter(F.col("l_partkey").isin(part_keys))
+    return orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey).select(
+        F.col("o_custkey").cast("long").alias("id"),
+        F.col("l_partkey").cast("long").alias("interest"),
+    )
+
+
 def customer_interest_pairs_raw(
     spark: SparkSession, sf_dir: str, part_keys: list[int] | None = None
 ) -> DataFrame:
@@ -172,14 +189,8 @@ def customer_interest_pairs_raw(
     string column cannot reach parquet), so the fact join runs over the
     matching sliver instead of the whole lineitem table.
     """
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    if part_keys is not None:
-        lineitem = lineitem.filter(F.col("l_partkey").isin(part_keys))
-    return orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey).select(
-        F.col("o_custkey").cast("long").alias("id"),
-        F.col("l_partkey").cast("string").alias("interest"),
-    )
+    pairs = _customer_part_pairs(spark, sf_dir, part_keys)
+    return pairs.select("id", F.col("interest").cast("string").alias("interest"))
 
 
 def customer_interest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -503,19 +503,64 @@ def test_lumped_class_table_is_bounded_on_null_heavy_nodes(spark):
     )
 
 
-def test_lumped_pagerank_across_checkpoint_cut(spark):
-    """More rounds than one chained plan holds: the checkpointed class
-    table continues the same recurrence as the edge walk."""
-    rows = [(1, "mit", "cbse"), (2, "mit", "icse"), (3, "iit", "cbse"),
-            (4, "iit", "cbse"), (5, None, "icse"), (6, "mit", "")]
-    nodes = spark.createDataFrame(rows, "id long, college string, board string")
-    iters = 2 * graphalgo.LUMP_ROUNDS_PER_PLAN + 1
+_ROUNDS_ROWS = [(1, "mit", "cbse"), (2, "mit", "icse"), (3, "iit", "cbse"),
+                (4, "iit", "cbse"), (5, None, "icse"), (6, "mit", "")]
+
+
+def test_lumped_ppr_many_rounds_equals_edge_walk(spark):
+    """21 rounds on the class table continue the same recurrence as the
+    edge walk."""
+    nodes = spark.createDataFrame(
+        _ROUNDS_ROWS, "id long, college string, board string"
+    )
     _assert_same_ranks(
-        graphalgo.pagerank_ppr_clique_factored(nodes, [3], iterations=iters),
+        graphalgo.pagerank_ppr_clique_factored(nodes, [3], iterations=21),
         graphalgo.pagerank_personalized(
-            nodes, _clique_edges(nodes), [3], iterations=iters
+            nodes, _clique_edges(nodes), [3], iterations=21
         ),
     )
+
+
+def test_lumped_pagerank_rounds_submit_no_jobs(spark):
+    """The rounds run on the driver: a warm call submits as many jobs at
+    40 rounds as at 5, and its executed plan has no window."""
+    from tests.test_load_table import _jobs_of
+
+    nodes = spark.createDataFrame(
+        _ROUNDS_ROWS, "id long, college string, board string"
+    )
+
+    def run(iterations):
+        ranks = graphalgo.pagerank_clique_factored(nodes, iterations=iterations)
+        ranks.collect()
+        return ranks
+
+    run(5)  # warm
+    few = _jobs_of(spark, lambda: run(5), "lumped_rounds_5")
+    many = _jobs_of(spark, lambda: run(40), "lumped_rounds_40")
+    assert 0 < len(few) == len(many), (few, many)
+    plan = run(5)._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+
+
+def test_lumped_pagerank_edge_cases(spark):
+    """No nodes give no rows; 0 rounds give the teleport vector e (1.0 on
+    every node for PageRank, 1/|S| on the seeds for PPR); a seed that is
+    no node gives 0.0 everywhere."""
+    schema = "id long, college string, board string"
+    empty = spark.createDataFrame([], schema)
+    assert graphalgo.pagerank_clique_factored(empty).collect() == []
+    assert graphalgo.pagerank_ppr_clique_factored(empty, [1]).collect() == []
+
+    nodes = spark.createDataFrame(_ROUNDS_ROWS, schema)
+    ids = [r[0] for r in _ROUNDS_ROWS]
+    ranks = graphalgo.pagerank_clique_factored(nodes, iterations=0).collect()
+    assert {r["id"]: r["rank"] for r in ranks} == dict.fromkeys(ids, 1.0)
+    ranks = graphalgo.pagerank_ppr_clique_factored(nodes, [1, 3], iterations=0)
+    want = {i: 0.5 if i in (1, 3) else 0.0 for i in ids}
+    assert {r["id"]: r["rank"] for r in ranks.collect()} == want
+    ranks = graphalgo.pagerank_ppr_clique_factored(nodes, [99], iterations=5)
+    assert {r["id"]: r["rank"] for r in ranks.collect()} == dict.fromkeys(ids, 0.0)
 
 
 # --- min_label_components degenerate incidences (r9 fused-round-1 pins) -------
@@ -810,12 +855,9 @@ def test_components_oversized_collect_takes_the_loop(spark, monkeypatch):
         _components_once(spark, ids, inc)
 
 
-def test_components_label_their_jobs_and_restore_the_description(
-    spark, monkeypatch
-):
-    """The driver path's jobs are labelled ``collect``, the loop's
-    ``round=k`` (the collect that found the input too big comes first);
-    the caller's description is back afterwards."""
+def _descriptions_during(spark, monkeypatch, fn):
+    """The job descriptions ``fn`` sets, asserting that the caller's
+    description is back afterwards."""
     sc = spark.sparkContext
     seen = []
     real = sc.setJobDescription
@@ -827,18 +869,70 @@ def test_components_label_their_jobs_and_restore_the_description(
     monkeypatch.setattr(sc, "setJobDescription", record)
     sc.setLocalProperty("spark.job.description", "caller")
     try:
-        # a 3-chain: two applications, then the stop
-        _components(spark, [1, 2, 3], [(1, "a"), (2, "a"), (2, "b"), (3, "b")])
+        fn()
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.job.description", None)
-    assert [v for v in seen if v != "caller"] == [
+    return [v for v in seen if v != "caller"]
+
+
+def test_components_label_their_jobs_and_restore_the_description(
+    spark, monkeypatch
+):
+    """The driver path's jobs are labelled ``collect``, the loop's
+    ``round=k`` (the collect that found the input too big comes first);
+    the caller's description is back afterwards."""
+    # a 3-chain: two applications, then the stop
+    seen = _descriptions_during(
+        spark,
+        monkeypatch,
+        lambda: _components(
+            spark, [1, 2, 3], [(1, "a"), (2, "a"), (2, "b"), (3, "b")]
+        ),
+    )
+    assert seen == [
         "min_label_components/collect",
         "min_label_components/collect",
         "min_label_components/round=0",
         "min_label_components/round=1",
         "min_label_components/round=2",
     ]
+
+
+def test_lumped_pagerank_labels_its_collect_and_restores_the_description(
+    spark, monkeypatch
+):
+    """The class-table collect is labelled; the caller's description is
+    back afterwards."""
+    nodes = spark.createDataFrame(
+        _ROUNDS_ROWS, "id long, college string, board string"
+    )
+    seen = _descriptions_during(
+        spark,
+        monkeypatch,
+        lambda: graphalgo.pagerank_clique_factored(nodes, iterations=3).collect(),
+    )
+    assert seen == ["lumped_pagerank/classes"]
+
+
+def test_graph_components_collect_reads_part_keys_as_longs(
+    spark, sf_dir, monkeypatch
+):
+    """Components key interests by the long part key: the collected input
+    never casts ``l_partkey`` to a string (and back)."""
+    import re
+
+    frame = type(spark.range(1))
+    real, plans = frame.toArrow, []
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self)
+
+    monkeypatch.setattr(frame, "toArrow", spy)
+    graphalgo.q_graph_components(spark, sf_dir).collect()
+    assert len(plans) == 1 and "l_partkey" in plans[0]
+    assert not re.search(r"cast\(l_partkey#\d+L? as string\)", plans[0]), plans[0]
 
 
 def test_graph_components_warm_job_budget(spark, sf_dir):
