@@ -505,14 +505,17 @@ def test_lumped_class_table_is_bounded_on_null_heavy_nodes(spark):
 
 _ROUNDS_ROWS = [(1, "mit", "cbse"), (2, "mit", "icse"), (3, "iit", "cbse"),
                 (4, "iit", "cbse"), (5, None, "icse"), (6, "mit", "")]
+_ROUNDS_SCHEMA = "id long, college string, board string"
+
+
+def _rounds_nodes(spark):
+    return spark.createDataFrame(_ROUNDS_ROWS, _ROUNDS_SCHEMA)
 
 
 def test_lumped_ppr_many_rounds_equals_edge_walk(spark):
     """21 rounds on the class table continue the same recurrence as the
     edge walk."""
-    nodes = spark.createDataFrame(
-        _ROUNDS_ROWS, "id long, college string, board string"
-    )
+    nodes = _rounds_nodes(spark)
     _assert_same_ranks(
         graphalgo.pagerank_ppr_clique_factored(nodes, [3], iterations=21),
         graphalgo.pagerank_personalized(
@@ -526,9 +529,7 @@ def test_lumped_pagerank_rounds_submit_no_jobs(spark):
     40 rounds as at 5, and its executed plan has no window."""
     from tests.test_load_table import _jobs_of
 
-    nodes = spark.createDataFrame(
-        _ROUNDS_ROWS, "id long, college string, board string"
-    )
+    nodes = _rounds_nodes(spark)
 
     def run(iterations):
         ranks = graphalgo.pagerank_clique_factored(nodes, iterations=iterations)
@@ -547,12 +548,11 @@ def test_lumped_pagerank_edge_cases(spark):
     """No nodes give no rows; 0 rounds give the teleport vector e (1.0 on
     every node for PageRank, 1/|S| on the seeds for PPR); a seed that is
     no node gives 0.0 everywhere."""
-    schema = "id long, college string, board string"
-    empty = spark.createDataFrame([], schema)
+    empty = spark.createDataFrame([], _ROUNDS_SCHEMA)
     assert graphalgo.pagerank_clique_factored(empty).collect() == []
     assert graphalgo.pagerank_ppr_clique_factored(empty, [1]).collect() == []
 
-    nodes = spark.createDataFrame(_ROUNDS_ROWS, schema)
+    nodes = _rounds_nodes(spark)
     ids = [r[0] for r in _ROUNDS_ROWS]
     ranks = graphalgo.pagerank_clique_factored(nodes, iterations=0).collect()
     assert {r["id"]: r["rank"] for r in ranks} == dict.fromkeys(ids, 1.0)
@@ -904,9 +904,7 @@ def test_lumped_pagerank_labels_its_collect_and_restores_the_description(
 ):
     """The class-table collect is labelled; the caller's description is
     back afterwards."""
-    nodes = spark.createDataFrame(
-        _ROUNDS_ROWS, "id long, college string, board string"
-    )
+    nodes = _rounds_nodes(spark)
     seen = _descriptions_during(
         spark,
         monkeypatch,
