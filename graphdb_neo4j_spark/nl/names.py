@@ -7,8 +7,9 @@ remaining token against ALL student names with fuzz.ratio ≥ threshold.
 
 The reference refetches every name from the store for EVERY token
 (llm_cypher.py:15-22 called from :26 — an N+1 full scan we must not
-copy). Here the dictionary is collected ONCE from the nodes DataFrame and
-kept driver-side for the life of the service: ``GraphService`` builds one
+copy). Here the dictionary is collected ONCE from the node table (a
+DataFrame, or the driver-side Arrow snapshot) and kept driver-side for the
+life of the service: ``GraphService`` builds one
 :class:`NameDictionary`, reuses it for every ``chat()`` and adds each name
 ``save_student`` writes (an ``NLEngine`` keeps its own). Correction is then pure Python over precomputed lowercased
 names: exact hits are a dict lookup and a length bound skips names that
@@ -22,6 +23,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from graphdb_neo4j_spark.functions.fuzz import indel_ratio
@@ -81,11 +84,17 @@ class NameDictionary:
         self._first.setdefault(name.lower(), name)
 
     @classmethod
-    def from_nodes(cls, nodes: DataFrame) -> "NameDictionary":
-        """Collect the distinct non-null names ONCE (P1 projection —
-        Catalyst prunes the scan to the single column)."""
-        rows = nodes.select("name").where("name IS NOT NULL").distinct().collect()
-        return cls(names=[r["name"] for r in rows])
+    def from_nodes(cls, nodes: DataFrame | pa.Table) -> "NameDictionary":
+        """The distinct non-null names of a node table, ONCE, in ascending-id
+        first-occurrence order, so :meth:`best`'s first-wins tie-break does
+        not depend on how the names were collected. A Spark node table is
+        collected as (id, name) in one Arrow collect (Catalyst prunes the
+        scan to the two columns); a driver-side one is read in place."""
+        if isinstance(nodes, DataFrame):
+            nodes = nodes.select("id", "name").where("name IS NOT NULL").toArrow()
+        order = pc.sort_indices(nodes, sort_keys=[("id", "ascending")])
+        names = pc.drop_null(nodes.column("name").take(order))
+        return cls(names=pc.unique(names).to_pylist())
 
     def best(self, token: str, threshold: float = 75.0) -> str | None:
         """:func:`fuzzy_best_name` over this dictionary.

@@ -26,6 +26,7 @@ import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from graphdb_neo4j_spark.nl.names import NameDictionary
@@ -235,6 +236,9 @@ class NLEngine:
     # the node table the name dictionary and the templates read; None =
     # the persisted snapshot of ``sf_dir``
     nodes: DataFrame | None = field(default=None, repr=False)
+    # the same node table held on the driver; when set, the dictionary and
+    # the templates read it instead, with no Spark job
+    table: pa.Table | None = field(default=None, repr=False)
     _names: NameDictionary | None = field(default=None, repr=False)
     _views_registered: bool = field(default=False, repr=False)
 
@@ -266,28 +270,43 @@ class NLEngine:
     @property
     def names(self) -> NameDictionary:
         if self._names is None:
-            self._names = NameDictionary.from_nodes(self.node_table())
+            self._names = NameDictionary.from_nodes(
+                self.node_table() if self.table is None else self.table
+            )
         return self._names
 
     # -- stages --------------------------------------------------------------
 
-    def template_dispatch(self, question: str) -> tuple[DataFrame, str] | None:
+    def template_dispatch(
+        self, question: str
+    ) -> tuple[DataFrame | list[dict], str] | None:
         """The two authoritative shapes (llm_cypher.py:86-102) resolved
         DETERMINISTICALLY from the name dictionary — no LLM round-trip —
         and executed through the engine's native operators (pure-pair
-        plans, not graph-wide SQL). Returns (df, display_sql) or None."""
-        from graphdb_neo4j_spark.operators.lookup import single_student_detail
-        from graphdb_neo4j_spark.operators.relationship import two_name_relationship
+        plans, not graph-wide SQL). Returns (result, display_sql) or None;
+        the result is a DataFrame, or over a driver-side ``table`` the
+        rows themselves (dicts, as the DataFrame's ``collect()`` gives)."""
+        from graphdb_neo4j_spark.operators import lookup, relationship
 
         found = self.names.find_in(question)
+        arrow = self.table is not None
+        nodes = self.table if arrow else self.node_table()
         if len(found) == 1:
+            detail = (
+                lookup.single_student_detail_arrow if arrow
+                else lookup.single_student_detail
+            )
             return (
-                single_student_detail(self.node_table(), found[0]),
+                detail(nodes, found[0]),
                 SINGLE_STUDENT_SQL.format(name=found[0].replace("'", "''")),
             )
         if len(found) == 2:
+            pair = (
+                relationship.two_name_relationship_arrow if arrow
+                else relationship.two_name_relationship
+            )
             return (
-                two_name_relationship(self.node_table(), found[0], found[1]),
+                pair(nodes, found[0], found[1]),
                 TWO_NAME_SQL.format(
                     name_a=found[0].replace("'", "''"),
                     name_b=found[1].replace("'", "''"),
@@ -326,10 +345,14 @@ class NLEngine:
 
         templated = self.template_dispatch(corrected)
         if templated is not None:
-            df, display_sql = templated
+            result, display_sql = templated
+            df = None if isinstance(result, list) else result
             reply = None
             if explain:
-                rows = [r.asDict(recursive=True) for r in df.limit(25).collect()]
+                rows = (
+                    result[:25] if df is None
+                    else [r.asDict(recursive=True) for r in df.limit(25).collect()]
+                )
                 reply = explain_result(corrected, rows)
             return NLAnswer(
                 kind="query", question=corrected, sql=display_sql, df=df, reply=reply

@@ -10,14 +10,27 @@ Two scorers (functions/fuzz.py): the built-in Levenshtein-ratio form
 (oracle-checkable — DuckDB has levenshtein()) and the exact Indel-ratio
 Pandas UDF (rows-only check; pytest compares it against a brute-force
 reference implementation).
+
+:func:`fuzzy_search_arrow` is the Levenshtein-ratio search over a
+driver-side node table (``pyarrow.Table``), scored in numpy with the same
+arithmetic and rounding.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphdb_neo4j_spark.functions.fuzz import indel_ratio_col, levenshtein_ratio_col
+from graphdb_neo4j_spark.functions.fuzz import (
+    indel_ratio_col,
+    levenshtein_distances,
+    levenshtein_ratio,
+    levenshtein_ratio_col,
+    round_half_up,
+)
 from graphdb_neo4j_spark.sources.tpch import NODES_CTE, node_snapshot
 
 DEFAULT_QUERY = "custoner#000000420"  # deliberate typo of customer#000000420
@@ -33,11 +46,13 @@ def fuzzy_search(
     exact: bool = False,
 ) -> DataFrame:
     """Top-k nodes of the node table whose name fuzzy-matches ``query`` at
-    ≥ threshold."""
+    ≥ threshold. NULL names drop out (``greatest`` skips a NULL length, so
+    the scorer alone would give them 100 against an empty query)."""
     q = F.lit(query.strip().lower())
     scorer = indel_ratio_col if exact else levenshtein_ratio_col
     return (
-        nodes.select(
+        nodes.where(F.col("name").isNotNull())
+        .select(
             "id",
             "name",
             F.round(scorer(F.col("name"), q), 4).alias("score"),
@@ -46,6 +61,34 @@ def fuzzy_search(
         .orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
     )
+
+
+def fuzzy_search_arrow(
+    nodes: pa.Table,
+    query: str = DEFAULT_QUERY,
+    threshold: float = DEFAULT_THRESHOLD,
+    k: int = DEFAULT_K,
+) -> list[dict]:
+    """:func:`fuzzy_search` with the Levenshtein scorer over a driver-side
+    node table: the same rows, as dicts, in the same order. NULL names drop
+    out, and the threshold applies to the rounded score. Only names whose
+    length bound (the score at distance ``|len − len(query)|``, a lower
+    bound of the distance) reaches the threshold run the DP."""
+    q = query.strip().lower()
+    named = nodes.select(["id", "name"]).filter(pc.is_valid(nodes.column("name")))
+    names = named.column("name").to_numpy()  # str objects, no per-row Python list
+    lens = np.fromiter(map(len, names), np.int64, len(names))
+    bound = round_half_up(levenshtein_ratio(np.abs(lens - len(q)), lens, len(q)), 4)
+    cand = np.flatnonzero(bound >= threshold)
+    dist = levenshtein_distances(names[cand], q)
+    score = round_half_up(levenshtein_ratio(dist, lens[cand], len(q)), 4)
+    hit, score = cand[score >= threshold], score[score >= threshold]
+    ids = np.asarray(named.column("id"))[hit]
+    top = np.lexsort((ids, -score))[:k]
+    return [
+        {"id": int(ids[t]), "name": names[hit[t]], "score": float(score[t])}
+        for t in top
+    ]
 
 
 def fuzzy_search_lev_sql(

@@ -41,7 +41,6 @@ Scale shapes:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import reduce
 
 import numpy as np
@@ -58,7 +57,8 @@ from graphdb_neo4j_spark.sources.tpch import (
     customer_interest_pairs,
     customer_nodes,
 )
-from graphdb_neo4j_spark.session import _parse_bytes_conf, materialize
+from graphdb_neo4j_spark.obs import job_label
+from graphdb_neo4j_spark.session import driver_result_cap, materialize
 
 
 def _attr_degrees(nodes: DataFrame, attr: str, out: str) -> DataFrame:
@@ -314,7 +314,7 @@ def _lumped_pagerank(
     the edge-walk :func:`pagerank` is the operator to run there."""
     spark = nodes.sparkSession
     keyed, keys, cls = _pagerank_classes(nodes, attrs, seed_ids)
-    with _job_description(spark, "lumped_pagerank/classes"):
+    with job_label(spark, "lumped_pagerank/classes"):
         table = cls.toArrow()
     k = table.column("k").to_numpy().astype(np.float64)
     code_a, code_b = (_dense_codes(table.column(x)).astype(np.int64) for x in attrs)
@@ -1093,30 +1093,15 @@ def _broadcast_fits(spark: SparkSession, rows: int, width: int) -> bool:
 
 def _collect_row_cap(spark: SparkSession, width: int) -> int | None:
     """How many rows of ``width`` bytes one collect may bring to the
-    driver: ``spark.driver.maxResultSize`` // width, or None when that
-    setting is 0, which Spark reads as unlimited. rows fit in one collect
-    iff rows × width ≤ ``spark.driver.maxResultSize``."""
-    limit = _parse_bytes_conf(
-        spark.sparkContext.getConf().get("spark.driver.maxResultSize", "1g")
-    )
-    return None if limit == 0 else limit // width
+    driver: :func:`~graphdb_neo4j_spark.session.driver_result_cap` //
+    width, or None when the cap is unlimited. rows fit in one collect iff
+    rows × width ≤ ``spark.driver.maxResultSize``."""
+    limit = driver_result_cap(spark)
+    return None if limit is None else limit // width
 
 
 def _broadcast_if(df: DataFrame, small: bool) -> DataFrame:
     return F.broadcast(df) if small else df
-
-
-@contextmanager
-def _job_description(spark: SparkSession, text: str):
-    """Label the jobs submitted inside the block (event log, Spark UI),
-    then restore the caller's description."""
-    sc = spark.sparkContext
-    prior = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(text)
-    try:
-        yield
-    finally:
-        sc.setJobDescription(prior)
 
 
 def min_label_components(
@@ -1187,7 +1172,7 @@ def min_label_components(
     both = node_ids.select(
         "id", F.lit(None).cast(inc.schema["gk"].dataType).alias("gk")
     ).unionByName(inc.filter(F.col("gk").isNotNull()))
-    with _job_description(spark, "min_label_components/collect"):
+    with job_label(spark, "min_label_components/collect"):
         try:
             table = both.toArrow()
         except Py4JJavaError as e:  # Spark's own abort of an oversized collect
@@ -1280,7 +1265,7 @@ def _components_loop(
         )
 
     is_mixed = F.col("lo") < F.col("hi")
-    with _job_description(spark, "min_label_components/round=0"):
+    with job_label(spark, "min_label_components/round=0"):
         node_ids = node_ids.select("id").transform(materialize)
         small_labels = _broadcast_fits(spark, node_ids.count(), 16)
         inc = inc.join(
@@ -1293,7 +1278,7 @@ def _components_loop(
     small_groups = _broadcast_fits(spark, n_groups, 16)
     labels, applied = None, 0
     while n_mixed and applied < max_iterations:
-        with _job_description(spark, f"min_label_components/round={applied + 1}"):
+        with job_label(spark, f"min_label_components/round={applied + 1}"):
             labels = (
                 inc.join(_broadcast_if(groups.select("gk", "lo"), small_groups), "gk")
                 .groupBy("id")

@@ -16,10 +16,18 @@ name lookups take the node table as input (the persisted
 :func:`~graphdb_neo4j_spark.sources.tpch.node_snapshot`, or a service's
 snapshot ∪ overlay view); their ``q_*`` registry wrappers pass the
 snapshot.
+
+The service's reads also have ``*_arrow`` forms over the same node table
+held on the driver as a ``pyarrow.Table``
+(:func:`~graphdb_neo4j_spark.sources.tpch.node_snapshot_table`). Each one
+returns the rows its Spark form's ``collect()`` returns, as dicts with the
+same column names and Python types.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,14 +42,19 @@ from graphdb_neo4j_spark.sources.tpch import (
 )
 
 
-def q_node_names(spark: SparkSession, sf_dir: str) -> DataFrame:
+def node_names(nodes: DataFrame) -> DataFrame:
     """P1 — all node names (nulls dropped, as the reference's Python loop
     does at llm_cypher.py:19)."""
-    return (
-        customer_nodes(spark, sf_dir)
-        .select("name")
-        .filter(F.col("name").isNotNull())
-    )
+    return nodes.select("name").filter(F.col("name").isNotNull())
+
+
+def node_names_arrow(nodes: pa.Table) -> list[dict]:
+    """:func:`node_names` over a driver-side node table, in table order."""
+    return [{"name": n} for n in pc.drop_null(nodes.column("name")).to_pylist()]
+
+
+def q_node_names(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return node_names(customer_nodes(spark, sf_dir))
 
 
 NODE_NAMES_SQL = f"""
@@ -54,6 +67,18 @@ def point_lookup(nodes: DataFrame, node_id: int) -> DataFrame:
     """P2 — one node, ALL 7 properties (the reference's detail row returns
     interests too, student_service.py:110-132)."""
     return nodes.filter(F.col("id") == node_id)
+
+
+def _rows_where(nodes: pa.Table, column: str, value, limit: int | None = None) -> list[dict]:
+    """The rows of ``nodes`` whose ``column`` equals ``value`` (NULL never
+    equal), in table order, at most ``limit`` of them."""
+    hit = nodes.filter(pc.fill_null(pc.equal(nodes.column(column), value), False))
+    return (hit if limit is None else hit.slice(0, limit)).to_pylist()
+
+
+def point_lookup_arrow(nodes: pa.Table, node_id: int) -> list[dict]:
+    """:func:`point_lookup` over a driver-side node table."""
+    return _rows_where(nodes, "id", node_id)
 
 
 def q_point_lookup(spark: SparkSession, sf_dir: str, node_id: int = 42) -> DataFrame:
@@ -86,6 +111,13 @@ def single_student_detail(nodes: DataFrame, name: str) -> DataFrame:
     return _named(nodes, name).limit(1).select(*NODE_COLUMNS)
 
 
+def single_student_detail_arrow(nodes: pa.Table, name: str) -> list[dict]:
+    """:func:`single_student_detail` over a driver-side node table: the
+    first row of that name in table order (``trim`` strips spaces only, as
+    Spark's does)."""
+    return _rows_where(nodes, "name", name.strip(" ").lower(), limit=1)
+
+
 def exists(nodes: DataFrame, node_id: int) -> DataFrame:
     """P3 — existence probe as a 1-row boolean (semantically a semi-join)."""
     return (
@@ -93,6 +125,11 @@ def exists(nodes: DataFrame, node_id: int) -> DataFrame:
         .groupBy()
         .agg((F.count("*") > 0).alias("found"))
     )
+
+
+def exists_arrow(nodes: pa.Table, node_id: int) -> list[dict]:
+    """:func:`exists` over a driver-side node table."""
+    return [{"found": bool(pc.any(pc.equal(nodes.column("id"), node_id)).as_py())}]
 
 
 def q_exists(spark: SparkSession, sf_dir: str, node_id: int = 42) -> DataFrame:

@@ -18,10 +18,18 @@ nested list comprehension. The reference returns ALL matches (no LIMIT — a
 scalability cliff noted in BASELINE.md); we add a deterministic top-k
 (score DESC, id ASC) which Catalyst plans as TakeOrderedAndProject (no full
 sort).
+
+:func:`recommend_arrow` is the same read over a driver-side node table
+(``pyarrow.Table``): the flags by ``pc.equal``, ``n_common`` by matching
+the flattened interests against the anchor's tokens and counting each
+(node, token) pair once, the top-k by ``np.lexsort``.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -75,6 +83,48 @@ def recommend(
         .orderBy(F.desc("score"), F.asc("id"))
     )
     return scored.limit(limit) if limit is not None else scored
+
+
+def recommend_arrow(
+    nodes: pa.Table,
+    anchor_id: int = DEFAULT_ANCHOR,
+    limit: int | None = DEFAULT_LIMIT,
+) -> list[dict]:
+    """:func:`recommend` over a driver-side node table: the same rows, as
+    dicts, in the same order."""
+    ids = nodes.column("id")
+    hit = np.flatnonzero(np.asarray(pc.fill_null(pc.equal(ids, anchor_id), False)))
+    if not len(hit):
+        return []
+    anchor = nodes.slice(int(hit[0]), 1).to_pylist()[0]
+    tokens = pa.array(sorted(set(anchor["interests"] or ())), pa.string())
+    cols = {}
+    for flag, attr in _FLAGS:
+        same = pc.equal(nodes.column(attr), pa.scalar(anchor[attr], pa.string()))
+        cols[flag] = np.asarray(pc.fill_null(same, False), dtype=np.int64)
+    # n_common counts distinct shared tokens, as array_intersect does
+    interests = nodes.column("interests")
+    lengths = np.asarray(pc.fill_null(pc.list_value_length(interests), 0))
+    owner = np.repeat(np.arange(len(nodes)), lengths)
+    token = np.asarray(pc.fill_null(pc.index_in(pc.list_flatten(interests), tokens), -1))
+    shared = np.unique(owner[token >= 0] * len(tokens) + token[token >= 0])
+    cols["n_common"] = np.bincount(shared // max(len(tokens), 1), minlength=len(nodes))
+    score = sum(cols[flag] for flag, _ in _FLAGS) + cols["n_common"]
+    other = np.asarray(pc.fill_null(pc.not_equal(ids, anchor_id), False))
+    keep = np.flatnonzero((score > 0) & other)
+    id_np = np.asarray(pc.fill_null(ids, 0))
+    top = keep[np.lexsort((id_np[keep], -score[keep]))][:limit]
+    names = nodes.column("name").take(top).to_pylist()
+    return [
+        {
+            "id": int(id_np[i]),
+            "name": name,
+            **{flag: int(cols[flag][i]) for flag, _ in _FLAGS},
+            "n_common": int(cols["n_common"][i]),
+            "score": int(score[i]),
+        }
+        for i, name in zip(top, names)
+    ]
 
 
 def recommend_oracle_sql(

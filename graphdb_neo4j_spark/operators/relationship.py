@@ -23,10 +23,15 @@ table is read.
 ``common`` interest list on SHARES_INTEREST (reference stores it at
 create_relationships.py:86) — serialized per edge as ``TYPE:{...}`` joined
 with ``|`` so the oracle hash is representation-stable across engines.
+
+:func:`two_name_relationship_arrow` is the same pair computation in Python
+over a driver-side node table (``pyarrow.Table``).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -116,6 +121,53 @@ def two_name_relationship(
         (F.col("a_stream") == F.col("b_stream")).alias("same_stream"),
         n_common.alias("n_common_interests"),
     )
+
+
+def _equal(a, b) -> bool | None:
+    """SQL ``a = b``: NULL when either side is NULL."""
+    return None if a is None or b is None else a == b
+
+
+def two_name_relationship_arrow(
+    nodes: pa.Table,
+    name_a: str = DEFAULT_A,
+    name_b: str = DEFAULT_B,
+) -> list[dict]:
+    """:func:`two_name_relationship` over a driver-side node table: the
+    same rows, as dicts, the rows named ``name_a`` outer and those named
+    ``name_b`` inner, each in table order."""
+
+    def side(name: str) -> list[dict]:
+        hit = pc.fill_null(pc.equal(nodes.column("name"), name.strip().lower()), False)
+        return nodes.filter(hit).to_pylist()
+
+    out = []
+    for a in side(name_a):
+        for b in side(name_b):
+            common = sorted(set(a["interests"]) & set(b["interests"]))
+            types = sorted(
+                [etype for etype, attr in _ATTR_EDGE_FLAGS
+                 if _equal(a[attr], b[attr]) and a[attr] != ""]
+                + (["SHARES_INTEREST"] if common else [])
+            )
+            props = "|".join(
+                t + ":{" + ("common=[" + ",".join(common) + "]" if t == "SHARES_INTEREST" else "") + "}"
+                for t in types
+            )
+            out.append({
+                "a_id": a["id"],
+                "a_name": a["name"],
+                "b_id": b["id"],
+                "b_name": b["name"],
+                "rel_types": ",".join(types),
+                "n_rels": len(types),
+                "rel_props": props,
+                "same_college": _equal(a["college"], b["college"]),
+                "same_board": _equal(a["board"], b["board"]),
+                "same_stream": _equal(a["stream"], b["stream"]),
+                "n_common_interests": len(common),
+            })
+    return out
 
 
 def two_name_relationship_sql(

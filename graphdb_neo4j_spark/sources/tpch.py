@@ -35,12 +35,15 @@ import os
 import stat
 from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from graphdb_neo4j_spark.graph import NODE_COLUMNS, PropertyGraph, empty_edges
 from graphdb_neo4j_spark.llmdata.genstore import COMMITTED, GenStore, read_meta
+from graphdb_neo4j_spark.session import driver_result_cap
 from graphdb_neo4j_spark.sources.sink import write_nodes
 
 TABLES = (
@@ -241,6 +244,12 @@ NODE_SCHEMA = (
     "id BIGINT, name STRING, address STRING, college STRING, board STRING,"
     " stream STRING, interests ARRAY<STRING>"
 )
+# NODE_SCHEMA as Arrow: the snapshot's columns, read on the driver
+ARROW_NODE_SCHEMA = pa.schema(
+    [("id", pa.int64())]
+    + [(c, pa.string()) for c in NODE_COLUMNS[1:-1]]
+    + [("interests", pa.list_(pa.string()))]
+)
 SNAPSHOT_STORE = GenStore("node_snapshot", "_snapshot_meta.json", ("",))
 # customer-table bytes per snapshot file (the file count scales with the
 # source; small sources get one file)
@@ -279,6 +288,27 @@ def _snapshot_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _snapshot_generation(spark: SparkSession, sf_dir: str) -> str | None:
+    """The committed generation dir of ``sf_dir``'s snapshot for the source
+    files as they are now, built first when it is missing; None without a
+    local warehouse or a stampable source (see :func:`node_snapshot`)."""
+    loc = snapshot_location(spark, sf_dir)
+    if loc is None:
+        return None
+    store, gen = loc
+    gen_dir = os.path.join(store, f"generation={gen}")
+    meta = read_meta(store, SNAPSHOT_STORE.meta_name)
+    committed = os.path.exists(os.path.join(gen_dir, COMMITTED))
+    if not (meta and gen in meta["active"] and committed):
+        size = sum(e[2] for e in _file_stamp(f"{sf_dir}/customer.parquet"))
+        rows = _snapshot_rows(spark, sf_dir)
+        write_nodes(rows, gen_dir, files=1 + size // SNAPSHOT_FILE_BYTES)
+        fresh = {"source": os.path.abspath(sf_dir), "generations": [], "active": []}
+        SNAPSHOT_STORE.commit(store, fresh, gen)
+        SNAPSHOT_STORE.sweep_orphans(store, {"active": [gen]})
+    return gen_dir
+
+
 def node_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The node table — :func:`full_nodes`' rows ``(id, name, address,
     college, board, stream, interests)`` — read from its persisted snapshot.
@@ -294,23 +324,53 @@ def node_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     active generation is read, with a fixed schema, so a read submits no
     Spark job. Builds are single-writer, like the other generation stores.
     Without a local warehouse or a stampable source this returns the raw
-    derivation.
+    derivation. :func:`node_snapshot_table` reads the same generation into
+    the driver as one Arrow table when it fits there.
     """
-    loc = snapshot_location(spark, sf_dir)
-    if loc is None:
+    gen_dir = _snapshot_generation(spark, sf_dir)
+    if gen_dir is None:
         return _snapshot_rows(spark, sf_dir)
-    store, gen = loc
-    gen_dir = os.path.join(store, f"generation={gen}")
-    meta = read_meta(store, SNAPSHOT_STORE.meta_name)
-    committed = os.path.exists(os.path.join(gen_dir, COMMITTED))
-    if not (meta and gen in meta["active"] and committed):
-        size = sum(e[2] for e in _file_stamp(f"{sf_dir}/customer.parquet"))
-        rows = _snapshot_rows(spark, sf_dir)
-        write_nodes(rows, gen_dir, files=1 + size // SNAPSHOT_FILE_BYTES)
-        fresh = {"source": os.path.abspath(sf_dir), "generations": [], "active": []}
-        SNAPSHOT_STORE.commit(store, fresh, gen)
-        SNAPSHOT_STORE.sweep_orphans(store, {"active": [gen]})
     return spark.read.schema(NODE_SCHEMA).parquet(gen_dir)
+
+
+# store dir -> (generation dir, uncompressed bytes, its Arrow table or None
+# while it is not loaded): the latest generation of each store only
+_SNAPSHOT_TABLES: dict[str, tuple[str, int, pa.Table | None]] = {}
+
+
+def node_snapshot_table(spark: SparkSession, sf_dir: str) -> pa.Table | None:
+    """:func:`node_snapshot`'s committed generation as one Arrow table on
+    the driver, read with ``pyarrow.parquet`` (no Spark job), or None.
+
+    The generation is built first when it is missing, exactly as
+    :func:`node_snapshot` does. It is served from Arrow only when its
+    uncompressed bytes, summed from the parquet footers, fit in one collect
+    (:func:`~graphdb_neo4j_spark.session.driver_result_cap`); the rule is
+    checked on every call, so it is the one switch between the driver and
+    the Spark forms of a read. The table is read once per generation and
+    kept for the latest generation of each store only, so a swept
+    generation is never served. Without a local snapshot this is None.
+    """
+    gen_dir = _snapshot_generation(spark, sf_dir)
+    if gen_dir is None:
+        return None
+    store = os.path.dirname(gen_dir)
+    memo = _SNAPSHOT_TABLES.get(store)
+    if memo is None or memo[0] != gen_dir:
+        size = 0
+        for f in os.listdir(gen_dir):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                meta = pq.read_metadata(os.path.join(gen_dir, f))
+                size += sum(meta.row_group(i).total_byte_size for i in range(meta.num_row_groups))
+        memo = _SNAPSHOT_TABLES[store] = (gen_dir, size, None)
+    gen_dir, size, table = memo
+    cap = driver_result_cap(spark)
+    if cap is not None and size > cap:
+        return None
+    if table is None:
+        table = pq.read_table(gen_dir, schema=ARROW_NODE_SCHEMA)
+        _SNAPSHOT_TABLES[store] = (gen_dir, size, table)
+    return table
 
 
 def load_graph(spark: SparkSession, sf_dir: str, edges: DataFrame | None = None) -> PropertyGraph:

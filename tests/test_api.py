@@ -3,14 +3,39 @@
 import pytest
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark import api
 from graphdb_neo4j_spark.api import GraphService, StudentCreate
 from graphdb_neo4j_spark.nl.names import NameDictionary
+from graphdb_neo4j_spark.operators import lookup, relationship
+from graphdb_neo4j_spark.sources import tpch
 from graphdb_neo4j_spark.sources.tpch import NODES_CTE
 from tests.oracle_utils import run_oracle
+from tests.test_graphalgo import _refuse
 
 
 def _svc(spark, sf_dir):
     return GraphService(spark, sf_dir)
+
+
+# every driver-side form a service read can reach
+_ARROW_FORMS = (
+    (api, "recommend_arrow"),
+    (api, "fuzzy_search_arrow"),
+    (api, "two_name_relationship_arrow"),
+    (lookup, "point_lookup_arrow"),
+    (lookup, "exists_arrow"),
+    (lookup, "node_names_arrow"),
+    (lookup, "single_student_detail_arrow"),
+    (relationship, "two_name_relationship_arrow"),
+)
+
+
+def _force_spark(monkeypatch):
+    """A zero result cap: no snapshot generation fits on the driver, so
+    every service read runs its Spark operator."""
+    monkeypatch.setattr(tpch, "driver_result_cap", lambda spark: 0)
+    for owner, name in _ARROW_FORMS:
+        monkeypatch.setattr(owner, name, _refuse(name))
 
 
 def test_ping_and_reads(spark, sf_dir):
@@ -211,6 +236,23 @@ def test_onboarded_student_reaches_every_read(onboarded, case):
     assert want in got
 
 
+@pytest.fixture(scope="module")
+def onboarded_on_spark(spark, sf_dir):
+    """:func:`onboarded`, written with the Spark path forced."""
+    with pytest.MonkeyPatch.context() as mp:
+        _force_spark(mp)
+        return onboarded.__wrapped__(spark, sf_dir)
+
+
+@pytest.mark.parametrize("case", sorted(_VISIBILITY))
+def test_onboarded_student_reaches_every_read_on_spark(
+    onboarded_on_spark, case, monkeypatch
+):
+    _force_spark(monkeypatch)
+    got, want = _VISIBILITY[case](*onboarded_on_spark)
+    assert want in got
+
+
 def test_llm_sql_nodes_view_reads_the_base_snapshot(spark, sf_dir):
     """Known gap, pinned: the LLM-SQL ``nodes`` view does not see the
     overlay, so a count there excludes onboarded students."""
@@ -227,22 +269,61 @@ def test_llm_sql_nodes_view_reads_the_base_snapshot(spark, sf_dir):
     assert svc.chat("how many students are in the biggest college?", llm=llm) == want
 
 
+def _warm_reads(svc):
+    """read name -> call; each is warmed once before it is counted (the
+    first read of a source version builds the snapshot)."""
+    return {
+        "get_student_by_id": lambda: svc.get_student_by_id(42),
+        "recommend_people": lambda: svc.recommend_people(42),
+        "relationship": lambda: svc.relationship("Customer#000000042", "Customer#000000043"),
+        "search_students": lambda: svc.search_students("custmer#000000042"),
+        "save_student": lambda: svc.save_student(StudentCreate(name="Budget Writer")),
+        "chat": lambda: svc.chat("who is Customer#000000042?"),
+    }
+
+
 def test_warm_reads_stay_inside_their_job_budgets(spark, sf_dir):
+    """On the driver-side snapshot every service read starts no Spark job,
+    before and after a write."""
     from tests.test_load_table import _jobs_of
 
     svc = _svc(spark, sf_dir)
-    calls = {
-        "get_student_by_id": (lambda: svc.get_student_by_id(42), 2),
-        "recommend_people": (lambda: svc.recommend_people(42), 4),
-        "relationship": (
-            lambda: svc.relationship("Customer#000000042", "Customer#000000043"),
-            4,
-        ),
-    }
     for overlay in (False, True):
         if overlay:
             svc.save_student(StudentCreate(name="Budget Probe", college="x"))
-        for name, (read, budget) in calls.items():
-            read()  # warm: the first read of a source version builds the snapshot
+        for name, read in _warm_reads(svc).items():
+            read()
             jobs = _jobs_of(spark, read, f"budget_{name}_{overlay}")
+            assert len(jobs) == 0, (name, overlay, len(jobs))
+
+
+def test_warm_spark_reads_stay_inside_their_job_budgets(spark, sf_dir, monkeypatch):
+    from tests.test_load_table import _jobs_of
+
+    _force_spark(monkeypatch)
+    svc = _svc(spark, sf_dir)
+    reads = _warm_reads(svc)
+    budgets = {"get_student_by_id": 2, "recommend_people": 4, "relationship": 4}
+    for overlay in (False, True):
+        if overlay:
+            svc.save_student(StudentCreate(name="Budget Probe", college="x"))
+        for name, budget in budgets.items():
+            reads[name]()
+            jobs = _jobs_of(spark, reads[name], f"budget_spark_{name}_{overlay}")
             assert 0 < len(jobs) <= budget, (name, overlay, len(jobs))
+
+
+def test_spark_reads_run_under_their_api_label(spark, sf_dir, monkeypatch):
+    """A Spark-path read labels its jobs ``api.<method>`` and restores the
+    caller's description; a driver-side read sets no label."""
+    from tests.test_graphalgo import _descriptions_during
+
+    svc = _svc(spark, sf_dir)
+    assert _descriptions_during(spark, monkeypatch, lambda: svc.get_student_by_id(42)) == []
+    _force_spark(monkeypatch)
+    seen = _descriptions_during(
+        spark,
+        monkeypatch,
+        lambda: (svc.get_student_by_id(42), svc.recommend_people(42)),
+    )
+    assert seen == ["api.get_student_by_id", "api.recommend_people"]

@@ -20,8 +20,10 @@ from graphdb_neo4j_spark.sources.tpch import (
     SNAPSHOT_STORE,
     full_nodes,
     node_snapshot,
+    node_snapshot_table,
     snapshot_location,
 )
+from tests.test_api import _force_spark
 from tests.test_load_table import _jobs_of
 
 
@@ -95,6 +97,11 @@ def test_second_service_on_unchanged_sources_builds_nothing(spark, src):
     assert _jobs_of(spark, lambda: node_snapshot(spark, src), "ns_resolve") == []
     second = GraphService(spark, src)
     jobs = _jobs_of(spark, lambda: second.get_student_by_id(1), "ns_second")
+    assert jobs == []  # the point read runs on the driver-side table, no build
+    with pytest.MonkeyPatch.context() as mp:
+        _force_spark(mp)
+        third = GraphService(spark, src)
+        jobs = _jobs_of(spark, lambda: third.get_student_by_id(1), "ns_third")
     assert len(jobs) == 1  # the point read, no build
     assert (os.stat(meta).st_mtime_ns, sorted(os.listdir(gen_dir))) == stamp
 
@@ -130,6 +137,50 @@ def test_without_a_local_warehouse_reads_the_raw_derivation(spark, src, monkeypa
     monkeypatch.setattr(tpch, "_snapshot_root", lambda spark: None)
     assert snapshot_location(spark, src) is None
     assert _rows(node_snapshot(spark, src)) == _rows(full_nodes(spark, src))
+    assert node_snapshot_table(spark, src) is None
     monkeypatch.undo()
     store, _ = snapshot_location(spark, src)
     assert not os.path.exists(store)
+
+
+# --- the driver-side table of a generation ----------------------------------
+
+
+def _table_rows(table):
+    return sorted(
+        (r["id"], r["name"], r["address"], r["college"], r["board"], r["stream"],
+         tuple(sorted(r["interests"])))
+        for r in table.to_pylist()
+    )
+
+
+def test_snapshot_table_follows_the_active_generation(spark, src):
+    """The table holds the snapshot's rows, is read once per generation,
+    and a rewritten source serves the new generation's rows only."""
+    from graphdb_neo4j_spark.sources import tpch
+
+    table = node_snapshot_table(spark, src)
+    assert _table_rows(table) == _rows(node_snapshot(spark, src))
+    assert node_snapshot_table(spark, src) is table
+    _rewrite(src, "customer")
+    renamed = node_snapshot_table(spark, src)
+    assert _table_rows(renamed) == _rows(full_nodes(spark, src))
+    store, gen_dir = _gen_dir(spark, src)
+    assert tpch._SNAPSHOT_TABLES[store][0] == gen_dir  # the latest generation only
+
+
+def test_snapshot_table_size_rule(spark, src, monkeypatch):
+    """Served from Arrow iff the generation's uncompressed footer bytes are
+    at most the driver's result cap; None (unlimited) always fits."""
+    from graphdb_neo4j_spark.sources import tpch
+
+    node_snapshot(spark, src)
+    _, gen_dir = _gen_dir(spark, src)
+    size = 0
+    for f in os.listdir(gen_dir):
+        if f.endswith(".parquet"):
+            meta = pq.read_metadata(os.path.join(gen_dir, f))
+            size += sum(meta.row_group(i).total_byte_size for i in range(meta.num_row_groups))
+    for cap, fits in ((size, True), (size - 1, False), (None, True)):
+        monkeypatch.setattr(tpch, "driver_result_cap", lambda spark, cap=cap: cap)
+        assert (node_snapshot_table(spark, src) is not None) == fits, cap

@@ -10,6 +10,7 @@ import pytest
 
 from graphdb_neo4j_spark.api import GraphService
 from graphdb_neo4j_spark.rest import RestApp, _recommendation_message
+from tests.test_api import _force_spark
 
 
 @pytest.fixture(scope="module")
@@ -55,6 +56,20 @@ def test_get_student_detail(app):
 def test_get_student_404(app):
     status, body = call(app, "GET", "/api/v1/students/99999999")
     assert status == 404 and body == {"detail": "Student not found"}
+
+
+@pytest.mark.parametrize("path", ["arrow", "spark"])
+def test_id_outside_bigint_is_a_missing_student(app, path, monkeypatch):
+    """No node id exceeds BIGINT, so such an id names no student: 404 for
+    the detail route, no recommendations, and no engine error in the body."""
+    if path == "spark":
+        _force_spark(monkeypatch)
+    huge = "99999999999999999999"
+    status, body = call(app, "GET", f"/api/v1/students/{huge}")
+    assert status == 404 and body == {"detail": "Student not found"}
+    status, body = call(app, "GET", f"/api/v1/recommend/people/{huge}")
+    assert status == 200
+    assert body["students"] == [] and body["total_matches"] == 0
 
 
 def test_recommend_contract(app):
