@@ -141,8 +141,6 @@ class GraphService:
     _overlay: pa.Table = field(
         default_factory=lambda: ARROW_NODE_SCHEMA.empty_table(), repr=False
     )
-    # (base table, overlay rows, snapshot ∪ overlay) of the last Arrow view
-    _arrow: tuple[pa.Table, int, pa.Table] | None = field(default=None, repr=False)
     # (overlay rows, overlay DataFrame) of the last Spark overlay
     _overlay_df: tuple[int, DataFrame] | None = field(default=None, repr=False)
     _names: NameDictionary | None = field(default=None, repr=False)
@@ -153,13 +151,9 @@ class GraphService:
         """Snapshot ∪ overlay on the driver, or None when the snapshot
         generation does not fit there (the one dispatch point)."""
         base = node_snapshot_table(self.spark, self.sf_dir)
-        if base is None:
-            return None
-        rows = self._overlay.num_rows
-        if self._arrow is None or self._arrow[0] is not base or self._arrow[1] != rows:
-            view = pa.concat_tables([base, self._overlay]) if rows else base
-            self._arrow = (base, rows, view)
-        return self._arrow[2]
+        if base is None or not self._overlay.num_rows:
+            return base
+        return pa.concat_tables([base, self._overlay])  # chunk references, no copy
 
     def _overlay_frame(self) -> DataFrame:
         rows = self._overlay.num_rows

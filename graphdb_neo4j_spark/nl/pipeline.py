@@ -219,6 +219,9 @@ class NLAnswer:
     question: str  # after fuzzy name correction
     sql: str | None = None
     df: DataFrame | None = None
+    # a template's rows (dicts) when the engine reads a driver-side
+    # ``table``; ``df`` is None then
+    rows: list[dict] | None = None
     reply: str | None = None
     attempts: int = 1
 
@@ -346,16 +349,21 @@ class NLEngine:
         templated = self.template_dispatch(corrected)
         if templated is not None:
             result, display_sql = templated
-            df = None if isinstance(result, list) else result
+            df, rows = (None, result) if isinstance(result, list) else (result, None)
             reply = None
             if explain:
-                rows = (
-                    result[:25] if df is None
+                shown = (
+                    rows[:25] if df is None
                     else [r.asDict(recursive=True) for r in df.limit(25).collect()]
                 )
-                reply = explain_result(corrected, rows)
+                reply = explain_result(corrected, shown)
             return NLAnswer(
-                kind="query", question=corrected, sql=display_sql, df=df, reply=reply
+                kind="query",
+                question=corrected,
+                sql=display_sql,
+                df=df,
+                rows=rows,
+                reply=reply,
             )
 
         text = self.generate_sql(corrected)

@@ -104,23 +104,15 @@ def _parse_bytes_conf(v: str) -> int:
     return int(s) * mult
 
 
-# (SparkContext, its driver_result_cap) of the last call: the setting is
-# fixed once a context starts, and getConf() copies the whole SparkConf
-# over py4j (~13 ms)
-_RESULT_CAP: tuple[object, int | None] | None = None
-
-
 def driver_result_cap(spark: SparkSession) -> int | None:
     """The most bytes one collect may bring to the driver,
     ``spark.driver.maxResultSize`` (Spark's default 1g), or None when that
     setting is 0, which Spark reads as unlimited. The one rule behind every
     choice between a driver plan and a distributed one."""
-    global _RESULT_CAP
-    sc = spark.sparkContext
-    if _RESULT_CAP is None or _RESULT_CAP[0] is not sc:
-        limit = _parse_bytes_conf(sc.getConf().get("spark.driver.maxResultSize", "1g"))
-        _RESULT_CAP = (sc, None if limit == 0 else limit)
-    return _RESULT_CAP[1]
+    limit = _parse_bytes_conf(
+        spark.sparkContext.getConf().get("spark.driver.maxResultSize", "1g")
+    )
+    return None if limit == 0 else limit
 
 
 def _estimated_scan_splits(df) -> tuple[int, int | None]:

@@ -333,9 +333,10 @@ def node_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(NODE_SCHEMA).parquet(gen_dir)
 
 
-# store dir -> (generation dir, uncompressed bytes, its Arrow table or None
-# while it is not loaded): the latest generation of each store only
-_SNAPSHOT_TABLES: dict[str, tuple[str, int, pa.Table | None]] = {}
+# store dir -> (generation dir, its Arrow table, or None when the
+# generation does not fit on the driver): the latest generation of each
+# store only, its size rule decided once, when it is first read
+_SNAPSHOT_TABLES: dict[str, tuple[str, pa.Table | None]] = {}
 
 
 def node_snapshot_table(spark: SparkSession, sf_dir: str) -> pa.Table | None:
@@ -345,11 +346,11 @@ def node_snapshot_table(spark: SparkSession, sf_dir: str) -> pa.Table | None:
     The generation is built first when it is missing, exactly as
     :func:`node_snapshot` does. It is served from Arrow only when its
     uncompressed bytes, summed from the parquet footers, fit in one collect
-    (:func:`~graphdb_neo4j_spark.session.driver_result_cap`); the rule is
-    checked on every call, so it is the one switch between the driver and
-    the Spark forms of a read. The table is read once per generation and
-    kept for the latest generation of each store only, so a swept
-    generation is never served. Without a local snapshot this is None.
+    (:func:`~graphdb_neo4j_spark.session.driver_result_cap`): the one
+    switch between the driver and the Spark forms of a read. Both the
+    decision and the table are kept per generation, for the latest
+    generation of each store only, so a swept generation is never served.
+    Without a local snapshot this is None.
     """
     gen_dir = _snapshot_generation(spark, sf_dir)
     if gen_dir is None:
@@ -362,15 +363,11 @@ def node_snapshot_table(spark: SparkSession, sf_dir: str) -> pa.Table | None:
             if f.endswith(".parquet") and not f.startswith((".", "_")):
                 meta = pq.read_metadata(os.path.join(gen_dir, f))
                 size += sum(meta.row_group(i).total_byte_size for i in range(meta.num_row_groups))
-        memo = _SNAPSHOT_TABLES[store] = (gen_dir, size, None)
-    gen_dir, size, table = memo
-    cap = driver_result_cap(spark)
-    if cap is not None and size > cap:
-        return None
-    if table is None:
-        table = pq.read_table(gen_dir, schema=ARROW_NODE_SCHEMA)
-        _SNAPSHOT_TABLES[store] = (gen_dir, size, table)
-    return table
+        cap = driver_result_cap(spark)
+        fits = cap is None or size <= cap
+        table = pq.read_table(gen_dir, schema=ARROW_NODE_SCHEMA) if fits else None
+        memo = _SNAPSHOT_TABLES[store] = (gen_dir, table)
+    return memo[1]
 
 
 def load_graph(spark: SparkSession, sf_dir: str, edges: DataFrame | None = None) -> PropertyGraph:

@@ -32,8 +32,10 @@ _ARROW_FORMS = (
 
 def _force_spark(monkeypatch):
     """A zero result cap: no snapshot generation fits on the driver, so
-    every service read runs its Spark operator."""
+    every service read runs its Spark operator. The size rule is decided
+    when a generation is first read, so the memo starts empty."""
     monkeypatch.setattr(tpch, "driver_result_cap", lambda spark: 0)
+    monkeypatch.setattr(tpch, "_SNAPSHOT_TABLES", {})
     for owner, name in _ARROW_FORMS:
         monkeypatch.setattr(owner, name, _refuse(name))
 

@@ -201,3 +201,10 @@ def test_template_chat_replies_agree(spark, sf_dir, tables, question):
     on_arrow = NLEngine(spark, sf_dir, table=tab).answer(question)
     assert on_arrow.reply == on_spark.reply
     assert on_arrow.question == on_spark.question
+    # without the reply, the driver-side template still hands back its rows
+    quiet = NLEngine(spark, sf_dir, table=tab).answer(question, explain=False)
+    assert quiet.kind == on_spark.kind
+    if on_spark.kind == "query":
+        assert quiet.df is None and quiet.reply is None
+        want = [r.asDict(recursive=True) for r in on_spark.df.collect()]
+        assert quiet.rows == want

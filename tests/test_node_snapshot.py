@@ -183,4 +183,5 @@ def test_snapshot_table_size_rule(spark, src, monkeypatch):
             size += sum(meta.row_group(i).total_byte_size for i in range(meta.num_row_groups))
     for cap, fits in ((size, True), (size - 1, False), (None, True)):
         monkeypatch.setattr(tpch, "driver_result_cap", lambda spark, cap=cap: cap)
+        monkeypatch.setattr(tpch, "_SNAPSHOT_TABLES", {})  # decided on first read
         assert (node_snapshot_table(spark, src) is not None) == fits, cap
