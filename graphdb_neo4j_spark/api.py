@@ -37,8 +37,10 @@ Each read has two plans and one size rule chooses between them:
 
 Both kinds of row carry the same column names and Python types, so the
 marshalling below is shared. The registry's ``q_*`` forms stay Spark.
-The LLM-SQL ``nodes`` view (``NLEngine.register_views``) reads the base
-snapshot without the overlay.
+The LLM-SQL views (``NLEngine.register_views``) are built once per
+snapshot generation and kept with the service, which re-points them on
+every LLM-SQL chat; their ``nodes`` view reads the base snapshot without
+the overlay.
 """
 
 from __future__ import annotations
@@ -144,6 +146,8 @@ class GraphService:
     # (overlay rows, overlay DataFrame) of the last Spark overlay
     _overlay_df: tuple[int, DataFrame] | None = field(default=None, repr=False)
     _names: NameDictionary | None = field(default=None, repr=False)
+    # the LLM-SQL views' DataFrames, handed to each chat's engine like _names
+    _sql_views: tuple | None = field(default=None, repr=False)
 
     # -- the two views ---------------------------------------------------------
 
@@ -337,12 +341,13 @@ class GraphService:
         chat, reused by every later one, and extended by ``save_student``.
         Each chat runs on a new ``NLEngine`` over the view (the driver-side
         table when it fits, else the DataFrame), so the template path (one
-        name, two names) reaches onboarded students. The engine registers
-        the nodes/edges SQL views only when the question reaches the
-        LLM-SQL path (``run_sql``), over the base snapshot without the
-        overlay. Temp views are session-wide and another service may have
-        pointed them at its own graph dir, so every such question registers
-        them.
+        name, two names) reaches onboarded students. Only a question that
+        reaches the LLM-SQL path (``run_sql``) registers the nodes/edges
+        SQL views, over the base snapshot without the overlay. Their
+        DataFrames are built once per snapshot generation and kept here
+        across chats, like the name dictionary. Temp views are session-wide
+        and another service may have pointed them at its own graph dir, so
+        every such question re-points them.
         """
         from graphdb_neo4j_spark.nl.pipeline import NLEngine
 
@@ -354,7 +359,11 @@ class GraphService:
             nodes=self._view() if table is None else None,
             table=table,
             _names=self._names,
+            _views=self._sql_views,
         )
         with job_label(self.spark, "api.chat"):
             self._names = eng.names
-            return eng.answer(question, explain=True).reply or ""
+            try:
+                return eng.answer(question, explain=True).reply or ""
+            finally:
+                self._sql_views = eng._views

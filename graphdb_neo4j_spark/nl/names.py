@@ -11,8 +11,9 @@ copy). Here the dictionary is collected ONCE from the node table (a
 DataFrame, or the driver-side Arrow snapshot) and kept driver-side for the
 life of the service: ``GraphService`` builds one
 :class:`NameDictionary`, reuses it for every ``chat()`` and adds each name
-``save_student`` writes (an ``NLEngine`` keeps its own). Correction is then pure Python over precomputed lowercased
-names: exact hits are a dict lookup and a length bound skips names that
+``save_student`` writes (an ``NLEngine`` keeps its own). Correction is then
+pure Python over precomputed lowercased names: exact hits are a dict lookup
+and a length bound skips, through an index of name lengths, the names that
 cannot win. A name dictionary is a driver-side asset by nature (it seeds
 prompt/string rewriting, not a data-plane join) — collecting it is the
 correct boundary, and it is one column, deduplicated.
@@ -20,6 +21,7 @@ correct boundary, and it is one column, deduplicated.
 
 from __future__ import annotations
 
+import heapq
 import re
 from dataclasses import dataclass, field
 
@@ -71,17 +73,22 @@ class NameDictionary:
         self._known = set(self.names)
         self._lower = [n.lower() for n in self.names]
         self._first: dict[str, str] = {}
-        for name, low in zip(self.names, self._lower):
+        # lowered length -> indices of the names that long, ascending
+        self._by_len: dict[int, list[int]] = {}
+        for i, (name, low) in enumerate(zip(self.names, self._lower)):
             self._first.setdefault(low, name)
+            self._by_len.setdefault(len(low), []).append(i)
 
     def add(self, name: str) -> None:
         """Add one name (a new node's) unless the dictionary holds it."""
         if name is None or name in self._known:
             return
+        low = name.lower()
+        self._by_len.setdefault(len(low), []).append(len(self.names))
         self.names.append(name)
         self._known.add(name)
-        self._lower.append(name.lower())
-        self._first.setdefault(name.lower(), name)
+        self._lower.append(low)
+        self._first.setdefault(low, name)
 
     @classmethod
     def from_nodes(cls, nodes: DataFrame | pa.Table) -> "NameDictionary":
@@ -105,21 +112,28 @@ class NameDictionary:
         LCS = the shorter length, in ``indel_ratio``'s own float expression,
         so no score exceeds it) reaches the threshold and beats the current
         best; a skipped name can be neither the winner nor a tie that wins.
+        The bound depends on the length only, so only the lengths whose
+        bound reaches the threshold are visited, their names merged back
+        into dictionary order so the first name still wins a tie.
         """
         tok = token.lower()
         hit = self._first.get(tok)
         if hit is not None:
             return hit if threshold <= 100.0 else None
         m = len(tok)
-        best, best_score = None, -1.0
-        for name, low in zip(self.names, self._lower):
-            n = len(low)
+        bounds = {}
+        for n in self._by_len:
             bound = 100.0 * (2.0 * min(m, n)) / (m + n)
-            if bound < threshold or bound <= best_score:
+            if bound >= threshold:
+                bounds[n] = bound
+        best, best_score = None, -1.0
+        for i in heapq.merge(*(self._by_len[n] for n in bounds)):
+            low = self._lower[i]
+            if bounds[len(low)] <= best_score:
                 continue
             score = indel_ratio(tok, low)
             if score > best_score:
-                best, best_score = name, score
+                best, best_score = self.names[i], score
         return best if best_score >= threshold else None
 
     def correct(self, question: str, threshold: float = 75.0) -> str:

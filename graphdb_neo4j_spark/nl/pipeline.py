@@ -7,7 +7,7 @@ Stage map to the reference (/root/reference/src/llm_cypher.py):
 |---|---|---|
 | N2 codegen prompt contract | :60-135 (Cypher) | :func:`build_prompt` (Spark SQL over ``nodes``/``edges`` views) |
 | N3 fence stripping | :141-148 | :func:`strip_markdown_fences` |
-| N4 syntax repair | :151-162, 186-224 (regex fixes) | :func:`NLEngine.run_sql` — ``spark.sql`` parse/analysis IS the validator; on failure the error text is fed back to the LLM for one repair round (Catalyst as the repair oracle, SURVEY.md §2.10-N4) |
+| N4 syntax repair | :151-162, 186-224 (regex fixes) | :func:`NLEngine.run_sql` — :func:`check_query` (only a single query parses) then ``spark.sql`` parse/analysis IS the validator; on failure the error text is fed back to the LLM for one repair round (Catalyst as the repair oracle, SURVEY.md §2.10-N4) |
 | N5 semantic guard rewrite | :165-183 (force case-insensitive names) | :func:`sanitize_sql` (lowercase name literals — data is lowercase at rest) |
 | N6 dispatch heuristic | :404-416 (``\\bMATCH\\b``) | :func:`is_query` (``\\bSELECT\\b``) |
 | N7 result explanation | :248-345 (count fast-path :300-312) | :func:`explain_result` |
@@ -30,9 +30,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from graphdb_neo4j_spark.nl.names import NameDictionary
-from graphdb_neo4j_spark.sources.tpch import node_snapshot
+from graphdb_neo4j_spark.sources.tpch import node_snapshot, snapshot_location
 
 LLMClient = Callable[[str], str]
+
+# the temp views the SQL surface queries, in the order ``register_views``
+# keeps their DataFrames
+SQL_VIEWS = ("nodes", "edges", "edges_undirected")
 
 CHAT_SENTINEL = "CHAT"
 
@@ -183,6 +187,15 @@ def is_query(text: str) -> bool:
     return bool(re.search(r"\bSELECT\b", text, re.IGNORECASE))
 
 
+def check_query(spark: SparkSession, sql: str) -> None:
+    """N4 allow-list: ``sql`` must parse as ONE query (SELECT, WITH, set
+    operations, VALUES, FROM-first), else the parser's ``ParseException``
+    is raised. ``spark.sql`` runs a command (INSERT [OVERWRITE DIRECTORY],
+    CTAS, CREATE VIEW, DROP) eagerly, and :func:`is_query` accepts any
+    text containing SELECT, so LLM text must pass this before it runs."""
+    spark._jsparkSession.sessionState().sqlParser().parseQuery(sql)
+
+
 # --- N7: result explanation -------------------------------------------------
 
 
@@ -243,27 +256,39 @@ class NLEngine:
     # the templates read it instead, with no Spark job
     table: pa.Table | None = field(default=None, repr=False)
     _names: NameDictionary | None = field(default=None, repr=False)
-    _views_registered: bool = field(default=False, repr=False)
+    # (snapshot generation key, the SQL_VIEWS DataFrames) of the last
+    # ``register_views``
+    _views: tuple[tuple[str, str] | None, tuple[DataFrame, ...]] | None = field(
+        default=None, repr=False
+    )
 
     # -- setup ---------------------------------------------------------------
 
     def register_views(self) -> None:
-        """Create the lazy temp views the SQL surface queries (nodes with
-        interests, canonical edges, undirected edge view §7.4-H5).
-        :meth:`run_sql` calls it on the first question that reaches it, so
-        the template path never pays for the views. The ``nodes`` view is
-        the base snapshot of ``sf_dir``, without a service's overlay."""
+        """Point the temp views the SQL surface queries (nodes with
+        interests, canonical edges, undirected edge view §7.4-H5) at this
+        engine's DataFrames for ``sf_dir``.
+
+        The DataFrames are built once per snapshot generation, keyed by
+        :func:`snapshot_location` (a stat of the five source tables), so a
+        rewritten source rebuilds them and a warm call only re-points the
+        views; without a key they are rebuilt on every call. Temp views are
+        session-wide (another engine may have pointed them at its own dir,
+        or a user dropped them), so every call re-points all three.
+        :meth:`run_sql` calls it on each question that reaches it, so the
+        template path never pays for the views. The ``nodes`` view is the
+        base snapshot of ``sf_dir``, without a service's overlay."""
         from graphdb_neo4j_spark.graph import PropertyGraph
         from graphdb_neo4j_spark.operators.edges import derive_all_edges
 
-        nodes = node_snapshot(self.spark, self.sf_dir)
-        edges = derive_all_edges(self.spark, self.sf_dir)
-        nodes.createOrReplaceTempView("nodes")
-        edges.createOrReplaceTempView("edges")
-        PropertyGraph(nodes=nodes, edges=edges).edges_undirected().createOrReplaceTempView(
-            "edges_undirected"
-        )
-        self._views_registered = True
+        key = snapshot_location(self.spark, self.sf_dir)
+        if key is None or self._views is None or self._views[0] != key:
+            nodes = node_snapshot(self.spark, self.sf_dir)
+            edges = derive_all_edges(self.spark, self.sf_dir)
+            undirected = PropertyGraph(nodes=nodes, edges=edges).edges_undirected()
+            self._views = (key, (nodes, edges, undirected))
+        for name, df in zip(SQL_VIEWS, self._views[1]):
+            df.createOrReplaceTempView(name)
 
     def node_table(self) -> DataFrame:
         if self.nodes is not None:
@@ -324,15 +349,16 @@ class NLEngine:
         return strip_markdown_fences(self.llm(build_prompt(question)))
 
     def run_sql(self, question: str, sql: str) -> tuple[DataFrame, str, int]:
-        """N4 validate/repair loop: ``spark.sql`` parses AND analyzes
-        eagerly, so Catalyst is the syntax+semantic validator; on failure
-        the error is round-tripped to the LLM."""
-        if not self._views_registered:
-            self.register_views()
+        """N4 validate/repair loop: :func:`check_query` admits only a
+        query, then ``spark.sql`` parses AND analyzes eagerly, so Catalyst
+        is the syntax+semantic validator; on failure the error is
+        round-tripped to the LLM."""
+        self.register_views()
         attempts = 0
         while True:
             attempts += 1
             try:
+                check_query(self.spark, sql)
                 return self.spark.sql(sql), sql, attempts
             except Exception as e:  # ParseException / AnalysisException
                 if self.llm is None or attempts >= self.max_repair_attempts:

@@ -1,5 +1,8 @@
 """U3 — GraphService boundary marshalling + write-path visibility."""
 
+import os
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -147,19 +150,31 @@ def _drop_sql_views(spark):
         spark.catalog.dropTempView(view)
 
 
-def _llm_count_case(sf_dir):
-    """A stub LLM that answers with a college count, and the DuckDB count."""
-    college, n = run_oracle(
-        f"WITH {NODES_CTE} SELECT college, count(*) FROM nodes"
-        " GROUP BY college ORDER BY 2 DESC, 1 LIMIT 1",
-        sf_dir,
-    ).fetchone()
-    sql = f"SELECT count(*) FROM nodes WHERE college = '{college}'"
+def _llm_nodes_count(sql, sf_dir):
+    """A stub LLM that answers with ``sql``, a count over the ``nodes``
+    view, and the reply its DuckDB count over ``sf_dir`` makes (reading
+    only the tables the nodes derive from)."""
+    con = duckdb.connect()
+    for t in ("customer", "nation", "region"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    (n,) = con.execute(f"WITH {NODES_CTE} {sql}").fetchone()
 
     def llm(prompt):
         return sql if "Spark SQL developer" in prompt else "ok"
 
     return llm, f"There are {n} students matching your query in the database."
+
+
+def _llm_count_case(sf_dir):
+    """A stub LLM that answers with a college count, and the DuckDB count."""
+    (college,) = run_oracle(
+        f"WITH {NODES_CTE} SELECT college FROM nodes"
+        " GROUP BY college ORDER BY count(*) DESC, 1 LIMIT 1",
+        sf_dir,
+    ).fetchone()
+    return _llm_nodes_count(
+        f"SELECT count(*) FROM nodes WHERE college = '{college}'", sf_dir
+    )
 
 
 def test_llm_chat_after_template_chat_registers_views(spark, sf_dir):
@@ -175,6 +190,75 @@ def test_fresh_service_answers_llm_chat(spark, sf_dir):
     _drop_sql_views(spark)
     llm, want = _llm_count_case(sf_dir)
     assert _svc(spark, sf_dir).chat("how many students are in the biggest college?", llm=llm) == want
+
+
+_COUNT_QUESTION = "how many students are in the biggest college?"
+
+
+def test_warm_llm_chats_reuse_the_sql_views(spark, sf_dir, monkeypatch):
+    """The service keeps the SQL views' DataFrames per snapshot generation:
+    of four LLM chats only the first derives the edges, and a warm chat
+    starts only its query's jobs."""
+    from graphdb_neo4j_spark.operators import edges
+    from tests.test_load_table import _jobs_of
+
+    derived = []
+    derive = edges.derive_all_edges
+
+    def counting(*args, **kwargs):
+        derived.append(1)
+        return derive(*args, **kwargs)
+
+    monkeypatch.setattr(edges, "derive_all_edges", counting)
+    llm, want = _llm_count_case(sf_dir)
+    svc = _svc(spark, sf_dir)
+    assert svc.chat(_COUNT_QUESTION, llm=llm) == want
+    sql = llm("Spark SQL developer")
+    query = _jobs_of(spark, lambda: spark.sql(sql).limit(25).collect(), "warm_llm_query")
+    for i in range(3):
+        replies = []
+        jobs = _jobs_of(
+            spark, lambda: replies.append(svc.chat(_COUNT_QUESTION, llm=llm)), f"warm_llm_{i}"
+        )
+        assert replies == [want]
+        assert len(jobs) == len(query), (i, len(jobs))
+    assert len(derived) == 1
+
+
+def test_llm_chat_after_the_sql_views_are_dropped(spark, sf_dir):
+    llm, want = _llm_count_case(sf_dir)
+    svc = _svc(spark, sf_dir)
+    assert svc.chat(_COUNT_QUESTION, llm=llm) == want
+    _drop_sql_views(spark)
+    assert svc.chat(_COUNT_QUESTION, llm=llm) == want
+
+
+@pytest.mark.parametrize("repaired", [False, True])
+def test_llm_sql_command_is_refused(spark, sf_dir, tmp_path, repaired):
+    """An LLM answer that is a command, not a query, never reaches
+    ``spark.sql`` (which would run it at once): the directory an INSERT
+    OVERWRITE names keeps its file, and the chat repairs or fails."""
+    from graphdb_neo4j_spark.nl.pipeline import NLQueryError
+
+    target = tmp_path / "target"
+    target.mkdir()
+    (target / "keep.txt").write_text("keep")
+    insert = (
+        f"INSERT OVERWRITE DIRECTORY '{target}' USING csv SELECT name FROM nodes LIMIT 1"
+    )
+    count, want = _llm_count_case(sf_dir)
+    repair = count("Spark SQL developer") if repaired else insert
+
+    def llm(prompt):
+        return insert if "Spark SQL developer" in prompt else repair
+
+    svc = _svc(spark, sf_dir)
+    if repaired:
+        assert svc.chat(_COUNT_QUESTION, llm=llm) == want
+    else:
+        with pytest.raises(NLQueryError):
+            svc.chat(_COUNT_QUESTION, llm=llm)
+    assert os.listdir(target) == ["keep.txt"]
 
 
 # --- writes reach every read (snapshot ∪ overlay) -----------------------------

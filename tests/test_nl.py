@@ -9,6 +9,7 @@ reference's student names, per the SURVEY §1.4 projection.
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import ParseException
 
 from graphdb_neo4j_spark.nl import (
     NameDictionary,
@@ -19,6 +20,7 @@ from graphdb_neo4j_spark.nl import (
     sanitize_sql,
     strip_markdown_fences,
 )
+from graphdb_neo4j_spark.nl.pipeline import check_query
 from graphdb_neo4j_spark.operators.relationship import two_name_relationship
 from graphdb_neo4j_spark.sources.tpch import node_snapshot
 
@@ -147,6 +149,37 @@ def test_is_query_dispatch():
 
 
 # --- N4: parse-validate-repair loop (Catalyst as the repair oracle) ---------
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT 1",
+        "WITH a AS (SELECT 1 AS x) SELECT x FROM a",
+        "SELECT 1 UNION SELECT 2",
+        "VALUES (1), (2)",
+        "FROM (SELECT 1 AS x) SELECT x",
+    ],
+)
+def test_check_query_admits_queries(spark, sql):
+    check_query(spark, sql)
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "INSERT OVERWRITE DIRECTORY '/nonexistent/x' USING csv SELECT 1",
+        "INSERT INTO t SELECT 1",
+        "CREATE TABLE t AS SELECT 1",
+        "CREATE OR REPLACE TEMP VIEW nodes AS SELECT 1",
+        "WITH a AS (SELECT 1 AS x) INSERT INTO t SELECT x FROM a",
+        "SELECT 1; SELECT 2",
+        "DROP VIEW nodes",
+    ],
+)
+def test_check_query_refuses_commands(spark, sql):
+    with pytest.raises(ParseException):
+        check_query(spark, sql)
 
 
 def test_repair_loop_fixes_bad_sql(spark, sf_dir, engine):

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.api import GraphService
 from graphdb_neo4j_spark.llmdata.genstore import COMMITTED, generation_dirs
+from graphdb_neo4j_spark.nl.pipeline import NLEngine
 from graphdb_neo4j_spark.sources.tpch import (
     NODE_SCHEMA,
     SNAPSHOT_SOURCES,
@@ -23,7 +24,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     node_snapshot_table,
     snapshot_location,
 )
-from tests.test_api import _force_spark
+from tests.test_api import _force_spark, _llm_nodes_count
 from tests.test_load_table import _jobs_of
 
 
@@ -185,3 +186,38 @@ def test_snapshot_table_size_rule(spark, src, monkeypatch):
         monkeypatch.setattr(tpch, "driver_result_cap", lambda spark, cap=cap: cap)
         monkeypatch.setattr(tpch, "_SNAPSHOT_TABLES", {})  # decided on first read
         assert (node_snapshot_table(spark, src) is not None) == fits, cap
+
+
+_RENAMED = "SELECT count(*) FROM nodes WHERE name LIKE 'renamed#%'"
+
+
+def test_llm_sql_follows_a_rewritten_source(spark, src):
+    """A long-lived engine, and a service, answer LLM SQL over the sources
+    as they are now: after a rewrite builds a new generation and sweeps the
+    one their views read, their next question reads the new one."""
+    question = "how many students are there?"
+    llm, before = _llm_nodes_count(_RENAMED, src)
+    eng, svc = NLEngine(spark, src, llm=llm), GraphService(spark, src)
+    assert eng.answer(question).reply == svc.chat(question, llm=llm) == before
+    _, old_gen = _gen_dir(spark, src)
+
+    _rewrite(src, "customer")
+    node_snapshot(spark, src)  # builds the new generation, sweeps the old
+    assert not os.path.exists(old_gen)
+    llm, after = _llm_nodes_count(_RENAMED, src)
+    assert after != before
+    assert eng.answer(question).reply == svc.chat(question, llm=llm) == after
+
+
+def test_services_over_two_dirs_alternate_llm_chats(spark, sf_dir, src):
+    """The SQL views are session-wide: each LLM chat points them at its own
+    service's dir, so alternating services each answer over their own."""
+    _rewrite(src, "customer")
+    question = "how many students are there?"
+    cases = [
+        (GraphService(spark, d), *_llm_nodes_count(_RENAMED, d)) for d in (sf_dir, src)
+    ]
+    assert cases[0][2] != cases[1][2]
+    for _ in range(2):
+        for svc, llm, want in cases:
+            assert svc.chat(question, llm=llm) == want
