@@ -36,7 +36,10 @@ Each read has two plans and one size rule chooses between them:
   rows are collected only here.
 
 Both kinds of row carry the same column names and Python types, so the
-marshalling below is shared. The registry's ``q_*`` forms stay Spark.
+marshalling below is shared. Of the registry's ``q_*`` forms, the graph
+queries ``q_graph_components``, ``q_pagerank_factored`` and
+``q_pagerank_ppr`` read the same driver-side generation
+(``operators/graphalgo``); the others stay Spark.
 The LLM-SQL views (``NLEngine.register_views``) are built once per
 snapshot generation and kept with the service, which re-points them on
 every LLM-SQL chat; their ``nodes`` view reads the base snapshot without
@@ -68,6 +71,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     customer_nodes,
     node_snapshot,
     node_snapshot_table,
+    snapshot_location,
 )
 
 # --- boundary types (the reference's Pydantic models, student_service.py
@@ -145,7 +149,11 @@ class GraphService:
     )
     # (overlay rows, overlay DataFrame) of the last Spark overlay
     _overlay_df: tuple[int, DataFrame] | None = field(default=None, repr=False)
-    _names: NameDictionary | None = field(default=None, repr=False)
+    # (snapshot generation key, the name dictionary built from it): rebuilt
+    # when the generation changes, extended by save_student
+    _names: tuple[tuple[str, str] | None, NameDictionary] | None = field(
+        default=None, repr=False
+    )
     # the LLM-SQL views' DataFrames, handed to each chat's engine like _names
     _sql_views: tuple | None = field(default=None, repr=False)
 
@@ -302,7 +310,7 @@ class GraphService:
         added = pa.Table.from_pylist([dict(zip(NODE_COLUMNS, row))], schema=ARROW_NODE_SCHEMA)
         self._overlay = pa.concat_tables([self._overlay, added]).combine_chunks()
         if self._names is not None:
-            self._names.add(name)
+            self._names[1].add(name)
         return new_id
 
     def new_edges_for_overlay(self) -> DataFrame:
@@ -337,8 +345,11 @@ class GraphService:
     def chat(self, question: str, llm=None) -> str:
         """Entry point A — NL question → answer text (SURVEY.md §3.1).
 
-        The name dictionary is built from the service's view on the first
-        chat, reused by every later one, and extended by ``save_student``.
+        The name dictionary is built from the service's view (overlay
+        names included) on the first chat of each snapshot generation,
+        keyed by :func:`snapshot_location` like the SQL views (no key: it is
+        rebuilt on every chat), reused by the later chats of that
+        generation, and extended by ``save_student``.
         Each chat runs on a new ``NLEngine`` over the view (the driver-side
         table when it fits, else the DataFrame), so the template path (one
         name, two names) reaches onboarded students. Only a question that
@@ -352,17 +363,18 @@ class GraphService:
         from graphdb_neo4j_spark.nl.pipeline import NLEngine
 
         table = self._table()
+        key, kept = snapshot_location(self.spark, self.sf_dir), self._names
         eng = NLEngine(
             self.spark,
             self.sf_dir,
             llm=llm,
             nodes=self._view() if table is None else None,
             table=table,
-            _names=self._names,
+            _names=kept[1] if kept and key is not None and kept[0] == key else None,
             _views=self._sql_views,
         )
         with job_label(self.spark, "api.chat"):
-            self._names = eng.names
+            self._names = (key, eng.names)
             try:
                 return eng.answer(question, explain=True).reply or ""
             finally:

@@ -784,8 +784,9 @@ register(
     # r8: oracle-promoted — NOT via the transitive closure (infeasible at
     # this density, the pre-r8 rows-only reason) but by unrolling the
     # bipartite min-label propagation itself, one materialized CTE level
-    # per round; equal by construction on both of min_label_components'
-    # plans (one Arrow collect + numpy when node ids and incidence fit
+    # per round; equal by construction on every plan (numpy over the node
+    # snapshot's Arrow generation when it is on the driver; else one Arrow
+    # collect + numpy when node ids and incidence fit
     # spark.driver.maxResultSize at 16 B a row, else the broadcast loop),
     # whether or not they early-stop (see graph_components_sql).
     # Union-find parity pytest kept as the independent cross-check.

@@ -7,7 +7,7 @@ Stage map to the reference (/root/reference/src/llm_cypher.py):
 |---|---|---|
 | N2 codegen prompt contract | :60-135 (Cypher) | :func:`build_prompt` (Spark SQL over ``nodes``/``edges`` views) |
 | N3 fence stripping | :141-148 | :func:`strip_markdown_fences` |
-| N4 syntax repair | :151-162, 186-224 (regex fixes) | :func:`NLEngine.run_sql` — :func:`check_query` (only a single query parses) then ``spark.sql`` parse/analysis IS the validator; on failure the error text is fed back to the LLM for one repair round (Catalyst as the repair oracle, SURVEY.md §2.10-N4) |
+| N4 syntax repair | :151-162, 186-224 (regex fixes) | :func:`NLEngine.run_sql` — :func:`check_query` (only a single query over the graph views parses, with no reflective call) then ``spark.sql`` parse/analysis IS the validator; on failure the error text is fed back to the LLM for one repair round (Catalyst as the repair oracle, SURVEY.md §2.10-N4) |
 | N5 semantic guard rewrite | :165-183 (force case-insensitive names) | :func:`sanitize_sql` (lowercase name literals — data is lowercase at rest) |
 | N6 dispatch heuristic | :404-416 (``\\bMATCH\\b``) | :func:`is_query` (``\\bSELECT\\b``) |
 | N7 result explanation | :248-345 (count fast-path :300-312) | :func:`explain_result` |
@@ -22,6 +22,7 @@ and routes them to the engine's native operators.
 
 from __future__ import annotations
 
+import json
 import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -187,13 +188,76 @@ def is_query(text: str) -> bool:
     return bool(re.search(r"\bSELECT\b", text, re.IGNORECASE))
 
 
+# functions that call Java methods by name in the driver's JVM
+_REFLECTIVE = frozenset({"reflect", "java_method", "try_reflect"})
+_PLAIN_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _plan_nodes(tree):
+    """Every node of a parsed plan's JSON: plans, expressions, subquery
+    plans and CTE definitions alike."""
+    if isinstance(tree, dict):
+        if "class" in tree:
+            yield tree
+        for value in tree.values():
+            yield from _plan_nodes(value)
+    elif isinstance(tree, list):
+        for value in tree:
+            yield from _plan_nodes(value)
+
+
+def _name_parts(text: str) -> list[str]:
+    """``"[a, b]"``, a multipart name as the plan's JSON writes it, as
+    lowercase parts (names resolve case-insensitively)."""
+    return text[1:-1].lower().split(", ")
+
+
 def check_query(spark: SparkSession, sql: str) -> None:
     """N4 allow-list: ``sql`` must parse as ONE query (SELECT, WITH, set
     operations, VALUES, FROM-first), else the parser's ``ParseException``
     is raised. ``spark.sql`` runs a command (INSERT [OVERWRITE DIRECTORY],
     CTAS, CREATE VIEW, DROP) eagerly, and :func:`is_query` accepts any
-    text containing SELECT, so LLM text must pass this before it runs."""
-    spark._jsparkSession.sessionState().sqlParser().parseQuery(sql)
+    text containing SELECT, so LLM text must pass this before it runs.
+
+    A query is also refused (``ValueError``) when its parsed plan reads
+    any relation but the :data:`SQL_VIEWS` and its own CTEs (so no
+    ``text.`/path``` file read), names a CTE after a table or view of the
+    session catalog, calls a reflective function (``reflect``,
+    ``java_method``, ``try_reflect``, under any qualifier), or names
+    anything through ``IDENTIFIER(...)``, whose target the parser cannot
+    see."""
+    plan = spark._jsparkSession.sessionState().sqlParser().parseQuery(sql)
+    nodes = list(_plan_nodes(json.loads(plan.toJSON())))
+    ctes = {
+        cte["_1"].lower()
+        for n in nodes
+        if n["class"].endswith(".UnresolvedWith")
+        for cte in n["cteRelations"]
+    }
+    for cte in ctes:
+        # the name is readable in the whole query, and outside its CTE's
+        # scope it reads the catalog object it names
+        if not _PLAIN_NAME.fullmatch(cte) or (
+            cte not in SQL_VIEWS and spark.catalog.tableExists(cte)
+        ):
+            raise ValueError(
+                f"query not allowed: CTE name {cte!r} is not a plain name unused"
+                " by the session catalog"
+            )
+    readable = set(SQL_VIEWS) | ctes
+    for n in nodes:
+        kind = n["class"].rsplit(".", 1)[-1]
+        if "UnresolvedIdentifier" in kind:
+            raise ValueError("query not allowed: IDENTIFIER(...) names")
+        if kind == "UnresolvedRelation":
+            parts = _name_parts(n["multipartIdentifier"])
+            if len(parts) != 1 or parts[0] not in readable:
+                raise ValueError(
+                    f"query not allowed: it reads {n['multipartIdentifier']};"
+                    f" only {', '.join(SQL_VIEWS)} and the query's CTEs are readable"
+                )
+        if kind == "UnresolvedFunction" and _name_parts(n["nameParts"])[-1] in _REFLECTIVE:
+            raise ValueError(f"query not allowed: it calls {n['nameParts']}")
 
 
 # --- N7: result explanation -------------------------------------------------
@@ -350,9 +414,9 @@ class NLEngine:
 
     def run_sql(self, question: str, sql: str) -> tuple[DataFrame, str, int]:
         """N4 validate/repair loop: :func:`check_query` admits only a
-        query, then ``spark.sql`` parses AND analyzes eagerly, so Catalyst
-        is the syntax+semantic validator; on failure the error is
-        round-tripped to the LLM."""
+        query over the graph views, then ``spark.sql`` parses AND analyzes
+        eagerly, so Catalyst is the syntax+semantic validator; on failure
+        (a refusal included) the error is round-tripped to the LLM."""
         self.register_views()
         attempts = 0
         while True:

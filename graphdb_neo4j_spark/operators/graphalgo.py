@@ -37,6 +37,18 @@ Scale shapes:
   round joins the incidence in place against broadcast label and group
   tables and shuffles only the combined messages, O(|groups| + |nodes|)
   per partition (:func:`min_label_components`).
+- **The registry's components and lumped PageRank read the node
+  snapshot when it is on the driver.** When
+  :func:`~graphdb_neo4j_spark.sources.tpch.node_snapshot_table` holds
+  the snapshot generation as Arrow — the switch ``api.GraphService``
+  reads by — :func:`q_graph_components`, :func:`q_pagerank_factored`
+  and :func:`q_pagerank_ppr` take their classes and incidence from its
+  columns and run the same numpy cores as the Spark forms' driver paths
+  (:func:`_min_labels`, :func:`_class_ranks`): 0 Spark jobs, and an
+  Arrow-built local DataFrame as the result. When it is None (the
+  generation is above ``spark.driver.maxResultSize``, or there is no
+  local snapshot) they run the Spark forms above over the raw
+  derivation.
 """
 
 from __future__ import annotations
@@ -45,6 +57,7 @@ from functools import reduce
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,6 +69,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     _customer_part_pairs,
     customer_interest_pairs,
     customer_nodes,
+    node_snapshot_table,
 )
 from graphdb_neo4j_spark.obs import job_label
 from graphdb_neo4j_spark.session import driver_result_cap, materialize
@@ -294,16 +308,8 @@ def _lumped_pagerank(
     damping: float,
     seed_ids: list[int] | None = None,
 ) -> DataFrame:
-    """(id, rank) of the factored recurrence iterated on the class table:
-    nodes of one class share degree and starting rank, so they share the
-    rank of every round. With c = r/deg and S_X the group sums of k·c
-    over the classes sharing the attribute key X,
-
-        r' = (1−d)·e + d·(S_A + S_B − S_AB − c)
-
-    (e ≡ 1 for PageRank, 1/|S| on the seeds for PPR), and the shared
-    degree is the same sums of 1: deg = n_A + n_B − n_AB − 1. The "no
-    clique" key is no group, so there a sum is the member's own value.
+    """(id, rank) of the factored recurrence iterated on the class table
+    (:func:`_class_ranks`).
 
     The class table is tiny by construction, so it is collected once as
     Arrow (jobs labelled ``lumped_pagerank/classes``) and every round runs
@@ -316,6 +322,67 @@ def _lumped_pagerank(
     keyed, keys, cls = _pagerank_classes(nodes, attrs, seed_ids)
     with job_label(spark, "lumped_pagerank/classes"):
         table = cls.toArrow()
+    r = _class_ranks(table, attrs, iterations, damping, seed_ids)
+    ranks = spark.createDataFrame(
+        pa.table({**{"_" + x: table.column(x) for x in keys}, "r": r})
+    )
+    on = [keyed[x].eqNullSafe(ranks["_" + x]) for x in keys]
+    return keyed.join(F.broadcast(ranks), on).select(
+        "id", F.col("r").alias("rank")
+    )
+
+
+def _lumped_pagerank_arrow(
+    table: pa.Table,
+    attrs: tuple[str, str],
+    iterations: int,
+    damping: float,
+    seed_ids: list[int] | None = None,
+) -> pa.Table:
+    """:func:`_lumped_pagerank` over a node table held on the driver
+    (``id`` and the two attribute columns): the class table is built in
+    Arrow under the same key rules as :func:`_pagerank_classes`, the
+    rounds are :func:`_class_ranks`, and each node takes its class's rank
+    by class code. No Spark job."""
+    ids = table.column("id")
+    keys = {
+        # NULL != '' is NULL, so both fold into the NULL "no clique" key
+        x: pc.if_else(pc.not_equal(table.column(x), ""), table.column(x), None)
+        for x in attrs
+    }
+    if seed_ids is not None:
+        seeded = pc.is_in(ids, value_set=pa.array(seed_ids, ids.type))
+        keys["s"] = pc.if_else(seeded, ids, None)
+    keyed = pa.table(keys)
+    rows = pa.StructArray.from_arrays(
+        [c.combine_chunks() for c in keyed.columns], names=keyed.column_names
+    )
+    code = _dense_codes(pa.chunked_array([rows]))
+    _, first, k = np.unique(code, return_index=True, return_counts=True)
+    classes = keyed.take(first).append_column("k", pa.array(k))
+    r = _class_ranks(classes, attrs, iterations, damping, seed_ids)
+    return pa.table({"id": ids, "rank": r[code]})
+
+
+def _class_ranks(
+    table: pa.Table,
+    attrs: tuple[str, str],
+    iterations: int,
+    damping: float,
+    seed_ids: list[int] | None = None,
+) -> np.ndarray:
+    """The rank of each row of a class table (keys…, k) after
+    ``iterations`` rounds, in numpy: nodes of one class share degree and
+    starting rank, so they share the rank of every round. With c = r/deg
+    and S_X the group sums of k·c over the classes sharing the attribute
+    key X,
+
+        r' = (1−d)·e + d·(S_A + S_B − S_AB − c)
+
+    (e ≡ 1 for PageRank, 1/|S| on the seeded classes — key ``s`` set —
+    for PPR), and the shared degree is the same sums of 1: deg = n_A +
+    n_B − n_AB − 1. The "no clique" (NULL) key is no group, so there a
+    sum is the member's own value."""
     k = table.column("k").to_numpy().astype(np.float64)
     code_a, code_b = (_dense_codes(table.column(x)).astype(np.int64) for x in attrs)
     _, code_ab = np.unique(
@@ -345,13 +412,7 @@ def _lumped_pagerank(
         c = np.divide(r, deg, out=np.zeros(len(k)), where=deg > 0)
         s_a, s_b, s_ab = group_sums(c)
         r = (1.0 - damping) * e + damping * (s_a + s_b - s_ab - c)
-    ranks = spark.createDataFrame(
-        pa.table({**{"_" + x: table.column(x) for x in keys}, "r": r})
-    )
-    on = [keyed[x].eqNullSafe(ranks["_" + x]) for x in keys]
-    return keyed.join(F.broadcast(ranks), on).select(
-        "id", F.col("r").alias("rank")
-    )
+    return r
 
 
 def pagerank_clique_factored(
@@ -453,12 +514,39 @@ def q_pagerank_factored(
     spark: SparkSession, sf_dir: str, iterations: int = 5
 ) -> DataFrame:
     """Clique-factored PageRank over the same SAME_COLLEGE ∪ SAME_BOARD
-    graph as :func:`q_pagerank` — identical answers: one O(N) aggregation
-    to the college × board class table, its rounds on the driver at
-    O(|A|·|B|) each, and one O(N) join-back."""
-    return pagerank_clique_factored(
-        customer_nodes(spark, sf_dir), iterations=iterations
-    ).select("id", F.round("rank", 6).alias("rank"))
+    graph as :func:`q_pagerank` — identical answers: the college × board
+    class table, its rounds on the driver at O(|A|·|B|) each, and each
+    node mapped to its class's rank (:func:`_q_lumped_ranks`). On the
+    snapshot's Arrow generation that starts no Spark job; on the Spark
+    path it is one O(N) aggregation to the class table, its collect and
+    one O(N) join-back (8 jobs at sf0.1). The rounding stays a Spark
+    projection (HALF_UP), folded into the local relation on the Arrow
+    path."""
+    return _q_lumped_ranks(spark, sf_dir, iterations).select(
+        "id", F.round("rank", 6).alias("rank")
+    )
+
+
+def _q_lumped_ranks(
+    spark: SparkSession,
+    sf_dir: str,
+    iterations: int,
+    seed_ids: list[int] | None = None,
+) -> DataFrame:
+    """(id, rank) of the lumped PageRank (PPR with ``seed_ids``) over
+    ``sf_dir``'s college × board classes: from the node snapshot's Arrow
+    generation when :func:`node_snapshot_table` holds it on the driver (an
+    Arrow-built local DataFrame, no Spark job), else the Spark form over
+    :func:`customer_nodes`."""
+    attrs = ("college", "board")
+    table = node_snapshot_table(spark, sf_dir)
+    if table is None:
+        return _lumped_pagerank(
+            customer_nodes(spark, sf_dir), attrs, iterations, DAMPING, seed_ids
+        )
+    return spark.createDataFrame(
+        _lumped_pagerank_arrow(table, attrs, iterations, DAMPING, seed_ids)
+    )
 
 
 # --- personalized PageRank (seeded teleport) ----------------------------------
@@ -554,10 +642,12 @@ def q_pagerank_ppr(
     Runs the clique-factored form (O(|A|·|B|)/iteration on the college ×
     board classes plus the seed's own class — the 100 TB path; the
     edge-walk twin :func:`pagerank_personalized` is the pytest
-    cross-check, and the driver oracle walks the edges in DuckDB)."""
-    return pagerank_ppr_clique_factored(
-        customer_nodes(spark, sf_dir), [seed_id], iterations=iterations
-    ).select("id", F.round("rank", 9).alias("rank"))
+    cross-check, and the driver oracle walks the edges in DuckDB), from
+    the snapshot's Arrow generation with no Spark job when it is on the
+    driver, else as the Spark form (:func:`_q_lumped_ranks`)."""
+    return _q_lumped_ranks(spark, sf_dir, iterations, [seed_id]).select(
+        "id", F.round("rank", 9).alias("rank")
+    )
 
 
 def pagerank_ppr_sql(
@@ -1034,14 +1124,55 @@ def q_graph_components(
     value / ordered part — O(N·attrs + |lineitem|), vs Σ C(n,2)
     materialized clique edges). Group keys are longs: the part key for
     interests, an exact negative key from each attribute group's least
-    member for attribute values. At sf0.1 the node ids and the 660,000-row
-    incidence fit one collect, so :func:`min_label_components` solves
+    member for attribute values.
+
+    When :func:`node_snapshot_table` holds the snapshot generation on the
+    driver, the incidence is read off its columns
+    (:func:`_snapshot_components`) and solved in numpy: 0 Spark jobs.
+    Otherwise the Spark path runs: the incidence is built from the node
+    table and orders ⋈ lineitem, and when node ids and incidence fit one
+    collect (at sf0.1, 660,000 rows) :func:`min_label_components` solves
     them in one Arrow collect and numpy on the driver (7 Spark jobs, no
     checkpoint); a larger incidence takes the broadcast-in-place loop,
     built once and never shuffled inside the loop."""
+    table = node_snapshot_table(spark, sf_dir)
+    if table is not None:
+        return spark.createDataFrame(_snapshot_components(table, max_iterations))
     nodes = customer_nodes(spark, sf_dir)
     inc = component_incidence(nodes, _customer_part_pairs(spark, sf_dir))
     return min_label_components(nodes.select("id"), inc, max_iterations)
+
+
+def _snapshot_components(table: pa.Table, max_iterations: int) -> pa.Table:
+    """:func:`q_graph_components` over the node snapshot held on the
+    driver, in numpy: the incidence of :func:`component_incidence` is
+    read off the snapshot's columns as dense codes — one group per
+    (attribute ordinal, value), NULL and '' dropped, and one per token of
+    ``interests`` (the snapshot's distinct part keys, so the same groups
+    as the part keys) — and solved by :func:`_min_labels`."""
+    ids, node_pos = np.unique(table.column("id").to_numpy(), return_inverse=True)
+    members, groups, n_groups = [], [], 0
+    for attr in ATTRIBUTE_EDGE_TYPES.values():
+        values = table.column(attr)
+        # NULL != '' is NULL, so the fill drops both
+        valid = pc.fill_null(pc.not_equal(values, ""), False)
+        valid = valid.to_numpy(zero_copy_only=False)
+        codes = _dense_codes(values)
+        members.append(node_pos[valid])
+        groups.append(codes[valid] + n_groups)
+        n_groups += codes.max(initial=-1) + 1
+    interests = table.column("interests")
+    lengths = pc.fill_null(pc.list_value_length(interests), 0).to_numpy()
+    members.append(np.repeat(node_pos, lengths))
+    groups.append(_dense_codes(pc.list_flatten(interests)) + n_groups)
+    return _min_labels(
+        ids,
+        node_pos,
+        np.concatenate(members),
+        np.concatenate(groups),
+        table.schema.field("id").type,
+        max_iterations,
+    )
 
 
 def component_incidence(nodes: DataFrame, interest_pairs: DataFrame) -> DataFrame:
@@ -1200,9 +1331,8 @@ def _dense_codes(values: pa.ChunkedArray) -> np.ndarray:
 
 def _components_on_driver(table: pa.Table, max_iterations: int) -> pa.Table:
     """f applied in numpy to a collected (id, gk) union whose NULL-gk rows
-    are the node ids — the driver path of :func:`min_label_components`.
-    Labels are indices into the sorted distinct node ids, so the least
-    index is the least id."""
+    are the node ids — the driver path of :func:`min_label_components`,
+    solved by :func:`_min_labels`."""
     id_type, gk = table.schema.field("id").type, table.column("gk")
     node_rows = gk.is_null().to_numpy(zero_copy_only=False)
     all_ids = table.column("id").to_numpy()
@@ -1214,11 +1344,28 @@ def _components_on_driver(table: pa.Table, max_iterations: int) -> pa.Table:
     keep[keep] = ids[pos[keep]] == all_ids[keep]
     node_pos = pos[node_rows]
     keep &= ~node_rows
-    index = np.int32 if len(pos) < 2**31 else np.int64
-    member = pos[keep].astype(index)
-    group = _dense_codes(gk.filter(pa.array(keep))).astype(index)
+    member = pos[keep]
+    group = _dense_codes(gk.filter(pa.array(keep)))
     del gk, all_ids, pos, keep
+    return _min_labels(ids, node_pos, member, group, id_type, max_iterations)
 
+
+def _min_labels(
+    ids: np.ndarray,
+    node_pos: np.ndarray,
+    member: np.ndarray,
+    group: np.ndarray,
+    id_type: pa.DataType,
+    max_iterations: int,
+) -> pa.Table:
+    """(id, component, component_size) of f applied in numpy: ``ids`` are
+    the sorted distinct node ids, ``node_pos`` each output row's index
+    into them, and incidence row i puts node ``member[i]`` (an index into
+    ``ids``) in group ``group[i]`` (a code ≥ 0). Labels are indices into
+    ``ids``, so the least index is the least id."""
+    bound = max(len(ids), group.max(initial=-1) + 1)
+    index = np.int32 if bound < 2**31 else np.int64
+    member, group = member.astype(index), group.astype(index)
     label = np.arange(len(ids), dtype=index)
 
     def group_min_max():

@@ -208,3 +208,86 @@ def test_template_chat_replies_agree(spark, sf_dir, tables, question):
         assert quiet.df is None and quiet.reply is None
         want = [r.asDict(recursive=True) for r in on_spark.df.collect()]
         assert quiet.rows == want
+
+
+# --- the registry's graph queries over the snapshot ---------------------------
+
+# (id, college, board, stream, address, interests): NULL and '' attributes, a
+# college and a board sharing the value 'x', customers without orders, a hub
+# token ('7') and disjoint token vocabularies, so there are several components
+_GRAPH_ROWS = [
+    (1, "x", "", "s1", None, ["100", "7"]),
+    (2, "x", None, "s2", "", ["7"]),
+    (3, "", "b1", "s1", "a1", ["101", "7"]),
+    (4, None, "b1", "s2", "a1", ["101"]),
+    (5, None, None, None, None, []),
+    (6, "y", "", "s3", "a2", ["200", "201"]),
+    (7, "", None, "s4", "a3", ["201"]),
+    (8, "z", "b2", "s5", "a4", []),
+    (9, "z", "x", "s6", "a5", []),
+    (10, None, "", "s7", "a6", ["300"]),
+    (11, "", "b3", "s8", "a7", ["300", "77"]),
+    (12, "y", "b4", "s3", "a2", ["200"]),
+    (13, "x", "b1", "s1", "a1", ["7"]),
+]
+
+
+@pytest.fixture(scope="module")
+def graph_tables(spark):
+    """(Spark node table, the same rows as a two-chunk Arrow table)."""
+    rows = [
+        {"id": i, "name": f"n{i}", "address": ad, "college": c, "board": b,
+         "stream": st, "interests": tokens}
+        for i, c, b, st, ad, tokens in _GRAPH_ROWS[::-1]  # table order ≠ id order
+    ]
+    halves = [pa.Table.from_pylist(part, schema=ARROW_NODE_SCHEMA)
+              for part in (rows[:6], rows[6:])]
+    tab = pa.concat_tables(halves)
+    return spark.createDataFrame(tab, NODE_SCHEMA), tab
+
+
+def _ranks(rows) -> dict:
+    return {r["id"]: r["rank"] for r in rows}
+
+
+@pytest.mark.parametrize("attrs", [("college", "board"), ("college", "stream")])
+@pytest.mark.parametrize("seeds", [None, [1], [3, 10], [5], [99]])
+def test_lumped_pagerank_forms_agree(graph_tables, attrs, seeds):
+    from graphdb_neo4j_spark.operators import graphalgo
+
+    df, tab = graph_tables
+    want = _ranks(graphalgo._lumped_pagerank(df, attrs, 5, graphalgo.DAMPING, seeds).collect())
+    got = _ranks(
+        graphalgo._lumped_pagerank_arrow(tab, attrs, 5, graphalgo.DAMPING, seeds).to_pylist()
+    )
+    assert got.keys() == want.keys()
+    for i in want:
+        assert got[i] == pytest.approx(want[i], abs=1e-12), i
+
+
+def test_components_forms_agree(graph_tables):
+    from pyspark.sql import functions as F
+
+    from graphdb_neo4j_spark.operators import graphalgo
+
+    df, tab = graph_tables
+    pairs = df.select("id", F.explode("interests").alias("interest"))
+    inc = graphalgo.component_incidence(df, pairs)
+    want = _collected(graphalgo.min_label_components(df.select("id"), inc, 20))
+    got = graphalgo._snapshot_components(tab, 20).to_pylist()
+    assert sorted(got, key=lambda r: r["id"]) == sorted(want, key=lambda r: r["id"])
+    components = {r["id"]: r["component"] for r in got}
+    assert components[5] == 5 and components[8] == components[9] == 8
+    assert len(set(components.values())) == 5
+
+
+def test_graph_queries_start_no_job_on_the_snapshot(spark, sf_dir):
+    """Warm, the registry's graph queries read the snapshot's Arrow
+    generation: the call and its collect start no Spark job."""
+    from graphdb_neo4j_spark.operators import graphalgo
+    from tests.test_load_table import _jobs_of
+
+    for q in (graphalgo.q_graph_components, graphalgo.q_pagerank_factored,
+              graphalgo.q_pagerank_ppr):
+        q(spark, sf_dir).collect()  # warm
+        assert _jobs_of(spark, lambda: q(spark, sf_dir).collect(), f"arrow_{q.__name__}") == []

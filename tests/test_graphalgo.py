@@ -576,8 +576,16 @@ def _refuse(path):
     return run
 
 
+def _force_spark(monkeypatch):
+    """No node snapshot on the driver: the registry's graph queries take
+    their Spark forms."""
+    monkeypatch.setattr(graphalgo, "node_snapshot_table", lambda spark, sf_dir: None)
+
+
 def _force_loop(monkeypatch):
-    """A zero row cap: every input is above one collect."""
+    """A zero row cap: every input is above one collect (the node snapshot
+    too)."""
+    _force_spark(monkeypatch)
     monkeypatch.setattr(graphalgo, "_collect_row_cap", lambda spark, width: 0)
     monkeypatch.setattr(
         graphalgo, "_components_on_driver", _refuse("_components_on_driver")
@@ -916,10 +924,12 @@ def test_lumped_pagerank_labels_its_collect_and_restores_the_description(
 def test_graph_components_collect_reads_part_keys_as_longs(
     spark, sf_dir, monkeypatch
 ):
-    """Components key interests by the long part key: the collected input
-    never casts ``l_partkey`` to a string (and back)."""
+    """On the Spark path, components key interests by the long part key:
+    the collected input never casts ``l_partkey`` to a string (and
+    back)."""
     import re
 
+    _force_spark(monkeypatch)
     frame = type(spark.range(1))
     real, plans = frame.toArrow, []
 
@@ -933,15 +943,20 @@ def test_graph_components_collect_reads_part_keys_as_longs(
     assert not re.search(r"cast\(l_partkey#\d+L? as string\)", plans[0]), plans[0]
 
 
-def test_graph_components_warm_job_budget(spark, sf_dir):
-    """The whole call, collect included, stays a handful of jobs: the
-    per-round loop cannot quietly return for an input of this size."""
+def test_graph_components_warm_job_budget(spark, sf_dir, monkeypatch):
+    """Warm, the whole call, collect included, starts no Spark job on the
+    snapshot's Arrow generation, and stays a handful of jobs on the Spark
+    path: the per-round loop cannot quietly return for an input of this
+    size."""
     from tests.test_load_table import _jobs_of
 
     def run():
         graphalgo.q_graph_components(spark, sf_dir).collect()
 
     run()  # warm
+    assert _jobs_of(spark, run, "budget_graph_components_arrow") == []
+    _force_spark(monkeypatch)
+    run()
     jobs = _jobs_of(spark, run, "budget_graph_components")
     assert 0 < len(jobs) <= 10, len(jobs)
 

@@ -159,10 +159,77 @@ def test_is_query_dispatch():
         "SELECT 1 UNION SELECT 2",
         "VALUES (1), (2)",
         "FROM (SELECT 1 AS x) SELECT x",
+        "SELECT count(*) AS n FROM nodes WHERE college = 'x'",
+        "WITH big AS (SELECT college FROM Nodes) SELECT * FROM big JOIN EDGES e",
+        "SELECT * FROM edges_undirected WHERE src IN (SELECT id FROM nodes)",
+        "SELECT upper(name), size(interests) FROM nodes",
     ],
 )
 def test_check_query_admits_queries(spark, sql):
     check_query(spark, sql)
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT * FROM text.`/etc/hostname`",
+        "SELECT 1 WHERE EXISTS (SELECT * FROM json.`/etc/x`)",
+        "SELECT * FROM spark_catalog.default.nodes",
+        "SELECT * FROM secrets",
+        "WITH `text, /etc/hostname` AS (SELECT 1) SELECT * FROM text.`/etc/hostname`",
+        "SELECT reflect('java.lang.System', 'getProperty', 'user.name')",
+        "SELECT BUILTIN.Reflect('java.lang.System', 'getProperty', 'user.name')",
+        "SELECT java_method('java.lang.System', 'getProperty', 'user.name')",
+        "SELECT try_reflect('java.lang.System', 'getProperty', 'user.name')",
+        "SELECT transform(array(1), x -> reflect('java.lang.Math', 'abs', x))",
+        "SELECT * FROM IDENTIFIER('text.`/etc/hostname`')",
+        "SELECT IDENTIFIER('reflect')('java.lang.System', 'getProperty', 'user.name')",
+    ],
+)
+def test_check_query_refuses_reads_beyond_the_views_and_reflection(spark, sql):
+    with pytest.raises(ValueError, match="not allowed"):
+        check_query(spark, sql)
+
+
+def test_check_query_refuses_a_cte_named_after_a_catalog_view(spark):
+    """A CTE name is readable in the whole query, so one that names a
+    catalog view would read that view outside the CTE's scope."""
+    spark.sql("SELECT 'top secret' AS s").createOrReplaceTempView("secret_t")
+    try:
+        for sql in [
+            "SELECT * FROM (WITH secret_t AS (SELECT 1 AS x) SELECT * FROM secret_t) a,"
+            " secret_t b",
+            "WITH a AS (SELECT * FROM secret_t), secret_t AS (SELECT 1 AS x) SELECT * FROM a",
+        ]:
+            with pytest.raises(ValueError, match="not allowed"):
+                check_query(spark, sql)
+    finally:
+        spark.catalog.dropTempView("secret_t")
+
+
+def _refused_twice(spark, sf_dir, sql):
+    """An LLM that answers ``sql`` and repairs it to ``sql`` again: the
+    engine must give up rather than run it."""
+    from graphdb_neo4j_spark.nl.pipeline import NLQueryError
+
+    llm = MockLLM(sql, sql)
+    with pytest.raises(NLQueryError, match="not allowed"):
+        NLEngine(spark=spark, sf_dir=sf_dir, llm=llm).answer("show me the data please")
+    assert len(llm.prompts) == 2  # the refusal went through the repair round
+
+
+def test_llm_sql_cannot_read_a_local_file(spark, sf_dir, tmp_path):
+    secret = tmp_path / "secret.txt"
+    secret.write_text("s3cret\n")
+    _refused_twice(spark, sf_dir, f"SELECT * FROM text.`{secret}`")
+    _refused_twice(spark, sf_dir, f"SELECT * FROM IDENTIFIER('text.`{secret}`')")
+
+
+@pytest.mark.parametrize("fn", ["reflect", "builtin.reflect", "java_method"])
+def test_llm_sql_cannot_call_java_methods(spark, sf_dir, fn):
+    _refused_twice(
+        spark, sf_dir, f"SELECT {fn}('java.lang.System', 'getProperty', 'user.name') AS u"
+    )
 
 
 @pytest.mark.parametrize(

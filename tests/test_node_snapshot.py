@@ -221,3 +221,30 @@ def test_services_over_two_dirs_alternate_llm_chats(spark, sf_dir, src):
     for _ in range(2):
         for svc, llm, want in cases:
             assert svc.chat(question, llm=llm) == want
+
+
+def test_template_chat_follows_a_rewritten_source(spark, src, monkeypatch):
+    """The service's name dictionary is kept with its snapshot generation:
+    warm chats reuse it, and after customer.parquet is rewritten the same
+    service's template chat finds a renamed student, and still finds one
+    it onboarded."""
+    from graphdb_neo4j_spark.api import StudentCreate
+    from graphdb_neo4j_spark.nl.names import NameDictionary
+
+    real, built = NameDictionary.from_nodes, []
+
+    def counted(cls, nodes):
+        built.append(1)
+        return real(nodes)
+
+    monkeypatch.setattr(NameDictionary, "from_nodes", classmethod(counted))
+    svc = GraphService(spark, src)
+    assert "customer#000000042" in svc.chat("who is customer#000000042?")
+    svc.save_student(StudentCreate(name="Zelda Quill", college="x"))
+    assert "zelda quill" in svc.chat("who is zelda quill?")
+    assert len(built) == 1
+
+    _rewrite(src, "customer")
+    assert "name: renamed#42" in svc.chat("who is renamed#42?")
+    assert "zelda quill" in svc.chat("who is zelda quill?")
+    assert len(built) == 2
