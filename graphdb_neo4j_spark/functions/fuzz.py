@@ -26,7 +26,7 @@ the column's arithmetic and ``round(·, 4)`` exactly.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import MAX_PREC, ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 import pandas as pd
@@ -92,11 +92,17 @@ def levenshtein_ratio(distance: np.ndarray, lens: np.ndarray, query_len: int) ->
 
 
 def round_half_up(x: np.ndarray, scale: int) -> np.ndarray:
-    """``round(x, scale)`` as Spark rounds a double: the shortest decimal
-    that reads back as x, rounded HALF_UP."""
+    """``round(x, scale)`` as Spark rounds a finite double: the shortest
+    decimal that reads back as x, rounded HALF_UP, exactly (a large double
+    has more digits than the default decimal context keeps); a result of
+    zero is +0.0, as a BigDecimal has no negative zero."""
     step = Decimal(1).scaleb(-scale)
+    exact = Context(prec=MAX_PREC)
     values, inverse = np.unique(x, return_inverse=True)
-    rounded = [float(Decimal(repr(float(v))).quantize(step, ROUND_HALF_UP)) for v in values]
+    rounded = [
+        float(Decimal(repr(float(v))).quantize(step, ROUND_HALF_UP, exact)) + 0.0
+        for v in values
+    ]
     return np.asarray(rounded, np.float64)[inverse.reshape(-1)]
 
 

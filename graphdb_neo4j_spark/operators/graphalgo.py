@@ -33,10 +33,11 @@ Scale shapes:
   Min-label propagation runs on the node↔group incidence, built once
   with long group keys. When node ids and incidence fit one collect
   (rows × 16 B ≤ ``spark.driver.maxResultSize``) the same update runs
-  in numpy on the driver after one Arrow collect; above that, each
-  round joins the incidence in place against broadcast label and group
-  tables and shuffles only the combined messages, O(|groups| + |nodes|)
-  per partition (:func:`min_label_components`).
+  in numpy on the driver after one Arrow collect, as segment reductions
+  over the incidence in compressed-sparse-row form (:class:`_Incidence`);
+  above that, each round joins the incidence in place against broadcast
+  label and group tables and shuffles only the combined messages,
+  O(|groups| + |nodes|) per partition (:func:`min_label_components`).
 - **The registry's components and lumped PageRank read the node
   snapshot when it is on the driver.** When
   :func:`~graphdb_neo4j_spark.sources.tpch.node_snapshot_table` holds
@@ -45,15 +46,21 @@ Scale shapes:
   and :func:`q_pagerank_ppr` take their classes and incidence from its
   columns and run the same numpy cores as the Spark forms' driver paths
   (:func:`_min_labels`, :func:`_class_ranks`): 0 Spark jobs, and an
-  Arrow-built local DataFrame as the result. When it is None (the
-  generation is above ``spark.driver.maxResultSize``, or there is no
-  local snapshot) they run the Spark forms above over the raw
-  derivation.
+  Arrow-built local DataFrame as the result. The generation is
+  immutable, so the components' CSR incidence is built by the first
+  components call on it and kept with it
+  (:func:`~graphdb_neo4j_spark.sources.tpch.snapshot_derived`); each
+  call then runs only the rounds. The lumped ranks are rounded HALF_UP
+  in numpy once per class, before they reach the nodes, on both paths.
+  When the table is None (the generation is above
+  ``spark.driver.maxResultSize``, or there is no local snapshot) they
+  run the Spark forms above over the raw derivation.
 """
 
 from __future__ import annotations
 
 from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -62,6 +69,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.functions.fuzz import round_half_up
 from graphdb_neo4j_spark.graph import ATTRIBUTE_EDGE_TYPES
 from graphdb_neo4j_spark.sources.tpch import (
     CUST_PARTS_CTE,
@@ -70,6 +78,7 @@ from graphdb_neo4j_spark.sources.tpch import (
     customer_interest_pairs,
     customer_nodes,
     node_snapshot_table,
+    snapshot_derived,
 )
 from graphdb_neo4j_spark.obs import job_label
 from graphdb_neo4j_spark.session import driver_result_cap, materialize
@@ -307,9 +316,11 @@ def _lumped_pagerank(
     iterations: int,
     damping: float,
     seed_ids: list[int] | None = None,
+    decimals: int | None = None,
 ) -> DataFrame:
     """(id, rank) of the factored recurrence iterated on the class table
-    (:func:`_class_ranks`).
+    (:func:`_class_ranks`), the class ranks rounded HALF_UP to
+    ``decimals`` when it is given.
 
     The class table is tiny by construction, so it is collected once as
     Arrow (jobs labelled ``lumped_pagerank/classes``) and every round runs
@@ -322,7 +333,7 @@ def _lumped_pagerank(
     keyed, keys, cls = _pagerank_classes(nodes, attrs, seed_ids)
     with job_label(spark, "lumped_pagerank/classes"):
         table = cls.toArrow()
-    r = _class_ranks(table, attrs, iterations, damping, seed_ids)
+    r = _class_ranks(table, attrs, iterations, damping, seed_ids, decimals)
     ranks = spark.createDataFrame(
         pa.table({**{"_" + x: table.column(x) for x in keys}, "r": r})
     )
@@ -338,6 +349,7 @@ def _lumped_pagerank_arrow(
     iterations: int,
     damping: float,
     seed_ids: list[int] | None = None,
+    decimals: int | None = None,
 ) -> pa.Table:
     """:func:`_lumped_pagerank` over a node table held on the driver
     (``id`` and the two attribute columns): the class table is built in
@@ -360,7 +372,7 @@ def _lumped_pagerank_arrow(
     code = _dense_codes(pa.chunked_array([rows]))
     _, first, k = np.unique(code, return_index=True, return_counts=True)
     classes = keyed.take(first).append_column("k", pa.array(k))
-    r = _class_ranks(classes, attrs, iterations, damping, seed_ids)
+    r = _class_ranks(classes, attrs, iterations, damping, seed_ids, decimals)
     return pa.table({"id": ids, "rank": r[code]})
 
 
@@ -370,6 +382,7 @@ def _class_ranks(
     iterations: int,
     damping: float,
     seed_ids: list[int] | None = None,
+    decimals: int | None = None,
 ) -> np.ndarray:
     """The rank of each row of a class table (keys…, k) after
     ``iterations`` rounds, in numpy: nodes of one class share degree and
@@ -382,7 +395,9 @@ def _class_ranks(
     (e ≡ 1 for PageRank, 1/|S| on the seeded classes — key ``s`` set —
     for PPR), and the shared degree is the same sums of 1: deg = n_A +
     n_B − n_AB − 1. The "no clique" (NULL) key is no group, so there a
-    sum is the member's own value."""
+    sum is the member's own value. With ``decimals`` the ranks are
+    rounded as Spark's ``round`` rounds a double (HALF_UP), once per
+    class instead of once per node."""
     k = table.column("k").to_numpy().astype(np.float64)
     code_a, code_b = (_dense_codes(table.column(x)).astype(np.int64) for x in attrs)
     _, code_ab = np.unique(
@@ -412,7 +427,7 @@ def _class_ranks(
         c = np.divide(r, deg, out=np.zeros(len(k)), where=deg > 0)
         s_a, s_b, s_ab = group_sums(c)
         r = (1.0 - damping) * e + damping * (s_a + s_b - s_ab - c)
-    return r
+    return r if decimals is None else round_half_up(r, decimals)
 
 
 def pagerank_clique_factored(
@@ -516,36 +531,38 @@ def q_pagerank_factored(
     """Clique-factored PageRank over the same SAME_COLLEGE ∪ SAME_BOARD
     graph as :func:`q_pagerank` — identical answers: the college × board
     class table, its rounds on the driver at O(|A|·|B|) each, and each
-    node mapped to its class's rank (:func:`_q_lumped_ranks`). On the
-    snapshot's Arrow generation that starts no Spark job; on the Spark
-    path it is one O(N) aggregation to the class table, its collect and
-    one O(N) join-back (8 jobs at sf0.1). The rounding stays a Spark
-    projection (HALF_UP), folded into the local relation on the Arrow
-    path."""
-    return _q_lumped_ranks(spark, sf_dir, iterations).select(
-        "id", F.round("rank", 6).alias("rank")
-    )
+    node mapped to its class's rank, rounded to 6 decimals per class
+    (:func:`_q_lumped_ranks`). On the snapshot's Arrow generation that
+    starts no Spark job and the result is a bare local relation; on the
+    Spark path it is one O(N) aggregation to the class table, its collect
+    and one O(N) join-back (8 jobs at sf0.1)."""
+    return _q_lumped_ranks(spark, sf_dir, iterations, 6)
 
 
 def _q_lumped_ranks(
     spark: SparkSession,
     sf_dir: str,
     iterations: int,
+    decimals: int,
     seed_ids: list[int] | None = None,
 ) -> DataFrame:
     """(id, rank) of the lumped PageRank (PPR with ``seed_ids``) over
-    ``sf_dir``'s college × board classes: from the node snapshot's Arrow
-    generation when :func:`node_snapshot_table` holds it on the driver (an
-    Arrow-built local DataFrame, no Spark job), else the Spark form over
-    :func:`customer_nodes`."""
+    ``sf_dir``'s college × board classes, each class rank rounded HALF_UP
+    to ``decimals`` in numpy before it is mapped to the nodes — Spark's
+    ``round`` of a double, computed once per class: from the node
+    snapshot's Arrow generation when :func:`node_snapshot_table` holds it
+    on the driver (an Arrow-built local DataFrame, no Spark job), else the
+    Spark form over :func:`customer_nodes`, whose broadcast join-back
+    carries the rounded class ranks."""
     attrs = ("college", "board")
     table = node_snapshot_table(spark, sf_dir)
     if table is None:
         return _lumped_pagerank(
-            customer_nodes(spark, sf_dir), attrs, iterations, DAMPING, seed_ids
+            customer_nodes(spark, sf_dir), attrs, iterations, DAMPING, seed_ids,
+            decimals,
         )
     return spark.createDataFrame(
-        _lumped_pagerank_arrow(table, attrs, iterations, DAMPING, seed_ids)
+        _lumped_pagerank_arrow(table, attrs, iterations, DAMPING, seed_ids, decimals)
     )
 
 
@@ -644,10 +661,9 @@ def q_pagerank_ppr(
     edge-walk twin :func:`pagerank_personalized` is the pytest
     cross-check, and the driver oracle walks the edges in DuckDB), from
     the snapshot's Arrow generation with no Spark job when it is on the
-    driver, else as the Spark form (:func:`_q_lumped_ranks`)."""
-    return _q_lumped_ranks(spark, sf_dir, iterations, [seed_id]).select(
-        "id", F.round("rank", 9).alias("rank")
-    )
+    driver, else as the Spark form (:func:`_q_lumped_ranks`, which also
+    rounds, once per class)."""
+    return _q_lumped_ranks(spark, sf_dir, iterations, 9, [seed_id])
 
 
 def pagerank_ppr_sql(
@@ -1127,9 +1143,10 @@ def q_graph_components(
     member for attribute values.
 
     When :func:`node_snapshot_table` holds the snapshot generation on the
-    driver, the incidence is read off its columns
-    (:func:`_snapshot_components`) and solved in numpy: 0 Spark jobs.
-    Otherwise the Spark path runs: the incidence is built from the node
+    driver, the incidence is read off its columns into CSR form by the
+    first call on that generation and kept with it; every call solves it
+    in numpy by segment reductions (:func:`_snapshot_components`): 0 Spark
+    jobs. Otherwise the Spark path runs: the incidence is built from the node
     table and orders ⋈ lineitem, and when node ids and incidence fit one
     collect (at sf0.1, 660,000 rows) :func:`min_label_components` solves
     them in one Arrow collect and numpy on the driver (7 Spark jobs, no
@@ -1145,11 +1162,18 @@ def q_graph_components(
 
 def _snapshot_components(table: pa.Table, max_iterations: int) -> pa.Table:
     """:func:`q_graph_components` over the node snapshot held on the
-    driver, in numpy: the incidence of :func:`component_incidence` is
-    read off the snapshot's columns as dense codes — one group per
-    (attribute ordinal, value), NULL and '' dropped, and one per token of
-    ``interests`` (the snapshot's distinct part keys, so the same groups
-    as the part keys) — and solved by :func:`_min_labels`."""
+    driver: :func:`_min_labels` over :func:`_snapshot_incidence`, built
+    once per snapshot generation and kept with it
+    (:func:`~graphdb_neo4j_spark.sources.tpch.snapshot_derived`)."""
+    return _min_labels(snapshot_derived(table, _snapshot_incidence), max_iterations)
+
+
+def _snapshot_incidence(table: pa.Table) -> _Incidence:
+    """The incidence of :func:`component_incidence` read off the node
+    snapshot's columns as dense codes: one group per (attribute ordinal,
+    value), NULL and '' dropped, and one per token of ``interests`` (the
+    snapshot's distinct part keys, so the same groups as the part
+    keys)."""
     ids, node_pos = np.unique(table.column("id").to_numpy(), return_inverse=True)
     members, groups, n_groups = [], [], 0
     for attr in ATTRIBUTE_EDGE_TYPES.values():
@@ -1165,13 +1189,12 @@ def _snapshot_components(table: pa.Table, max_iterations: int) -> pa.Table:
     lengths = pc.fill_null(pc.list_value_length(interests), 0).to_numpy()
     members.append(np.repeat(node_pos, lengths))
     groups.append(_dense_codes(pc.list_flatten(interests)) + n_groups)
-    return _min_labels(
+    return _incidence(
         ids,
         node_pos,
         np.concatenate(members),
         np.concatenate(groups),
         table.schema.field("id").type,
-        max_iterations,
     )
 
 
@@ -1332,7 +1355,8 @@ def _dense_codes(values: pa.ChunkedArray) -> np.ndarray:
 def _components_on_driver(table: pa.Table, max_iterations: int) -> pa.Table:
     """f applied in numpy to a collected (id, gk) union whose NULL-gk rows
     are the node ids — the driver path of :func:`min_label_components`,
-    solved by :func:`_min_labels`."""
+    solved by :func:`_min_labels` over the :class:`_Incidence` built here
+    per call."""
     id_type, gk = table.schema.field("id").type, table.column("gk")
     node_rows = gk.is_null().to_numpy(zero_copy_only=False)
     all_ids = table.column("id").to_numpy()
@@ -1347,50 +1371,94 @@ def _components_on_driver(table: pa.Table, max_iterations: int) -> pa.Table:
     member = pos[keep]
     group = _dense_codes(gk.filter(pa.array(keep)))
     del gk, all_ids, pos, keep
-    return _min_labels(ids, node_pos, member, group, id_type, max_iterations)
+    inc = _incidence(ids, node_pos, member, group, id_type)
+    return _min_labels(inc, max_iterations)
 
 
-def _min_labels(
+class _Incidence(NamedTuple):
+    """A node↔group incidence in compressed-sparse-row form, both ways,
+    over node indices into ``ids`` (the sorted distinct node ids): group g
+    holds the members ``group_members[group_starts[g]:group_starts[g + 1]]``
+    and node ``members[j]`` the groups
+    ``member_groups[member_starts[j]:member_starts[j + 1]]``. No segment is
+    empty: groups are dense codes, and ``members`` lists only the nodes
+    that have a group. ``node_pos`` is each output row's index into
+    ``ids``."""
+
+    ids: np.ndarray
+    node_pos: np.ndarray
+    id_type: pa.DataType
+    group_members: np.ndarray
+    group_starts: np.ndarray
+    members: np.ndarray
+    member_groups: np.ndarray
+    member_starts: np.ndarray
+
+
+def _incidence(
     ids: np.ndarray,
     node_pos: np.ndarray,
     member: np.ndarray,
     group: np.ndarray,
     id_type: pa.DataType,
-    max_iterations: int,
-) -> pa.Table:
-    """(id, component, component_size) of f applied in numpy: ``ids`` are
-    the sorted distinct node ids, ``node_pos`` each output row's index
-    into them, and incidence row i puts node ``member[i]`` (an index into
-    ``ids``) in group ``group[i]`` (a code ≥ 0). Labels are indices into
-    ``ids``, so the least index is the least id."""
-    bound = max(len(ids), group.max(initial=-1) + 1)
-    index = np.int32 if bound < 2**31 else np.int64
-    member, group = member.astype(index), group.astype(index)
-    label = np.arange(len(ids), dtype=index)
+) -> _Incidence:
+    """The :class:`_Incidence` whose row i puts node ``member[i]`` (an
+    index into ``ids``) in group ``group[i]`` (a code ≥ 0). Duplicate rows
+    are harmless (min and max are idempotent). The codes of dropped values
+    leave holes, and a reduction over an empty segment is wrong, so the
+    codes are made dense first. Indices are kept as ``np.intp``: numpy
+    gathers by an index array of another type only after converting it."""
+    sizes = np.bincount(group)
+    group = (np.cumsum(sizes > 0) - 1)[group].astype(np.intp)
+    member = member.astype(np.intp)
+
+    def csr(keys, values):
+        order = np.argsort(keys)
+        keys = keys[order]
+        # keys are ≥ 0, so the first row always starts a segment
+        starts = np.flatnonzero(np.diff(keys, prepend=-1))
+        return keys[starts], values[order], starts
+
+    _, group_members, group_starts = csr(group, member)
+    members, member_groups, member_starts = csr(member, group)
+    return _Incidence(
+        ids, node_pos, id_type,
+        group_members, group_starts, members, member_groups, member_starts,
+    )
+
+
+def _min_labels(inc: _Incidence, max_iterations: int) -> pa.Table:
+    """(id, component, component_size) of f applied in numpy over ``inc``
+    by segment reductions: a group's label is the min of its members'
+    labels (the max too, for the homogeneity stop), a node's the min of
+    its groups' labels. Labels are indices into ``ids``, so the least
+    index is the least id."""
+    label = np.arange(len(inc.ids))
 
     def group_min_max():
-        member_label = label[member]
-        lo = np.full(group.max(initial=-1) + 1, len(ids), dtype=index)
-        hi = np.full(len(lo), -1, dtype=index)
-        np.minimum.at(lo, group, member_label)
-        np.maximum.at(hi, group, member_label)
-        return lo, hi
+        member_label = label[inc.group_members]
+        return (
+            np.minimum.reduceat(member_label, inc.group_starts),
+            np.maximum.reduceat(member_label, inc.group_starts),
+        )
 
     lo, hi = group_min_max()
     applied = 0
     while (lo < hi).any() and applied < max_iterations:
         # a member's label is ≥ its groups' minima: least() is the group min
-        np.minimum.at(label, member, lo[group])
+        label[inc.members] = np.minimum.reduceat(
+            lo[inc.member_groups], inc.member_starts
+        )
         applied += 1
         if applied < max_iterations:
             lo, hi = group_min_max()
 
-    node_label = label[node_pos]
-    sizes = np.bincount(node_label, minlength=len(ids))
+    node_label = label[inc.node_pos]
+    sizes = np.bincount(node_label, minlength=len(inc.ids))
     return pa.table(
         {
-            "id": pa.array(ids[node_pos], type=id_type),
-            "component": pa.array(ids[node_label], type=id_type),
+            "id": pa.array(inc.ids[inc.node_pos], type=inc.id_type),
+            "component": pa.array(inc.ids[node_label], type=inc.id_type),
             "component_size": sizes[node_label].astype(np.int64),
         }
     )

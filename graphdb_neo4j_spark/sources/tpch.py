@@ -33,6 +33,7 @@ from __future__ import annotations
 import hashlib
 import os
 import stat
+from typing import Callable, TypeVar
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
@@ -334,9 +335,11 @@ def node_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # store dir -> (generation dir, its Arrow table, or None when the
-# generation does not fit on the driver): the latest generation of each
-# store only, its size rule decided once, when it is first read
-_SNAPSHOT_TABLES: dict[str, tuple[str, pa.Table | None]] = {}
+# generation does not fit on the driver, the structures derived from that
+# table by :func:`snapshot_derived`): the latest generation of each store
+# only, its size rule decided once, when it is first read
+_SNAPSHOT_TABLES: dict[str, tuple[str, pa.Table | None, dict]] = {}
+T = TypeVar("T")
 
 
 def node_snapshot_table(spark: SparkSession, sf_dir: str) -> pa.Table | None:
@@ -366,8 +369,22 @@ def node_snapshot_table(spark: SparkSession, sf_dir: str) -> pa.Table | None:
         cap = driver_result_cap(spark)
         fits = cap is None or size <= cap
         table = pq.read_table(gen_dir, schema=ARROW_NODE_SCHEMA) if fits else None
-        memo = _SNAPSHOT_TABLES[store] = (gen_dir, table)
+        memo = _SNAPSHOT_TABLES[store] = (gen_dir, table, {})
     return memo[1]
+
+
+def snapshot_derived(table: pa.Table, build: Callable[[pa.Table], T]) -> T:
+    """``build(table)``, kept with the snapshot generation whose driver
+    table (:func:`node_snapshot_table`) is ``table``: built by the first
+    call on that generation and dropped with it when a rewritten source
+    replaces it. A table that is no kept generation's is built per call.
+    """
+    for _, kept, derived in _SNAPSHOT_TABLES.values():
+        if kept is table:
+            if build not in derived:
+                derived[build] = build(table)
+            return derived[build]
+    return build(table)
 
 
 def load_graph(spark: SparkSession, sf_dir: str, edges: DataFrame | None = None) -> PropertyGraph:

@@ -291,3 +291,41 @@ def test_graph_queries_start_no_job_on_the_snapshot(spark, sf_dir):
               graphalgo.q_pagerank_ppr):
         q(spark, sf_dir).collect()  # warm
         assert _jobs_of(spark, lambda: q(spark, sf_dir).collect(), f"arrow_{q.__name__}") == []
+
+
+def _rounding_inputs() -> list[float]:
+    """Random doubles over many magnitudes, both signs; half-way ties at 6
+    and 9 decimals built from their decimal strings; zeros, tiny negatives
+    that round to zero, and doubles whose JDK 17 ``Double.toString`` is not
+    the shortest decimal (1.9999999999999998E23 for 2e23)."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    xs = list(rng.uniform(0, 2, 1000)) + list(rng.uniform(-1e3, 1e3, 1000))
+    xs += list(np.exp(rng.uniform(-30, 55, 1000)) * rng.choice([-1, 1], 1000))
+    for scale in (6, 9):
+        xs += [float(f"{k}5e-{scale + 1}") for k in rng.integers(-10**9, 10**9, 1000)]
+    xs += [0.0, -0.0, -1e-12, 5e-7, -5e-7, 5e-10, -5e-10, 0.1234565, 2e23, 8.41e21, 1e23]
+    return [float(x) for x in xs]
+
+
+@pytest.mark.parametrize("scale", [6, 9])
+def test_round_half_up_is_sparks_round(spark, scale):
+    """``round_half_up`` — the lumped PageRank's rounding of its class
+    ranks — equals Spark's ``round`` on doubles bit for bit (sign of zero
+    included), both as the optimizer folds it over a local relation and as
+    generated code evaluates it."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from graphdb_neo4j_spark.functions.fuzz import round_half_up
+
+    xs = _rounding_inputs()
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i long, x double")
+    want = round_half_up(np.array(xs), scale)
+    for form in (df, df.repartition(2)):
+        rows = sorted(form.select("i", F.round("x", scale).alias("r")).collect())
+        got = np.array([r["r"] for r in rows])
+        assert got.tobytes() == want.tobytes(), [
+            (xs[i], got[i], want[i]) for i in np.flatnonzero(got != want)[:5]
+        ]

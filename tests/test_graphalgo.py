@@ -1,6 +1,7 @@
 """Whole-graph analytics: degree stats vs hand-count, PageRank vs
 closed-form solutions on known graphs + global invariants."""
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -30,28 +31,38 @@ def test_pagerank_cycle_is_uniform(spark):
 
 
 def test_pagerank_star_closed_form(spark):
-    """Undirected star K_{1,k}: the fixpoint is
-    center = (1-d) + d·k·(leaf/1)·(1/1)... solved:
-      leaf   = (1-d) + d·(center/k)
-      center = (1-d) + d·k·leaf  [leaves have degree 1]
-    → center = ((1-d)(1+dk)) / (1-d²), leaf from back-substitution."""
+    """Undirected star K_{1,k}: by symmetry every round is two states,
+      leaf'   = (1-d) + d·center/k
+      center' = (1-d) + d·k·leaf   [leaves have degree 1]
+    from 1.0, whose fixpoint is center = ((1-d)(1+dk)) / (1-d²), leaf by
+    back-substitution. A few edge-walk rounds match the recurrence
+    exactly; the recurrence itself converges to the closed form."""
     d = graphalgo.DAMPING
     k = 4
+    rounds = 8
+
+    def two_state(n):
+        center = leaf = 1.0
+        for _ in range(n):
+            center, leaf = (1 - d) + d * k * leaf, (1 - d) + d * center / k
+        return center, leaf
+
     center_expected = (1 - d) * (1 + d * k) / (1 - d * d)
-    leaf_expected = (1 - d) + d * center_expected / k
+    assert two_state(400) == pytest.approx(
+        (center_expected, (1 - d) + d * center_expected / k), abs=1e-12
+    )
+    center, leaf = two_state(rounds)
     ranks = {
         r["id"]: r["rank"]
         for r in graphalgo.pagerank(
             _nodes(spark, k + 1),
             _edges(spark, [(0, i) for i in range(1, k + 1)]),
-            iterations=60,
+            iterations=rounds,
         ).collect()
     }
-    # convergence is geometric at rate d per round: after 60 rounds the
-    # residual is O(d^60) ≈ 6e-5 of the initial gap
-    assert ranks[0] == pytest.approx(center_expected, abs=5e-4)
+    assert ranks[0] == pytest.approx(center, abs=1e-12)
     for i in range(1, k + 1):
-        assert ranks[i] == pytest.approx(leaf_expected, abs=5e-4)
+        assert ranks[i] == pytest.approx(leaf, abs=1e-12)
 
 
 def test_pagerank_mass_conservation(spark):
@@ -738,6 +749,111 @@ def test_components_iteration_cap_is_not_a_fixpoint(spark):
     assert want != _min_label_reference(ids, inc, n)
     assert _components(spark, ids, inc, max_iterations=cap) == want
     assert _components_sql(ids, inc, cap) == want
+
+
+def _min_at_reference(n_ids, member, group, max_iterations):
+    """The form the segment reductions replaced: f applied with
+    ``np.minimum.at`` / ``np.maximum.at`` over the unsorted incidence rows
+    (member index, group code). A code no row carries keeps lo > hi, so
+    holes never count as mixed groups. Labels are indices into the sorted
+    ids."""
+    label = np.arange(n_ids)
+
+    def group_min_max():
+        member_label = label[member]
+        lo = np.full(group.max(initial=-1) + 1, n_ids)
+        hi = np.full(len(lo), -1)
+        np.minimum.at(lo, group, member_label)
+        np.maximum.at(hi, group, member_label)
+        return lo, hi
+
+    lo, hi = group_min_max()
+    applied = 0
+    while (lo < hi).any() and applied < max_iterations:
+        np.minimum.at(label, member, lo[group])
+        applied += 1
+        if applied < max_iterations:
+            lo, hi = group_min_max()
+    return label
+
+
+def _random_incidence(rng):
+    """(sorted ids, incidence rows as (member index, group code)): five
+    components of random groups, some of one member, a few isolated nodes,
+    duplicated rows, and group codes with holes (every third code only)."""
+    ids = np.sort(rng.choice(10_000, size=80, replace=False))
+    block = rng.integers(0, 5, size=len(ids))
+    block[rng.choice(len(ids), size=6, replace=False)] = -1  # isolated
+    rows, code = [], 0
+    for b in range(5):
+        nodes = np.flatnonzero(block == b)
+        for _ in range(rng.integers(1, 12)):
+            size = 1 if rng.random() < 0.3 else rng.integers(2, 6)
+            for m in rng.choice(nodes, size=min(size, len(nodes)), replace=False):
+                rows.append((m, code))
+            code += 3
+    rows += [rows[i] for i in rng.choice(len(rows), size=10)]  # duplicates
+    rng.shuffle(rows)
+    member, group = (np.array(c, dtype=np.int64) for c in zip(*rows))
+    return ids, member, group
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_components_core_on_random_incidences(seed):
+    """The CSR segment-reduction core equals the ``np.minimum.at`` form it
+    replaced and the DuckDB unroll, for the fixpoint and for truncated
+    runs (1, 2, 3 applications), on inputs the single-component fixtures
+    never reach."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    ids, member, group = _random_incidence(rng)
+    node_pos = rng.permutation(len(ids))  # output rows in no id order
+    inc = graphalgo._incidence(ids, node_pos, member, group, pa.int64())
+    inc_rows = [(int(ids[m]), f"g{g}") for m, g in zip(member, group)]
+    for max_iterations in (1, 2, 3, 20):
+        got = graphalgo._min_labels(inc, max_iterations).to_pylist()
+        label = _min_at_reference(len(ids), member, group, max_iterations)
+        sizes = np.bincount(label, minlength=len(ids))
+        want = {int(ids[i]): (int(ids[label[i]]), int(sizes[label[i]]))
+                for i in range(len(ids))}
+        assert [r["id"] for r in got] == [int(i) for i in ids[node_pos]]
+        assert {r["id"]: (r["component"], r["component_size"]) for r in got} == want
+        assert _components_sql([int(i) for i in ids], inc_rows, max_iterations) == want
+    assert len({c for c, _ in want.values()}) >= 5 + 6
+
+
+def test_snapshot_components_drop_null_and_empty_values():
+    """On a snapshot-shaped table, NULL and '' attribute values join no
+    group (their codes leave holes in the group codes), as the DuckDB
+    incidence's ``IS NOT NULL AND <> ''`` filter has it."""
+    import pyarrow as pa
+
+    from graphdb_neo4j_spark.sources.tpch import ARROW_NODE_SCHEMA
+
+    rng = np.random.default_rng(5)
+    values = [None, "", "a", "b", "c"]
+    rows = [
+        {"id": int(i), "name": f"n{i}", "address": rng.choice(values + [None] * 6),
+         "college": rng.choice(values + [None] * 3), "board": rng.choice(values[:3]),
+         "stream": None,
+         "interests": [str(t) for t in rng.choice(40, size=rng.integers(0, 3))]}
+        for i in rng.choice(1000, size=60, replace=False)
+    ]
+    tab = pa.Table.from_pylist(rows, schema=ARROW_NODE_SCHEMA)
+    inc_rows = [
+        (r["id"], f"{attr}:{r[attr]}")
+        for r in rows
+        for attr in ("college", "board", "stream", "address")
+        if r[attr]
+    ] + [(r["id"], f"i:{t}") for r in rows for t in r["interests"]]
+    ids = [r["id"] for r in rows]
+    for max_iterations in (1, 2, 3, 20):
+        got = graphalgo._snapshot_components(tab, max_iterations).to_pylist()
+        assert [r["id"] for r in got] == ids
+        assert {r["id"]: (r["component"], r["component_size"]) for r in got} == (
+            _components_sql(ids, inc_rows, max_iterations)
+        ) == _min_label_reference(ids, inc_rows, max_iterations)
 
 
 def test_graph_components_shuffle_join_branch(spark, sf_dir, monkeypatch):

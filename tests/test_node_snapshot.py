@@ -248,3 +248,43 @@ def test_template_chat_follows_a_rewritten_source(spark, src, monkeypatch):
     assert "name: renamed#42" in svc.chat("who is renamed#42?")
     assert "zelda quill" in svc.chat("who is zelda quill?")
     assert len(built) == 2
+
+
+def test_graph_components_follow_a_rewritten_source(spark, src, monkeypatch):
+    """The components' incidence is built by the first call on a snapshot
+    generation and kept with it: after a source rewrite,
+    ``q_graph_components`` answers from the new generation, the memo holds
+    no structure of the old one, and the forced Spark forms still run."""
+    from graphdb_neo4j_spark.operators import graphalgo
+    from graphdb_neo4j_spark.sources import tpch
+    from tests import test_graphalgo
+
+    def answer():
+        rows = graphalgo.q_graph_components(spark, src).collect()
+        return sorted(tuple(r) for r in rows)
+
+    before = answer()
+    store, gen_dir = _gen_dir(spark, src)
+    _, old_table, derived = tpch._SNAPSHOT_TABLES[store]
+    old_inc = derived[graphalgo._snapshot_incidence]
+    assert answer() == before
+    assert derived[graphalgo._snapshot_incidence] is old_inc  # built once
+
+    path = f"{src}/customer.parquet"
+    customers = pq.read_table(path)
+    kept = customers.slice(0, customers.num_rows // 2)
+    pq.write_table(kept, path)
+    after = answer()
+    assert [r[0] for r in after] == sorted(kept.column("c_custkey").to_pylist())
+    _, new_dir = _gen_dir(spark, src)
+    assert new_dir != gen_dir and tpch._SNAPSHOT_TABLES[store][0] == new_dir
+    for _, table, derived in tpch._SNAPSHOT_TABLES.values():
+        assert table is not old_table
+        assert all(v is not old_inc for v in derived.values())
+
+    for force in (test_graphalgo._force_spark, test_graphalgo._force_loop):
+        with monkeypatch.context() as mp:
+            force(mp)
+            for name in ("_snapshot_components", "_snapshot_incidence"):
+                mp.setattr(graphalgo, name, test_graphalgo._refuse(name))
+            assert answer() == after
