@@ -158,11 +158,11 @@ register("sketch_profile", sketches.q_sketch_profile, None)  # approx by nature
 # --- whole-graph analytics — first round with a driver oracle ----------------
 from graphdb_neo4j_spark.operators import graphalgo
 
-register("pagerank", graphalgo.q_pagerank, graphalgo.pagerank_oracle_sql())
+register("pagerank", graphalgo.q_pagerank, graphalgo.pagerank_sql())
 register(
     "pagerank_factored",
     graphalgo.q_pagerank_factored,
-    graphalgo.pagerank_oracle_sql(),  # same fixpoint — identical unrolled CTE
+    graphalgo.pagerank_sql(),  # same fixpoint — identical unrolled CTE
     bench=True,  # clique-factored: O(|A|·|B|) a round, on the driver
 )
 
@@ -846,7 +846,7 @@ register(
 register(
     "pagerank_ppr",
     graphalgo.q_pagerank_ppr,
-    graphalgo.pagerank_ppr_sql(),  # seeded unrolled-CTE twin of the global oracle
+    graphalgo.pagerank_sql(seed_id=graphalgo.PPR_SEED_ID),  # seeded unrolled CTE
     bench=True,  # heavyweight: seeded power iteration
 )
 register(

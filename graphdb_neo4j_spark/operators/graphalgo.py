@@ -18,15 +18,17 @@ Scale shapes:
   grouping key, `localCheckpoint` per round to truncate lineage (the BFS
   / connected-components discipline, operators/paths.py). Undirected
   edges contribute both ways; isolated nodes hold the teleport floor.
-  The driver oracle is a fixed-iteration unrolled CTE chain
-  (:func:`pagerank_oracle_sql` — deterministic, rounded to 6 decimals);
-  pytest additionally pins closed-form graphs (star, cycle) and the
-  Σranks = N invariant.
+  Personalized PageRank is the same recurrence with the teleport vector
+  pinned to the seeds, so each form takes ``seed_ids`` rather than
+  having a seeded twin. The driver oracle is a fixed-iteration unrolled
+  CTE chain (:func:`pagerank_sql` — deterministic, rounded to 6
+  decimals, 9 when seeded); pytest additionally pins closed-form graphs
+  (star, cycle) and the Σranks = N invariant.
 - **Clique-factored PageRank iterates on classes, not nodes.** On the
   SAME_COLLEGE ∪ SAME_BOARD graph every node of an (a, b) attribute pair
-  has the same degree and rank, so :func:`pagerank_clique_factored` and
-  :func:`pagerank_ppr_clique_factored` iterate on the (a, b) class table
-  (PPR seeds are classes of their own): one Arrow collect of that table,
+  has the same degree and rank, so :func:`pagerank_clique_factored`
+  iterates on the (a, b) class table (PPR seeds are classes of their
+  own): one Arrow collect of that table,
   every round in numpy on the driver at O(|A|·|B|) a round, one broadcast
   join back to the N nodes at the end.
 - **Connected components pick their plan from the input's size.**
@@ -222,30 +224,48 @@ LEFT JOIN int_deg i ON n.id = i.id
 DAMPING = 0.85
 
 
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(u, v) for each edge (src, dst) in both directions, once each."""
+    return (
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
+        .distinct()
+    )
+
+
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
     iterations: int = 10,
     damping: float = DAMPING,
+    seed_ids: list[int] | None = None,
 ) -> DataFrame:
     """(id, rank) after ``iterations`` rounds of damped PageRank on an
-    UNDIRECTED edge list (src, dst), ranks normalized so Σrank = N.
+    UNDIRECTED edge list (src, dst): r' = (1−d)·e + d·W·r from r0 = e.
+
+    Without ``seed_ids``, e ≡ 1 and Σrank = N. With them it is
+    personalized PageRank — the Neo4j GDS ``pageRank`` with
+    ``sourceNodes`` shape, the random-walk counterpart of the
+    one-vs-all recommendation scorer (operators/recommend.py): e = 1/|S|
+    on each distinct seed, so Σrank = 1 and rank measures proximity to
+    the seed set. A node with no edges keeps (1−d)·e each round: the
+    teleport floor, or 0 for an isolated non-seed.
 
     Each round: contribution = rank/degree pushed across each edge in
-    both directions (one union, one shuffle on the receiving id), then
-    rank' = (1−d) + d·Σcontrib. Isolated nodes keep the teleport floor.
-    Per-round ``localCheckpoint`` truncates the iterative lineage —
-    without it round k replans a 2^k-deep DAG."""
-    both = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-    )
+    both directions (one shuffle on the receiving id). Per-round
+    ``localCheckpoint`` truncates the iterative lineage — without it
+    round k replans a 2^k-deep DAG."""
+    both = _undirected(edges)
     degrees = both.groupBy("u").agg(F.count("*").alias("deg"))
     # degree-annotated edge list is loop-INVARIANT: join it once and
     # checkpoint, so each iteration pays one join (ranks), not two
     with_deg = both.join(degrees, "u").transform(materialize)
-    ranks = nodes.select("id", F.lit(1.0).alias("rank")).transform(materialize)
+    e = F.lit(1.0)
+    if seed_ids is not None:
+        share = 1.0 / len(set(seed_ids))
+        e = F.when(F.col("id").isin(seed_ids), F.lit(share)).otherwise(F.lit(0.0))
+    base = nodes.select("id", e.alias("e")).transform(materialize)
+    ranks = base.select("id", F.col("e").alias("rank"))
     for _ in range(iterations):
         contribs = (
             with_deg.join(ranks.select(F.col("id").alias("u"), "rank"), "u")
@@ -253,12 +273,11 @@ def pagerank(
             .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
         )
         ranks = (
-            nodes.select("id")
-            .join(contribs, "id", "left")
+            base.join(contribs, "id", "left")
             .select(
                 "id",
                 (
-                    F.lit(1.0 - damping)
+                    F.lit(1.0 - damping) * F.col("e")
                     + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
                 ).alias("rank"),
             )
@@ -294,7 +313,7 @@ def _pagerank_classes(
     nodes: DataFrame, attrs: tuple[str, str], seed_ids: list[int] | None = None
 ) -> tuple[DataFrame, list[str], DataFrame]:
     """(keyed nodes, class key columns, class table) for
-    :func:`_lumped_pagerank`. The key is (a, b), plus the node id for PPR
+    :func:`pagerank_clique_factored`. The key is (a, b), plus the node id for PPR
     seeds (each seed is its own class); NULL and '' fold into one "no
     clique" key per attribute, so there are at most (|A|+1)(|B|+1) +
     |seeds| classes. A class row is its key and member count ``k``."""
@@ -310,39 +329,6 @@ def _pagerank_classes(
     return keyed, keys, keyed.groupBy(*keys).agg(F.count("*").alias("k"))
 
 
-def _lumped_pagerank(
-    nodes: DataFrame,
-    attrs: tuple[str, str],
-    iterations: int,
-    damping: float,
-    seed_ids: list[int] | None = None,
-    decimals: int | None = None,
-) -> DataFrame:
-    """(id, rank) of the factored recurrence iterated on the class table
-    (:func:`_class_ranks`), the class ranks rounded HALF_UP to
-    ``decimals`` when it is given.
-
-    The class table is tiny by construction, so it is collected once as
-    Arrow (jobs labelled ``lumped_pagerank/classes``) and every round runs
-    in numpy on the driver — O(|A|·|B|) a round, no Spark job; one
-    broadcast join maps the class ranks back to the nodes. A class table
-    above ``spark.driver.maxResultSize`` surfaces as Spark's own abort of
-    that collect: such a table means the attributes barely factor, and
-    the edge-walk :func:`pagerank` is the operator to run there."""
-    spark = nodes.sparkSession
-    keyed, keys, cls = _pagerank_classes(nodes, attrs, seed_ids)
-    with job_label(spark, "lumped_pagerank/classes"):
-        table = cls.toArrow()
-    r = _class_ranks(table, attrs, iterations, damping, seed_ids, decimals)
-    ranks = spark.createDataFrame(
-        pa.table({**{"_" + x: table.column(x) for x in keys}, "r": r})
-    )
-    on = [keyed[x].eqNullSafe(ranks["_" + x]) for x in keys]
-    return keyed.join(F.broadcast(ranks), on).select(
-        "id", F.col("r").alias("rank")
-    )
-
-
 def _lumped_pagerank_arrow(
     table: pa.Table,
     attrs: tuple[str, str],
@@ -351,7 +337,7 @@ def _lumped_pagerank_arrow(
     seed_ids: list[int] | None = None,
     decimals: int | None = None,
 ) -> pa.Table:
-    """:func:`_lumped_pagerank` over a node table held on the driver
+    """:func:`pagerank_clique_factored` over a node table held on the driver
     (``id`` and the two attribute columns): the class table is built in
     Arrow under the same key rules as :func:`_pagerank_classes`, the
     rounds are :func:`_class_ranks`, and each node takes its class's rank
@@ -420,7 +406,7 @@ def _class_ranks(
         e = np.ones(len(k))
     else:
         seeded = table.column("s").is_valid().to_numpy(zero_copy_only=False)
-        e = np.where(seeded, 1.0 / len(seed_ids), 0.0)
+        e = np.where(seeded, 1.0 / len(set(seed_ids)), 0.0)
     r = e
     for _ in range(iterations):
         # deg 0 = isolated (no clique on either attribute): pushes nothing
@@ -435,9 +421,12 @@ def pagerank_clique_factored(
     attrs: tuple[str, str] = ("college", "board"),
     iterations: int = 10,
     damping: float = DAMPING,
+    seed_ids: list[int] | None = None,
+    decimals: int | None = None,
 ) -> DataFrame:
-    """PageRank on the union of two attribute-clique edge sets WITHOUT
-    materializing a single edge.
+    """PageRank (personalized with ``seed_ids``) on the union of two
+    attribute-clique edge sets WITHOUT materializing a single edge, the
+    ranks rounded HALF_UP to ``decimals`` when it is given.
 
     On this graph j is a neighbour of i iff they share attribute A or
     attribute B, so by inclusion–exclusion the received contribution is
@@ -448,26 +437,66 @@ def pagerank_clique_factored(
     because [a_j=a_i] + [b_j=b_i] − [both] = 1 at j = i), and the degree
     is pure group arithmetic: d_i = n_A + n_B − n_AB − 1.
 
-    Nodes sharing (a_i, b_i) keep equal ranks, so the loop runs on the
-    (a, b) class table (:func:`_lumped_pagerank`), collected once and
-    iterated in numpy on the driver: O(|A|·|B|) per iteration and no
-    Spark job, instead of O(N), let alone the edge walk's O(E) = Θ(N²/k);
-    N enters only in the class-table aggregation and the final join-back.
-    pytest pins exact agreement with the edge-materializing
-    :func:`pagerank`.
+    Nodes sharing (a_i, b_i) keep equal ranks (each PPR seed is a class
+    of its own), so the rounds run on the class table
+    (:func:`_class_ranks`): O(|A|·|B| + |S|) per iteration instead of
+    O(N), let alone the edge walk's O(E) = Θ(N²/k). The class table is
+    tiny by construction, so it is collected once as Arrow (jobs labelled
+    ``lumped_pagerank/classes``) and every round runs in numpy on the
+    driver, no Spark job; one broadcast join maps the class ranks back to
+    the nodes. A class table above ``spark.driver.maxResultSize``
+    surfaces as Spark's own abort of that collect: such a table means the
+    attributes barely factor, and the edge-walk :func:`pagerank` is the
+    operator to run there. pytest pins exact agreement with
+    :func:`pagerank`, seeded and not.
     """
-    return _lumped_pagerank(nodes, attrs, iterations, damping)
+    spark = nodes.sparkSession
+    keyed, keys, cls = _pagerank_classes(nodes, attrs, seed_ids)
+    with job_label(spark, "lumped_pagerank/classes"):
+        table = cls.toArrow()
+    r = _class_ranks(table, attrs, iterations, damping, seed_ids, decimals)
+    ranks = spark.createDataFrame(
+        pa.table({**{"_" + x: table.column(x) for x in keys}, "r": r})
+    )
+    on = [keyed[x].eqNullSafe(ranks["_" + x]) for x in keys]
+    return keyed.join(F.broadcast(ranks), on).select(
+        "id", F.col("r").alias("rank")
+    )
 
 
-def pagerank_oracle_sql(iterations: int = 5, damping: float = DAMPING) -> str:
-    """DuckDB mirror of :func:`q_pagerank`: the same SAME_COLLEGE ∪
-    SAME_BOARD undirected edge set and the same damped update, unrolled
-    to a fixed ``iterations`` CTE chain (deterministic — no fixpoint
-    test, exactly N rounds). Float literals use Python ``repr`` so the
-    teleport constant is bit-identical to Spark's ``F.lit(1.0 - d)``;
-    both sides round to 6 decimals, absorbing summation-order drift."""
+# SAME_COLLEGE ∪ SAME_BOARD as directed (u, v) pairs, for the oracles of
+# the PageRank and label-propagation queries
+_CLIQUE_UNION_EDGES_CTE = """edges AS (
+    SELECT a.id AS u, b.id AS v
+    FROM nodes a JOIN nodes b ON a.college = b.college
+    WHERE a.id <> b.id AND a.college IS NOT NULL AND a.college <> ''
+    UNION
+    SELECT a.id AS u, b.id AS v
+    FROM nodes a JOIN nodes b ON a.board = b.board
+    WHERE a.id <> b.id AND a.board IS NOT NULL AND a.board <> ''
+)"""
+
+
+def pagerank_sql(
+    iterations: int = 5, damping: float = DAMPING, seed_id: int | None = None
+) -> str:
+    """DuckDB mirror of :func:`q_pagerank` (of :func:`q_pagerank_ppr` with
+    ``seed_id``): the same SAME_COLLEGE ∪ SAME_BOARD undirected edge set
+    and the same damped update, unrolled to a fixed ``iterations`` CTE
+    chain (deterministic — no fixpoint test, exactly N rounds). Float
+    literals use Python ``repr`` so the teleport constant is bit-identical
+    to Spark's ``F.lit(1.0 - d)``; both sides round to 6 decimals (9 when
+    seeded: the ranks live in [0, 1]), absorbing summation-order drift."""
     teleport = repr(1.0 - damping)
     d = repr(damping)
+    r0, decimals = "CAST(1.0 AS DOUBLE)", 6
+    if seed_id is not None:
+        teleport += f" * (CASE WHEN n.id = {seed_id} THEN 1.0 ELSE 0.0 END)"
+        r0 = (
+            f"CASE WHEN id = {seed_id} THEN CAST(1.0 AS DOUBLE)"
+            " ELSE CAST(0.0 AS DOUBLE) END"
+        )
+        decimals = 9
     iters = []
     for i in range(1, iterations + 1):
         iters.append(
@@ -486,19 +515,11 @@ def pagerank_oracle_sql(iterations: int = 5, damping: float = DAMPING) -> str:
     chain = ",\n".join(iters)
     return f"""
 WITH {NODES_CTE.strip()},
-edges AS (
-    SELECT a.id AS u, b.id AS v
-    FROM nodes a JOIN nodes b ON a.college = b.college
-    WHERE a.id <> b.id AND a.college IS NOT NULL AND a.college <> ''
-    UNION
-    SELECT a.id AS u, b.id AS v
-    FROM nodes a JOIN nodes b ON a.board = b.board
-    WHERE a.id <> b.id AND a.board IS NOT NULL AND a.board <> ''
-),
+{_CLIQUE_UNION_EDGES_CTE},
 deg AS (SELECT u, COUNT(*) AS deg FROM edges GROUP BY u),
-r0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS "rank" FROM nodes),
+r0 AS (SELECT id, {r0} AS "rank" FROM nodes),
 {chain}
-SELECT id, ROUND("rank", 6) AS "rank" FROM r{iterations}
+SELECT id, ROUND("rank", {decimals}) AS "rank" FROM r{iterations}
 """
 
 
@@ -557,93 +578,13 @@ def _q_lumped_ranks(
     attrs = ("college", "board")
     table = node_snapshot_table(spark, sf_dir)
     if table is None:
-        return _lumped_pagerank(
+        return pagerank_clique_factored(
             customer_nodes(spark, sf_dir), attrs, iterations, DAMPING, seed_ids,
             decimals,
         )
     return spark.createDataFrame(
         _lumped_pagerank_arrow(table, attrs, iterations, DAMPING, seed_ids, decimals)
     )
-
-
-# --- personalized PageRank (seeded teleport) ----------------------------------
-
-
-def pagerank_personalized(
-    nodes: DataFrame,
-    edges: DataFrame,
-    seed_ids: list[int],
-    iterations: int = 10,
-    damping: float = DAMPING,
-) -> DataFrame:
-    """(id, rank) after ``iterations`` rounds of personalized PageRank on
-    an UNDIRECTED edge list: the teleport mass lands only on ``seed_ids``
-    (uniformly), so rank measures proximity to the seed set — the Neo4j
-    GDS ``pageRank`` with ``sourceNodes`` shape, and the random-walk
-    counterpart of the one-vs-all recommendation scorer
-    (operators/recommend.py).
-
-    Probability convention: Σrank = 1 at every round (r0 puts 1/|S| on
-    each seed; the update is r' = (1−d)·e + d·W·r). A node with no edges
-    holds rank only if it is a seed (its walk mass has nowhere to go and
-    teleports home each round — the deterministic dangling choice, same
-    answer the oracle computes). Loop shape is identical to
-    :func:`pagerank`: degree-annotated edges are loop-invariant and
-    checkpointed once, each iteration is ONE shuffle on the receiving id,
-    per-round ``localCheckpoint`` truncates lineage.
-    """
-    share = 1.0 / len(seed_ids)
-    both = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-    )
-    degrees = both.groupBy("u").agg(F.count("*").alias("deg"))
-    with_deg = both.join(degrees, "u").transform(materialize)
-    base = nodes.select(
-        "id",
-        F.when(F.col("id").isin(seed_ids), F.lit(share))
-        .otherwise(F.lit(0.0))
-        .alias("e"),
-    ).transform(materialize)
-    ranks = base.select("id", F.col("e").alias("rank"))
-    for _ in range(iterations):
-        contribs = (
-            with_deg.join(ranks.select(F.col("id").alias("u"), "rank"), "u")
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-        )
-        ranks = (
-            base.join(contribs, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - damping) * F.col("e")
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .transform(materialize)
-        )
-    return ranks
-
-
-def pagerank_ppr_clique_factored(
-    nodes: DataFrame,
-    seed_ids: list[int],
-    attrs: tuple[str, str] = ("college", "board"),
-    iterations: int = 10,
-    damping: float = DAMPING,
-) -> DataFrame:
-    """Personalized PageRank on the two-attribute clique-union graph
-    WITHOUT materializing an edge — :func:`pagerank_clique_factored`'s
-    inclusion–exclusion (recv = S_A + S_B − S_AB − own term, degree from
-    group sizes) with the teleport mass pinned to ``seed_ids``:
-    r' = (1−d)·e + d·recv, e = 1/|S| on seeds. Each seed is its own
-    class: O(|A|·|B| + |S|) per iteration on the driver instead of O(N)
-    (:func:`_lumped_pagerank`); pytest pins
-    exact agreement with :func:`pagerank_personalized` on the same
-    graph."""
-    return _lumped_pagerank(nodes, attrs, iterations, damping, seed_ids)
 
 
 PPR_SEED_ID = 1  # same anchor as the recommend_people flagship
@@ -658,57 +599,12 @@ def q_pagerank_ppr(
     ranking. Rounded to 9 decimals (values live in [0, 1], drift ≪ 1e-12).
     Runs the clique-factored form (O(|A|·|B|)/iteration on the college ×
     board classes plus the seed's own class — the 100 TB path; the
-    edge-walk twin :func:`pagerank_personalized` is the pytest
-    cross-check, and the driver oracle walks the edges in DuckDB), from
-    the snapshot's Arrow generation with no Spark job when it is on the
-    driver, else as the Spark form (:func:`_q_lumped_ranks`, which also
-    rounds, once per class)."""
+    seeded edge-walk :func:`pagerank` is the pytest cross-check, and the
+    driver oracle walks the edges in DuckDB), from the snapshot's Arrow
+    generation with no Spark job when it is on the driver, else as the
+    Spark form (:func:`_q_lumped_ranks`, which also rounds, once per
+    class)."""
     return _q_lumped_ranks(spark, sf_dir, iterations, 9, [seed_id])
-
-
-def pagerank_ppr_sql(
-    seed_id: int = PPR_SEED_ID, iterations: int = 5, damping: float = DAMPING
-) -> str:
-    """DuckDB mirror of :func:`q_pagerank_ppr`: same edge set, same seeded
-    update, unrolled to a fixed CTE chain (the :func:`pagerank_oracle_sql`
-    discipline — deterministic, no fixpoint test)."""
-    teleport = repr(1.0 - damping)
-    d = repr(damping)
-    iters = []
-    for i in range(1, iterations + 1):
-        iters.append(
-            f"""r{i} AS (
-    SELECT n.id,
-           {teleport} * (CASE WHEN n.id = {seed_id} THEN 1.0 ELSE 0.0 END)
-           + {d} * COALESCE(s.contrib, 0.0) AS "rank"
-    FROM nodes n
-    LEFT JOIN (
-        SELECT e.v AS id, SUM(r."rank" / d.deg) AS contrib
-        FROM edges e
-        JOIN r{i - 1} r ON e.u = r.id
-        JOIN deg d ON e.u = d.u
-        GROUP BY e.v
-    ) s ON n.id = s.id
-)"""
-        )
-    chain = ",\n".join(iters)
-    return f"""
-WITH {NODES_CTE.strip()},
-edges AS (
-    SELECT a.id AS u, b.id AS v
-    FROM nodes a JOIN nodes b ON a.college = b.college
-    WHERE a.id <> b.id AND a.college IS NOT NULL AND a.college <> ''
-    UNION
-    SELECT a.id AS u, b.id AS v
-    FROM nodes a JOIN nodes b ON a.board = b.board
-    WHERE a.id <> b.id AND a.board IS NOT NULL AND a.board <> ''
-),
-deg AS (SELECT u, COUNT(*) AS deg FROM edges GROUP BY u),
-r0 AS (SELECT id, CASE WHEN id = {seed_id} THEN CAST(1.0 AS DOUBLE)
-                       ELSE CAST(0.0 AS DOUBLE) END AS "rank" FROM nodes),
-{chain}
-SELECT id, ROUND("rank", 9) AS "rank" FROM r{iterations}
-"""
 
 
 # --- label propagation community detection ------------------------------------
@@ -727,19 +623,14 @@ def label_propagation(
     driver-checkable: the textbook async/random-order LPA is
     run-dependent, while the synchronous + (count DESC, label ASC)
     tie-break variant is a pure function of (graph, iterations) — the
-    same fixed-iteration discipline as :func:`pagerank_oracle_sql` (the
+    same fixed-iteration discipline as :func:`pagerank_sql` (the
     known cost is that sync LPA can oscillate on bipartite structures,
     which a fixed iteration count simply truncates). Per round: ONE
     shuffle for the (node, label) count aggregation, argmax via a
     struct-max (no window, no second shuffle), per-round
     ``localCheckpoint`` truncates lineage.
     """
-    both = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .transform(materialize)
-    )
+    both = _undirected(edges).transform(materialize)
     labels = nodes.select("id", F.col("id").alias("label")).transform(materialize)
     for _ in range(iterations):
         cnt = (
@@ -915,15 +806,7 @@ def label_propagation_sql(iterations: int = 4) -> str:
     chain = ",\n".join(iters)
     return f"""
 WITH {NODES_CTE.strip()},
-edges AS (
-    SELECT a.id AS u, b.id AS v
-    FROM nodes a JOIN nodes b ON a.college = b.college
-    WHERE a.id <> b.id AND a.college IS NOT NULL AND a.college <> ''
-    UNION
-    SELECT a.id AS u, b.id AS v
-    FROM nodes a JOIN nodes b ON a.board = b.board
-    WHERE a.id <> b.id AND a.board IS NOT NULL AND a.board <> ''
-),
+{_CLIQUE_UNION_EDGES_CTE},
 l0 AS (SELECT id, id AS label FROM nodes),
 {chain}
 SELECT l.id, l.label AS community, s.community_size
@@ -942,9 +825,10 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The attribute-edge graph is a disjoint union of cliques (everyone
     sharing a college is fully connected), so each node in a key group of
-    size n closes exactly C(n−1, 2) triangles — the count is a CLOSED
-    FORM of the group size. The plan is one tiny per-college aggregation
-    joined back to nodes: O(N), no edge list, no wedge enumeration. The
+    size n closes exactly C(n−1, 2) = C(deg, 2) triangles — the count is
+    a CLOSED FORM of the SAME_COLLEGE degree (:func:`_attr_degrees`: one
+    tiny per-college aggregation joined back to nodes): O(N), no edge
+    list, no wedge enumeration. The
     DuckDB oracle takes the opposite path — it materializes the edges and
     counts wedges that close via a genuine 3-way self-join — so the two
     engines agree through entirely different computations (the strongest
@@ -956,18 +840,9 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute-edge semantics make available, and at 100 TB it is the
     difference between O(N) and Σ C(n,2)·n wedge work.
     """
-    nodes = customer_nodes(spark, sf_dir)
-    valid = nodes.filter(
-        F.col("college").isNotNull() & (F.col("college") != "")
-    ).select("id", "college")
-    sizes = valid.groupBy("college").agg(F.count("*").alias("n"))
-    tri = (
-        (F.col("n") - 1) * (F.col("n") - 2) / 2
-    ).cast("long")
-    return (
-        valid.join(F.broadcast(sizes), "college")
-        .select("id", tri.alias("n_triangles"))
-    )
+    deg = _attr_degrees(customer_nodes(spark, sf_dir), "college", "deg")
+    tri = (F.col("deg") * (F.col("deg") - 1) / 2).cast("long")
+    return deg.select("id", tri.alias("n_triangles"))
 
 
 TRIANGLE_COUNTS_SQL = f"""

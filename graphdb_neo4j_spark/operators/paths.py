@@ -15,7 +15,11 @@ mode at scale). The loop breaks as soon as the frontier empties, so the
 depth parameter is a cap, not a forced count: :func:`q_bfs_distances`
 bounds it (the Cypher ``[*..n]`` form), :func:`q_bfs_unbounded` runs to
 fixpoint with depth as a pure safety ceiling (the unbounded ``[*]`` form,
-oracled by a DuckDB recursive CTE).
+oracled by a DuckDB recursive CTE); both registry queries walk the
+node↔group membership (:func:`bfs_clique_factored`). Over an explicit
+edge list, :func:`bfs_distances` and :func:`shortest_path` read the same
+level loop (:func:`_bfs_levels`: distance and least parent per node),
+and the two oracles share one SAME_COLLEGE ∪ NEARBY edge CTE.
 """
 
 from __future__ import annotations
@@ -36,32 +40,51 @@ WEIGHTED_SOURCE_ID = 1
 WEIGHTED_MAX_ROUNDS = 6
 
 
-def bfs_distances(
-    edges_undirected: DataFrame, source_id: int, max_depth: int = DEFAULT_MAX_DEPTH
+def _bfs_levels(
+    edges_undirected: DataFrame,
+    source_id: int,
+    max_depth: int,
+    target_id: int | None = None,
 ) -> DataFrame:
-    """(id, dist) for every node within ``max_depth`` hops of ``source_id``
-    (minimum hop count; the source itself at dist 0)."""
+    """(id, dist, parent) for every node within ``max_depth`` hops of
+    ``source_id``: the minimum hop count, and the least neighbour one
+    level closer (NULL at the source). Stops early at an empty frontier,
+    or at the level that reaches ``target_id`` when it is given."""
     spark = edges_undirected.sparkSession
-    visited = spark.createDataFrame([(source_id, 0)], "id long, dist int")
+    visited = spark.createDataFrame(
+        [(source_id, 0, None)], "id long, dist int, parent long"
+    )
     frontier = visited.select("id")
     edges = edges_undirected.select("src", "dst")
 
+    found = source_id == target_id
     for depth in range(1, max_depth + 1):
+        if found:
+            break
         next_frontier = (
             frontier.join(edges, frontier.id == edges.src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
+            .groupBy("dst")
+            .agg(F.min("src").alias("parent"))  # deterministic parent choice
+            .select(F.col("dst").alias("id"), F.lit(depth).alias("dist"), "parent")
             .join(visited.select("id"), "id", "left_anti")
         )
         # Truncate lineage: without this the logical plan doubles per hop.
         next_frontier = next_frontier.transform(materialize, eager=True)
         if not next_frontier.take(1):
             break
-        visited = visited.unionByName(
-            next_frontier.withColumn("dist", F.lit(depth))
-        )
-        frontier = next_frontier
+        visited = visited.unionByName(next_frontier)
+        frontier = next_frontier.select("id")
+        if target_id is not None:
+            found = bool(next_frontier.filter(F.col("id") == target_id).take(1))
     return visited
+
+
+def bfs_distances(
+    edges_undirected: DataFrame, source_id: int, max_depth: int = DEFAULT_MAX_DEPTH
+) -> DataFrame:
+    """(id, dist) for every node within ``max_depth`` hops of ``source_id``
+    (minimum hop count; the source itself at dist 0)."""
+    return _bfs_levels(edges_undirected, source_id, max_depth).select("id", "dist")
 
 
 def q_bfs_distances(
@@ -85,11 +108,9 @@ def q_bfs_distances(
     )
 
 
-def bfs_distances_sql(source_id: int = 1) -> str:
-    """Depth-2 unrolled BFS mirror."""
-    return f"""
-WITH {NODES_CTE.strip()},
-base_edges AS (
+# SAME_COLLEGE ∪ NEARBY: each edge once (``base_edges``, src < dst), then
+# both directions (``und``), for the oracles of both BFS queries
+_BFS_EDGES_CTE = """base_edges AS (
     SELECT a.id AS src, b.id AS dst FROM nodes a JOIN nodes b
       ON a.college = b.college AND a.id < b.id
       WHERE a.college IS NOT NULL AND a.college <> ''
@@ -102,7 +123,14 @@ und AS (
     SELECT src, dst FROM base_edges
     UNION ALL
     SELECT dst AS src, src AS dst FROM base_edges
-),
+)"""
+
+
+def bfs_distances_sql(source_id: int = 1) -> str:
+    """Depth-2 unrolled BFS mirror."""
+    return f"""
+WITH {NODES_CTE.strip()},
+{_BFS_EDGES_CTE},
 d1 AS (
     SELECT DISTINCT dst AS id FROM und
     WHERE src = {source_id} AND dst <> {source_id}
@@ -214,20 +242,7 @@ def bfs_unbounded_sql(source_id: int = 1, depth_cap: int = 32) -> str:
     graph's diameter), then MIN(dist) per node is the BFS distance."""
     return f"""
 WITH RECURSIVE {NODES_CTE.strip()},
-base_edges AS (
-    SELECT a.id AS src, b.id AS dst FROM nodes a JOIN nodes b
-      ON a.college = b.college AND a.id < b.id
-      WHERE a.college IS NOT NULL AND a.college <> ''
-    UNION ALL
-    SELECT a.id AS src, b.id AS dst FROM nodes a JOIN nodes b
-      ON a.address = b.address AND a.id < b.id
-      WHERE a.address IS NOT NULL AND a.address <> ''
-),
-und AS (
-    SELECT src, dst FROM base_edges
-    UNION ALL
-    SELECT dst AS src, src AS dst FROM base_edges
-),
+{_BFS_EDGES_CTE},
 walk(id, dist) AS (
     SELECT CAST({source_id} AS BIGINT), 0
     UNION
@@ -250,42 +265,14 @@ def shortest_path(
 
     The parent map stays distributed; only the ≤ max_depth chain nodes are
     ever collected (one point-filter per hop)."""
-    spark = edges_undirected.sparkSession
-    visited = spark.createDataFrame(
-        [(source_id, 0, None)], "id long, dist int, parent long"
-    )
-    frontier = visited.select("id")
-    edges = edges_undirected.select("src", "dst")
-
-    found = source_id == target_id
-    for depth in range(1, max_depth + 1):
-        if found:
-            break
-        next_frontier = (
-            frontier.join(edges, frontier.id == edges.src)
-            .groupBy("dst")
-            .agg(F.min("src").alias("parent"))  # deterministic parent choice
-            .select(F.col("dst").alias("id"), F.lit(depth).alias("dist"), "parent")
-            .join(visited.select("id"), "id", "left_anti")
-        )
-        next_frontier = next_frontier.transform(materialize, eager=True)
-        if not next_frontier.take(1):
-            break
-        visited = visited.unionByName(next_frontier)
-        frontier = next_frontier.select("id")
-        found = bool(next_frontier.filter(F.col("id") == target_id).take(1))
-
-    if not found:
-        return None
+    visited = _bfs_levels(edges_undirected, source_id, max_depth, target_id)
     chain = [target_id]
-    cur = target_id
-    while cur != source_id:
-        row = visited.filter(F.col("id") == cur).select("parent").first()
-        if row is None or row.parent is None:
-            break
-        cur = row.parent
-        chain.append(cur)
-    return list(reversed(chain))
+    while chain[-1] != source_id:
+        row = visited.filter(F.col("id") == chain[-1]).select("parent").first()
+        if row is None:  # the target was not reached
+            return None
+        chain.append(row.parent)
+    return chain[::-1]
 
 
 # --- weighted shortest paths (Bellman-Ford relaxation) ------------------------

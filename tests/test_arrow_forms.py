@@ -256,7 +256,7 @@ def test_lumped_pagerank_forms_agree(graph_tables, attrs, seeds):
     from graphdb_neo4j_spark.operators import graphalgo
 
     df, tab = graph_tables
-    want = _ranks(graphalgo._lumped_pagerank(df, attrs, 5, graphalgo.DAMPING, seeds).collect())
+    want = _ranks(graphalgo.pagerank_clique_factored(df, attrs, 5, graphalgo.DAMPING, seeds).collect())
     got = _ranks(
         graphalgo._lumped_pagerank_arrow(tab, attrs, 5, graphalgo.DAMPING, seeds).to_pylist()
     )

@@ -2,6 +2,7 @@
 closed-form solutions on known graphs + global invariants."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
@@ -24,7 +25,7 @@ def test_pagerank_cycle_is_uniform(spark):
     ranks = graphalgo.pagerank(
         _nodes(spark, n),
         _edges(spark, [(i, (i + 1) % n) for i in range(n)]),
-        iterations=7,
+        iterations=3,
     ).collect()
     for r in ranks:
         assert r["rank"] == pytest.approx(1.0, abs=1e-9)
@@ -71,7 +72,7 @@ def test_pagerank_mass_conservation(spark):
     n = 6
     edges = [(i, j) for i in range(n) for j in range(i + 1, n) if (i + j) % 2]
     total = (
-        graphalgo.pagerank(_nodes(spark, n), _edges(spark, edges), iterations=20)
+        graphalgo.pagerank(_nodes(spark, n), _edges(spark, edges), iterations=3)
         .agg(F.sum("rank"))
         .collect()[0][0]
     )
@@ -117,14 +118,14 @@ def test_factored_ppr_equals_edge_walk(spark, sf_dir):
     ).select("src", "dst")
     walk = {
         r["id"]: r["rank"]
-        for r in graphalgo.pagerank_personalized(
-            nodes, edges, [graphalgo.PPR_SEED_ID], iterations=5
+        for r in graphalgo.pagerank(
+            nodes, edges, iterations=5, seed_ids=[graphalgo.PPR_SEED_ID]
         ).collect()
     }
     fac = {
         r["id"]: r["rank"]
-        for r in graphalgo.pagerank_ppr_clique_factored(
-            nodes, [graphalgo.PPR_SEED_ID], iterations=5
+        for r in graphalgo.pagerank_clique_factored(
+            nodes, iterations=5, seed_ids=[graphalgo.PPR_SEED_ID]
         ).collect()
     }
     assert set(walk) == set(fac)
@@ -286,7 +287,7 @@ def test_ppr_mass_conservation_and_localization(spark):
     n = 5
     ranks = {
         r["id"]: r["rank"]
-        for r in graphalgo.pagerank_personalized(
+        for r in graphalgo.pagerank(
             _nodes(spark, n),
             _edges(spark, [(i, i + 1) for i in range(n - 1)]),
             seed_ids=[0],
@@ -319,7 +320,7 @@ def test_ppr_matches_dense_reference(spark):
         r = [(1 - d) * e[i] + d * contrib[i] for i in range(n)]
     got = {
         row["id"]: row["rank"]
-        for row in graphalgo.pagerank_personalized(
+        for row in graphalgo.pagerank(
             _nodes(spark, n), _edges(spark, edges), seed_ids=seeds, iterations=iters
         ).collect()
     }
@@ -332,7 +333,7 @@ def test_ppr_isolated_nonseed_is_zero(spark):
     isolated SEED retains exactly the teleport share each round."""
     ranks = {
         r["id"]: r["rank"]
-        for r in graphalgo.pagerank_personalized(
+        for r in graphalgo.pagerank(
             _nodes(spark, 4),
             _edges(spark, [(0, 1)]),
             seed_ids=[2],
@@ -457,8 +458,8 @@ def test_factored_forms_handle_null_and_empty_attrs(spark):
 
     for seeds in ([1], [1, 3]):
         _assert_same_ranks(
-            graphalgo.pagerank_ppr_clique_factored(nodes, seeds, iterations=5),
-            graphalgo.pagerank_personalized(nodes, edges, seeds, iterations=5),
+            graphalgo.pagerank_clique_factored(nodes, iterations=5, seed_ids=seeds),
+            graphalgo.pagerank(nodes, edges, iterations=5, seed_ids=seeds),
         )
 
     walk_lpa = {
@@ -509,8 +510,8 @@ def test_lumped_class_table_is_bounded_on_null_heavy_nodes(spark):
         graphalgo.pagerank(nodes, edges, iterations=5),
     )
     _assert_same_ranks(
-        graphalgo.pagerank_ppr_clique_factored(nodes, seeds, iterations=5),
-        graphalgo.pagerank_personalized(nodes, edges, seeds, iterations=5),
+        graphalgo.pagerank_clique_factored(nodes, iterations=5, seed_ids=seeds),
+        graphalgo.pagerank(nodes, edges, iterations=5, seed_ids=seeds),
     )
 
 
@@ -528,9 +529,9 @@ def test_lumped_ppr_many_rounds_equals_edge_walk(spark):
     edge walk."""
     nodes = _rounds_nodes(spark)
     _assert_same_ranks(
-        graphalgo.pagerank_ppr_clique_factored(nodes, [3], iterations=21),
-        graphalgo.pagerank_personalized(
-            nodes, _clique_edges(nodes), [3], iterations=21
+        graphalgo.pagerank_clique_factored(nodes, iterations=21, seed_ids=[3]),
+        graphalgo.pagerank(
+            nodes, _clique_edges(nodes), iterations=21, seed_ids=[3]
         ),
     )
 
@@ -561,17 +562,69 @@ def test_lumped_pagerank_edge_cases(spark):
     no node gives 0.0 everywhere."""
     empty = spark.createDataFrame([], _ROUNDS_SCHEMA)
     assert graphalgo.pagerank_clique_factored(empty).collect() == []
-    assert graphalgo.pagerank_ppr_clique_factored(empty, [1]).collect() == []
+    assert graphalgo.pagerank_clique_factored(empty, seed_ids=[1]).collect() == []
 
     nodes = _rounds_nodes(spark)
     ids = [r[0] for r in _ROUNDS_ROWS]
     ranks = graphalgo.pagerank_clique_factored(nodes, iterations=0).collect()
     assert {r["id"]: r["rank"] for r in ranks} == dict.fromkeys(ids, 1.0)
-    ranks = graphalgo.pagerank_ppr_clique_factored(nodes, [1, 3], iterations=0)
+    ranks = graphalgo.pagerank_clique_factored(nodes, iterations=0, seed_ids=[1, 3])
     want = {i: 0.5 if i in (1, 3) else 0.0 for i in ids}
     assert {r["id"]: r["rank"] for r in ranks.collect()} == want
-    ranks = graphalgo.pagerank_ppr_clique_factored(nodes, [99], iterations=5)
+    ranks = graphalgo.pagerank_clique_factored(nodes, iterations=5, seed_ids=[99])
     assert {r["id"]: r["rank"] for r in ranks.collect()} == dict.fromkeys(ids, 0.0)
+
+
+
+def _rank_forms(spark, iterations=3):
+    """{form: seed_ids -> {id: rank}} for the edge walk, the lumped Spark
+    form and the lumped Arrow form on the _ROUNDS_ROWS graph."""
+    attrs = ("college", "board")
+    nodes = _rounds_nodes(spark)
+    edges = _clique_edges(nodes)
+    table = pa.table(dict(zip(("id", *attrs), map(list, zip(*_ROUNDS_ROWS)))))
+
+    def ranks(df):
+        return {r["id"]: r["rank"] for r in df.collect()}
+
+    def arrow(seed_ids):
+        out = graphalgo._lumped_pagerank_arrow(
+            table, attrs, iterations, graphalgo.DAMPING, seed_ids
+        )
+        return dict(zip(out["id"].to_pylist(), out["rank"].to_pylist()))
+
+    return {
+        "edge walk": lambda seed_ids: ranks(
+            graphalgo.pagerank(nodes, edges, iterations, seed_ids=seed_ids)
+        ),
+        "lumped": lambda seed_ids: ranks(
+            graphalgo.pagerank_clique_factored(
+                nodes, attrs, iterations, seed_ids=seed_ids
+            )
+        ),
+        "arrow": arrow,
+    }
+
+
+def test_ppr_repeated_seed_counts_once(spark):
+    """PPR keeps Σrank = 1 (no node of this graph is isolated), and a seed
+    id given twice is one seed: [1, 1] ranks exactly as [1]."""
+    for form, run in _rank_forms(spark).items():
+        once, twice = run([1]), run([1, 1])
+        assert sum(twice.values()) == pytest.approx(1.0, rel=1e-12), form
+        assert twice == pytest.approx(once, rel=1e-12), form
+
+
+def test_ppr_seeded_with_every_node_is_pagerank_over_n(spark):
+    """e = 1/N on every node scales the unseeded recurrence (e ≡ 1) by
+    1/N, so the seeded and unseeded branches must agree: a wrong teleport
+    term in either shows here, where ranks are not all equal."""
+    ids = [r[0] for r in _ROUNDS_ROWS]
+    for form, run in _rank_forms(spark).items():
+        pr, ppr = run(None), run(ids)
+        assert len(set(pr.values())) > 1, form
+        want = {i: r / len(ids) for i, r in pr.items()}
+        assert ppr == pytest.approx(want, rel=1e-12), form
 
 
 # --- min_label_components degenerate incidences (r9 fused-round-1 pins) -------
@@ -1096,6 +1149,6 @@ def test_factored_pagerank_non_nested_pair_equals_edge_walk(spark, sf_dir):
     )
     seeds = [graphalgo.PPR_SEED_ID, 42]
     _assert_same_ranks(
-        graphalgo.pagerank_ppr_clique_factored(nodes, seeds, attrs=attrs),
-        graphalgo.pagerank_personalized(nodes, edges, seeds),
+        graphalgo.pagerank_clique_factored(nodes, attrs, seed_ids=seeds),
+        graphalgo.pagerank(nodes, edges, seed_ids=seeds),
     )
