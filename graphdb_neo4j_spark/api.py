@@ -40,9 +40,13 @@ marshalling below is shared. Of the registry's ``q_*`` forms, the graph
 queries ``q_graph_components``, ``q_pagerank_factored`` and
 ``q_pagerank_ppr`` read the same driver-side generation
 (``operators/graphalgo``); the others stay Spark.
+The driver-side recommend and search also keep structures built once per
+generation (interest postings, coded names; ``tpch.snapshot_derived``)
+and build them for the overlay rows only per call.
 The LLM-SQL views (``NLEngine.register_views``) are built once per
-snapshot generation and kept with the service, which re-points them on
-every LLM-SQL chat; their ``nodes`` view reads the base snapshot without
+snapshot generation and kept with the service, which re-points one on an
+LLM-SQL chat only when the session's view of that name is no longer the
+one it registered; their ``nodes`` view reads the base snapshot without
 the overlay.
 """
 
@@ -356,9 +360,13 @@ class GraphService:
         reaches the LLM-SQL path (``run_sql``) registers the nodes/edges
         SQL views, over the base snapshot without the overlay. Their
         DataFrames are built once per snapshot generation and kept here
-        across chats, like the name dictionary. Temp views are session-wide
-        and another service may have pointed them at its own graph dir, so
-        every such question re-points them.
+        across chats, like the name dictionary, with the session's temp
+        view objects they were registered as. Temp views are session-wide
+        and another service may have pointed them at its own graph dir, or
+        a user dropped them, so such a question re-points each view that
+        is no longer the one registered here, and only those. The
+        ``nodes`` view of a one-file generation is one partition, so a
+        count over it runs as one Spark job.
         """
         from graphdb_neo4j_spark.nl.pipeline import NLEngine
 

@@ -18,14 +18,18 @@ student_service.py:245-262) and NL-question name correction
    and the kernel is exact, not a reimplementation of that library).
 
 The driver-side search (``operators.fuzzy.fuzzy_search_arrow``) computes
-form 1 in numpy: :func:`levenshtein_distances` runs one DP for many names
-at once, and :func:`levenshtein_ratio` and :func:`round_half_up` repeat
-the column's arithmetic and ``round(·, 4)`` exactly.
+form 1 in numpy: :class:`CodedNames` lays names out once for many queries
+and scores a query of up to 64 code points with Myers' bit-vector
+algorithm (one uint64 per name, one gather per character), a longer one
+with a DP over all names at once; :func:`levenshtein_ratio` and
+:func:`round_half_up` repeat the column's arithmetic and ``round(·, 4)``
+exactly.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from dataclasses import dataclass
 from decimal import MAX_PREC, ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
@@ -47,23 +51,20 @@ def levenshtein_ratio_col(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
-def levenshtein_distances(names: Sequence[str], query: str) -> np.ndarray:
-    """Levenshtein distance (unit insert, delete and substitute costs, over
-    code points, as Spark's ``levenshtein``) of each name to ``query``.
+def _dp_distances(codes: np.ndarray, lens: np.ndarray, q: Sequence[int]) -> np.ndarray:
+    """Levenshtein distance (unit insert, delete and substitute costs, as
+    Spark's ``levenshtein``) of each of N names to a query, by one DP for
+    all names at once.
 
-    One DP runs for all names at once. The names are laid out as an
-    (L, N) code-point matrix, so the i-th characters of all N names form
-    one contiguous row, and each DP cell D[i][j] is a vector over the N
-    names. A name's distance is read at the row of its own length.
+    The names are an (L, N) matrix of character codes, so the i-th
+    characters of all N names form one contiguous row (past a name's
+    length, any value), and ``q`` holds the query's codes in the same
+    coding. Each DP cell D[i][j] is a vector over the N names; a name's
+    distance is read at the row of its own length.
     """
-    n, m = len(names), len(query)
-    lens = np.fromiter(map(len, names), np.int32, n)
+    n, m = len(lens), len(q)
     out = np.full(n, m, np.int32)  # an empty name is m insertions away
     width = int(lens.max()) if n else 0
-    if width == 0:
-        return out
-    codes = np.array(names, f"<U{width}").view(np.uint32).reshape(n, width).T.copy()
-    q = [ord(c) for c in query]
     row = np.repeat(np.arange(m + 1, dtype=np.int32)[:, None], n, axis=1)  # D[0][j] = j
     new = np.empty_like(row)
     diag = np.empty(n, np.int32)
@@ -80,6 +81,101 @@ def levenshtein_distances(names: Sequence[str], query: str) -> np.ndarray:
         done = lens == i
         out[done] = row[m, done]
     return out
+
+
+# the longest query the bit-parallel kernel scores: one uint64 per name
+WORD = 64
+
+
+@dataclass(frozen=True)
+class CodedNames:
+    """Names laid out once for many :meth:`distances` calls, in an order
+    of non-increasing length: ``codes[i, j]`` is the index in ``alphabet``
+    (the names' distinct code points, ascending) of name j's i-th code
+    point, as uint8 or uint16 when the alphabet fits; ``lens`` are the
+    lengths in code points."""
+
+    alphabet: np.ndarray
+    codes: np.ndarray
+    lens: np.ndarray
+
+    @classmethod
+    def of(cls, names: Sequence[str]) -> "CodedNames":
+        """``names``, which must come in non-increasing length order."""
+        n = len(names)
+        lens = np.fromiter(map(len, names), np.int32, n)
+        if np.any(np.diff(lens) > 0):
+            raise ValueError("names must come in non-increasing length order")
+        width = int(lens[0]) if n else 0
+        points = np.array(names, f"<U{max(width, 1)}").view(np.uint32).reshape(n, max(width, 1))
+        alphabet, index = np.unique(points[:, :width], return_inverse=True)
+        kind = np.uint8 if len(alphabet) <= 1 << 8 else np.uint16 if len(alphabet) <= 1 << 16 else np.int32
+        codes = np.ascontiguousarray(index.reshape(n, width).T, kind)
+        return cls(alphabet, codes, lens)
+
+    def distances(self, query: str, lo: int = 0, hi: int | None = None) -> np.ndarray:
+        """Levenshtein distance (over code points, as Spark's
+        ``levenshtein``) of names ``lo:hi`` to ``query``: bit-parallel for
+        a query of at most :data:`WORD` code points, the DP for a longer
+        one."""
+        lens = self.lens[lo:hi]
+        codes = self.codes[:, lo:hi]
+        # a code point no name holds matches nothing: index len(alphabet)
+        points = np.array([ord(c) for c in query], np.uint32)
+        at = np.searchsorted(self.alphabet, points)
+        known = at < len(self.alphabet)
+        known[known] = self.alphabet[at[known]] == points[known]
+        q = np.where(known, at, len(self.alphabet))
+        if len(q) <= WORD:
+            return _bitparallel_distances(codes, lens, q, len(self.alphabet))
+        return _dp_distances(codes, lens, q.tolist())
+
+
+def _bitparallel_distances(
+    codes: np.ndarray, lens: np.ndarray, q: np.ndarray, alphabet_size: int
+) -> np.ndarray:
+    """:func:`_dp_distances` for a query of at most :data:`WORD` codes and
+    names of non-increasing length, by Myers' bit-vector algorithm in
+    Hyyrö's form for the global distance (Myers 1999; Hyyrö 2001).
+
+    A DP column over the query is held as two bit masks per name, its +1
+    and −1 vertical deltas, so one text character updates all of it in a
+    few word operations. Names are the text: step i reads row i of
+    ``codes``, one gather of the query's match masks per character, for the
+    names at least i + 1 long (a prefix, by the length order). The bottom
+    cell, the distance so far, moves with the top bit of the horizontal
+    deltas; row 0 of the DP grows by one per character, so a 1 shifts in.
+    """
+    m = len(q)
+    if m > WORD:
+        raise ValueError(f"a query of {m} codes does not fit in {WORD} bits")
+    if m == 0:
+        return lens.astype(np.int32)
+    one, top = np.uint64(1), np.uint64(m - 1)
+    peq = np.zeros(alphabet_size + 1, np.uint64)  # match mask of each code
+    for j, code in enumerate(q.tolist()):
+        peq[code] |= np.uint64(1 << j)
+    n = len(lens)
+    pv = np.full(n, ~np.uint64(0))  # D[i][0] = i: every vertical delta +1
+    mv = np.zeros(n, np.uint64)
+    score = np.full(n, m, np.uint64)  # D[m][0]
+    width = int(lens[0]) if n else 0
+    # names at least i + 1 long, for each step i
+    active = np.searchsorted(-lens, -np.arange(1, width + 1), side="right")
+    for i, a in enumerate(active.tolist()):
+        eq = peq[codes[i, :a]]
+        p, mm = pv[:a], mv[:a]
+        xv = eq | mm
+        xh = (((eq & p) + p) ^ p) | eq
+        ph = mm | ~(xh | p)
+        mh = p & xh
+        score[:a] += (ph >> top) & one
+        score[:a] -= (mh >> top) & one
+        ph = (ph << one) | one
+        mh <<= one
+        pv[:a] = mh | ~(xv | ph)
+        mv[:a] = ph & xv
+    return score.astype(np.int32)
 
 
 def levenshtein_ratio(distance: np.ndarray, lens: np.ndarray, query_len: int) -> np.ndarray:

@@ -320,9 +320,10 @@ class NLEngine:
     # the templates read it instead, with no Spark job
     table: pa.Table | None = field(default=None, repr=False)
     _names: NameDictionary | None = field(default=None, repr=False)
-    # (snapshot generation key, the SQL_VIEWS DataFrames) of the last
+    # (snapshot generation key, the SQL_VIEWS DataFrames, the session's
+    # raw temp view of each as this engine last registered it) of the last
     # ``register_views``
-    _views: tuple[tuple[str, str] | None, tuple[DataFrame, ...]] | None = field(
+    _views: tuple[tuple[str, str] | None, tuple[DataFrame, ...], list] | None = field(
         default=None, repr=False
     )
 
@@ -335,13 +336,19 @@ class NLEngine:
 
         The DataFrames are built once per snapshot generation, keyed by
         :func:`snapshot_location` (a stat of the five source tables), so a
-        rewritten source rebuilds them and a warm call only re-points the
-        views; without a key they are rebuilt on every call. Temp views are
-        session-wide (another engine may have pointed them at its own dir,
-        or a user dropped them), so every call re-points all three.
+        rewritten source rebuilds them; without a key they are rebuilt on
+        every call. Temp views are session-wide: another engine may have
+        pointed one at its own DataFrame, or a user dropped it. So a view
+        is re-pointed when the session's raw temp view of that name
+        (``getRawTempView``) is not the one this engine registered, and a
+        warm call that finds all three in place registers nothing.
         :meth:`run_sql` calls it on each question that reaches it, so the
         template path never pays for the views. The ``nodes`` view is the
-        base snapshot of ``sf_dir``, without a service's overlay."""
+        base snapshot of ``sf_dir``, without a service's overlay; when the
+        generation is one file, hence one partition, the view says so
+        (``coalesce(1)``), so a global or grouped aggregate over it needs
+        no exchange and runs as one job. A join still shuffles it to
+        ``spark.sql.shuffle.partitions``."""
         from graphdb_neo4j_spark.graph import PropertyGraph
         from graphdb_neo4j_spark.operators.edges import derive_all_edges
 
@@ -350,9 +357,15 @@ class NLEngine:
             nodes = node_snapshot(self.spark, self.sf_dir)
             edges = derive_all_edges(self.spark, self.sf_dir)
             undirected = PropertyGraph(nodes=nodes, edges=edges).edges_undirected()
-            self._views = (key, (nodes, edges, undirected))
-        for name, df in zip(SQL_VIEWS, self._views[1]):
-            df.createOrReplaceTempView(name)
+            if len(nodes.inputFiles()) == 1:
+                nodes = nodes.coalesce(1)
+            self._views = (key, (nodes, edges, undirected), [None] * len(SQL_VIEWS))
+        catalog = self.spark._jsparkSession.sessionState().catalog()
+        _, frames, registered = self._views
+        for i, (name, df) in enumerate(zip(SQL_VIEWS, frames)):
+            if registered[i] is None or not catalog.getRawTempView(name).equals(registered[i]):
+                df.createOrReplaceTempView(name)
+                registered[i] = catalog.getRawTempView(name)
 
     def node_table(self) -> DataFrame:
         if self.nodes is not None:

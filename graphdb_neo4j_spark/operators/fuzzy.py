@@ -13,10 +13,16 @@ reference implementation).
 
 :func:`fuzzy_search_arrow` is the Levenshtein-ratio search over a
 driver-side node table (``pyarrow.Table``), scored in numpy with the same
-arithmetic and rounding.
+arithmetic and rounding. The names are laid out as a :class:`_NameIndex`
+(rows, ids and an alphabet-coded (L, N) matrix with the lengths), once
+per snapshot generation for a kept generation, per call for a service's
+overlay rows or any other table, and scored by a bit-parallel Levenshtein
+kernel for queries of up to 64 code points, by the DP for longer ones.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -25,13 +31,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.functions.fuzz import (
+    CodedNames,
     indel_ratio_col,
-    levenshtein_distances,
     levenshtein_ratio,
     levenshtein_ratio_col,
     round_half_up,
 )
-from graphdb_neo4j_spark.sources.tpch import NODES_CTE, node_snapshot
+from graphdb_neo4j_spark.sources.tpch import (
+    NODES_CTE,
+    kept_generation,
+    node_snapshot,
+    snapshot_derived,
+)
 
 DEFAULT_QUERY = "custoner#000000420"  # deliberate typo of customer#000000420
 DEFAULT_THRESHOLD = 60.0
@@ -71,24 +82,68 @@ def fuzzy_search_arrow(
 ) -> list[dict]:
     """:func:`fuzzy_search` with the Levenshtein scorer over a driver-side
     node table: the same rows, as dicts, in the same order. NULL names drop
-    out, and the threshold applies to the rounded score. Only names whose
-    length bound (the score at distance ``|len − len(query)|``, a lower
-    bound of the distance) reaches the threshold run the DP."""
+    out, and the threshold applies to the rounded score.
+
+    Only names whose length bound (the score at distance
+    ``|len − len(query)|``, a lower bound of the distance) reaches the
+    threshold are scored, through a :class:`_NameIndex`. A kept snapshot
+    generation that ``nodes`` starts with
+    (:func:`~graphdb_neo4j_spark.sources.tpch.kept_generation`) keeps its
+    index; the rows past it (a service's overlay), or a table that is no
+    kept generation's, are indexed per call."""
     q = query.strip().lower()
-    named = nodes.select(["id", "name"]).filter(pc.is_valid(nodes.column("name")))
-    names = named.column("name").to_numpy()  # str objects, no per-row Python list
-    lens = np.fromiter(map(len, names), np.int64, len(names))
-    bound = round_half_up(levenshtein_ratio(np.abs(lens - len(q)), lens, len(q)), 4)
-    cand = np.flatnonzero(bound >= threshold)
-    dist = levenshtein_distances(names[cand], q)
-    score = round_half_up(levenshtein_ratio(dist, lens[cand], len(q)), 4)
-    hit, score = cand[score >= threshold], score[score >= threshold]
-    ids = np.asarray(named.column("id"))[hit]
-    top = np.lexsort((ids, -score))[:k]
+    base = kept_generation(nodes)
+    parts = [nodes] if base is None else [base, nodes.slice(base.num_rows)]
+    found, start = [], 0
+    for part in parts:
+        rows, ids, score = snapshot_derived(part, _NameIndex.build).hits(q, threshold)
+        found.append((rows + start, ids, score))
+        start += part.num_rows
+    rows, ids, score = (np.concatenate(cols) for cols in zip(*found))
+    top = np.lexsort((rows, ids, -score))[:k]
+    names = nodes.column("name").take(rows[top]).to_pylist()
     return [
-        {"id": int(ids[t]), "name": names[hit[t]], "score": float(score[t])}
-        for t in top
+        {"id": int(ids[t]), "name": name, "score": float(score[t])}
+        for t, name in zip(top, names)
     ]
+
+
+def _rounded_scores(dist: np.ndarray, lens: np.ndarray, query_len: int) -> np.ndarray:
+    return round_half_up(levenshtein_ratio(dist, lens, query_len), 4)
+
+
+@dataclass(frozen=True)
+class _NameIndex:
+    """A node table's non-NULL names laid out for scoring, in an order of
+    non-increasing length (:class:`~graphdb_neo4j_spark.functions.fuzz.
+    CodedNames`), with their rows and ids in that order."""
+
+    rows: np.ndarray
+    ids: np.ndarray
+    names: CodedNames
+
+    @classmethod
+    def build(cls, table: pa.Table) -> "_NameIndex":
+        valid = np.flatnonzero(np.asarray(pc.is_valid(table.column("name"))))
+        names = table.column("name").take(valid).to_numpy(zero_copy_only=False)
+        lens = np.fromiter(map(len, names), np.int64, len(names))
+        order = np.argsort(-lens, kind="stable")
+        rows = valid[order].astype(np.int32)
+        ids = np.asarray(table.column("id").take(rows))
+        return cls(rows, ids, CodedNames.of(names[order]))
+
+    def hits(self, q: str, threshold: float) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(row, id, score) of the names scoring at least ``threshold``
+        against ``q``. The length bound falls away from ``len(q)`` on both
+        sides, so the names it admits are one run of the length order."""
+        lens = self.names.lens
+        bound = _rounded_scores(np.abs(lens - len(q)), lens, len(q))
+        cand = np.flatnonzero(bound >= threshold)
+        lo, hi = (int(cand[0]), int(cand[-1]) + 1) if len(cand) else (0, 0)
+        dist = self.names.distances(q, lo, hi)
+        score = _rounded_scores(dist, lens[lo:hi], len(q))
+        hit = np.flatnonzero(score >= threshold)
+        return self.rows[lo:hi][hit], self.ids[lo:hi][hit], score[hit]
 
 
 def fuzzy_search_lev_sql(

@@ -20,12 +20,18 @@ scalability cliff noted in BASELINE.md); we add a deterministic top-k
 sort).
 
 :func:`recommend_arrow` is the same read over a driver-side node table
-(``pyarrow.Table``): the flags by ``pc.equal``, ``n_common`` by matching
-the flattened interests against the anchor's tokens and counting each
-(node, token) pair once, the top-k by ``np.lexsort``.
+(``pyarrow.Table``): the flags by ``pc.equal``, ``n_common`` by a
+``bincount`` over the interest postings (:class:`_Postings`: the rows
+holding each token) of the anchor's distinct tokens, the top-k by
+``np.lexsort``. The postings of a kept snapshot generation are built once
+per generation (``tpch.snapshot_derived``); those of a service's overlay
+rows past it (:func:`~graphdb_neo4j_spark.sources.tpch.kept_generation`),
+or of any other table, per call.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -33,7 +39,12 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphdb_neo4j_spark.sources.tpch import CUST_PARTS_CTE, NODES_CTE
+from graphdb_neo4j_spark.sources.tpch import (
+    CUST_PARTS_CTE,
+    NODES_CTE,
+    kept_generation,
+    snapshot_derived,
+)
 
 DEFAULT_ANCHOR = 1
 DEFAULT_LIMIT = 100
@@ -102,13 +113,11 @@ def recommend_arrow(
     for flag, attr in _FLAGS:
         same = pc.equal(nodes.column(attr), pa.scalar(anchor[attr], pa.string()))
         cols[flag] = np.asarray(pc.fill_null(same, False), dtype=np.int64)
-    # n_common counts distinct shared tokens, as array_intersect does
-    interests = nodes.column("interests")
-    lengths = np.asarray(pc.fill_null(pc.list_value_length(interests), 0))
-    owner = np.repeat(np.arange(len(nodes)), lengths)
-    token = np.asarray(pc.fill_null(pc.index_in(pc.list_flatten(interests), tokens), -1))
-    shared = np.unique(owner[token >= 0] * len(tokens) + token[token >= 0])
-    cols["n_common"] = np.bincount(shared // max(len(tokens), 1), minlength=len(nodes))
+    base = kept_generation(nodes)
+    parts = [nodes] if base is None else [base, nodes.slice(base.num_rows)]
+    cols["n_common"] = np.concatenate(
+        [snapshot_derived(part, _Postings.build).n_common(tokens) for part in parts]
+    )
     score = sum(cols[flag] for flag, _ in _FLAGS) + cols["n_common"]
     other = np.asarray(pc.fill_null(pc.not_equal(ids, anchor_id), False))
     keep = np.flatnonzero((score > 0) & other)
@@ -125,6 +134,43 @@ def recommend_arrow(
         }
         for i, name in zip(top, names)
     ]
+
+
+@dataclass(frozen=True)
+class _Postings:
+    """A node table's interest postings as CSR: the rows holding token
+    ``dictionary[c]`` are ``rows[offsets[c]:offsets[c + 1]]``, ascending
+    and distinct, so a row holding a token twice is listed once."""
+
+    dictionary: pa.Array
+    offsets: np.ndarray
+    rows: np.ndarray
+    n_rows: int
+
+    @classmethod
+    def build(cls, table: pa.Table) -> "_Postings":
+        interests = table.column("interests")
+        lengths = np.asarray(pc.fill_null(pc.list_value_length(interests), 0))
+        # the chunks of a chunked encoding share one dictionary; a NULL
+        # token is an entry of its own, as ``array_intersect`` matches NULL to NULL
+        flat = pc.dictionary_encode(pc.list_flatten(interests), null_encoding="encode")
+        dictionary = flat.chunks[-1].dictionary if flat.num_chunks else pa.array([], pa.string())
+        code = np.concatenate([np.zeros(0, np.int64), *(c.indices for c in flat.chunks)])
+        owner = np.repeat(np.arange(len(table)), lengths)
+        # the distinct (token, row) pairs by token, rows ascending within
+        # each: a row listing a token twice is listed once
+        n = max(len(table), 1)
+        code, rows = np.divmod(np.unique(code * n + owner), n)
+        offsets = np.searchsorted(code, np.arange(len(dictionary) + 1))
+        return cls(dictionary, offsets, rows.astype(np.int32), len(table))
+
+    def n_common(self, tokens: pa.Array) -> np.ndarray:
+        """Per row, how many of the distinct ``tokens`` its interests hold,
+        each counted once (as ``array_intersect`` does): a ``bincount``
+        over the postings of the tokens."""
+        codes = pc.drop_null(pc.index_in(tokens, self.dictionary)).to_numpy()
+        hits = [self.rows[self.offsets[c]:self.offsets[c + 1]] for c in codes]
+        return np.bincount(np.concatenate([self.rows[:0], *hits]), minlength=self.n_rows)
 
 
 def recommend_oracle_sql(

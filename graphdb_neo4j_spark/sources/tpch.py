@@ -387,6 +387,37 @@ def snapshot_derived(table: pa.Table, build: Callable[[pa.Table], T]) -> T:
     return build(table)
 
 
+def _chunk_buffers(column: pa.ChunkedArray, n: int) -> list[tuple]:
+    """The buffer addresses, offset and length of ``column``'s first ``n``
+    chunks: equal for two columns that hold the same chunks by reference."""
+    return [
+        (c.offset, len(c), *(b if b is None else b.address for b in c.buffers()))
+        for c in column.chunks[:n]
+    ]
+
+
+def kept_generation(table: pa.Table) -> pa.Table | None:
+    """The kept snapshot generation (:func:`node_snapshot_table`) that
+    ``table`` starts with, or None. A service's snapshot ∪ overlay
+    (``pa.concat_tables``) holds the generation's chunks by reference, so
+    it is recognized by buffer identity, in O(chunks); its rows past the
+    generation are the overlay. The structures :func:`snapshot_derived`
+    keeps are built on the generation alone."""
+    for _, kept, _ in _SNAPSHOT_TABLES.values():
+        if kept is table or (
+            kept is not None
+            and table.num_rows >= kept.num_rows
+            and table.schema == kept.schema
+            and all(
+                _chunk_buffers(table.column(i), kept.column(i).num_chunks)
+                == _chunk_buffers(kept.column(i), kept.column(i).num_chunks)
+                for i in range(kept.num_columns)
+            )
+        ):
+            return kept
+    return None
+
+
 def load_graph(spark: SparkSession, sf_dir: str, edges: DataFrame | None = None) -> PropertyGraph:
     """PropertyGraph over the testdata. Edges default to empty — derive them
     with :func:`graphdb_neo4j_spark.operators.edges.derive_all_edges`."""

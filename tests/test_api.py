@@ -1,6 +1,7 @@
 """U3 — GraphService boundary marshalling + write-path visibility."""
 
 import os
+import re
 
 import duckdb
 import pytest
@@ -231,6 +232,46 @@ def test_llm_chat_after_the_sql_views_are_dropped(spark, sf_dir):
     assert svc.chat(_COUNT_QUESTION, llm=llm) == want
     _drop_sql_views(spark)
     assert svc.chat(_COUNT_QUESTION, llm=llm) == want
+
+
+def test_llm_chat_after_another_dataframe_repoints_the_views(spark, sf_dir):
+    """A view registered over another DataFrame since this service's last
+    chat (here an empty node table) is re-pointed before the query."""
+    llm, want = _llm_count_case(sf_dir)
+    svc = _svc(spark, sf_dir)
+    assert svc.chat(_COUNT_QUESTION, llm=llm) == want
+    for view in ("nodes", "edges", "edges_undirected"):
+        spark.table(view).where("false").createOrReplaceTempView(view)
+    assert spark.table("nodes").count() == 0
+    assert svc.chat(_COUNT_QUESTION, llm=llm) == want
+
+
+def test_warm_llm_count_chat_on_a_one_file_generation_is_one_job(spark, sf_dir):
+    """The nodes view of a one-file generation is declared one partition,
+    so a count over it runs without an exchange: one job. A join with the
+    edges still shuffles it to ``spark.sql.shuffle.partitions``."""
+    from tests.test_load_table import _jobs_of
+
+    assert len(tpch.node_snapshot(spark, sf_dir).inputFiles()) == 1
+    llm, want = _llm_count_case(sf_dir)
+    svc = _svc(spark, sf_dir)
+    assert svc.chat(_COUNT_QUESTION, llm=llm) == want
+    replies = []
+    jobs = _jobs_of(
+        spark, lambda: replies.append(svc.chat(_COUNT_QUESTION, llm=llm)), "warm_llm_one_job"
+    )
+    assert replies == [want] and len(jobs) == 1
+
+    def plan(sql):
+        return spark.sql(sql)._jdf.queryExecution().executedPlan().toString()
+
+    assert "Exchange" not in plan(llm("Spark SQL developer"))
+    joined = plan(
+        "SELECT /*+ SHUFFLE_MERGE(n) */ n.college, count(*) FROM nodes n"
+        " JOIN edges e ON n.id = e.src GROUP BY n.college"
+    )
+    shuffled = re.search(r"Exchange hashpartitioning\(id#\d+L, (\d+)\)", joined)
+    assert shuffled and shuffled.group(1) == spark.conf.get("spark.sql.shuffle.partitions")
 
 
 @pytest.mark.parametrize("repaired", [False, True])

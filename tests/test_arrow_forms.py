@@ -6,10 +6,11 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 import pyarrow as pa
 import pytest
 
-from graphdb_neo4j_spark.functions.fuzz import levenshtein_distances
+from graphdb_neo4j_spark.functions.fuzz import CodedNames, _bitparallel_distances
 from graphdb_neo4j_spark.nl.names import NameDictionary
 from graphdb_neo4j_spark.nl.pipeline import NLEngine
 from graphdb_neo4j_spark.operators import lookup
@@ -19,6 +20,7 @@ from graphdb_neo4j_spark.operators.relationship import (
     two_name_relationship,
     two_name_relationship_arrow,
 )
+from graphdb_neo4j_spark.sources import tpch
 from graphdb_neo4j_spark.sources.tpch import ARROW_NODE_SCHEMA, NODE_SCHEMA
 
 _ATTRS = [None, "", "x", "y"]
@@ -27,7 +29,8 @@ _TOKENS = ["1", "2", "3", "10", "20"]
 
 def _base_rows() -> list[tuple]:
     """Seeded random nodes plus fixed edge cases: NULL and '' attributes,
-    empty interests, a duplicated name, names with '#', NULL names, ties."""
+    empty interests, a repeated token, NULL tokens, a duplicated name,
+    names with '#', NULL names, ties."""
     rng = random.Random(7)
     rows = [
         (
@@ -47,7 +50,9 @@ def _base_rows() -> list[tuple]:
         (32, "customer#005", "x", "x", "x", "x", ["1", "2"]),  # a duplicated name
         (33, None, "x", "", "y", None, ["3"]),
         (34, "", "y", "y", "y", "y", ["10", "20"]),
-        (35, "ab", "x", "x", "x", "x", ["1"]),
+        (35, "ab", "x", "x", "x", "x", ["1", "1"]),  # a token repeated
+        (36, None, None, None, None, None, [None]),  # a NULL token
+        (37, None, None, None, None, None, ["3", None]),
     ]
     return rows[::-1]  # table order is not id order
 
@@ -64,15 +69,38 @@ def _rows_of(rows):
     return [dict(zip(cols, r)) for r in rows]
 
 
-@pytest.fixture(scope="module")
-def tables(spark):
-    """(Spark snapshot ∪ overlay, the same rows as one Arrow table)."""
+def _tables(spark):
+    """(Spark snapshot ∪ overlay, the same rows as one Arrow table, the
+    Arrow snapshot rows)."""
     base = pa.Table.from_pylist(_rows_of(_base_rows()), schema=ARROW_NODE_SCHEMA)
     overlay = pa.Table.from_pylist(_rows_of(_OVERLAY), schema=ARROW_NODE_SCHEMA)
     df = spark.createDataFrame(base, NODE_SCHEMA).unionByName(
         spark.createDataFrame(overlay, NODE_SCHEMA)
     )
-    return df, pa.concat_tables([base, overlay])
+    return df, pa.concat_tables([base, overlay]), base
+
+
+@pytest.fixture(scope="module")
+def tables(spark):
+    """(Spark snapshot ∪ overlay, the same rows as one hand-built Arrow
+    table): no kept generation, so the driver forms build their
+    structures over every row per call."""
+    df, tab, _ = _tables(spark)
+    assert tpch.kept_generation(tab) is None
+    return df, tab
+
+
+@pytest.fixture(scope="module")
+def kept_tables(spark):
+    """:func:`tables` with the snapshot rows registered as a kept
+    generation, as ``GraphService`` reads its generation ∪ overlay: the
+    driver forms read the generation through its kept structures and
+    build them over the overlay rows per call."""
+    df, tab, base = _tables(spark)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setitem(tpch._SNAPSHOT_TABLES, "<hand-built store>", ("<generation>", base, {}))
+        assert tpch.kept_generation(tab) is base
+        yield df, tab
 
 
 def _collected(df) -> list[dict]:
@@ -84,7 +112,7 @@ def _typed(rows: list[dict]) -> list[list]:
     return [[(k, type(v), v) for k, v in r.items()] for r in rows]
 
 
-_ANCHORS = [1, 5, 12, 30, 32, 34, 40, 41, 99, 0]
+_ANCHORS = [1, 5, 12, 30, 32, 34, 35, 36, 40, 41, 99, 0]
 
 
 @pytest.mark.parametrize("limit", [None, 3])
@@ -103,6 +131,15 @@ def test_recommend_counts_distinct_shared_tokens(tables):
     assert recommend_arrow(tab, 99, None) == []
 
 
+@pytest.mark.parametrize("limit", [None, 3])
+def test_recommend_forms_agree_on_a_kept_generation(kept_tables, limit):
+    test_recommend_forms_agree(kept_tables, limit)
+
+
+def test_recommend_counts_distinct_shared_tokens_on_a_kept_generation(kept_tables):
+    test_recommend_counts_distinct_shared_tokens(kept_tables)
+
+
 # (query, threshold, k): 'abc' vs 'abd' is 66.66666… before rounding, so
 # 66.6667 keeps it only after rounding; 'customer#00' ties many names
 _SEARCHES = [
@@ -113,6 +150,11 @@ _SEARCHES = [
     ("custoner#005", 60.0, 10),
     ("zelda quil", 75.0, 3),
     ("", 0.0, 100),
+    # past one 64-bit word the DP scores; code points outside the names'
+    # alphabet match nothing
+    ("customer#0" * 7, 0.0, 40),
+    ("é漢 abc", 0.0, 40),
+    ("zelda quill" + "x" * 53, 0.0, 5),
 ]
 
 
@@ -121,6 +163,11 @@ def test_search_forms_agree(tables, query, threshold, k):
     df, tab = tables
     want = _collected(fuzzy_search(df, query, threshold, k))
     assert _typed(fuzzy_search_arrow(tab, query, threshold, k)) == _typed(want)
+
+
+@pytest.mark.parametrize("query,threshold,k", _SEARCHES)
+def test_search_forms_agree_on_a_kept_generation(kept_tables, query, threshold, k):
+    test_search_forms_agree(kept_tables, query, threshold, k)
 
 
 def test_search_rounds_before_the_threshold(tables):
@@ -141,8 +188,29 @@ def test_levenshtein_distances_match_the_python_dp():
 
     rng = random.Random(3)
     names = ["".join(rng.choice("ab#é漢") for _ in range(rng.randint(0, 9))) for _ in range(300)]
+    names.sort(key=len, reverse=True)
     for query in ["", "a", "ab#", "é漢ab#ba"]:
-        assert levenshtein_distances(names, query).tolist() == [dp(n, query) for n in names]
+        want = [dp(n, query) for n in names]
+        assert CodedNames.of(names).distances(query).tolist() == want
+
+    # the bit-parallel kernel: empty names, names past one 64-bit word,
+    # astral-plane and NUL code points, and query code points no name
+    # holds; a 65-code-point query takes the DP
+    chars = "ab#é漢\U0001f600\x00"
+    names = [
+        "".join(rng.choice(chars) for _ in range(rng.choice([0, 1, 2, 9, 63, 64, 65, 80])))
+        for _ in range(200)
+    ]
+    names.sort(key=len, reverse=True)
+    coded = CodedNames.of(names)
+    for m in (0, 1, 63, 64, 65):
+        for _ in range(3):
+            query = "".join(rng.choice(chars + "z\U00010348") for _ in range(m))
+            want = [dp(n, query) for n in names]
+            assert coded.distances(query).tolist() == want, query
+            assert coded.distances(query, 40, 150).tolist() == want[40:150], query
+    with pytest.raises(ValueError):
+        _bitparallel_distances(coded.codes, coded.lens, np.zeros(65, np.int64), 1)
 
 
 def test_point_and_exists_forms_agree(tables):

@@ -288,3 +288,65 @@ def test_graph_components_follow_a_rewritten_source(spark, src, monkeypatch):
             for name in ("_snapshot_components", "_snapshot_incidence"):
                 mp.setattr(graphalgo, name, test_graphalgo._refuse(name))
             assert answer() == after
+
+
+def test_multi_file_generation_keeps_its_partitions_in_the_nodes_view(
+    spark, sf_dir, src, monkeypatch
+):
+    """Only a one-file generation's ``nodes`` view is declared one
+    partition: a generation written as several files keeps them, and the
+    LLM chat's reply is the one the one-file generation of the same rows
+    gives."""
+    from graphdb_neo4j_spark.sources import tpch
+    from tests.test_api import _COUNT_QUESTION, _llm_count_case
+
+    size = os.path.getsize(f"{src}/customer.parquet")
+    monkeypatch.setattr(tpch, "SNAPSHOT_FILE_BYTES", size // 2)
+    assert len(node_snapshot(spark, src).inputFiles()) >= 2
+    llm, want = _llm_count_case(sf_dir)
+    assert GraphService(spark, sf_dir).chat(_COUNT_QUESTION, llm=llm) == want
+    assert spark.table("nodes").rdd.getNumPartitions() == 1
+    assert GraphService(spark, src).chat(_COUNT_QUESTION, llm=llm) == want
+    assert spark.table("nodes").rdd.getNumPartitions() > 1
+
+
+def test_service_structures_follow_a_rewritten_source(spark, src):
+    """Recommend's interest postings and search's name index are built on
+    the kept generation by the first call and kept with it; after a source
+    rewrite the reads answer from the new generation plus the overlay, and
+    no structure of the old generation is kept."""
+    from graphdb_neo4j_spark.api import StudentCreate
+    from graphdb_neo4j_spark.operators import fuzzy, recommend
+    from graphdb_neo4j_spark.sources import tpch
+
+    builds = (recommend._Postings.build, fuzzy._NameIndex.build)
+    svc = GraphService(spark, src)
+    new_id = svc.save_student(StudentCreate(name="Zelda Quill", interests=["1", "1"]))
+
+    def reads():
+        view = svc._view()
+        return (
+            svc.search_students("customer#000000042"),
+            svc.search_students("zelda quil"),
+            svc.recommend_people(new_id),
+            [r["id"] for r in recommend.recommend(view, new_id, 10).collect()],
+        )
+
+    before = reads()
+    store, _ = _gen_dir(spark, src)
+    _, old_table, derived = tpch._SNAPSHOT_TABLES[store]
+    old = [derived[build] for build in builds]
+    assert reads() == before
+    assert all(derived[build] is kept for build, kept in zip(builds, old))  # built once
+    assert before[0][0].name == "customer#000000042"
+    assert [m.id for m in before[1]] == [new_id]
+    assert [r.id for r in before[2]] == before[3]
+
+    _rewrite(src, "customer")
+    after = reads()
+    assert after[0] == [] or after[0][0].name.startswith("renamed#")
+    assert [m.id for m in after[1]] == [new_id]
+    assert [r.id for r in after[2]] == after[3]
+    for _, table, derived in tpch._SNAPSHOT_TABLES.values():
+        assert table is not old_table
+        assert all(v is not o for v in derived.values() for o in old)
